@@ -24,9 +24,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.seedForData(
-      SparkSession.builder().master(s"local[$cpus]"), sfDir).getOrCreate()
+      SparkSession.builder().master(s"local[${GraftSession.cores}]"), sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def run(name: String): Double = {

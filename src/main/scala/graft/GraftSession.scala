@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Central SparkSession configuration for the engine.
   *
   * Design notes (100 TB posture):
-  *  - `spark.sql.shuffle.partitions` defaults to 32 to match local[32]; on a
+  *  - `spark.sql.shuffle.partitions` defaults to the core count; on a
   *    real cluster AQE coalesces/re-splits post-shuffle partitions anyway
   *    (`spark.sql.adaptive.enabled=true`), so the static number only seeds the
   *    initial shuffle. Skew joins are handled by AQE's skew-join rewrite.
@@ -38,6 +38,11 @@ object GraftSession {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
 
+  /** Local core count: SPARK_GRAFT_CPUS when set, else the host's cores. */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Shuffle partition count: defaults to the core count (right for the
     * driver's sf0.01/sf0.1 scales), overridable via
     * SPARK_GRAFT_SHUFFLE_PARTITIONS as a manual escape hatch. The
@@ -46,8 +51,7 @@ object GraftSession {
     * once seeded with a data-derived initial count.
     */
   def shufflePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores.toString)
 
   /** Total bytes under a local data directory (0 if unreadable). Local
     * filesystem walk — at configure time there is no SparkContext yet; a
@@ -83,7 +87,6 @@ object GraftSession {
     * A manual SPARK_GRAFT_SHUFFLE_PARTITIONS override still wins if set.
     */
   def initialPartitionsFor(dataDir: String): Int = {
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val derived = dataBytes(dataDir) / (8L << 20)
     math.min(4096L, math.max(cores.toLong, derived)).toInt
   }
@@ -105,9 +108,8 @@ object GraftSession {
     * convention) the AQE seeding scales from its volume.
     */
   def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val b = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(s"local[$cores]")
       .appName(appName)
     val spark = (sys.env.get("SPARK_GRAFT_SF_DIR") match {
       case Some(dir) => seedForData(b, dir)

@@ -8,9 +8,8 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     // Dev-only third arg: comma-separated query names to (re)dump.
     val only: Option[Set[String]] = rest.headOption.map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.seedForData(
-      SparkSession.builder().master(s"local[$cpus]"), sfDir).getOrCreate()
+      SparkSession.builder().master(s"local[${GraftSession.cores}]"), sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

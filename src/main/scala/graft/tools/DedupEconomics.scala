@@ -34,9 +34,8 @@ object DedupEconomics {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]")
+      SparkSession.builder().master(s"local[${GraftSession.cores}]")
         .appName("graft-dedup-economics")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -48,7 +48,7 @@ object ScaleUp {
     val k = kStr.toInt
     val spark = GraftSession.configure(
       SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+        .master(s"local[${GraftSession.cores}]")
         .config("spark.sql.shuffle.partitions", "32")
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

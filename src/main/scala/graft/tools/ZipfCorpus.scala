@@ -140,9 +140,8 @@ object ZipfCorpus {
     val dupPermille = if (args.length > 2) args(2).toInt else 150
     val seed = if (args.length > 3) args(3).toLong else 42L
     val vocabSize = if (args.length > 4) args(4).toInt else 50000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]")
+      SparkSession.builder().master(s"local[${GraftSession.cores}]")
         .appName("graft-zipf-corpus")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -1,8 +1,10 @@
 package graft.uber
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Incremental model maintenance — the capability the reference's dbt
   * project lacks: it materializes every model as a FULL table on every
@@ -10,44 +12,44 @@ import org.apache.spark.sql.functions._
   * so each run re-scans the whole fact table. At 100 TB that is a daily
   * 100 TB scan to absorb a CDC delta touching one or two partitions.
   *
-  * Decomposition: every model splits into
+  * Layout under the output directory:
   *
-  *   partials — per-month partial state at the model's grain, computed
-  *     from ONLY the fact partitions a delta touched (`pickup_month`
-  *     pruning makes that a delta-sized scan), stored month-partitioned;
-  *   fold — the cross-month combine (sum of counts, rank over per-date
-  *     counts, within-month window) over the partials table, whose size
-  *     is the model GRAIN (bases × months / bases × days), not the fact.
+  *   partials/daily_counts — ONE partial shared by the five count-based
+  *     models: per-(dispatching_base_num, base_name, pick_up_date)
+  *     `count(1)`, month-partitioned. Its size is the grain bases × days,
+  *     not the fact, and it is computed from ONLY the fact partitions a
+  *     delta touched (`pickup_month` pruning makes that a delta-sized
+  *     scan).
+  *   the five count-based finals — each a grain-sized fold over
+  *     daily_counts, rewritten whole: May by base filters month 5 and
+  *     sums; top-3 base names sums the non-null-date counts; top-3 dates
+  *     ranks the table directly; count-vs-average and percentile re-sum
+  *     to (base, month) and apply the month window.
+  *   unter_grun_pickups_in_bronx — a row-level projection whose fold is
+  *     identity, so its month-partitioned final IS its partial and is
+  *     refreshed per affected month directly.
   *
   * So a daily increment costs: scan(delta partitions) + fold(grain-sized
-  * partials) — independent of total fact size. This is exactly the
-  * map-side-combine shape Spark's partial aggregation uses within one
-  * query, persisted across runs.
+  * partial) — independent of total fact size. This is the map-side-combine
+  * shape Spark's partial aggregation uses within one query, persisted
+  * across runs and shared across models.
   *
   * Correctness relies on month-sealed grains: each partial row belongs to
   * exactly one `month_num`, so re-deriving some months never double-counts
   * another month's state (IncrementalSpec proves incremental == full
   * recompute after a multi-month restatement, and that untouched months'
-  * partials are not rewritten).
+  * files are not rewritten).
   *
-  * A month restated to EMPTY must clear its partials, which dynamic
-  * partition overwrite cannot express (no rows → no partition written) —
-  * refresh therefore overwrites each affected month's partition directory
+  * A month restated to EMPTY must clear its rows, which dynamic partition
+  * overwrite cannot express (no rows → no partition written) — refresh
+  * therefore overwrites each affected month's partition directory
   * explicitly, one pruned job per affected month (a daily delta touches
   * few partitions).
   */
 object Incremental {
 
-  /** A model with its incremental decomposition. `monthLocalFinal` marks
-    * row-level models whose FINAL table is fact-sized (unter_grun): those
-    * are materialized month-partitioned and refreshed per affected month,
-    * while grain-sized finals are simply re-folded and rewritten whole.
-    */
-  final case class PartialModel(
-      model: Models.Model,
-      partials: (SparkSession, DataFrame) => DataFrame,
-      fold: DataFrame => DataFrame,
-      monthLocalFinal: Boolean = false)
+  /** A count-based model as a fold over the shared daily partial. */
+  private final case class Fold(model: Models.Model, fold: DataFrame => DataFrame)
 
   private def src(t: String): String = SourceRegistry.resolve("airbyte_uber_data", t)
   private def raw(s: SparkSession) = s.table(src("raw_data_janjune_15"))
@@ -66,124 +68,94 @@ object Incremental {
     when(mo === 1, "January").when(mo === 2, "February").when(mo === 3, "March")
       .when(mo === 4, "April").when(mo === 5, "May").when(mo === 6, "June")
 
-  private def joinBase(s: SparkSession, fact: DataFrame): DataFrame =
-    fact.join(broadcast(base(s)), col("base_num") === col("dispatching_base_num"))
+  private def monthIn(mo: Column, months: Seq[Option[Int]]): Column =
+    months.map {
+      case Some(m) => mo === m
+      case None => mo.isNull
+    }.reduce(_ || _)
 
   // ------------------------------------------------------------ partials
 
-  /** unter_grun: row-level projection — partials ARE the output rows plus
-    * their month; fold is identity. Final is fact-sized → month-local.
+  /** unter_grun rows plus their month: the fold is identity, so these are
+    * the model's month-partitioned final rows.
     */
-  private val unterGrun = PartialModel(
-    model = Models.unterGrunPickupsInBronx,
-    partials = (s, fact) => fact
-      .join(broadcast(base(s)), col("base_num") === col("affiliated_base_num"))
-      .join(broadcast(zone(s)), zone(s)("locationid") === fact("locationid"))
-      .filter(col("base_name").isin("Unter", "Grun") && col("borough") === "Bronx")
-      .select(monthOf(fact).as("month_num"),
-        col("pickup_date").as("Pickup Date"), col("base_name").as("Base Name"),
-        col("borough").as("Borough"), col("zone").as("Zone")),
-    fold = p => p.select(col("Pickup Date"), col("Base Name"),
-      col("Borough"), col("Zone")),
-    monthLocalFinal = true)
+  private def unterGrunRows(s: SparkSession, fact: DataFrame): DataFrame = fact
+    .join(broadcast(base(s)), col("base_num") === col("affiliated_base_num"))
+    .join(broadcast(zone(s)), zone(s)("locationid") === fact("locationid"))
+    .filter(col("base_name").isin("Unter", "Grun") && col("borough") === "Bronx")
+    .select(col("pickup_date").as("Pickup Date"), col("base_name").as("Base Name"),
+      col("borough").as("Borough"), col("zone").as("Zone"),
+      monthOf(fact).as("month_num"))
 
-  /** total_pickups_in_may_by_base: per-(base, month) counts; fold keeps
-    * month 5 and re-sums (a restated May replaces the single May partial).
+  /** The shared partial: per-(base, date) counts, month last so the
+    * partitioned read-back has the writer's column order. A pick-up DATE
+    * belongs to exactly one month, so the rows are month-sealed, and
+    * `pick_up_date` is null exactly when `pickup_date` is, which keeps
+    * COUNT(pickup_date) derivable.
     */
-  private val mayByBase = PartialModel(
-    model = Models.totalPickupsInMayByBase,
-    partials = (s, fact) => joinBase(s, fact)
-      .groupBy(monthOf(fact).as("month_num"), col("base_name"))
-      .agg(count(lit(1)).as("cnt")),
-    fold = p => p.filter(col("month_num") === 5)
-      .groupBy(col("base_name"))
+  private def dailyCounts(s: SparkSession, fact: DataFrame): DataFrame =
+    fact.join(broadcast(base(s)), col("base_num") === col("dispatching_base_num"))
+      .groupBy(col("dispatching_base_num"), col("base_name"),
+        to_date(col("pickup_date")).as("pick_up_date"), monthOf(fact).as("month_num"))
+      .agg(count(lit(1)).as("cnt"))
+
+  /** Per-(base, month) re-sum with the no-ELSE month NAME (months 7-12 →
+    * NULL — and the folds' windows partition by the NAME, so null-named
+    * months share one window partition exactly as the full model's X3
+    * semantics demand).
+    */
+  private def baseMonthCounts(d: DataFrame, countCol: String): DataFrame = d
+    .groupBy(col("base_name").as("Dispatching Base Name"), col("month_num"))
+    .agg(sum(col("cnt")).as(countCol))
+    .withColumn("Month", monthName(col("month_num")))
+
+  private val folds: Seq[Fold] = Seq(
+    Fold(Models.totalPickupsInMayByBase, d => d
+      .filter(col("month_num") === 5)
+      .groupBy(col("base_name").as("Dispatching Base Name"))
       .agg(sum(col("cnt")).as("Number of Pick Ups for Base"))
-      .withColumnRenamed("base_name", "Dispatching Base Name")
-      .orderBy(col("Number of Pick Ups for Base").desc))
-
-  /** top_3_base_names: global top-k — partials carry per-month null-skipping
-    * counts (COUNT(pickup_date) semantics: a base whose month has only
-    * null dates still yields a 0-count partial row, so the base appears in
-    * the fold exactly as in the full model); fold sums months and takes 3.
-    */
-  private val top3Names = PartialModel(
-    model = Models.top3BaseNamesByTotalPickups,
-    partials = (s, fact) => joinBase(s, fact)
-      .groupBy(monthOf(fact).as("month_num"), col("base_num"), col("base_name"))
-      .agg(count(col("pickup_date")).as("cnt")),
-    fold = p => p.groupBy(col("base_num"), col("base_name"))
-      .agg(sum(col("cnt")).as("Total Number of Pick Ups"))
-      .select(col("base_num").as("Dispatching Base Number"),
-        col("base_name").as("Base Name"), col("Total Number of Pick Ups"))
+      .orderBy(col("Number of Pick Ups for Base").desc)),
+    // COUNT(pickup_date): null-date rows add 0, but a base whose rows all
+    // have null dates still appears with a 0 total, as in the full model
+    Fold(Models.top3BaseNamesByTotalPickups, d => d
+      .groupBy(col("dispatching_base_num").as("Dispatching Base Number"),
+        col("base_name").as("Base Name"))
+      .agg(sum(when(col("pick_up_date").isNotNull, col("cnt")).otherwise(0L))
+        .as("Total Number of Pick Ups"))
       .orderBy(col("Total Number of Pick Ups").desc)
-      .limit(3))
-
-  /** top_3_pickup_dates_per_base: a pick-up DATE belongs to exactly one
-    * month, so per-(base, date) counts are month-sealed partials and the
-    * rank window folds them directly — no re-aggregation step.
-    */
-  private val top3Dates = PartialModel(
-    model = Models.top3PickupDatesPerBase,
-    partials = (s, fact) => joinBase(s, fact)
-      .groupBy(monthOf(fact).as("month_num"), col("base_name"),
-        col("dispatching_base_num"),
-        to_date(col("pickup_date")).as("pick_up_date"))
-      .agg(count(lit(1)).as("Count")),
-    fold = p => p
+      .limit(3)),
+    Fold(Models.top3PickupDatesPerBase, d => d
       .withColumn("Rank", rank().over(
-        Window.partitionBy(col("dispatching_base_num")).orderBy(col("Count").desc)))
+        Window.partitionBy(col("dispatching_base_num")).orderBy(col("cnt").desc)))
       .filter(col("Rank").isin(1, 2, 3))
       .select(col("base_name").as("Base Name"),
         col("dispatching_base_num").as("Dispatching Base Number"),
-        col("Rank"), col("Count"), col("pick_up_date").as("Pick Up Date"))
-      .orderBy(col("Base Name").asc, col("Rank").asc))
-
-  /** Shared partials for the two month-window models: per-(base, month)
-    * counts with the no-ELSE month NAME (months 7-12 → NULL — and the
-    * fold's window partitions by the NAME, so null-named months share one
-    * window partition exactly as the full model's X3 semantics demand).
-    */
-  private def baseMonthCounts(s: SparkSession, fact: DataFrame): DataFrame =
-    joinBase(s, fact)
-      .select(col("base_name").as("Dispatching Base Name"),
-        monthOf(fact).as("month_num"))
-      .groupBy(col("Dispatching Base Name"), col("month_num"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("Month", monthName(col("month_num")))
-
-  private val countVsAvg = PartialModel(
-    model = Models.pickupCountVsAveragePerBase,
-    partials = baseMonthCounts,
-    fold = p => p
-      .withColumnRenamed("cnt", "Monthly Count")
+        col("Rank"), col("cnt").as("Count"), col("pick_up_date").as("Pick Up Date"))
+      .orderBy(col("Base Name").asc, col("Rank").asc)),
+    Fold(Models.pickupCountVsAveragePerBase, d => baseMonthCounts(d, "Monthly Count")
       .withColumn("Average for Month",
         avg(col("Monthly Count")).over(Window.partitionBy(col("Month"))))
       .orderBy(col("month_num").asc, col("Monthly Count").desc)
       .select(col("Dispatching Base Name"), col("Month").as("month"),
         col("Monthly Count"), col("Average for Month"),
         ((col("Monthly Count") / col("Average for Month") - 1) * 100)
-          .as("Percentage Difference")))
-
-  private val percentile = PartialModel(
-    model = Models.pickupPercentileByBasePerMonth,
-    partials = baseMonthCounts,
-    fold = p => p
-      .withColumnRenamed("cnt", "Count per Base per Month")
+          .as("Percentage Difference"))),
+    Fold(Models.pickupPercentileByBasePerMonth, d => baseMonthCounts(d, "Count per Base per Month")
       .withColumn("Count per Month",
         sum(col("Count per Base per Month")).over(Window.partitionBy(col("Month"))))
       .orderBy(col("month_num").asc, col("Count per Base per Month").desc)
       .select(col("Dispatching Base Name"), col("Month").as("month"),
         col("Count per Base per Month"),
         (col("Count per Base per Month") / col("Count per Month") * 100)
-          .as("Percentile of Pick Ups")))
-
-  val all: Seq[PartialModel] =
-    Seq(unterGrun, mayByBase, top3Names, top3Dates, countVsAvg, percentile)
+          .as("Percentile of Pick Ups"))))
 
   // ---------------------------------------------------------- lifecycle
 
-  def partialsPath(dir: String, name: String): String = s"$dir/partials/$name"
+  def dailyCountsPath(dir: String): String = s"$dir/partials/daily_counts"
   def finalPath(dir: String, name: String): String = s"$dir/$name"
+
+  private def unterGrunPath(dir: String): String =
+    finalPath(dir, Models.unterGrunPickupsInBronx.name)
 
   /** The months a prepared increment restates (what ingestFactIncrement's
     * dynamic overwrite will replace): distinct pickup months, null for
@@ -193,15 +165,6 @@ object Incremental {
     increment.select(month(col("pickup_date")).as("m")).distinct()
       // driver-bound(enum-bounded): distinct calendar months, <= 13 rows
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getInt(0))).toSeq
-
-  private def hivePart(m: Option[Int]): String =
-    s"month_num=${m.map(_.toString).getOrElse("__HIVE_DEFAULT_PARTITION__")}"
-
-  private def monthPredicate(months: Seq[Option[Int]]): Column =
-    months.map {
-      case Some(m) => col("month_num") === m
-      case None => col("month_num").isNull
-    }.reduce(_ || _)
 
   /** Overwrite exactly `months`' partition directories of a
     * month-partitioned table with `rows` (which must already be filtered
@@ -214,75 +177,63 @@ object Incremental {
   def overwriteMonths(
       rows: DataFrame, path: String, months: Seq[Option[Int]]): Unit =
     months.foreach { m =>
-      val slice = m match {
-        case Some(v) => rows.filter(col("month_num") === v)
-        case None => rows.filter(col("month_num").isNull)
-      }
-      slice.drop("month_num").write.mode("overwrite")
-        .parquet(s"$path/${hivePart(m)}")
+      val part = s"month_num=${m.map(_.toString).getOrElse("__HIVE_DEFAULT_PARTITION__")}"
+      rows.filter(monthIn(col("month_num"), Seq(m))).drop("month_num")
+        .write.mode("overwrite").parquet(s"$path/$part")
     }
 
-  private def readPartials(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(partialsPath(dir, name))
-
-  private def writeFinal(
-      spark: SparkSession, pm: PartialModel, dir: String,
-      months: Option[Seq[Option[Int]]]): Unit = {
-    val p = readPartials(spark, dir, pm.model.name)
-    if (pm.monthLocalFinal) {
-      // fact-sized final: refresh only the affected months' partitions
-      // (fold must carry month_num through for the split — re-derive it
-      // from the partials projection)
-      val affected = months.getOrElse(
-        // driver-bound(enum-bounded): distinct calendar months, <= 13 rows
-        p.select(col("month_num")).distinct().collect()
-          .map(r => if (r.isNullAt(0)) None else Some(r.getInt(0))).toSeq)
-      if (affected.nonEmpty) {
-        val rows = pm.fold(p.filter(monthPredicate(affected)))
-          .withColumn("month_num",
-            month(col("Pickup Date"))) // unter_grun: month of the output row
-        overwriteMonths(rows, finalPath(dir, pm.model.name), affected)
-      }
-    } else {
-      pm.fold(p).write.mode("overwrite").parquet(finalPath(dir, pm.model.name))
+  /** Rewrite the five count-based finals from the shared partial, read
+    * back with the schema its writer held (no schema-inference job).
+    */
+  private def writeFolds(spark: SparkSession, dir: String, schema: StructType): Unit = {
+    val daily = spark.read.schema(schema).parquet(dailyCountsPath(dir))
+    folds.foreach { f =>
+      f.fold(daily).write.mode("overwrite").parquet(finalPath(dir, f.model.name))
     }
   }
 
-  /** Initial materialization: one full-scan pass per model writes the
-    * month-partitioned partials (static overwrite clears any stale state),
-    * then folds. Equivalent cost to the reference's full rebuild — paid
-    * once, after which increments are delta-sized.
+  /** Initial materialization: one full-scan pass writes unter_grun's
+    * final and the shared partial (static overwrite clears any stale
+    * state), then the folds. Equivalent cost to the reference's full
+    * rebuild — paid once, after which increments are delta-sized.
     */
-  def fullBuild(spark: SparkSession, dir: String): Unit =
-    all.foreach { pm =>
-      pm.partials(spark, raw(spark))
-        .write.mode("overwrite").partitionBy("month_num")
-        .parquet(partialsPath(dir, pm.model.name))
-      writeFinal(spark, pm, dir, months = None)
-    }
+  def fullBuild(spark: SparkSession, dir: String): Unit = {
+    val fact = raw(spark)
+    unterGrunRows(spark, fact)
+      .write.mode("overwrite").partitionBy("month_num").parquet(unterGrunPath(dir))
+    val daily = dailyCounts(spark, fact)
+    daily.write.mode("overwrite").partitionBy("month_num").parquet(dailyCountsPath(dir))
+    writeFolds(spark, dir, daily.schema)
+  }
 
   /** Absorb a fact restatement of `months` (after ingestFactIncrement has
-    * replaced those fact partitions): re-derive ONLY those months'
-    * partials from the pruned fact, then re-fold. Untouched months'
-    * partial files are not rewritten (IncrementalSpec asserts this).
+    * replaced those fact partitions): re-derive ONLY those months of
+    * unter_grun's final and of the shared partial from the pruned fact,
+    * then re-fold. Untouched months' files are not rewritten
+    * (IncrementalSpec asserts this).
+    *
+    * Refuses an output directory without the shared partial (never built,
+    * or built with an older per-model layout): restating some months into
+    * it would create a partial holding only those months, and every fold
+    * over it would be silently wrong.
     */
   def applyIncrement(spark: SparkSession, dir: String, months: Seq[Option[Int]]): Unit = {
+    val partial = new Path(dailyCountsPath(dir))
+    if (!partial.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(partial))
+      throw new IllegalStateException(
+        s"$dir has no shared partial $partial (never built, or built with an " +
+          "older layout): run Incremental.fullBuild on it before applying increments")
     if (months.isEmpty) return
     val fact = raw(spark)
-    val pruned = fact.filter(months.map {
-      case Some(m) => monthOf(fact) === m
-      case None => monthOf(fact).isNull
-    }.reduce(_ || _))
-    all.foreach { pm =>
-      val p = pm.partials(spark, pruned)
-      overwriteMonths(p, partialsPath(dir, pm.model.name), months)
-      writeFinal(spark, pm, dir,
-        months = if (pm.monthLocalFinal) Some(months) else None)
-    }
+    val pruned = fact.filter(monthIn(monthOf(fact), months))
+    overwriteMonths(unterGrunRows(spark, pruned), unterGrunPath(dir), months)
+    val daily = dailyCounts(spark, pruned)
+    overwriteMonths(daily, dailyCountsPath(dir), months)
+    writeFolds(spark, dir, daily.schema)
   }
 
-  /** The materialized model, as the full model's column set (month-local
-    * finals carry a month_num partition column internally — dropped here).
+  /** The materialized model, as the full model's column set (unter_grun's
+    * month-local final carries a month_num partition column — dropped here).
     */
   def readModel(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(finalPath(dir, name))

@@ -92,14 +92,11 @@ object Ingest {
     val name = "raw_data_janjune_15"
     val schema = Schemas.sources.toMap.apply(name)
     val path = s"$warehouseDir/$name"
-    withAirbyteMeta(readCsv(spark, csvPath, schema))
-      .withColumn("pickup_month", month(col("pickup_date")))
-      .write.mode("overwrite")
+    val landed = withPickupMonth(withAirbyteMeta(readCsv(spark, csvPath, schema)))
+    landed.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("pickup_month").parquet(path)
-    val table = spark.read.parquet(path)
-    table.createOrReplaceTempView(SourceRegistry.resolve("airbyte_uber_data", name))
-    table
+    register(spark, name, path, landed.schema)
   }
 
   /** Ingest one source and register it; returns the registered DataFrame. */
@@ -170,14 +167,22 @@ object Ingest {
       enriched: DataFrame,
       warehouseDir: String): DataFrame = {
     val path = s"$warehouseDir/$name"
-    if (name == "raw_data_janjune_15") {
-      enriched
-        .withColumn("pickup_month", month(col("pickup_date")))
-        .write.mode("overwrite").partitionBy("pickup_month").parquet(path)
-    } else {
-      enriched.write.mode("overwrite").parquet(path)
-    }
-    val table = spark.read.parquet(path)
+    val isFact = name == "raw_data_janjune_15"
+    val landed = if (isFact) withPickupMonth(enriched) else enriched
+    val writer = landed.write.mode("overwrite")
+    (if (isFact) writer.partitionBy("pickup_month") else writer).parquet(path)
+    register(spark, name, path, landed.schema)
+  }
+
+  private def withPickupMonth(fact: DataFrame): DataFrame =
+    fact.withColumn("pickup_month", month(col("pickup_date")))
+
+  /** Register a table this object just wrote, read back with the schema
+    * its writer held: no schema-inference job over the files.
+    */
+  private def register(
+      spark: SparkSession, name: String, path: String, schema: StructType): DataFrame = {
+    val table = spark.read.schema(schema).parquet(path)
     table.createOrReplaceTempView(SourceRegistry.resolve("airbyte_uber_data", name))
     table
   }

@@ -31,9 +31,11 @@ object Runner {
       case FrameForm => m.frame(spark)
     }
 
-  /** Full pipeline: ingest CSVs, then materialize all six models as parquet
-    * tables under `outDir` (overwrite per run). Returns row counts per model
-    * (the reference's manual `SELECT COUNT(*)` check, automated).
+  /** Full pipeline: ingest CSVs, run the source checks, then materialize
+    * all six models as parquet tables under `outDir` (overwrite per run).
+    * A failed check throws, naming the failing checks, before any model is
+    * written, so the previous models stay as they were. Returns row counts
+    * per model (the reference's manual `SELECT COUNT(*)` check, automated).
     */
   def runAll(
       spark: SparkSession,
@@ -42,6 +44,10 @@ object Runner {
       outDir: String,
       form: Form = SqlForm): Map[String, Long] = {
     Ingest.ingestAll(spark, csvDir, warehouseDir)
+    val failed = runChecks(spark).filterNot(_.passed)
+    if (failed.nonEmpty)
+      throw new IllegalStateException("source checks failed, no model written: " +
+        failed.map(r => s"${r.table}.${r.column} ${r.check} (${r.failures})").mkString(", "))
     Models.all.map { m =>
       val df = runModel(spark, m, form)
       df.write.mode("overwrite").parquet(s"$outDir/${m.name}")
@@ -50,17 +56,17 @@ object Runner {
   }
 
   /** The `dbt test` half of `dbt build`: source-contract checks after
-    * ingest, before transform. Returns all results; callers decide whether
-    * a failure aborts (the CLI below does).
+    * ingest, before transform. Returns all results; [[runAll]] aborts on
+    * any failure.
     */
   def runChecks(spark: SparkSession): Seq[Checks.CheckResult] =
     Checks.sourceChecks(spark)
 
   /** One daily-delta run: land the increment's fact partitions (dynamic
-    * overwrite) and absorb them into every model through the partials
-    * layer — scan(delta) + fold(grain) instead of runAll's full rebuild.
-    * Requires a prior full build of `outDir` (Incremental.fullBuild or a
-    * first runIncrement after it). Returns the restated months.
+    * overwrite) and absorb them into every model through the shared daily
+    * partial — scan(delta) + fold(grain) instead of runAll's full rebuild.
+    * Requires a prior Incremental.fullBuild of `outDir` (applyIncrement
+    * refuses otherwise). Returns the restated months.
     */
   def runIncrement(
       spark: SparkSession,
@@ -116,13 +122,8 @@ object Runner {
   def main(args: Array[String]): Unit = {
     val Array(csvDir, warehouseDir, outDir) = args
     val spark = GraftSession.local("uber-pipeline")
-    val counts = runAll(spark, csvDir, warehouseDir, outDir)
-    val checks = runChecks(spark)
-    checks.foreach(r => println(
-      s"check ${r.table}.${r.column} ${r.check}: " +
-        (if (r.passed) "PASS" else s"FAIL (${r.failures})")))
-    counts.toSeq.sortBy(_._1).foreach { case (n, c) => println(s"$n: $c rows") }
-    spark.stop()
-    if (checks.exists(!_.passed)) sys.exit(1)
+    try runAll(spark, csvDir, warehouseDir, outDir).toSeq.sortBy(_._1)
+      .foreach { case (n, c) => println(s"$n: $c rows") }
+    finally spark.stop()
   }
 }

@@ -106,10 +106,10 @@ object Scheduler {
   }
 
   /** Daemon CLI: Scheduler <csvDir> <warehouseDir> <outDir> [periodMs].
-    * Each tick = the full `dbt build` equivalent (ingest → models →
-    * checks, the Runner.main sequence); check failures are reported but do
-    * not kill the daemon — the next tick retries from scratch because the
-    * build is an idempotent rebuild.
+    * Each tick = the full `dbt build` equivalent (ingest → checks →
+    * models, Runner.runAll); a failed check aborts the build before any
+    * model is written, and the daemon logs it and retries the same tick
+    * because the build is an idempotent rebuild.
     */
   def main(args: Array[String]): Unit = {
     val Array(csvDir, warehouseDir, outDir, rest @ _*) = args
@@ -120,8 +120,6 @@ object Scheduler {
       build = { tick =>
         println(s"[schedule] tick $tick: building")
         val counts = Runner.runAll(spark, csvDir, warehouseDir, outDir)
-        Runner.runChecks(spark).filterNot(_.passed).foreach(r =>
-          println(s"[schedule] CHECK FAIL ${r.table}.${r.column} ${r.check}"))
         println(s"[schedule] tick $tick: done ${counts.values.sum} rows")
       },
       stateFile = Some(s"$outDir/_schedule_state"))

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import graft.uber.{Incremental, Ingest, Models, Runner}
 
 /** Incremental model maintenance (uber/Incremental.scala): after a
-  * partition restatement, partials+fold must equal a from-scratch full
-  * rebuild for every model — and must not touch untouched months' files.
+  * partition restatement, the shared daily partial + folds must equal a
+  * from-scratch full rebuild for every model — and must not touch
+  * untouched months' files.
   */
 class IncrementalSpec extends SparkSpec {
 
@@ -69,12 +70,16 @@ class IncrementalSpec extends SparkSpec {
     Incremental.fullBuild(spark, out)
     assertAllModelsMatch(out, "initial full build")
 
-    // untouched-month evidence: January partials must not be rewritten
-    val jan = Paths.get(
-      Incremental.partialsPath(out, "top_3_base_names_by_total_pickups"),
-      "month_num=1")
-    val mtimesBefore = Files.list(jan).iterator().asScala
+    // untouched-month evidence: January's shared partial and unter_grun's
+    // January final must not be rewritten
+    val jan = Seq(
+      Paths.get(Incremental.dailyCountsPath(out), "month_num=1"),
+      Paths.get(Incremental.finalPath(out, "unter_grun_pickups_in_bronx"), "month_num=1"))
+    def janMtimes() = jan.flatMap(d => Files.list(d).iterator().asScala)
       .map(p => p.toString -> Files.getLastModifiedTime(p)).toMap
+    val mtimesBefore = janMtimes()
+    assert(mtimesBefore.keys.exists(_.endsWith(".parquet")) &&
+      jan.forall(d => mtimesBefore.keys.exists(_.startsWith(d.toString))))
 
     // restatement of months 2 and 5: February loses its Unter/Grun-Bronx
     // rows entirely (the month-2 partials of unter_grun must become EMPTY
@@ -108,10 +113,8 @@ class IncrementalSpec extends SparkSpec {
       "restated February must have no surviving unter_grun rows")
     assert(ug.count() > 0)
 
-    val mtimesAfter = Files.list(jan).iterator().asScala
-      .map(p => p.toString -> Files.getLastModifiedTime(p)).toMap
-    assert(mtimesAfter == mtimesBefore,
-      "January partials were rewritten by a February/May increment")
+    assert(janMtimes() == mtimesBefore,
+      "January files were rewritten by a February/May increment")
 
     // restore shared-view state for any test ordering after this one
     Ingest.ingestAll(spark, csv, wh)
@@ -150,6 +153,45 @@ class IncrementalSpec extends SparkSpec {
     // restart: a fresh call (state file re-read) applies nothing
     assert(Runner.processNewIncrements(spark, incDir, wh, out, state).isEmpty)
 
+    Ingest.ingestAll(spark, csv, wh)
+  }
+
+  test("an output directory without the shared partial is refused") {
+    // the older per-model layout: partials/<model>, no partials/daily_counts
+    val old = Files.createTempDirectory("inc_old_layout").toString
+    Files.createDirectories(Paths.get(
+      s"$old/partials/top_3_base_names_by_total_pickups/month_num=2"))
+    val e = intercept[IllegalStateException](
+      Incremental.applyIncrement(spark, old, Seq(Some(2))))
+    assert(e.getMessage.contains("Incremental.fullBuild"), e.getMessage)
+    assert(!Files.exists(Paths.get(Incremental.dailyCountsPath(old))),
+      "a refused increment must not start a shared partial")
+  }
+
+  test("a full build and a single-month increment run a fixed number of Spark jobs") {
+    val (csv, wh, _) = dirs
+    Ingest.ingestAll(spark, csv, wh)
+    // a zero-partition job takes the next job id: the difference of two
+    // marks counts the jobs launched between them
+    val sc = spark.sparkContext
+    def mark(): Int = sc.submitJob[Int, Unit, Unit](
+      sc.emptyRDD[Int], _ => (), Seq.empty, (_, _) => (), ()).jobIds.head
+    def jobs(f: => Unit): Int = { val m = mark(); f; mark() - m - 1 }
+    val out = Files.createTempDirectory("inc_jobs").toString
+    // 3 unter_grun + 3 shared partial + 4 per fold for the five
+    // count-based models
+    val build = jobs(Incremental.fullBuild(spark, out))
+    assert(build == 26, s"a full build launched $build jobs")
+    val incCsv = Files.createTempDirectory("inc_jobs_csv").resolve("may.csv")
+    Files.writeString(incCsv,
+      """dispatching_base_num,pickup_date,affiliated_base_num,locationid
+        |B02765,2015-05-20 11:00:00,B02765,1
+        |B02512,2015-05-21 12:00:00,B02512,2
+        |""".stripMargin)
+    // 2 affectedMonths + 1 fact landing + the build's 26 for one month
+    val tick = jobs(Runner.runIncrement(spark, incCsv.toString, wh, out))
+    assert(tick == 29, s"one single-month tick launched $tick jobs")
+    assertAllModelsMatch(out, "after a single-month increment")
     Ingest.ingestAll(spark, csv, wh)
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.uber.{Ingest, Models, Runner}
@@ -85,6 +86,14 @@ class UberSpec extends SparkSpec {
     val partDirs = new java.io.File(s"${dirs._2}/raw_data_janjune_15")
       .listFiles().map(_.getName).filter(_.startsWith("pickup_month="))
     assert(partDirs.toSet.contains("pickup_month=5"))
+  }
+
+  test("landed tables are read back with exactly the schema inference gives") {
+    val (_, wh) = dirs
+    graft.uber.Schemas.sources.foreach { case (name, _) =>
+      assert(spark.table(name).schema == spark.read.parquet(s"$wh/$name").schema,
+        s"$name: registered schema differs from the files' inferred schema")
+    }
   }
 
   test("typed _airbyte_meta: declared-schema parse + envelope check") {
@@ -243,6 +252,34 @@ class UberSpec extends SparkSpec {
       Seq("Bronx", "Atlantis").toDF("b"), "t", "b", Seq("Bronx", "Queens")).passed)
   }
 
+  test("a failing source check aborts runAll before any model is written") {
+    val (csv, wh) = dirs
+    val root = Files.createTempDirectory("uber_checks")
+    val out = root.resolve("out")
+    Runner.runAll(spark, csv, root.resolve("wh").toString, out.toString)
+    def files(): Map[String, Seq[Byte]] = {
+      val s = Files.walk(out)
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => out.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+      finally s.close()
+    }
+    val before = files()
+    assert(before.keys.exists(_.endsWith(".parquet")))
+    // the same sources plus a duplicate base_num: violates the dim's
+    // unique check, and would change every dispatching-base model
+    val bad = Files.createDirectories(root.resolve("bad_csv"))
+    Files.list(Paths.get(csv)).iterator().asScala.foreach(f =>
+      Files.copy(f, bad.resolve(f.getFileName)))
+    Files.writeString(bad.resolve("base_num_and_name.csv"), "B02512,Doppel\n",
+      java.nio.file.StandardOpenOption.APPEND)
+    val e = intercept[IllegalStateException](Runner.runAll(
+      spark, bad.toString, root.resolve("wh_bad").toString, out.toString))
+    assert(e.getMessage.contains("base_num_and_name.base_num unique"), e.getMessage)
+    assert(files() == before, "a failed check rewrote the previous models")
+    // restore the fixture's views for any test ordering after this one
+    Ingest.ingestAll(spark, csv, wh)
+  }
+
   test("incremental ingest overwrites only the increment's partitions") {
     val (csv, wh) = dirs
     val before = spark.table("raw_data_janjune_15")
@@ -285,7 +322,6 @@ class UberSpec extends SparkSpec {
       st.executeUpdate("CREATE TABLE raw_data_janjune_15 (" +
         "dispatching_base_num VARCHAR(6), pickup_date TIMESTAMP, " +
         "affiliated_base_num VARCHAR(6), locationid SMALLINT)")
-      import scala.jdk.CollectionConverters._
       def rows(name: String): Seq[Array[String]] =
         Files.readAllLines(Paths.get(s"$csv/$name.csv")).asScala.toSeq
           .drop(1).filter(_.nonEmpty).map(_.split(",", -1))

@@ -29,8 +29,7 @@ movers = [q for q in common if nq[q] - oq[q] > 0.2][:top_n]
 if not movers:
     movers = common[:top_n]
 
-env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf, GRAFT_DRIFT_N="3",
-           SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf, GRAFT_DRIFT_N="3")
 out = subprocess.run(
     ["tools/run_main.sh", "graft.tools.DriftBench"] + movers,
     capture_output=True, text=True, env=env, cwd=os.path.dirname(
