@@ -140,9 +140,9 @@ object Materialize {
   /** Materialize + row count in as few jobs as the mode allows. In local
     * mode (lazy localCheckpoint) the count IS the job that computes and
     * persists the blocks — ONE job replaces the old eager-checkpoint +
-    * Dataset.count() trio. The fixpoint loops (starComponents,
-    * minLabelComponents gates) and every size-gated operator should
-    * call this instead of hand-rolling materialize-then-count.
+    * Dataset.count() trio. The connected-components gate, the
+    * starComponents fixpoint loop and every size-gated operator call
+    * this instead of hand-rolling materialize-then-count.
     */
   def withCount[T](ds: Dataset[T]): (Dataset[T], Long) = {
     val m = apply(ds)

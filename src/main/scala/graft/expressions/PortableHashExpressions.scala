@@ -24,6 +24,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * digest instance, so the measured end-to-end cost at sf0.1 is noise.
   */
 object PortableHash {
+  /** splitmix64 finalizer — the band-key combine step of the MinHash
+    * band-key kernels (engine-local, never part of an oracle spelling).
+    */
+  private[expressions] def mix64(z0: Long): Long = {
+    var z = z0 + 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+
   /** 2^62 - 1: the hash ring mask. */
   final val Mask62 = 0x3FFFFFFFFFFFFFFFL
 
@@ -159,13 +169,6 @@ case class MinHashBandKeysMod31(
           s"expected array<bigint> of element hashes, got $other")
     }
 
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   override def nullSafeEval(input: Any): Any = {
     val hs = input.asInstanceOf[ArrayData].toLongArray()
     if (hs.isEmpty) return new GenericArrayData(Array.emptyLongArray)
@@ -188,7 +191,7 @@ case class MinHashBandKeysMod31(
     while (b < bands) {
       var key = b.toLong // distinct bands never collide across band index
       var r = 0
-      while (r < rows) { key = mix64(key ^ sig(b * rows + r)); r += 1 }
+      while (r < rows) { key = PortableHash.mix64(key ^ sig(b * rows + r)); r += 1 }
       keys(b) = key
       b += 1
     }

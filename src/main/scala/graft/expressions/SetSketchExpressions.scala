@@ -212,13 +212,6 @@ case class MinHashBandKeys64(
           s"expected array<bigint> of element hashes, got $other")
     }
 
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   override def nullSafeEval(input: Any): Any = {
     val hs = input.asInstanceOf[ArrayData].toLongArray()
     if (hs.isEmpty) return new GenericArrayData(Array.emptyLongArray)
@@ -241,7 +234,7 @@ case class MinHashBandKeys64(
     while (b < bands) {
       var key = b.toLong // distinct bands never collide across band index
       var r = 0
-      while (r < rows) { key = mix64(key ^ sig(b * rows + r)); r += 1 }
+      while (r < rows) { key = PortableHash.mix64(key ^ sig(b * rows + r)); r += 1 }
       keys(b) = key
       b += 1
     }

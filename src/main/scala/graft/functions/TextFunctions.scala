@@ -16,9 +16,8 @@ object TextFunctions {
   /** Engine-portable half-up rounding — THE determinism rounding contract
     * shared by every oracle-checked operator: floor(x·10^d + 0.5)/10^d,
     * spelled identically in the DuckDB twins. (Spark's round() is
-    * HALF_UP, DuckDB's HALF_EVEN — this formula sidesteps both.) The
-    * per-operator `sround` helpers forward here so the formula has ONE
-    * definition.
+    * HALF_UP, DuckDB's HALF_EVEN — this formula sidesteps both.) Every
+    * operator imports this one definition.
     */
   def sround(c: Column, digits: Int): Column = {
     val f = math.pow(10, digits)
@@ -29,9 +28,8 @@ object TextFunctions {
     * the bitwise-deterministic reduction every float aggregate that must
     * hash-match a DuckDB `list_aggregate(list_sort(list(x)), 'sum')`
     * twin uses (t8/t17/g1's trick). One association order, reproduced by
-    * both engines at any partitioning. The per-operator `sortedFoldSum`
-    * helpers forward here so the load-bearing spelling has ONE
-    * definition that cannot drift.
+    * both engines at any partitioning. Every operator imports this one
+    * definition, so the load-bearing spelling cannot drift.
     */
   def sortedFoldSum(c: Column): Column =
     aggregate(array_sort(collect_list(c)), lit(0.0), (acc, x) => acc + x)

@@ -23,9 +23,6 @@ object Dedup {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 
-  private def sround(c: Column, digits: Int): Column =
-    graft.functions.TextFunctions.sround(c, digits)
-
   // ------------------------------------------------------ d1_exact_dedup
   /** Exact dedup: group by canonical-text md5; keep the smallest doc_id.
     * One hash-agg shuffle on the fingerprint — the cheapest dedup there is.
@@ -94,14 +91,14 @@ object Dedup {
     * asserts both plans engage and agree.
     */
   def ngramPairs(docsDf: DataFrame, minJac: Double): DataFrame = {
-    // Round 11, MEASURED AND REJECTED (CandProbe + sf10 DriftBench, PLANS
-    // round 11): a lossless gram-count-ratio candidate cut (jac <= min/max
-    // for sets, so least(n_a,n_b) >= minJac*greatest(n_a,n_b) never drops
-    // a verifying pair) was prototyped with the count riding the band
-    // rows. It trims only ~10% of candidates on this corpus (the verify
-    // here keeps 52% of candidates at 0.5 — candidates are NOT the
-    // 15/16-waste regime; that number is d12's word-truth operating
-    // point) while the extra distinct-gram counting pass, duplicated
+    // Round 11, MEASURED AND REJECTED (candidate-count probe + sf10
+    // DriftBench, PLANS.md round 11): a lossless gram-count-ratio
+    // candidate cut (jac <= min/max for sets, so least(n_a,n_b) >=
+    // minJac*greatest(n_a,n_b) never drops a verifying pair) was
+    // prototyped with the count riding the band rows. It trims only ~10%
+    // of candidates on this corpus (the verify here keeps 52% of
+    // candidates at 0.5 — candidates are NOT the 15/16-waste regime;
+    // that number is d12's word-truth operating point) while the extra distinct-gram counting pass, duplicated
     // across the band self-join subtrees, DOUBLED d13 at sf10 (17s ->
     // 36s) and cost d2 +38%. Revisit only for a corpus whose length
     // profile is wide enough that d12-style probing shows a >2x cut.
@@ -253,9 +250,9 @@ object Dedup {
     // fused bkey bakes the band index in, so per (doc_a, doc_b) the
     // collision COUNT is the number of agreeing bands — the groupBy is
     // the same shuffle the old .distinct() already paid, the filter is
-    // free. Measured on this corpus (CandProbe, PLANS round 11): every
-    // truth pair (word-jac >= 0.2) collides in >= 2 bands at sf0.01/
-    // sf0.1/sf1/sf10, so the OUTPUT is unchanged while the verify join
+    // free. Measured on this corpus (PLANS.md round 11): every truth
+    // pair (word-jac >= 0.2) collides in >= 2 bands at sf0.01/sf0.1/
+    // sf1/sf10, so the OUTPUT is unchanged while the verify join
     // ships shingle arrays to 14-15x fewer candidates at sf0.1/sf1
     // (2.8x at sf10). The cut shifts the LSH s-curve right (a pair at
     // similarity s now needs 2 of 32 band hits, ~the 2-row -> 3-row
@@ -883,115 +880,13 @@ object Dedup {
       |ORDER BY doc_a, doc_b""".stripMargin
 
   // -------------------------------------------------- d5_dedup_clusters
-  /** Cluster resolution: connected components over the d2 near-dup pair
-    * graph — the step every real dedup pipeline needs after pair
-    * generation (pairs (a,b),(b,c) must collapse to ONE kept doc, not
-    * two independent drops). Output: every document with its cluster id
-    * (min doc_id reachable), cluster size, and the canonical-keeper flag.
-    *
-    * Algorithm: iterative min-label propagation PLUS pointer jumping
-    * (label <- label(label)) to fixpoint — neighbor-min alone needs
-    * O(diameter) rounds, the hop halves the distance each round
-    * (O(log diameter); measured 7 rounds on the sf0.1 graph of 120k
-    * edges with clusters up to ~10 docs). Each round is two joins + a
-    * hash-agg over the (tiny) label/edge state, materialized (Materialize) to cut
-    * lineage (see inline note). A deep-graph corpus at 100 TB would swap
-    * in the alternating large-star/small-star rewrite — same join shape,
-    * same driver-loop structure.
-    */
-  /** Min-label + pointer-jumping connected components over `nodes`
-    * (single `doc_id` column) and directed `pairs` (doc_a < doc_b).
-    * Returns (doc_id, cluster_id = min reachable doc_id). Shared by d5
-    * and the corpus pipeline (which runs it on a filtered subgraph).
-    */
-  def minLabelComponents(nodes: DataFrame, pairsIn: DataFrame,
-      driverFinishEdges: Long = 2000000L): DataFrame = {
-    // materialize the pair generation ONCE — the symmetric union below
-    // references it twice, and without the cut the (possibly expensive)
-    // upstream pipeline would run twice inside the edges job. withCount:
-    // the gate count IS the job that writes the checkpoint (guide §5).
-    val (pairs, nPairs) =
-      withCount(pairsIn.select(col("doc_a"), col("doc_b")))
-    // Small-graph finish: once the candidate-pair graph fits comfortably on
-    // the driver (edges are a tiny residue of the corpus — near-dup pairs,
-    // not documents), a single collect + union-find replaces ~7 iterative
-    // jobs' worth of task-scheduling latency. This is the standard
-    // production shape for CC at any scale: iterate distributed only while
-    // the graph is too big, finish locally once it isn't. 2M edges ≈ 32 MB
-    // on the driver; a 100 TB corpus's pair graph lands here after the
-    // distributed rounds below halve it.
-    if (nPairs <= driverFinishEdges) return driverUnionFind(nodes, pairs)
-    // undirected edges, materialized once, reused every round. The label
-    // state is tiny relative to the corpus (one row per doc, edges only
-    // for candidates), so the iteration runs on few partitions — per-round
-    // task-scheduling overhead dominates otherwise; a 100 TB corpus still
-    // iterates on the (small) label/edge state, not the corpus. Sized by
-    // `spark.graft.cc.iterParts` when set; the default scales with the
-    // cluster (defaultParallelism/4, floor 8) instead of pinning label
-    // state to a local[32]-tuned constant.
-    val spark = nodes.sparkSession
-    val iterParts = spark.conf.getOption("spark.graft.cc.iterParts")
-      .map(_.toInt)
-      .getOrElse(math.max(8, spark.sparkContext.defaultParallelism / 4))
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("u", "v").repartition(iterParts, col("u")).materialize()
-    // each round's plan references the previous round's TWICE — without a
-    // lineage cut the logical plan doubles per round and the driver dies
-    // planning round ~20. Materialize (eager) truncates to the
-    // materialized result (a cluster deployment would use reliable
-    // checkpoints on the same cadence).
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("label"))
-      .repartition(iterParts, col("doc_id")).materialize()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 50) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("v"), col("label").as("v_label")), "v")
-        .groupBy(col("u")).agg(min(col("v_label")).as("nbr_min"))
-      // pointer-jumping (label <- label(label)) alongside neighbor-min:
-      // convergence in O(log diameter) rounds instead of O(diameter)
-      val hop = labels.as("l1")
-        .join(labels.as("l2"), col("l1.label") === col("l2.doc_id"))
-        .select(col("l1.doc_id").as("h_id"), col("l2.label").as("hop_label"))
-      // carry the previous label through, so convergence is a filter over
-      // the checkpointed round result — not another join per round
-      val next = labels
-        .join(nbrMin, labels("doc_id") === nbrMin("u"), "left")
-        .join(hop, labels("doc_id") === col("h_id"), "left")
-        .select(labels("doc_id"), col("label").as("prev"),
-          least(
-            least(col("label"), coalesce(col("nbr_min"), col("label"))),
-            coalesce(col("hop_label"), col("label"))).as("label"))
-        .materialize()
-      // one RDD job over the just-checkpointed blocks (narrow filter) —
-      // Dataset.count would plan a two-stage AQE aggregate for the same
-      // number (r18, guide §5)
-      val changed = cheapCount(
-        next.filter(col("label") =!= col("prev")))
-      labels = next.select(col("doc_id"), col("label"))
-      converged = changed == 0
-      rounds += 1
-    }
-    // loud bound (g15's starComponents discipline): an unconverged label
-    // frame is silently WRONG — partial components hash-diverge from the
-    // oracle in ways no downstream check attributes back to this loop
-    require(converged,
-      s"minLabelComponents: not converged after $rounds rounds — raise the " +
-        "bound or switch spark.graft.cc.algo=star (one agg+join per round, " +
-        "hub-collapsing; the 100-TB path)")
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
-  }
-
   /** Alternating LARGE-STAR/SMALL-STAR connected components (Kiveris et
     * al. 2014, "Connected Components in MapReduce and Beyond") — the
-    * 100-TB alternative [[minLabelComponents]]'s doc promises. Same
-    * contract: (doc_id, cluster_id = min reachable doc_id) over `nodes`
-    * and undirected `pairs`.
+    * above-gate branch of [[connectedComponents]]. Contract: (doc_id,
+    * cluster_id = min reachable doc_id) over `nodes` and undirected
+    * `pairs`.
     *
-    * Where min-label + pointer jumping iterates a LABEL frame against a
-    * fixed edge set (O(log diameter) rounds, label state partitioned by
-    * node), LS/SS rewrites the EDGE SET itself toward min-rooted stars:
+    * LS/SS rewrites the EDGE SET itself toward min-rooted stars:
     *   large-star: every neighbor of u LARGER than u re-attaches to
     *     m = min(Γ(u) ∪ {u});
     *   small-star: every smaller neighbor (and u) re-attaches to the
@@ -1000,25 +895,21 @@ object Dedup {
     * no label frontier, and a high-degree hub's whole neighborhood
     * collapses onto its minimum in ONE round instead of dragging a
     * frontier across it, which is what survives adversarial skew at
-    * corpus scale. Converges in O(log² n) rounds (far fewer in
-    * practice); per-round materialize cuts lineage like every iterative
-    * operator here.
+    * corpus scale (PLANS.md round 15: at sf10 a min-label + pointer-
+    * jumping loop ground >55 min on the d2 graph this finishes in
+    * minutes). Converges in O(log² n) rounds (far fewer in practice);
+    * per-round materialize cuts lineage like every iterative operator
+    * here.
     */
   def starComponents(nodes: DataFrame, pairsIn: DataFrame): DataFrame = {
-    val spark = nodes.sparkSession
-    // Iteration partitioning is AQE-SCALED by default (r18; VERDICT r17
-    // flagged the pinned max(8, cores/4)): a keyed repartition WITHOUT an
-    // explicit count seeds from the session's data-derived shuffle
-    // partitions and lets AQE coalesce each round's exchanges to the
-    // ACTUAL edge-set bytes — tiny residual graphs stop paying dozens of
-    // empty task launches per round, corpus-scale graphs get real
-    // parallelism, and no constant is tuned to either. The conf stays as
-    // a manual pin (it also pins the SMJ co-partition width).
-    val byU: DataFrame => DataFrame =
-      spark.conf.getOption("spark.graft.cc.iterParts").map(_.toInt) match {
-        case Some(parts) => df => df.repartition(parts, col("u"))
-        case None => df => df.repartition(col("u"))
-      }
+    // Iteration partitioning is AQE-SCALED (r18; VERDICT r17 flagged the
+    // pinned max(8, cores/4)): a keyed repartition WITHOUT an explicit
+    // count seeds from the session's data-derived shuffle partitions and
+    // lets AQE coalesce each round's exchanges to the ACTUAL edge-set
+    // bytes — tiny residual graphs stop paying dozens of empty task
+    // launches per round, corpus-scale graphs get real parallelism, and
+    // no constant is tuned to either.
+    val byU: DataFrame => DataFrame = _.repartition(col("u"))
     // canonical directed form: u > v (edges always point big -> small).
     // Dedup ORDER (r17 optimization, guide §2.4): repartition by u FIRST,
     // then aggregate-distinct on (u, v) — HashPartitioning(u) satisfies
@@ -1056,10 +947,11 @@ object Dedup {
         .transform(byU)
       val lsm = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("mn"), col("u")).as("m"))
-      // MATERIALIZED deliberately (re-confirmed r17 via StarPlanProbe): ls
-      // has three consumers in next's plan (the ssm aggregate, the
-      // re-attach probe side, and ssm's second appearance under the
-      // union) — one eager cut per star phase stays the floor.
+      // MATERIALIZED deliberately (re-confirmed r17 from the physical
+      // plan, OPTIMIZATION_r17.md §2): ls has three consumers in next's
+      // plan (the ssm aggregate, the re-attach probe side, and ssm's
+      // second appearance under the union) — one eager cut per star
+      // phase stays the floor.
       // Repartitioned by its NEW center before the cut, so the
       // small-star aggregate and join plan with no exchange of their own
       // off the checkpoint-preserved partitioning.
@@ -1102,9 +994,6 @@ object Dedup {
       val (nextCount, nNew) = graft.Materialize.countWithNullFlag(marked, 2)
       val next = marked.select(col("u"), col("v"))
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round=$rounds prev=$prevCount " +
-          s"next=$nextCount new=$nNew")
       converged = nNew == 0L && nextCount == prevCount
       prevCount = nextCount
       edges = next
@@ -1124,7 +1013,7 @@ object Dedup {
   /** Driver-side union-find over a collected edge list (min id becomes the
     * root, path-compressed), broadcast-joined back onto the node set.
     * Only nodes that occur in an edge are in the mapping — isolated docs
-    * coalesce to themselves, so the output matches the iterative path
+    * coalesce to themselves, so the output matches [[starComponents]]
     * exactly.
     */
   private def driverUnionFind(nodes: DataFrame, pairs: DataFrame): DataFrame = {
@@ -1137,11 +1026,11 @@ object Dedup {
       while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    // driver-bound(threshold-gated): callers route here only when the edge count is <= driverFinishEdges (hybrid CC gate); larger graphs take the star-contraction path
+    // driver-bound(threshold-gated): callers route here only when the edge count is <= driverFinishEdges (connectedComponents gate); larger graphs take the star-contraction path
     pairs.collect().foreach { row =>
       val (a, b) = (row.getLong(0), row.getLong(1))
       val (ra, rb) = (find(a), find(b))
-      // min id wins the root — preserves the min-label cluster_id contract
+      // min id wins the root — preserves the min-reachable cluster_id contract
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
     val mapping = parent.keys.toArray.map(id => (id, find(id))).toSeq
@@ -1152,55 +1041,26 @@ object Dedup {
         coalesce(col("uf_cluster"), col("doc_id")).as("cluster_id"))
   }
 
-  /** Single connected-components entry point: the algorithm is a POLICY
-    * (`spark.graft.cc.algo`), not a code fork. Both strategies share the
-    * same contract — (doc_id, cluster_id = min reachable doc_id) — and
-    * the same oracle (d5 and g15 are hash-certified against ONE
-    * recursive-closure SQL at sf0.01/0.1/1/10; GraphSpec asserts they
-    * agree on planted fixtures including the bridge merge):
-    *
-    *   - `hybrid` (default): driver union-find while the pair graph
-    *     fits (≤ `driverFinishEdges` — the shallow, small residual
-    *     graphs near-dup pipelines produce), [[starComponents]] above
-    *     the gate. Round 15 measurement forced the big-branch switch
-    *     from min-label: at sf10 the d2 pair graph crosses the gate and
-    *     min-label+pointer-jumping ground >55 min in its label loop
-    *     while star finished the SAME input in minutes (g15's run) —
-    *     the label frontier drags across the giant rotation-class
-    *     components, exactly the regime Kiveris et al. built star for.
-    *   - `minlabel`: [[minLabelComponents]] — min-label + pointer
-    *     jumping (kept as the differential witness and for shallow
-    *     graphs where its per-round cost is lower).
-    *   - `star`: [[starComponents]] — alternating large-star/small-star
-    *     edge rewriting (Kiveris et al. 2014), zero driver state. Wins
-    *     under adversarial skew and unbounded pair graphs: a hub's
-    *     neighborhood collapses onto its minimum in one round.
-    *
-    * `algoOverride` pins a strategy regardless of the session conf —
-    * g15 uses it to stay the standing certification of the star path.
+  /** Connected components: (doc_id, cluster_id = min reachable doc_id)
+    * over `nodes` and undirected `pairs` (doc_a, doc_b). Driver
+    * union-find while the pair graph fits (≤ `driverFinishEdges` — the
+    * shallow, small residual graphs near-dup pipelines produce; 2M edges
+    * ≈ 32 MB on the driver, one collect instead of a job per round),
+    * [[starComponents]] above the gate (sf10's d2 graph; zero driver
+    * state, hub-collapsing). One oracle certifies both branches: d5 and
+    * g15 hash-match the same recursive-closure SQL, and specs drive the
+    * star branch through the gate with `driverFinishEdges = -1`.
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
-      driverFinishEdges: Long = 2000000L,
-      algoOverride: Option[String] = None): DataFrame = {
-    val algo = algoOverride.orElse(
-      nodes.sparkSession.conf.getOption("spark.graft.cc.algo"))
-      .getOrElse("hybrid")
-    algo match {
-      case "hybrid" =>
-        // materialize: the pair plan (a band join + verify, typically)
-        // feeds the gate count AND the chosen algorithm — compute once.
-        // Project to the edge columns BY NAME first: driverUnionFind
-        // reads positionally, and the gate's collect must not haul any
-        // extra caller columns (e.g. a jaccard score) to the driver
-        val (p, nP) =
-          withCount(pairs.select(col("doc_a"), col("doc_b")))
-        if (nP <= driverFinishEdges) driverUnionFind(nodes, p)
-        else starComponents(nodes, p)
-      case "minlabel" => minLabelComponents(nodes, pairs, driverFinishEdges)
-      case "star"   => starComponents(nodes, pairs)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.cc.algo=$other — expected 'hybrid', 'minlabel' or 'star'")
-    }
+      driverFinishEdges: Long = 2000000L): DataFrame = {
+    // materialize: the pair plan (a band join + verify, typically) feeds
+    // the gate count AND the chosen algorithm — compute once. Project to
+    // the edge columns BY NAME first: driverUnionFind reads
+    // positionally, and the gate's collect must not haul any extra
+    // caller columns (e.g. a jaccard score) to the driver
+    val (p, nP) = withCount(pairs.select(col("doc_a"), col("doc_b")))
+    if (nP <= driverFinishEdges) driverUnionFind(nodes, p)
+    else starComponents(nodes, p)
   }
 
   /** Annotate a components frame (doc_id, cluster_id) with per-cluster
@@ -1223,6 +1083,18 @@ object Dedup {
         col("is_canonical"))
   }
 
+  /** Cluster resolution: connected components over the d2 near-dup pair
+    * graph — the step every real dedup pipeline needs after pair
+    * generation (pairs (a,b),(b,c) must collapse to ONE kept doc, not
+    * two independent drops). Output: every document with its cluster id
+    * (min doc_id reachable), cluster size, and the canonical-keeper flag.
+    *
+    * Algorithm: [[connectedComponents]] — driver union-find while the
+    * pair graph fits under the edge gate (every sf up to 1: near-dup
+    * pairs are a tiny residue of the corpus), [[starComponents]] above
+    * it (sf10's d2 graph crosses the gate). Sizes come from
+    * [[withClusterStats]]'s skew-safe agg + join-back.
+    */
   val d5DedupClusters: Q = (s, d) => {
     val comps = connectedComponents(
       docs(s, d).select(col("doc_id")), d2Pairs(s, d))
@@ -2173,7 +2045,7 @@ object Dedup {
     * the full corpus is the textbook 100 TB mistake: the component table
     * changes only where delta edges touch it. The incremental discipline:
     *
-    *   1. standing labels = min-label components over EXISTING docs (the
+    *   1. standing labels = components (min doc_id) over EXISTING docs (the
     *      build here stands in for the persisted label table a
     *      production run reads, exactly as d10's corpus index does);
     *   2. delta pairs = d2-verified pairs touching >= 1 incoming doc,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Materialize._
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.TextFunctions.{sortedFoldSum, sround}
 
 /** Graph analytics over relationally-derived edge lists — the iterative
   * family alongside d5's connected components. The engine's stance: a graph
@@ -20,16 +21,6 @@ import graft.Tables
   */
 object Graph {
   type Q = (SparkSession, String) => DataFrame
-
-  private def sround(c: Column, digits: Int): Column =
-    graft.functions.TextFunctions.sround(c, digits)
-
-  /** Exact-order double summation: fold the values in sorted order so the
-    * result is one specific association order both engines reproduce
-    * (t8/t17's trick — list_sort + list_aggregate 'sum' in DuckDB).
-    */
-  private def sortedFoldSum(c: Column): Column =
-    graft.functions.TextFunctions.sortedFoldSum(c)
 
   /** The bipartite user↔item interaction graph mined from `events`
     * (user_id ↔ props.k), as a distinct directed edge list u→k. g1 and g3
@@ -1135,25 +1126,21 @@ object Graph {
   // ------------------------------------------------------ g15_cc_star
   /** Connected components by ALTERNATING STARS — the same clusters as d5
     * (identical oracle), computed by [[Dedup.starComponents]]'s
-    * large-star/small-star edge rewriting instead of min-label
-    * propagation. Shipping both algorithms against one oracle is the
-    * point: the label-frontier form wins on small diameters, the star
-    * form on adversarial skew (a hub's neighborhood collapses to its
-    * minimum in one round), and a 100-TB deployment picks per graph.
-    * Runs on d5's verified near-dup pair graph, so the closure oracle
-    * stays bounded by construction.
+    * large-star/small-star edge rewriting on every graph, where d5's
+    * [[Dedup.connectedComponents]] finishes small graphs with driver
+    * union-find. Runs on d5's verified near-dup pair graph, so the
+    * closure oracle stays bounded by construction.
     *
-    * Cost stance: unlike d5 (which finishes small graphs driver-side and
-    * is ~3× faster at test scale), g15 deliberately iterates the
-    * distributed path end-to-end — it is the certification that the
-    * no-driver-state algorithm lands the same clusters at every SF. A
-    * production deployment keeps d5's hybrid and swaps in this loop only
-    * past the driver-finish threshold.
+    * Cost stance: unlike d5 (~3× faster at test scale), g15
+    * deliberately iterates the distributed path end-to-end — it is the
+    * certification that the no-driver-state algorithm lands the same
+    * clusters at every SF, i.e. that d5 stays correct past its
+    * driver-finish gate.
     */
   val g15CcStar: Q = (s, d) => {
-    val comps = Dedup.connectedComponents(
+    val comps = Dedup.starComponents(
       graft.Tables.load(s, d, "documents").select(col("doc_id")),
-      Dedup.d2Pairs(s, d), algoOverride = Some("star"))
+      Dedup.d2Pairs(s, d))
     // skew-safe size annotation (agg + join-back) — see Dedup.withClusterStats
     Dedup.withClusterStats(comps).orderBy("doc_id")
   }

@@ -5,6 +5,7 @@ import graft.Materialize._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.TextFunctions.sround
 
 /** Relational operator coverage, mapped 1:1 from the reference inventory in
   * SURVEY.md §2 (reference: kimiko-dev/Uber-Data-Pipeline, six dbt models
@@ -32,15 +33,12 @@ object Relational {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
-  /** Engine-portable half-up rounding: floor(x*10^n + 0.5)/10^n, pure IEEE
-    * double ops — bitwise-identical in Spark and DuckDB, unlike round(),
-    * whose half-way tie behavior differs (HALF_UP vs HALF_EVEN). Money sums
-    * divided by counts land on exact .xx5 boundaries often, so this is the
-    * ONLY rounding used in oracle-checked outputs. The SQL twin is the same
-    * formula spelled out (see each oracle).
-    */
-  private def sround(c: org.apache.spark.sql.Column, digits: Int): org.apache.spark.sql.Column =
-    graft.functions.TextFunctions.sround(c, digits)
+  // Rounding is TextFunctions.sround, pure IEEE double ops (floor(x*10^n
+  // + 0.5)/10^n) — bitwise-identical in Spark and DuckDB, unlike round(),
+  // whose half-way tie behavior differs (HALF_UP vs HALF_EVEN). Money sums
+  // divided by counts land on exact .xx5 boundaries often, so it is the
+  // ONLY rounding used in oracle-checked outputs. The SQL twin is the same
+  // formula spelled out (see each oracle).
 
   /** Exact money aggregation: 2-decimal doubles → integer cents → BIGINT sum.
     * A plain double sum is association-order-dependent (Spark's partial aggs

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.VectorFunctions._
+import graft.functions.TextFunctions.{sortedFoldSum, sround}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors,
   * 10 class labels).
@@ -25,8 +26,9 @@ object Similarity {
 
   private def emb(s: SparkSession, d: String) = Tables.load(s, d, "embeddings")
 
-  private def sround(c: Column, digits: Int): Column =
-    graft.functions.TextFunctions.sround(c, digits)
+  // DuckDB-twin spelling of `dot` over two list columns
+  private def dotList(a: String, b: String): String =
+    s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
 
   private val K = 10
   private val NQ = 8 // query vectors: vec_id < 8
@@ -279,8 +281,6 @@ object Similarity {
     * one spelling keeps the builds from drifting apart).
     */
   private val ivfCorpusCtes: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     s"""e AS MATERIALIZED (
        |  SELECT vec_id, embedding,
        |    list_dot_product(
@@ -318,8 +318,6 @@ object Similarity {
   }
 
   val v4IvfAnnSql: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     s"""WITH $ivfCorpusCtes,
        |probes AS (
        |  SELECT vec_id AS q_id, embedding AS q_emb, nsq AS nsq_q, cell
@@ -390,8 +388,6 @@ object Similarity {
 
   /** DuckDB twin: v4's shared build chain + the two-stage rank. */
   val v15DiverseAnnSql: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     s"""WITH $ivfCorpusCtes,
        |q AS (SELECT vec_id AS q_id, embedding AS q_emb, nsq AS nsq_q
        |      FROM e WHERE vec_id < $NQ),
@@ -1062,8 +1058,6 @@ object Similarity {
     * global top-quota).
     */
   val v10KmeansSql: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     def assign(n: Int): String =
       s"""a$n AS MATERIALIZED (
          |  SELECT vec_id, embedding, cell FROM (
@@ -1162,8 +1156,6 @@ object Similarity {
   }
 
   val v12IvfAppendSql: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     s"""WITH e AS MATERIALIZED (
        |  SELECT vec_id, embedding,
        |    list_dot_product(
@@ -1322,8 +1314,6 @@ object Similarity {
     * candidate join, spellings copied verbatim from the component twins.
     */
   val v14IvfPqSql: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     def dotSub(a: String, b: String): String =
       s"list_sum(list_transform(range(1, 9), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
     def nsqSub(a: String): String = dotSub(a, a)
@@ -1548,8 +1538,6 @@ object Similarity {
     * and per-source rank.
     */
   val v16KnnJoinSql: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     // The naive twin ranks EVERY within-cell pair in one window — at
     // scaled SFs that is a multi-billion-row sort (the compare harness,
     // not the operator, became the certification bottleneck; round-12's
@@ -1655,8 +1643,6 @@ object Similarity {
     * positive max / margin arithmetic.
     */
   val v17HardNegativesSql: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     s"""WITH $ivfCorpusCtes,
        |probes AS (
        |  SELECT vec_id AS q_id, embedding AS q_emb, nsq AS nsq_q, cell
@@ -1736,8 +1722,6 @@ object Similarity {
     * fold, per-cell rank + count windows, integer ceil-div cutoff.
     */
   val v18PrototypicalitySql: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     s"""WITH $ivfCorpusCtes,
        |scored AS (
        |  SELECT c.n_id AS vec_id, c.cell,
@@ -1820,8 +1804,6 @@ object Similarity {
     * v1's oracle as the exact side.
     */
   val v19NprobeSweepSql: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     s"""WITH $ivfCorpusCtes,
        |probes AS (
        |  SELECT vec_id AS q_id, embedding AS q_emb, nsq AS nsq_q, cell,
@@ -1875,22 +1857,15 @@ object Similarity {
     * oracle CTE chain): candidates and BOTH k-NN neighborhoods live
     * inside the vector's own IVF cell, so the pair bill is Σ|Xc|·|Yc| —
     * the bipartite v16 shape, grown by cell count at corpus scale, never
-    * corpus². The pair stream is by default recomputed per consumer
-    * (three passes: meanK(x), meanK(y), final scoring) — at 100 TB
-    * recomputing a streamed join is cheap, materializing billions of
-    * pairs is not (v16's lesson). For SMALL-cell regimes where the pair
-    * bill fits comfortably (short corpora, heavy quantization),
-    * `spark.graft.bitext.materialize=true` computes the pair stream
-    * ONCE and fences it for all three consumers — same rows by
-    * construction (SimilaritySpec asserts both paths emit identical
-    * output). meanK sums use the sorted-fold idiom (g1's
+    * corpus². The pair stream is recomputed per consumer (three
+    * passes: meanK(x), meanK(y), final scoring) — at 100 TB recomputing
+    * a streamed join is cheap, materializing billions of pairs is not
+    * (v16's lesson). meanK sums use the sorted-fold idiom (g1's
     * bitwise-deterministic double reduction), and the margin is one
     * identically-spelled division, so the twin replays exactly.
     */
   val v20BitextMining: Q = (s, d) => {
     val kNN = 4
-    val matPairs = s.conf.getOption("spark.graft.bitext.materialize")
-      .exists(_.toBoolean)
     val e = emb(s, d)
     val langs = Tables.load(s, d, "documents")
       .select(col("doc_id").as("vec_id"), col("lang"))
@@ -1906,18 +1881,10 @@ object Similarity {
     val ys = corpus.filter(col("lang") === "en")
       .select(col("vec_id").as("y_id"), col("embedding").as("e_y"),
         col("nsq").as("nsq_y"), col("cell"))
-    def pairsStream: DataFrame = xs.join(ys, Seq("cell"))
+    def pairs: DataFrame = xs.join(ys, Seq("cell"))
       .withColumn("sim", cosineWithNorms(dot(col("e_x"), col("e_y")),
         col("nsq_x"), col("nsq_y")))
       .select(col("x_id"), col("y_id"), col("sim"))
-    // conf-gated: fence the pair stream once for all three consumers
-    // (small-cell regimes) vs recompute it per consumer (the default —
-    // the right call when pairs are billions of rows)
-    val pairsShared: Option[DataFrame] =
-      if (matPairs) Some(pairsStream.materialize()) else None
-    def pairs: DataFrame = pairsShared.getOrElse(pairsStream)
-    def sortedFoldSum(c: Column): Column =
-      graft.functions.TextFunctions.sortedFoldSum(c)
     def meanK(key: String, other: String): DataFrame = pairs
       .withColumn("r", row_number().over(Window.partitionBy(col(key))
         .orderBy(col("sim").desc, col(other).asc)))
@@ -1942,8 +1909,6 @@ object Similarity {
     * list_sort+list_aggregate for the deterministic k-NN mean folds.
     */
   val v20BitextMiningSql: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     def pairsSql: String =
       s"""(SELECT x.n_id AS x_id, y.n_id AS y_id,
          |    ${dotList("x.n_emb", "y.n_emb")}
@@ -2087,7 +2052,7 @@ object Similarity {
       .crossJoin(broadcast(stats))
       .select(col("q_id"), col("doc_id"), contrib.as("c"))
       .groupBy(col("q_id"), col("doc_id"))
-      .agg(graft.functions.TextFunctions.sortedFoldSum(col("c")).as("score"))
+      .agg(sortedFoldSum(col("c")).as("score"))
   }
 
   /** The FULL per-query dense and BM25 rank lists (v22/v24's ground-truth
@@ -2511,8 +2476,6 @@ object Similarity {
     * consumed by v24's oracle (eval) and v25's (serving).
     */
   private val annRankCtes: String = {
-    def dotList(a: String, b: String): String =
-      s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
     s"""aprobes AS (
        |  SELECT vec_id AS q_id, embedding AS q_emb, nsq AS nsq_q, cell
        |  FROM (

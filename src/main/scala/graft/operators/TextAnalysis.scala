@@ -16,16 +16,13 @@ import graft.functions.TextFunctions._
   * would be dropped in production writes.
   *
   * Numeric discipline: every ratio is a division of exact integers, so the
-  * doubles are bitwise-identical to the DuckDB oracle's (see Relational's
-  * sround note).
+  * doubles are bitwise-identical to the DuckDB oracle's (see
+  * TextFunctions.sround).
   */
 object TextAnalysis {
   type Q = (SparkSession, String) => DataFrame
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
-
-  private def sround(c: Column, digits: Int): Column =
-    graft.functions.TextFunctions.sround(c, digits)
 
   // ------------------------------------------------------- t1_text_stats
   /** Token counting: chars, UTF-8 bytes, whitespace tokens, distinct tokens,

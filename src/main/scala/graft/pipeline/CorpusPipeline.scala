@@ -5,6 +5,7 @@ import graft.Materialize._
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Dedup
+import graft.functions.TextFunctions.sround
 
 /** End-to-end training-corpus preparation — the composition the individual
   * operators exist FOR, as one orchestrated flow:
@@ -339,9 +340,6 @@ object CorpusPipeline {
     * hot path). Dominant lang is a tiny per-source window over
     * (source × lang) counts.
     */
-  private def sround(c: Column, digits: Int): Column =
-    graft.functions.TextFunctions.sround(c, digits)
-
   def p3DatasetCard(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = graft.Tables.load(s, d, "documents")

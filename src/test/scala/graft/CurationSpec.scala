@@ -556,28 +556,30 @@ class CurationSpec extends SparkSpec {
     }
   }
 
-  test("d5 components: driver union-find ≡ iterative min-label propagation") {
+  test("d5 components: union-find, star through the gate and closure agree") {
+    def toMap(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().toMap
     val nodes = (1L to 12L).toDF("doc_id")
     // two chains and a triangle: {1..4}, {5,6,7}, {8,9,10}; 11,12 isolated
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L),
       (5L, 7L), (8L, 9L), (9L, 10L)).toDF("doc_a", "doc_b")
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long)].collect().toMap
-    val uf = toMap(Dedup.minLabelComponents(nodes, pairs))
-    val iter = toMap(Dedup.minLabelComponents(nodes, pairs, -1L))
-    assert(uf == iter)
+    val uf = toMap(Dedup.connectedComponents(nodes, pairs))
+    val star = toMap(Dedup.connectedComponents(nodes, pairs, -1L))
+    assert(uf == star)
     assert(uf(4L) == 1L && uf(7L) == 5L && uf(10L) == 8L)
     assert(uf(11L) == 11L && uf(12L) == 12L)
-    // the iteration-state partitioning knob is honored (wrong values
-    // fail loudly) and a non-default width leaves the labels unchanged
-    spark.conf.set("spark.graft.cc.iterParts", "3")
-    try {
-      assert(toMap(Dedup.minLabelComponents(nodes, pairs, -1L)) == uf)
-      spark.conf.set("spark.graft.cc.iterParts", "not-a-number")
-      intercept[NumberFormatException] {
-        Dedup.minLabelComponents(nodes, pairs, -1L).collect()
-      }
-    } finally spark.conf.unset("spark.graft.cc.iterParts")
+    // d5's own input: the d2 near-dup pair graph over every document,
+    // both branches held to the in-memory closure
+    val docIds = Tables.load(spark, sfDir, "documents").select($"doc_id")
+    val d2 = Dedup.d2Pairs(spark, sfDir).select($"doc_a", $"doc_b")
+      .as[(Long, Long)].collect().toSeq
+    assert(d2.nonEmpty)
+    val closure = closureComponents(docIds.as[Long].collect().toSeq, d2)
+    val d2Df = d2.toDF("doc_a", "doc_b")
+    assert(toMap(Dedup.connectedComponents(docIds, d2Df)) == closure,
+      "union-find disagrees with the closure on the d2 graph")
+    assert(toMap(Dedup.connectedComponents(docIds, d2Df, -1L)) == closure,
+      "star disagrees with the closure on the d2 graph")
   }
 
   test("t24 code switch: planted mixed doc flags; monolingual docs agree with whole-doc langid") {

@@ -305,7 +305,7 @@ class GraphSpec extends SparkSpec {
       u < v && !e0.contains((u, v)) })
   }
 
-  test("g15 star components: equals min-label CC on chains, hubs and isolates") {
+  test("g15 star components: star, union-find and closure agree on chains, hubs, bridges") {
     import graft.operators.Dedup
     val nodes = (1L to 40L).toDF("doc_id")
     // a long chain (worst case for label propagation), a 20-spoke hub
@@ -317,35 +317,31 @@ class GraphSpec extends SparkSpec {
     val pairs = (chain ++ hub ++ tri).toDF("doc_a", "doc_b")
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long)].collect().toMap
-    val star = toMap(Dedup.starComponents(nodes, pairs))
-    val label = toMap(Dedup.minLabelComponents(nodes, pairs, -1L))
-    assert(star == label, "two CC algorithms disagree")
+    // three plans, one contract: star directly, the entry point at its
+    // default gate (driver union-find), and the entry point with the
+    // gate forced below the edge count (its star branch)
+    def threeWays(p: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+      val star = toMap(Dedup.starComponents(nodes, p))
+      assert(toMap(Dedup.connectedComponents(nodes, p)) == star,
+        "union-find disagrees with star")
+      assert(toMap(Dedup.connectedComponents(nodes, p, -1L)) == star,
+        "the above-gate branch disagrees with star")
+      star
+    }
+    val ids = (1L to 40L)
+    val star = threeWays(pairs)
+    assert(star == closureComponents(ids, chain ++ hub ++ tri))
     assert(star(10L) == 1L && star(39L) == 20L && star(13L) == 11L)
     assert(star(14L) == 14L && star(40L) == 40L, "isolates must self-root")
 
-    // the algorithm is a POLICY through the single entry point: the
-    // spark.graft.cc.algo conf selects the strategy, and both agree on
-    // the planted BRIDGE-MERGE fixture (one edge fusing the chain, the
-    // triangle and the hub into a single component rooted at 1)
-    val bridged = pairs.union(Seq((10L, 11L), (13L, 20L)).toDF("doc_a", "doc_b"))
-    def viaConf(algo: String) = {
-      spark.conf.set("spark.graft.cc.algo", algo)
-      try toMap(Dedup.connectedComponents(nodes, bridged, -1L))
-      finally spark.conf.unset("spark.graft.cc.algo")
-    }
-    val hybrid = viaConf("hybrid")
-    assert(hybrid == viaConf("star"),
-      "cc.algo strategies disagree on the bridge merge")
-    // minlabel (the differential witness since hybrid's big branch moved
-    // to star in round 15) must agree too — three plans, one contract
-    assert(hybrid == viaConf("minlabel"),
-      "cc.algo=minlabel disagrees on the bridge merge")
-    assert(hybrid(39L) == 1L && hybrid(13L) == 1L && hybrid(10L) == 1L,
+    // the planted BRIDGE-MERGE fixture: two edges fuse the chain, the
+    // triangle and the hub into a single component rooted at 1
+    val bridges = Seq((10L, 11L), (13L, 20L))
+    val merged = threeWays(pairs.union(bridges.toDF("doc_a", "doc_b")))
+    assert(merged == closureComponents(ids, chain ++ hub ++ tri ++ bridges))
+    assert(merged(39L) == 1L && merged(13L) == 1L && merged(10L) == 1L,
       "bridge edges must fuse chain+triangle+hub into the 1-rooted component")
-    assert(hybrid(14L) == 14L, "isolates stay self-rooted after the merge")
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(nodes, bridged, -1L, Some("bogus")).collect()
-    }
+    assert(merged(14L) == 14L, "isolates stay self-rooted after the merge")
   }
 
   test("g8 plan: propagation rounds are equality joins, never a cartesian") {

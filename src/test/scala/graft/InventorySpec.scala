@@ -1,0 +1,76 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Drift guards over the source tree itself: the session knobs the code
+  * reads are exactly the ones README documents, and the runnable entry
+  * points are exactly the listed set. A new knob or `main` has to be
+  * documented (or listed) here in the same change that adds it.
+  */
+class InventorySpec extends AnyFunSuite {
+
+  /** The repository root: the nearest ancestor of the working directory
+    * holding build.sbt (forked test JVMs may start in a subdirectory).
+    */
+  private val root: Path = Iterator
+    .iterate(Paths.get(sys.props("user.dir")).toAbsolutePath)(_.getParent)
+    .takeWhile(_ != null)
+    .find(p => Files.exists(p.resolve("build.sbt")))
+    .getOrElse(fail("no build.sbt above the working directory"))
+
+  private lazy val mainSources: Seq[(Path, String)] = {
+    val walk = Files.walk(root.resolve("src/main"))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .sorted.map(p => p -> Files.readString(p))
+    finally walk.close()
+  }
+
+  private def diff(what: String, found: Set[String],
+      expected: Set[String]): Option[String] = {
+    val extra = found -- expected
+    val missing = expected -- found
+    if (extra.isEmpty && missing.isEmpty) None
+    else Some(s"$what — extra: ${extra.toSeq.sorted.mkString(", ")}; " +
+      s"missing: ${missing.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("every spark.graft.* conf read in src/main is in README's Session configuration table, and vice versa") {
+    val read = """\.conf\s*\.\s*(?:get|getOption)\(\s*"(spark\.graft\.[^"]+)"""".r
+    val inCode = mainSources.flatMap { case (_, src) =>
+      read.findAllMatchIn(src).map(_.group(1)) }.toSet
+    val readme = Files.readAllLines(root.resolve("README.md")).asScala.toSeq
+    val table = readme.dropWhile(_.trim != "### Session configuration")
+      .drop(1).dropWhile(l => !l.startsWith("|")).takeWhile(_.startsWith("|"))
+    assert(table.nonEmpty, "README has no Session configuration table")
+    val row = """^\|\s*`(spark\.graft\.[^`]+)`""".r
+    val documented = table.flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
+    diff("code-read knobs (extra) vs README table (missing)",
+      inCode, documented).foreach(fail(_))
+  }
+
+  test("the objects defining `def main` in src/main are exactly the listed entry points") {
+    val expected = Set(
+      "graft.Bench", "graft.Verify",
+      "graft.uber.Runner", "graft.uber.Scheduler",
+      "graft.tools.DedupEconomics", "graft.tools.DriftBench",
+      "graft.tools.Explain", "graft.tools.JobProfile",
+      "graft.tools.ScaleUp", "graft.tools.SkewAudit",
+      "graft.tools.UberScaleBench", "graft.tools.ZipfCorpus")
+    val pkg = """(?m)^package\s+([\w.]+)""".r
+    val obj = """(?m)^\s*(?:private\s+|final\s+)*object\s+(\w+)""".r
+    val main = """\bdef\s+main\s*\(""".r
+    val found = mainSources.flatMap { case (path, src) =>
+      val p = pkg.findFirstMatchIn(src).map(_.group(1) + ".").getOrElse("")
+      val objs = obj.findAllMatchIn(src).map(m => m.start -> m.group(1)).toSeq
+      main.findAllMatchIn(src).map { m =>
+        // the enclosing object: the last declared before the `def main`
+        val owner = objs.takeWhile(_._1 < m.start).lastOption
+          .getOrElse(fail(s"`def main` outside an object in $path"))._2
+        p + owner
+      }
+    }.toSet
+    diff("main entry points", found, expected).foreach(fail(_))
+  }
+}

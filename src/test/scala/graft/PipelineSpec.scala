@@ -68,7 +68,7 @@ class PipelineSpec extends SparkSpec {
     val st = CorpusPipeline.stages(spark, sfDir).toMap
     val keepers = st("exact_dedup")
     val canon = st("neardup_dedup").select($"doc_id").as[Long].collect().toSet
-    val comps = graft.operators.Dedup.minLabelComponents(
+    val comps = graft.operators.Dedup.connectedComponents(
       keepers.select($"doc_id"), graft.operators.Dedup.ngramPairs(keepers))
       .as[(Long, Long)].collect()
     comps.foreach { case (docId, cluster) =>

@@ -14,4 +14,28 @@ trait SparkSpec extends AnyFunSuite {
   ).getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Connected components by in-memory BFS closure — the independent
+    * oracle the Spark components paths are held to: every node maps to
+    * the minimum node it reaches. `nodes` must cover every endpoint.
+    */
+  def closureComponents(nodes: Seq[Long],
+      pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2)
+    val root = scala.collection.mutable.Map.empty[Long, Long]
+    // ascending sweep: the first unvisited node is its component's min
+    nodes.sorted.foreach { n =>
+      if (!root.contains(n)) {
+        root(n) = n
+        var frontier = List(n)
+        while (frontier.nonEmpty) {
+          frontier = frontier.flatMap(adj.getOrElse(_, Nil))
+            .filterNot(root.contains).distinct
+          frontier.foreach(root(_) = n)
+        }
+      }
+    }
+    root.toMap
+  }
 }

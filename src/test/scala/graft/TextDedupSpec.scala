@@ -647,7 +647,7 @@ class TextDedupSpec extends SparkSpec {
     assert(r(100L)._2)
     assert(r(4L) == ((4L, false)) && r(101L) == ((101L, false)))
     // incremental == full recompute over the union graph
-    val full = Dedup.minLabelComponents(
+    val full = Dedup.connectedComponents(
       docs.select($"doc_id"), Dedup.ngramPairs(docs.select($"doc_id", $"text")))
       .as[(Long, Long)].collect().toMap
     r.foreach { case (id, (cid, _)) =>
