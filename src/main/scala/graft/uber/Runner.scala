@@ -1,6 +1,7 @@
 package graft.uber
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.GraftSession
 
 /** Orchestration layer (SURVEY §2.10): dependency-ordered materialization of
@@ -35,7 +36,8 @@ object Runner {
     * all six models as parquet tables under `outDir` (overwrite per run).
     * A failed check throws, naming the failing checks, before any model is
     * written, so the previous models stay as they were. Returns row counts
-    * per model (the reference's manual `SELECT COUNT(*)` check, automated).
+    * per model (the reference's manual `SELECT COUNT(*)` check, automated),
+    * observed on each model's write rather than read back.
     */
   def runAll(
       spark: SparkSession,
@@ -49,9 +51,11 @@ object Runner {
       throw new IllegalStateException("source checks failed, no model written: " +
         failed.map(r => s"${r.table}.${r.column} ${r.check} (${r.failures})").mkString(", "))
     Models.all.map { m =>
-      val df = runModel(spark, m, form)
-      df.write.mode("overwrite").parquet(s"$outDir/${m.name}")
-      m.name -> spark.read.parquet(s"$outDir/${m.name}").count()
+      // the write's own pass counts the rows: no re-read of the output
+      val written = Observation()
+      runModel(spark, m, form).observe(written, count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(s"$outDir/${m.name}")
+      m.name -> written.get("rows").asInstanceOf[Long]
     }.toMap
   }
 

@@ -171,16 +171,10 @@ class IncrementalSpec extends SparkSpec {
   test("a full build and a single-month increment run a fixed number of Spark jobs") {
     val (csv, wh, _) = dirs
     Ingest.ingestAll(spark, csv, wh)
-    // a zero-partition job takes the next job id: the difference of two
-    // marks counts the jobs launched between them
-    val sc = spark.sparkContext
-    def mark(): Int = sc.submitJob[Int, Unit, Unit](
-      sc.emptyRDD[Int], _ => (), Seq.empty, (_, _) => (), ()).jobIds.head
-    def jobs(f: => Unit): Int = { val m = mark(); f; mark() - m - 1 }
     val out = Files.createTempDirectory("inc_jobs").toString
     // 3 unter_grun + 3 shared partial + 4 per fold for the five
     // count-based models
-    val build = jobs(Incremental.fullBuild(spark, out))
+    val build = jobsLaunched(Incremental.fullBuild(spark, out))
     assert(build == 26, s"a full build launched $build jobs")
     val incCsv = Files.createTempDirectory("inc_jobs_csv").resolve("may.csv")
     Files.writeString(incCsv,
@@ -189,7 +183,7 @@ class IncrementalSpec extends SparkSpec {
         |B02512,2015-05-21 12:00:00,B02512,2
         |""".stripMargin)
     // 2 affectedMonths + 1 fact landing + the build's 26 for one month
-    val tick = jobs(Runner.runIncrement(spark, incCsv.toString, wh, out))
+    val tick = jobsLaunched(Runner.runIncrement(spark, incCsv.toString, wh, out))
     assert(tick == 29, s"one single-month tick launched $tick jobs")
     assertAllModelsMatch(out, "after a single-month increment")
     Ingest.ingestAll(spark, csv, wh)

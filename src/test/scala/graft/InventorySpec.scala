@@ -5,9 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drift guards over the source tree itself: the session knobs the code
-  * reads are exactly the ones README documents, and the runnable entry
-  * points are exactly the listed set. A new knob or `main` has to be
-  * documented (or listed) here in the same change that adds it.
+  * reads are exactly the ones README documents, the runnable entry
+  * points are exactly the listed set, and every driver collect is
+  * annotated with its row bound. A new knob, `main` or collect has to be
+  * documented (or listed) in the same change that adds it.
   */
 class InventorySpec extends AnyFunSuite {
 
@@ -72,5 +73,17 @@ class InventorySpec extends AnyFunSuite {
       }
     }.toSet
     diff("main entry points", found, expected).foreach(fail(_))
+  }
+
+  test("every driver collect in src/main carries a driver-bound annotation (tools/collect_audit.py)") {
+    val board = Files.createTempFile("collectaudit", ".json")
+    try {
+      val out = scala.collection.mutable.ListBuffer.empty[String]
+      val exit = scala.sys.process.Process(
+        Seq("python3", "tools/collect_audit.py", board.toString), root.toFile)
+        .!(scala.sys.process.ProcessLogger(out += _, _ => ()))
+      val review = out.filter(_.contains("REVIEW")).mkString("\n")
+      assert(exit == 0, s"collect_audit.py exited $exit:\n$review")
+    } finally Files.deleteIfExists(board)
   }
 }

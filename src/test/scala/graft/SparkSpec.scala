@@ -15,6 +15,18 @@ trait SparkSpec extends AnyFunSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** The number of Spark jobs `f` launches: a zero-partition job takes the
+    * next job id, so the difference of two marks counts the jobs between.
+    */
+  def jobsLaunched(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    def mark(): Int = sc.submitJob[Int, Unit, Unit](
+      sc.emptyRDD[Int], _ => (), Seq.empty, (_, _) => (), ()).jobIds.head
+    val before = mark()
+    f
+    mark() - before - 1
+  }
+
   /** Connected components by in-memory BFS closure — the independent
     * oracle the Spark components paths are held to: every node maps to
     * the minimum node it reaches. `nodes` must cover every endpoint.

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.uber.{Ingest, Models, Runner}
+import graft.uber.{Checks, Ingest, Models, Runner}
+import graft.uber.Checks.CheckResult
 
 /** Reference-parity tests for the uber module: fixture per FIXTURES.md
   * (months 1-6 + a July row + a NULL timestamp + rank ties + dispatching ≠
@@ -218,19 +219,21 @@ class UberSpec extends SparkSpec {
   }
 
   test("runner materializes all six models with expected row counts") {
-    ingested()
+    // runAll re-ingests the same CSVs into the same warehouse, so the
+    // fixture's views end as they started
+    val (csv, wh) = dirs
     val out = Files.createTempDirectory("uber_out").toString
-    val counts = Models.all.map { m =>
-      val df = Runner.runModel(spark, m)
-      df.write.mode("overwrite").parquet(s"$out/${m.name}")
-      m.name -> spark.read.parquet(s"$out/${m.name}").count()
-    }.toMap
-    assert(counts("top_3_base_names_by_total_pickups") == 3)
-    assert(counts("total_pickups_in_may_by_base") == 2)
-    assert(counts("unter_grun_pickups_in_bronx") == 9)
-    assert(counts("top_3_pickup_dates_per_base") == 18)
-    assert(counts("pickup_count_vs_average_per_base") == 11)
-    assert(counts("pickup_percentile_by_base_per_month") == 11)
+    val counts = Runner.runAll(spark, csv, wh, out)
+    assert(counts == Map(
+      "top_3_base_names_by_total_pickups" -> 3L,
+      "total_pickups_in_may_by_base" -> 2L,
+      "unter_grun_pickups_in_bronx" -> 9L,
+      "top_3_pickup_dates_per_base" -> 18L,
+      "pickup_count_vs_average_per_base" -> 11L,
+      "pickup_percentile_by_base_per_month" -> 11L))
+    // the counts observed on the writes are the rows the files hold
+    assert(counts == Models.all.map(m =>
+      m.name -> spark.read.parquet(s"$out/${m.name}").count()).toMap)
   }
 
   test("source checks: fixture passes the DDL contract; violations are caught") {
@@ -250,6 +253,76 @@ class UberSpec extends SparkSpec {
     assert(rel.failures == 1)
     assert(!graft.uber.Checks.acceptedValues(
       Seq("Bronx", "Atlantis").toDF("b"), "t", "b", Seq("Bronx", "Queens")).passed)
+  }
+
+  test("source checks count every planted violation exactly, as plain Scala does") {
+    // a session of its own: the planted views must not replace the
+    // fixture's views that the other tests read
+    val planted = spark.newSession()
+    import planted.implicits._
+    val clean = """{"errors":[]}"""
+    // the three bad kinds: a sync error, a malformed and a missing envelope
+    val envelopes = Seq(clean, """{"errors":["dropped column"]}""",
+      "not json at all", null, clean, clean)
+    // two NULL zone keys: the NULL key group counts as a duplicated key
+    val zoneKeys: Seq[Option[Int]] =
+      (1 to 8).map(Some(_)) ++ Seq(None, Some(3), Some(3), Some(5), None)
+    val baseKeys: Seq[Option[String]] =
+      Seq("B1", "B2", "B3", "B4").map(Some(_)) ++ Seq(Some("B2"), None)
+    // dispatching bases B1..B6 (B5, B6 dangle) and every 9th one NULL;
+    // zones 1..10 (9, 10 dangle) and every 13th one NULL
+    val facts: Seq[(Option[String], Option[Int], String)] = (0 until 240).map { i =>
+      (if (i % 9 == 4) None else Some(s"B${i % 6 + 1}"),
+        if (i % 13 == 7) None else Some(i % 10 + 1),
+        envelopes(i % envelopes.size))
+    }
+    zoneKeys.map(k => (k, "Borough", "Zone")).toDF("locationid", "borough", "zone")
+      .createOrReplaceTempView("taxi_zone_lookup")
+    baseKeys.map(k => (k, "Name")).toDF("base_num", "base_name")
+      .createOrReplaceTempView("base_num_and_name")
+    facts.toDF("dispatching_base_num", "locationid", "_airbyte_meta")
+      .createOrReplaceTempView("raw_data_janjune_15")
+
+    def nulls[A](keys: Seq[Option[A]]): Long = keys.count(_.isEmpty).toLong
+    def dups[A](keys: Seq[Option[A]]): Long =
+      keys.groupBy(identity).count(_._2.size > 1).toLong
+    def dangling[A](fks: Seq[Option[A]], parent: Seq[Option[A]]): Long =
+      fks.flatten.count(k => !parent.flatten.contains(k)).toLong
+    val zone = "taxi_zone_lookup"; val base = "base_num_and_name"
+    val fact = "raw_data_janjune_15"
+    val expected = Seq(
+      CheckResult(zone, "not_null", "locationid", nulls(zoneKeys)),
+      CheckResult(zone, "unique", "locationid", dups(zoneKeys)),
+      CheckResult(base, "not_null", "base_num", nulls(baseKeys)),
+      CheckResult(base, "unique", "base_num", dups(baseKeys)),
+      CheckResult(fact, "not_null", "dispatching_base_num", nulls(facts.map(_._1))),
+      CheckResult(fact, "relationships", "dispatching_base_num",
+        dangling(facts.map(_._1), baseKeys)),
+      CheckResult(fact, "relationships", "locationid",
+        dangling(facts.map(_._2), zoneKeys)),
+      CheckResult(fact, "meta_envelope_clean", "_airbyte_meta",
+        facts.count(_._3 != clean).toLong))
+    // every planted kind is present, so no count passes by being zero
+    assert(expected.forall(!_.passed), expected)
+    assert(Checks.sourceChecks(planted) == expected)
+    // the single-table checks count the same failures
+    val z = planted.table(zone); val b = planted.table(base)
+    val f = planted.table(fact)
+    assert(Seq(
+      Checks.notNull(z, zone, "locationid"), Checks.unique(z, zone, "locationid"),
+      Checks.notNull(b, base, "base_num"), Checks.unique(b, base, "base_num"),
+      Checks.notNull(f, fact, "dispatching_base_num"),
+      Checks.relationship(f, "dispatching_base_num", b, "base_num", fact),
+      Checks.relationship(f, "locationid", z, "locationid", fact),
+      Checks.metaEnvelopeClean(f, fact)) == expected)
+  }
+
+  test("the source checks run a fixed number of Spark jobs") {
+    ingested()
+    val jobs = jobsLaunched(Runner.runChecks(spark))
+    // dims: 2 shuffle stages + the collect; fact: 2 dim broadcasts + the
+    // aggregate's 2 stages
+    assert(jobs == 7, s"the 8 source checks launched $jobs jobs")
   }
 
   test("a failing source check aborts runAll before any model is written") {
