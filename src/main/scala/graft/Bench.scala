@@ -2,15 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main (driver contract): times SparkEntry.headline queries on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
+/** Benchmark main: times every query of `SparkEntry.registry` on
+  * SPARK_GRAFT_SF_DIR, in registration order, and prints ONE JSON line.
   *
   * Methodology:
-  *  - one untimed warmup pass (q1) absorbs JVM/codegen/classloading cost so
-  *    per-query numbers measure the plan, not the JIT;
-  *  - each query is forced through the `noop` sink — full evaluation of
-  *    every column (a bare count() lets column pruning skip the projections
-  *    being benchmarked) with zero sink overhead.
+  *  - registration order is the timed order: the families in
+  *    `SparkEntry.registry`'s order, each by query number, so the board's
+  *    order changes only when the registry does;
+  *  - one untimed warmup pass of the first registered query (q1_agg)
+  *    absorbs JVM/codegen/classloading cost so per-query numbers measure
+  *    the plan, not the JIT;
+  *  - each query runs through [[timeQuery]]: forced through the `noop`
+  *    sink — full evaluation of every column (a bare count() lets column
+  *    pruning skip the projections being benchmarked) with zero sink
+  *    overhead — then its own cached blocks are dropped.
   *
   * Output capacity: the driver keeps only the final ~2000 chars of output
   * and parses the JSON out of that window. At 90 queries even
@@ -18,8 +23,9 @@ import org.apache.spark.sql.SparkSession
   * exactly this), so the line now carries `value` = the total over ALL
   * `nq` queries plus as many of the SLOWEST per-query seconds as fit a
   * byte budget sized to the window (~85 of 159) — while the complete
-  * per-query map (3-decimal seconds, every query) is written to
-  * BENCH_FULL.json and appended to BENCH_HISTORY.jsonl for the judge.
+  * per-query map (3-decimal seconds, every query) and the failed queries
+  * ([[fullLine]]) are written to BENCH_FULL.json and appended to
+  * BENCH_HISTORY.jsonl.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -28,37 +34,15 @@ object Bench {
       SparkSession.builder().master(s"local[${GraftSession.cores}]"), sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def run(name: String): Double = {
-      // Snapshot the persisted-RDD ids so cleanup below touches only the
-      // blocks THIS query created — a cross-query cached table (none
-      // today, but e.g. a cached Tables.load) must not be silently
-      // evicted mid-suite, and a shared localCheckpoint must stay
-      // recomputable.
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      val dt =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1.0
-        }
-      // Drop this query's localCheckpoint blocks BEFORE the next timing:
-      // the iterative queries (graph rounds, dedup components, pipelines)
-      // eagerly cache lineage cuts, and 100+ queries of retained blocks
-      // in one JVM turn storage pressure into GC stalls charged to
-      // whichever later query the collector fires under (observed: a
-      // 0.7s query billed 58s mid-suite). Unpersist is outside the
-      // timed window; each query still pays for its OWN checkpoints.
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before.contains(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      dt
-    }
+    def run(name: String): Double =
+      try timeQuery(spark, sfDir, name)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        -1.0
+      }
 
-    run(SparkEntry.headline.head) // warmup, untimed
+    val names = SparkEntry.registry.map(_.name)
+    run(names.head) // warmup, untimed
 
     // One timed pass; a query slower than RetryAbove gets ONE re-run and
     // keeps the MINIMUM. Rationale: observed host-level stalls bill tens
@@ -69,13 +53,10 @@ object Bench {
     // the plan — min-of-2 on the slow tail bounds both for a few queries'
     // worth of extra wall, while fast queries stay single-pass.
     val RetryAbove = 1.5
-    val results = SparkEntry.headline.map { n =>
+    val results = names.map { n =>
       val t1 = run(n)
       n -> (if (t1 > RetryAbove) { val t2 = run(n); math.min(t1, t2) } else t1)
     }
-    def fmt(v: Double, dec: Int): String =
-      if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
 
     // complete per-query map — best-effort side files (cwd is the repo when
     // the driver runs this; failures must not cost the bench line).
@@ -85,9 +66,7 @@ object Bench {
     // alone silently missed the 118 fastest queries).
     val total = results.map(_._2).filter(_ >= 0).sum
     try {
-      val full = results.map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
-        .mkString("{", ",", "}")
-      val line = s"""{"sf":"$sfDir","unit":"sec","nq":${results.size},"total":${fmt(total, 1)},"queries":$full}""" + "\n"
+      val line = fullLine(sfDir, results) + "\n"
       // per-sf filename: the committed sf0.1 board must survive sf0.01
       // smoke runs (a shared BENCH_FULL.json got clobbered exactly that
       // way in round 15); BENCH_FULL.json stays as the latest-run alias
@@ -129,5 +108,50 @@ object Bench {
     spark.stop()
     // every byte of this line competes with the driver's capture window
     println(prefix + packed.mkString(",") + suffix)
+  }
+
+  /** One timed run of a registered query: evaluation through the `noop`
+    * sink, wall seconds from plan construction to the end of the write.
+    * Then, outside the timed window and whether or not the query threw,
+    * unpersist the RDDs THIS run persisted: the iterative queries (graph
+    * rounds, dedup components, pipelines) eagerly cache lineage cuts, and
+    * 100+ queries of retained blocks in one JVM turn storage pressure into
+    * GC stalls charged to whichever later query the collector fires under
+    * (observed: a 0.7s query billed 58s mid-suite). Blocks that existed
+    * before the run are kept — a cross-query cached table must not be
+    * evicted mid-suite, and a shared localCheckpoint must stay
+    * recomputable. Each query still pays for its OWN checkpoints.
+    */
+  def timeQuery(spark: SparkSession, sfDir: String, name: String): Double = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      val t0 = System.nanoTime()
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } finally {
+      spark.sparkContext.getPersistentRDDs
+        .filterNot { case (id, _) => before.contains(id) }
+        .values.foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  private def fmt(v: Double, dec: Int): String =
+    if (v < 0) "-1"
+    else String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
+
+  /** The complete board line for BENCH_FULL*.json and BENCH_HISTORY.jsonl
+    * (no trailing newline): every query's seconds in run order (`-1` = it
+    * failed), `total` over the queries that ran, and `nfail` / `failed`
+    * naming the failures — a crashed query is left out of `total`, so
+    * without them a crash reads as a faster board.
+    */
+  def fullLine(sfDir: String, results: Seq[(String, Double)]): String = {
+    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val full = results.map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
+      .mkString("{", ",", "}")
+    s"""{"sf":"$sfDir","unit":"sec","nq":${results.size},"nfail":${failed.size},""" +
+      s""""failed":${failed.mkString("[", ",", "]")},"total":${fmt(total, 1)},"queries":$full}"""
   }
 }

@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each `SparkEntry.registry` result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check.py). Both follow
+  * registration order, so two dumps of one registry list the same queries
+  * in the same order. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
@@ -12,11 +14,11 @@ object Verify {
       SparkSession.builder().master(s"local[${GraftSession.cores}]"), sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.registry
+      .filter(query => only.forall(_.contains(query.name)))
+      .foreach { case Query(name, plan, _) =>
       try {
-        val df = fn(spark, sfDir)
+        val df = plan(spark, sfDir)
         // Type guard: the driver's result hash is TYPE-sensitive while
         // DuckDB oracles never emit DECIMAL — a DecimalType column here
         // (e.g. from an uncast `x / 10000.0` literal, which Spark parses
@@ -62,8 +64,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.registry
+      .map(query => s"${q(query.name)}: ${q(query.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

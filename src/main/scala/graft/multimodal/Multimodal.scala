@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.Materialize._
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Multimodal column plumbing: media as opaque `binary` payloads with typed
   * metadata, decoded/feature-extracted via a per-partition pipeline.
@@ -898,20 +898,6 @@ object Multimodal {
       |WHERE 2 * i.n_shared >= least(sa.n, sb.n)
       |ORDER BY id_a, id_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm12_audio_neardup" -> (mm12AudioNeardup _),
-    "mm11_video_neardup" -> (mm11VideoNeardup _),
-    "mm9_pair_audit" -> (mm9PairAudit _),
-    "mm8_shard_export" -> (mm8ShardExport _),
-    "mm1_decode_stub" -> (mm1DecodeStub _),
-    "mm2_frame_sample" -> (mm2FrameSample _),
-    "mm3_audio_energy" -> (mm3AudioEnergy _),
-    "mm4_phash" -> (mm4Phash _),
-    "mm10_crossmodal_audit" -> (mm10CrossmodalAudit _),
-    "mm5_shot_boundary" -> (mm5ShotBoundary _),
-    "mm6_vad" -> (mm6Vad _),
-    "mm7_resize" -> (mm7Resize _))
-
   /** mm4's hash/blocking/verify as a reusable CTE chain ending in `dup`
     * (id_a, id_b, hamming) — shared by mm4's and mm10's oracles, the SQL
     * twin of [[phashPairs]].
@@ -946,59 +932,20 @@ object Multimodal {
       |  SELECT id_a, id_b, CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
       |  FROM pairs WHERE bit_count(xor(ha, hb)) <= 3)""".stripMargin
 
-  /** DuckDB twin of the metadata decode: byte_len is the UTF-8 byte count
-    * of `text`, pseudo-dims derive from it, feature_dim is the fixed
-    * histogram width.
+  /** Declared after [[phashPairsCtes]]: mm4's and mm10's oracles
+    * interpolate it, and an object's vals initialise in source order.
     */
-  val oracles: Map[String, String] = Map(
-    "mm10_crossmodal_audit" ->
-      s"""WITH $phashPairsCtes,
-        |caps AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_filter(regexp_split_to_array(lower(text),
-        |      '\\s+'), x -> x != '')[1:12]) AS cap
-        |  FROM documents)
-        |SELECT d.id_a, d.id_b, d.hamming,
-        |  floor(len(list_intersect(a.cap, b.cap))
-        |    / CAST(nullif(len(list_distinct(list_concat(a.cap, b.cap))), 0)
-        |      AS DOUBLE) * 10000.0 + 0.5) / 10000.0 AS cap_jaccard,
-        |  (d.hamming <= 1 AND len(list_intersect(a.cap, b.cap)) * 2
-        |    < len(list_distinct(list_concat(a.cap, b.cap)))) AS mismatch
-        |FROM dup d
-        |JOIN caps a ON d.id_a = a.doc_id
-        |JOIN caps b ON d.id_b = b.doc_id
-        |ORDER BY d.id_a, d.id_b""".stripMargin,
-    "mm12_audio_neardup" -> mm12AudioNeardupSql,
-    "mm11_video_neardup" -> mm11VideoNeardupSql,
-    "mm9_pair_audit" -> mm9PairAuditSql,
-    // the oracle replays the packing as ONE global window (affordable at
-    // oracle scale — exactly why the Spark side must not use it) and the
-    // signature as the same masked md5-62 sum
-    "mm8_shard_export" ->
-      """WITH counted AS (
-        |  SELECT doc_id,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |    CAST(md5_number_lower(text) & 1099511627775 AS BIGINT) AS h
-        |  FROM documents),
-        |assigned AS (
-        |  SELECT doc_id, n_bytes, h,
-        |    CAST(floor(coalesce(sum(n_bytes) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 4096)
-        |      AS BIGINT) AS shard_id
-        |  FROM counted)
-        |SELECT shard_id, CAST(count(*) AS BIGINT) AS n_samples,
-        |  CAST(sum(n_bytes) AS BIGINT) AS shard_bytes,
-        |  min(doc_id) AS first_id, max(doc_id) AS last_id,
-        |  CAST(sum(h) AS BIGINT) AS signature
-        |FROM assigned GROUP BY shard_id ORDER BY shard_id""".stripMargin,
-    "mm1_decode_stub" ->
+  val registry: Seq[Query] = Seq(
+    // byte_len is the UTF-8 byte count of `text`, pseudo-dims derive
+    // from it, feature_dim is the fixed histogram width
+    Query("mm1_decode_stub", mm1DecodeStub,
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
         |  CAST(64 + octet_length(encode(text)) % 64 AS INTEGER) AS width,
         |  CAST(64 AS INTEGER) AS height,
         |  CAST(16 AS INTEGER) AS feature_dim
-        |FROM documents""".stripMargin,
-    "mm2_frame_sample" ->
+        |FROM documents""".stripMargin),
+    Query("mm2_frame_sample", mm2FrameSample,
       """WITH f AS (
         |  SELECT doc_id, octet_length(encode(text)) AS blen,
         |    CAST(ceil(octet_length(encode(text)) / 128.0) AS INTEGER) AS n_frames
@@ -1008,10 +955,10 @@ object Multimodal {
         |FROM (SELECT doc_id, blen, n_frames,
         |        unnest(generate_series(0, n_frames - 1, 2)) AS frame_idx
         |      FROM f)
-        |ORDER BY doc_id, frame_idx""".stripMargin,
+        |ORDER BY doc_id, frame_idx""".stripMargin),
     // byte == code point here (ASCII corpus, asserted in SimilaritySpec),
     // so the window energy replays as an ord()-sum over char positions
-    "mm3_audio_energy" ->
+    Query("mm3_audio_energy", mm3AudioEnergy,
       """WITH wins AS (
         |  SELECT doc_id, CAST(i AS INT) AS win_idx,
         |    CAST(list_aggregate(list_transform(
@@ -1030,16 +977,16 @@ object Multimodal {
         |SELECT doc_id, n_windows, total_energy,
         |  CAST(1048575 - (key & 1048575) AS INTEGER) AS peak_idx,
         |  CAST(key >> 20 AS BIGINT) AS peak_energy
-        |FROM agg ORDER BY doc_id""".stripMargin,
+        |FROM agg ORDER BY doc_id""".stripMargin),
     // identical 56-point downsample, mean threshold, bit fold, chunk-block
     // join, and bit_count verification (ASCII corpus: ord == byte)
-    "mm4_phash" ->
+    Query("mm4_phash", mm4Phash,
       s"""WITH $phashPairsCtes
         |SELECT id_a, id_b, hamming FROM dup
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
     // same ord()-sum energy replay as mm3, non-overlapping 128-byte frames,
     // then the identical per-doc lag window and cut rollup
-    "mm5_shot_boundary" ->
+    Query("mm5_shot_boundary", mm5ShotBoundary,
       """WITH wins AS (
         |  SELECT doc_id, CAST(i AS INT) AS win_idx,
         |    CAST(list_aggregate(list_transform(
@@ -1059,11 +1006,11 @@ object Multimodal {
         |    THEN 1 ELSE 0 END) + 1 AS BIGINT) AS n_shots,
         |  CAST(min(CASE WHEN prev_e IS NOT NULL AND abs(energy - prev_e) > 1500
         |    THEN win_idx END) AS INT) AS first_cut
-        |FROM lagd GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM lagd GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // same ord()-sum energy replay; the island numbering is the identical
     // boundary-flag running sum, and the silence predicate is the exact
     // integer cross-multiplication
-    "mm6_vad" ->
+    Query("mm6_vad", mm6Vad,
       """WITH wins AS (
         |  SELECT doc_id, CAST(i AS INT) AS win_idx,
         |    CAST(list_aggregate(list_transform(
@@ -1105,10 +1052,10 @@ object Multimodal {
         |SELECT b.doc_id, n_windows, n_silent,
         |  CAST(coalesce(n_islands, 0) AS BIGINT) AS n_islands,
         |  CAST(coalesce(longest_run, 0) AS BIGINT) AS longest_run
-        |FROM b LEFT JOIN rs USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM b LEFT JOIN rs USING (doc_id) ORDER BY doc_id""".stripMargin),
     // identical 2x2-stride picks over the in_h x 32 grid (ASCII corpus:
     // char == byte), rebuilt as a string so even the payload md5 replays
-    "mm7_resize" ->
+    Query("mm7_resize", mm7Resize,
       """WITH g AS (
         |  SELECT doc_id, text,
         |    octet_length(encode(text)) // 32 AS in_h
@@ -1130,5 +1077,47 @@ object Multimodal {
         |  CAST(list_sum(list_transform(range(0, out_h * 16),
         |    i -> (i + 1) * px[CAST(i AS INT) + 1])) AS BIGINT) AS wsum,
         |  md5(rs) AS out_md5
-        |FROM r ORDER BY doc_id""".stripMargin)
+        |FROM r ORDER BY doc_id""".stripMargin),
+    // the oracle replays the packing as ONE global window (affordable at
+    // oracle scale — exactly why the Spark side must not use it) and the
+    // signature as the same masked md5-62 sum
+    Query("mm8_shard_export", mm8ShardExport,
+      """WITH counted AS (
+        |  SELECT doc_id,
+        |    CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+        |    CAST(md5_number_lower(text) & 1099511627775 AS BIGINT) AS h
+        |  FROM documents),
+        |assigned AS (
+        |  SELECT doc_id, n_bytes, h,
+        |    CAST(floor(coalesce(sum(n_bytes) OVER (ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 4096)
+        |      AS BIGINT) AS shard_id
+        |  FROM counted)
+        |SELECT shard_id, CAST(count(*) AS BIGINT) AS n_samples,
+        |  CAST(sum(n_bytes) AS BIGINT) AS shard_bytes,
+        |  min(doc_id) AS first_id, max(doc_id) AS last_id,
+        |  CAST(sum(h) AS BIGINT) AS signature
+        |FROM assigned GROUP BY shard_id ORDER BY shard_id""".stripMargin),
+    Query("mm9_pair_audit", mm9PairAudit, mm9PairAuditSql),
+    Query("mm10_crossmodal_audit", mm10CrossmodalAudit,
+      s"""WITH $phashPairsCtes,
+        |caps AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_filter(regexp_split_to_array(lower(text),
+        |      '\\s+'), x -> x != '')[1:12]) AS cap
+        |  FROM documents)
+        |SELECT d.id_a, d.id_b, d.hamming,
+        |  floor(len(list_intersect(a.cap, b.cap))
+        |    / CAST(nullif(len(list_distinct(list_concat(a.cap, b.cap))), 0)
+        |      AS DOUBLE) * 10000.0 + 0.5) / 10000.0 AS cap_jaccard,
+        |  (d.hamming <= 1 AND len(list_intersect(a.cap, b.cap)) * 2
+        |    < len(list_distinct(list_concat(a.cap, b.cap)))) AS mismatch
+        |FROM dup d
+        |JOIN caps a ON d.id_a = a.doc_id
+        |JOIN caps b ON d.id_b = b.doc_id
+        |ORDER BY d.id_a, d.id_b""".stripMargin),
+    Query("mm11_video_neardup", mm11VideoNeardup, mm11VideoNeardupSql),
+    Query("mm12_audio_neardup", mm12AudioNeardup, mm12AudioNeardupSql))
+
+  val queries: Map[String, Query.Plan] = Query.plans(registry)
 }

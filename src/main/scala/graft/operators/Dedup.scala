@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Materialize._
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.Plan
 import graft.functions.TextFunctions._
 
 /** Deduplication operators over `documents` — exact, blocked n-gram Jaccard,
@@ -19,7 +20,6 @@ import graft.functions.TextFunctions._
   * candidate pairs.
   */
 object Dedup {
-  type Q = (SparkSession, String) => DataFrame
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 
@@ -27,7 +27,7 @@ object Dedup {
   /** Exact dedup: group by canonical-text md5; keep the smallest doc_id.
     * One hash-agg shuffle on the fingerprint — the cheapest dedup there is.
     */
-  val d1ExactDedup: Q = (s, d) =>
+  val d1ExactDedup: Plan = (s, d) =>
     docs(s, d)
       .select(col("doc_id"), md5(normText(col("text"))).as("fp"))
       .groupBy(col("fp"))
@@ -135,7 +135,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), sround(col("jac"), 4).as("jaccard"))
   }
 
-  val d2NgramJaccard: Q = (s, d) => d2Pairs(s, d).orderBy("doc_a", "doc_b")
+  val d2NgramJaccard: Plan = (s, d) => d2Pairs(s, d).orderBy("doc_a", "doc_b")
 
   /** DuckDB CTE block shared by the d2-family oracles: d3's word-shingle
     * MinHash band-candidate generation over `rel` (needs doc_id, text),
@@ -243,7 +243,7 @@ object Dedup {
       explode(graft.expressions.PortableHashExpressions.minhashBandKeysMod31(
         col("sh"), minhashPermA31, minhashPermB31, bands = 32, rows = 2)).as("bkey"))
 
-  val d3MinhashLsh: Q = (s, d) => {
+  val d3MinhashLsh: Plan = (s, d) => {
     val base = shingleSets(docs(s, d))
     val bands = minhashBands(base)
     // Round 11: candidates require >= 2 distinct band collisions. The
@@ -419,7 +419,7 @@ object Dedup {
     * slice, but with the prefix-filtered generator even the full-corpus
     * run is shuffle-bounded, not df²-bounded.
     */
-  val d12LshEval: Q = (s, d) => {
+  val d12LshEval: Plan = (s, d) => {
     val base = shingleSets(docs(s, d))
       .materialize() // feeds truth prefix build, band keys, AND sizes
     // truth and candidate sides are INDEPENDENT once `base` exists —
@@ -568,7 +568,7 @@ object Dedup {
     * in practice a handful since real docs fill most bins); nothing
     * is all-pairs.
     */
-  val d19OphMinhash: Q = (s, d) => {
+  val d19OphMinhash: Plan = (s, d) => {
     val base = shingleSets(docs(s, d))
       .materialize() // feeds truth prefix build AND the OPH slots
     // Ground truth via exactJaccardPairs02 (d20's prefix-filtered exact
@@ -779,7 +779,7 @@ object Dedup {
     * candidate pairs only. ceil(0.2·n) is exact integer arithmetic:
     * (n + 4) DIV 5.
     */
-  val d20Allpairs: Q = (s, d) => {
+  val d20Allpairs: Plan = (s, d) => {
     val base = shingleSets(docs(s, d))
       .materialize() // feeds the prefix build AND both verify sides
     exactJaccardPairs02(base)
@@ -828,7 +828,7 @@ object Dedup {
     * TextFunctions), so the DuckDB oracle rebuilds the identical
     * fingerprints bit for bit and the driver hash-checks the pairs.
     */
-  val d4Simhash: Q = (s, d) => {
+  val d4Simhash: Plan = (s, d) => {
     val sh = docs(s, d)
       .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
       .select(col("doc_id"), simhash(col("toks")).as("simhash"))
@@ -1095,7 +1095,7 @@ object Dedup {
     * it (sf10's d2 graph crosses the gate). Sizes come from
     * [[withClusterStats]]'s skew-safe agg + join-back.
     */
-  val d5DedupClusters: Q = (s, d) => {
+  val d5DedupClusters: Plan = (s, d) => {
     val comps = connectedComponents(
       docs(s, d).select(col("doc_id")), d2Pairs(s, d))
     withClusterStats(comps).orderBy("doc_id")
@@ -1143,7 +1143,7 @@ object Dedup {
     * oracle. The window-rank formulation stays in the oracle, which
     * doesn't need to scale.
     */
-  val d6KeepBest: Q = (s, d) => {
+  val d6KeepBest: Plan = (s, d) => {
     val MaxId = (1L << 41) - 1 // doc ids fit 41 bits; quality fits 22
     val scored = TextAnalysis.qualityCounts(s, d).select(col("doc_id"),
       // -1 (null blend, zero-token doc) packs below every real score
@@ -1206,7 +1206,7 @@ object Dedup {
     * per-doc join is cluster-keyed. Every stage is the already-audited
     * d5/d6 shape.
     */
-  val d7SemanticDedup: Q = (s, d) => {
+  val d7SemanticDedup: Plan = (s, d) => {
     import graft.functions.VectorFunctions.{cosineWithNorms, dot, normSq}
     val MaxId = (1L << 41) - 1
     val e = Tables.load(s, d, "embeddings")
@@ -1389,7 +1389,7 @@ object Dedup {
       .select(col("doc_id"), col("idx"), col("span"))
   }
 
-  val d8SpanDedup: Q = (s, d) => spanDedupAt(s, d, 3)
+  val d8SpanDedup: Plan = (s, d) => spanDedupAt(s, d, 3)
 
   /** DuckDB twin of d8 at span length `n`: list slices replay the
     * generator's spans byte-for-byte; string_agg(... ORDER BY idx)
@@ -1434,7 +1434,7 @@ object Dedup {
     * collision means a genuinely copied passage, not a common phrase,
     * so n_dropped is the corpus's real boilerplate mass.
     */
-  val d18SpanDedup32: Q = (s, d) => spanDedupAt(s, d, 32)
+  val d18SpanDedup32: Plan = (s, d) => spanDedupAt(s, d, 32)
 
   val d18SpanDedup32Sql: String = spanDedupSqlAt(32)
 
@@ -1575,7 +1575,7 @@ object Dedup {
     * long enough that a match is a copied run, short enough that planted
     * near-dups actually contain one.
     */
-  val d21ExactSubstr: Q = (s, d) => exactSubstrAt(s, d, 8)
+  val d21ExactSubstr: Plan = (s, d) => exactSubstrAt(s, d, 8)
 
   /** DuckDB twin at grain `n`: identical sliding windows via range +
     * list slice, the same md5 window keys, per-key occurrence-rank window, running-max
@@ -1648,7 +1648,7 @@ object Dedup {
     * all-pairs. Exact verification runs the codegen'd merge-walk
     * intersect (d2's kernel) on the full sorted gram arrays.
     */
-  val d9Containment: Q = (s, d) => {
+  val d9Containment: Plan = (s, d) => {
     val base = docs(s, d)
       .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
       .select(col("doc_id"), wordNgrams(col("toks"), 3).as("ngrams"))
@@ -1738,7 +1738,7 @@ object Dedup {
     * both sides' builds here stand in for reading that index). Per-doc
     * match state is min(long) — no set accumulation anywhere.
     */
-  val d10IncrementalDedup: Q = (s, d) =>
+  val d10IncrementalDedup: Plan = (s, d) =>
     incrementalDedup(docs(s, d)
       .withColumn("incoming", expr("CAST(substring(source, 4) AS INT) >= 10")))
 
@@ -1877,7 +1877,7 @@ object Dedup {
     */
   private val SweepT4: Seq[Int] = (3 to 9).map(_ * 1000)
 
-  val d13ThresholdSweep: Q = (s, d) => {
+  val d13ThresholdSweep: Plan = (s, d) => {
     val pairs = ngramPairs(docs(s, d), minJac = 0.3)
       .select(col("doc_a"), col("doc_b"),
         floor(col("jaccard") * 10000.0 + lit(0.5)).cast("long").as("j4"))
@@ -1959,7 +1959,7 @@ object Dedup {
     * scale.
     */
   val BoilerMinDocs = 2L
-  val d15BoilerplateLines: Q = (s, d) => {
+  val d15BoilerplateLines: Plan = (s, d) => {
     import graft.expressions.SpanChunks.spanChunks
     val spans = docs(s, d)
       .select(col("doc_id"), col("source"), lowerTokens(col("text")).as("t"))
@@ -2065,7 +2065,7 @@ object Dedup {
     * audit of what the delta actually changed (including the bridge
     * case: one incoming doc fusing two standing clusters).
     */
-  val d16IncrementalComponents: Q = (s, d) =>
+  val d16IncrementalComponents: Plan = (s, d) =>
     incrementalComponents(docs(s, d)
       .withColumn("incoming", expr("CAST(substring(source, 4) AS INT) >= 10")))
 
@@ -2189,7 +2189,7 @@ object Dedup {
     * reuse the same materialized frame. Zero-overlap pairs are absent
     * by construction (inner join), keeping the output sparse.
     */
-  val d17SourceOverlap: Q = (s, d) => {
+  val d17SourceOverlap: Plan = (s, d) => {
     val sg = docs(s, d)
       .select(col("source"), lowerTokens(col("text")).as("toks"))
       .select(col("source"), explode(graft.expressions.PortableHashExpressions
@@ -2241,45 +2241,26 @@ object Dedup {
       |FROM pairs JOIN tot ta ON ta.source = src_a JOIN tot tb ON tb.source = src_b
       |ORDER BY src_a, src_b""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "d17_source_overlap" -> d17SourceOverlap,
-    "d16_incremental_components" -> d16IncrementalComponents,
-    "d15_boilerplate_lines" -> d15BoilerplateLines,
-    "d1_exact_dedup" -> d1ExactDedup,
-    "d2_ngram_jaccard" -> d2NgramJaccard,
-    "d3_minhash_lsh" -> d3MinhashLsh,
-    "d4_simhash" -> d4Simhash,
-    "d5_dedup_clusters" -> d5DedupClusters,
-    "d6_keep_best" -> d6KeepBest,
-    "d7_semantic_dedup" -> d7SemanticDedup,
-    "d8_span_dedup" -> d8SpanDedup,
-    "d18_span_dedup32" -> d18SpanDedup32,
-    "d21_exactsubstr" -> d21ExactSubstr,
-    "d9_containment" -> d9Containment,
-    "d10_incremental_dedup" -> d10IncrementalDedup,
-    "d12_lsh_eval" -> d12LshEval,
-    "d13_threshold_sweep" -> d13ThresholdSweep,
-    "d19_oph_minhash" -> d19OphMinhash,
-    "d20_allpairs" -> d20Allpairs)
+  val registry: Seq[Query] = Seq(
+    Query("d1_exact_dedup", d1ExactDedup, d1ExactDedupSql),
+    Query("d2_ngram_jaccard", d2NgramJaccard, d2NgramJaccardSql),
+    Query("d3_minhash_lsh", d3MinhashLsh, d3MinhashLshSql),
+    Query("d4_simhash", d4Simhash, d4SimhashSql),
+    Query("d5_dedup_clusters", d5DedupClusters, d5DedupClustersSql),
+    Query("d6_keep_best", d6KeepBest, d6KeepBestSql),
+    Query("d7_semantic_dedup", d7SemanticDedup, d7SemanticDedupSql),
+    Query("d8_span_dedup", d8SpanDedup, d8SpanDedupSql),
+    Query("d9_containment", d9Containment, d9ContainmentSql),
+    Query("d10_incremental_dedup", d10IncrementalDedup, d10IncrementalDedupSql),
+    Query("d12_lsh_eval", d12LshEval, d12LshEvalSql),
+    Query("d13_threshold_sweep", d13ThresholdSweep, d13ThresholdSweepSql),
+    Query("d15_boilerplate_lines", d15BoilerplateLines, d15BoilerplateLinesSql),
+    Query("d16_incremental_components", d16IncrementalComponents, d16IncrementalComponentsSql),
+    Query("d17_source_overlap", d17SourceOverlap, d17SourceOverlapSql),
+    Query("d18_span_dedup32", d18SpanDedup32, d18SpanDedup32Sql),
+    Query("d19_oph_minhash", d19OphMinhash, d19OphMinhashSql),
+    Query("d20_allpairs", d20Allpairs, d20AllpairsSql),
+    Query("d21_exactsubstr", d21ExactSubstr, d21ExactSubstrSql))
 
-  val oracles: Map[String, String] = Map(
-    "d17_source_overlap" -> d17SourceOverlapSql,
-    "d16_incremental_components" -> d16IncrementalComponentsSql,
-    "d15_boilerplate_lines" -> d15BoilerplateLinesSql,
-    "d1_exact_dedup" -> d1ExactDedupSql,
-    "d2_ngram_jaccard" -> d2NgramJaccardSql,
-    "d3_minhash_lsh" -> d3MinhashLshSql,
-    "d4_simhash" -> d4SimhashSql,
-    "d5_dedup_clusters" -> d5DedupClustersSql,
-    "d6_keep_best" -> d6KeepBestSql,
-    "d7_semantic_dedup" -> d7SemanticDedupSql,
-    "d8_span_dedup" -> d8SpanDedupSql,
-    "d18_span_dedup32" -> d18SpanDedup32Sql,
-    "d21_exactsubstr" -> d21ExactSubstrSql,
-    "d9_containment" -> d9ContainmentSql,
-    "d10_incremental_dedup" -> d10IncrementalDedupSql,
-    "d12_lsh_eval" -> d12LshEvalSql,
-    "d13_threshold_sweep" -> d13ThresholdSweepSql,
-    "d19_oph_minhash" -> d19OphMinhashSql,
-    "d20_allpairs" -> d20AllpairsSql)
+  val queries: Map[String, Plan] = Query.plans(registry)
 }

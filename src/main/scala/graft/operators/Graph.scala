@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Materialize._
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.Plan
 import graft.functions.TextFunctions.{sortedFoldSum, sround}
 
 /** Graph analytics over relationally-derived edge lists — the iterative
@@ -20,7 +21,6 @@ import graft.functions.TextFunctions.{sortedFoldSum, sround}
   * ranks live in a DataFrame keyed by node.
   */
 object Graph {
-  type Q = (SparkSession, String) => DataFrame
 
   /** The bipartite user↔item interaction graph mined from `events`
     * (user_id ↔ props.k), as a distinct directed edge list u→k. g1 and g3
@@ -48,7 +48,7 @@ object Graph {
     * iterations, and the oracle (the same three rounds unrolled as CTEs)
     * hash-matches even the top-k cut.
     */
-  val g1Pagerank: Q = (s, d) => {
+  val g1Pagerank: Plan = (s, d) => {
     val base = bipartiteBase(s, d)
     // ONE eager materialization: edges carry (src, dst, deg-of-src) so the
     // per-iteration work is a single join + agg. nodes derive from the
@@ -125,7 +125,7 @@ object Graph {
     * wedge→closing is an equi semi-join on (b,c). No all-pairs stage
     * anywhere, no driver-side graph state.
     */
-  val g2Triangles: Q = (s, d) => {
+  val g2Triangles: Plan = (s, d) => {
     val li = Tables.load(s, d, "lineitem")
       .filter(col("l_quantity") >= 45)
       .select(col("l_orderkey"), col("l_suppkey")).distinct()
@@ -213,7 +213,7 @@ object Graph {
     * plan flat (d5's lesson for data-dependent growth). At cluster scale
     * edges pre-partition on src so every round's probe is co-partitioned.
     */
-  val g3Reach: Q = (s, d) => {
+  val g3Reach: Plan = (s, d) => {
     val base = bipartiteBase(s, d)
     val edges = base
       .unionAll(base.select(col("dst").as("src"), col("src").as("dst")))
@@ -284,7 +284,7 @@ object Graph {
     * data-dependent loop never stacks lineage. At cluster scale edges
     * pre-partition on src; each round probes O(frontier).
     */
-  val g4Sssp: Q = (s, d) => {
+  val g4Sssp: Plan = (s, d) => {
     import graft.expressions.PortableHashExpressions.md5Hash62
     val base = bipartiteBase(s, d)
     val w = pmod(md5Hash62(concat(least(col("src"), col("dst")), lit(">"),
@@ -374,7 +374,7 @@ object Graph {
     * asserts. Output is the surviving 3-core with final degrees —
     * integer-only state, no float discipline.
     */
-  val g5Kcore: Q = (s, d) => {
+  val g5Kcore: Plan = (s, d) => {
     val base = bipartiteBase(s, d)
     val edges = base
       .unionAll(base.select(col("dst").as("src"), col("src").as("dst")))
@@ -450,7 +450,7 @@ object Graph {
     * one identically-spelled double expression, and the top-50 cut
     * orders by integer columns only — no float in any comparison.
     */
-  val g6Cooccur: Q = (s, d) => {
+  val g6Cooccur: Plan = (s, d) => {
     val inter = Tables.load(s, d, "events")
       .select(col("user_id").as("u"),
         get_json_object(col("props"), "$.k").cast("long").as("k"))
@@ -524,7 +524,7 @@ object Graph {
     * float discipline) so the score doubles — and the top-100 cut —
     * are bitwise-identical across engines.
     */
-  val g7Linkpred: Q = (s, d) => {
+  val g7Linkpred: Plan = (s, d) => {
     val li = Tables.load(s, d, "lineitem")
       .filter(col("l_quantity") >= 45)
       .select(col("l_orderkey"), col("l_suppkey")).distinct()
@@ -600,7 +600,7 @@ object Graph {
     * into one plan; labels are (node, label) pairs — state linear in
     * nodes, never in edges.
     */
-  val g8Labelprop: Q = (s, d) => {
+  val g8Labelprop: Plan = (s, d) => {
     val base = bipartiteBase(s, d)
     val labels = labelPropagate(
       base.unionAll(base.select(col("dst").as("src"), col("src").as("dst")))
@@ -686,7 +686,7 @@ object Graph {
     * co-partitionable joins of walk-count rows — never edge × walk. No
     * driver state; walk count scales with nodes, not edges².
     */
-  val g9Walks: Q = (s, d) => {
+  val g9Walks: Plan = (s, d) => {
     import graft.expressions.PortableHashExpressions.md5Hash62
     import org.apache.spark.sql.expressions.Window
     val base = bipartiteBase(s, d)
@@ -756,7 +756,7 @@ object Graph {
     * is scan + one shuffle on pair keys, the same budget as any word
     * co-occurrence count.
     */
-  val g10WalkPairs: Q = (s, d) => {
+  val g10WalkPairs: Plan = (s, d) => {
     val walks = g9Walks(s, d)
     val arms = Seq(
       ("walk_id", "n1"), ("n1", "walk_id"), ("n1", "n2"),
@@ -806,7 +806,7 @@ object Graph {
     * co-partitionings. Output is top-20 per role, TakeOrdered on each
     * side — never a global sort of the node set.
     */
-  val g11Hits: Q = (s, d) => {
+  val g11Hits: Plan = (s, d) => {
     val edges = bipartiteBase(s, d).materialize()
     val auth1 = edges.groupBy(col("dst")).agg(count(lit(1)).as("a1"))
     val hub1 = edges.join(auth1, "dst")
@@ -878,7 +878,7 @@ object Graph {
     * broadcast. Output is top-50 communities by size — g8's own output
     * discipline — never a global sort of all communities.
     */
-  val g12Modularity: Q = (s, d) => {
+  val g12Modularity: Plan = (s, d) => {
     val base = bipartiteBase(s, d)
     val edges = base.unionAll(
         base.select(col("dst").as("src"), col("src").as("dst")))
@@ -984,7 +984,7 @@ object Graph {
     * seeds × 3 × 2 rows regardless of degree skew (a hub contributes at
     * most its cap, the g6/g7 argument). No driver state.
     */
-  val g13NeighborSample: Q = (s, d) => {
+  val g13NeighborSample: Plan = (s, d) => {
     import graft.expressions.PortableHashExpressions.md5Hash62
     val base = bipartiteBase(s, d)
     val edges = base.unionAll(
@@ -1056,7 +1056,7 @@ object Graph {
     * touch every node. Zero contributions are exact float identities,
     * so the filter cannot change a single output bit.
     */
-  val g14Ppr: Q = (s, d) => {
+  val g14Ppr: Plan = (s, d) => {
     val base = bipartiteBase(s, d)
     val edges = {
       val e = base.unionAll(base.select(col("dst").as("src"), col("src").as("dst")))
@@ -1137,7 +1137,7 @@ object Graph {
     * clusters at every SF, i.e. that d5 stays correct past its
     * driver-finish gate.
     */
-  val g15CcStar: Q = (s, d) => {
+  val g15CcStar: Plan = (s, d) => {
     val comps = Dedup.starComponents(
       graft.Tables.load(s, d, "documents").select(col("doc_id")),
       Dedup.d2Pairs(s, d))
@@ -1150,37 +1150,22 @@ object Graph {
     */
   val g15CcStarSql: String = Dedup.d5DedupClustersSql
 
-  val queries: Map[String, Q] = Map(
-    "g15_cc_star" -> g15CcStar,
-    "g14_ppr" -> g14Ppr,
-    "g11_hits" -> g11Hits,
-    "g12_modularity" -> g12Modularity,
-    "g13_neighbor_sample" -> g13NeighborSample,
-    "g1_pagerank" -> g1Pagerank,
-    "g2_triangles" -> g2Triangles,
-    "g3_reach" -> g3Reach,
-    "g4_sssp" -> g4Sssp,
-    "g5_kcore" -> g5Kcore,
-    "g6_cooccur" -> g6Cooccur,
-    "g7_linkpred" -> g7Linkpred,
-    "g8_labelprop" -> g8Labelprop,
-    "g9_walks" -> g9Walks,
-    "g10_walk_pairs" -> g10WalkPairs)
+  val registry: Seq[Query] = Seq(
+    Query("g1_pagerank", g1Pagerank, g1PagerankSql),
+    Query("g2_triangles", g2Triangles, g2TrianglesSql),
+    Query("g3_reach", g3Reach, g3ReachSql),
+    Query("g4_sssp", g4Sssp, g4SsspSql),
+    Query("g5_kcore", g5Kcore, g5KcoreSql),
+    Query("g6_cooccur", g6Cooccur, g6CooccurSql),
+    Query("g7_linkpred", g7Linkpred, g7LinkpredSql),
+    Query("g8_labelprop", g8Labelprop, g8LabelpropSql),
+    Query("g9_walks", g9Walks, g9WalksSql),
+    Query("g10_walk_pairs", g10WalkPairs, g10WalkPairsSql),
+    Query("g11_hits", g11Hits, g11HitsSql),
+    Query("g12_modularity", g12Modularity, g12ModularitySql),
+    Query("g13_neighbor_sample", g13NeighborSample, g13NeighborSampleSql),
+    Query("g14_ppr", g14Ppr, g14PprSql),
+    Query("g15_cc_star", g15CcStar, g15CcStarSql))
 
-  val oracles: Map[String, String] = Map(
-    "g15_cc_star" -> g15CcStarSql,
-    "g14_ppr" -> g14PprSql,
-    "g11_hits" -> g11HitsSql,
-    "g12_modularity" -> g12ModularitySql,
-    "g13_neighbor_sample" -> g13NeighborSampleSql,
-    "g1_pagerank" -> g1PagerankSql,
-    "g2_triangles" -> g2TrianglesSql,
-    "g3_reach" -> g3ReachSql,
-    "g4_sssp" -> g4SsspSql,
-    "g5_kcore" -> g5KcoreSql,
-    "g6_cooccur" -> g6CooccurSql,
-    "g7_linkpred" -> g7LinkpredSql,
-    "g8_labelprop" -> g8LabelpropSql,
-    "g9_walks" -> g9WalksSql,
-    "g10_walk_pairs" -> g10WalkPairsSql)
+  val queries: Map[String, Plan] = Query.plans(registry)
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.Materialize._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.Plan
 import graft.functions.TextFunctions.sround
 
 /** Relational operator coverage, mapped 1:1 from the reference inventory in
@@ -29,7 +30,6 @@ import graft.functions.TextFunctions.sround
   * would pre-bucket on.
   */
 object Relational {
-  type Q = (SparkSession, String) => DataFrame
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
@@ -73,7 +73,7 @@ object Relational {
     * aggregate with map-side partial aggregation. Shuffles only the group
     * keys (6 distinct pairs) — at 100 TB this is the cheapest possible agg.
     */
-  val q1Agg: Q = (s, d) =>
+  val q1Agg: Plan = (s, d) =>
     t(s, d, "lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -97,7 +97,7 @@ object Relational {
   /** A2 (`dbt_Models/top_3_base_names_by_total_pickups.sql:5`): COUNT(col)
     * null-skipping vs COUNT(*), plus exact distinct count.
     */
-  val q2CountNonnull: Q = (s, d) =>
+  val q2CountNonnull: Plan = (s, d) =>
     t(s, d, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
@@ -117,7 +117,7 @@ object Relational {
     * so only May rows move; on a date-partitioned 100 TB table this becomes
     * partition pruning.
     */
-  val q3MonthFilter: Q = (s, d) =>
+  val q3MonthFilter: Plan = (s, d) =>
     t(s, d, "orders")
       .filter(month(col("o_orderdate")) === 5)
       .groupBy(col("o_orderstatus"))
@@ -134,7 +134,7 @@ object Relational {
     * conjunction, projection with aliases. Both predicates push down to the
     * parquet scan (PushedFilters: In, GreaterThan).
     */
-  val q4FilterIn: Q = (s, d) =>
+  val q4FilterIn: Plan = (s, d) =>
     t(s, d, "customer")
       .filter(col("c_mktsegment").isin("BUILDING", "AUTOMOBILE") &&
         col("c_acctbal") > 1000.0)
@@ -158,7 +158,7 @@ object Relational {
     * the unhinted plan survives (round-16 join audit). RelationalSpec
     * still plan-asserts the BHJ at test scale.
     */
-  val q5JoinBroadcast: Q = (s, d) =>
+  val q5JoinBroadcast: Plan = (s, d) =>
     t(s, d, "lineitem")
       .join(t(s, d, "supplier"),
         col("l_suppkey") === col("s_suppkey"), "inner")
@@ -179,7 +179,7 @@ object Relational {
     * key at scale); customer is small relative to the fact and the filter on
     * it is applied before the join so AQE can demote it to broadcast.
     */
-  val q6Join3way: Q = (s, d) => {
+  val q6Join3way: Plan = (s, d) => {
     val li = t(s, d, "lineitem")
     val o = t(s, d, "orders")
     val c = t(s, d, "customer")
@@ -208,7 +208,7 @@ object Relational {
     * driver-side merge of 32 candidates, NOT a global sort. Tie-broken on
     * p_brand for determinism.
     */
-  val q7TopkGlobal: Q = (s, d) =>
+  val q7TopkGlobal: Plan = (s, d) =>
     t(s, d, "lineitem")
       // part scales with SF: stats-elected broadcast, not a hint
       .join(t(s, d, "part"), col("l_partkey") === col("p_partkey"))
@@ -228,7 +228,7 @@ object Relational {
     * row_number; see SURVEY §7.4.3). Pre-aggregation shrinks the window input
     * to one row per (supplier, year, month) before the sort-within-partition.
     */
-  val q8WindowRank: Q = (s, d) => {
+  val q8WindowRank: Plan = (s, d) => {
     val perMonth = t(s, d, "lineitem")
       .groupBy(col("l_suppkey"),
         year(col("l_shipdate")).as("yr"), month(col("l_shipdate")).as("mo"))
@@ -257,7 +257,7 @@ object Relational {
     * partition (unbounded frame), no-ELSE CASE month naming (months 7-12 →
     * NULL, SURVEY §7.4.4), percentage-difference arithmetic, multi-key sort.
     */
-  val q9WindowAvgCase: Q = (s, d) => {
+  val q9WindowAvgCase: Plan = (s, d) => {
     val m = t(s, d, "lineitem")
       // supplier scales with SF: stats-elected broadcast, not a hint
       .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
@@ -298,7 +298,7 @@ object Relational {
     * correlated-scalar-subquery form; the Spark build uses the equivalent
     * window sum — one shuffle on `mo`, no join, no per-row subquery.
     */
-  val q10ShareMonth: Q = (s, d) => {
+  val q10ShareMonth: Plan = (s, d) => {
     val m = t(s, d, "lineitem")
       .groupBy(col("l_suppkey"), month(col("l_shipdate")).as("mo"))
       .agg(count(lit(1)).as("cnt"))
@@ -339,7 +339,7 @@ object Relational {
       |FROM nation_cust JOIN nation ON c_nationkey = n_nationkey
       |ORDER BY n_name""".stripMargin
 
-  val q11CteChain: Q = (s, d) => {
+  val q11CteChain: Plan = (s, d) => {
     Tables.registerAll(s, d)
     s.sql(q11CteChainSql)
   }
@@ -348,7 +348,7 @@ object Relational {
   /** X2 (`dbt_Models/top_3_pickup_dates_per_base.sql:6`): timestamp→date
     * truncation feeding a group-by.
     */
-  val q12DateAgg: Q = (s, d) =>
+  val q12DateAgg: Plan = (s, d) =>
     t(s, d, "lineitem")
       .groupBy(to_date(col("l_shipdate")).as("ship_day"))
       .agg(count(lit(1)).as("cnt"))
@@ -365,7 +365,7 @@ object Relational {
     * the oracle can replay it; the production path in graft.uber.Ingest uses
     * uuid()/current_timestamp(). Pure narrow projection: no shuffle at any SF.
     */
-  val q13IngestCdc: Q = (s, d) =>
+  val q13IngestCdc: Plan = (s, d) =>
     t(s, d, "customer").select(
       col("c_custkey"), col("c_name"),
       md5(concat_ws("|", col("c_custkey").cast("string"), col("c_name")))
@@ -395,7 +395,7 @@ object Relational {
     * ordering in both May and June. INTERSECT = distinct semantics both
     * engines; Spark plans it as a left-semi hash join after aggregation.
     */
-  val q14SetOps: Q = (s, d) => {
+  val q14SetOps: Plan = (s, d) => {
     val o = t(s, d, "orders")
     val may = o.filter(month(col("o_orderdate")) === 5)
       .select(col("o_custkey").as("custkey"))
@@ -416,7 +416,7 @@ object Relational {
     * graft.streaming.EventsStream runs the same logic as a Structured
     * Streaming query with a watermark; identical results on a bounded input.
     */
-  val q15EventsHourly: Q = (s, d) =>
+  val q15EventsHourly: Plan = (s, d) =>
     t(s, d, "events")
       .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour_ts"),
         col("event_type"))
@@ -434,7 +434,7 @@ object Relational {
     * capability). Spark plans a single Expand + hash agg: one scan, all
     * grouping levels. NULLS FIRST ordering matches both engines.
     */
-  val q16Rollup: Q = (s, d) =>
+  val q16Rollup: Plan = (s, d) =>
     t(s, d, "lineitem")
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("cnt"), sum("l_quantity").as("qty"))
@@ -449,7 +449,7 @@ object Relational {
   /** Left-semi join (EXISTS): customers with at least one May order.
     * Spark plans a semi hash join — no row duplication, no distinct.
     */
-  val q17SemiJoin: Q = (s, d) => {
+  val q17SemiJoin: Plan = (s, d) => {
     val mayOrders = t(s, d, "orders").filter(month(col("o_orderdate")) === 5)
     t(s, d, "customer")
       .join(mayOrders, col("c_custkey") === col("o_custkey"), "left_semi")
@@ -465,7 +465,7 @@ object Relational {
 
   // ----------------------------------------------------- q18_anti_join
   /** Left-anti join (NOT EXISTS): customers with no May orders. */
-  val q18AntiJoin: Q = (s, d) => {
+  val q18AntiJoin: Plan = (s, d) => {
     val mayOrders = t(s, d, "orders").filter(month(col("o_orderdate")) === 5)
     t(s, d, "customer")
       .join(mayOrders, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -483,7 +483,7 @@ object Relational {
   /** EXCEPT (set difference, distinct semantics both engines): customers
     * ordering in May but not in June.
     */
-  val q19Except: Q = (s, d) => {
+  val q19Except: Plan = (s, d) => {
     val o = t(s, d, "orders")
     val may = o.filter(month(col("o_orderdate")) === 5)
       .select(col("o_custkey").as("custkey"))
@@ -504,7 +504,7 @@ object Relational {
     * operator: one shuffle on user_id, window machinery does the rest.
     * Epoch-microsecond arithmetic keeps both engines in exact integers.
     */
-  val q20Sessionize: Q = (s, d) => {
+  val q20Sessionize: Plan = (s, d) => {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val gapUs = 30L * 60 * 1000000
     val marked = t(s, d, "events").select(
@@ -548,7 +548,7 @@ object Relational {
     * purchase (running max over an UNBOUNDED PRECEDING..CURRENT ROW frame)
     * and seconds to the user's next event.
     */
-  val q21FrameSpec: Q = (s, d) => {
+  val q21FrameSpec: Plan = (s, d) => {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val wFrame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     t(s, d, "events").select(
@@ -587,7 +587,7 @@ object Relational {
     *    a fixed-size bottom-k-by-hash sample would bound it fully at the
     *    cost of a per-group top-k pass.
     */
-  val q22ApproxSketch: Q = (s, d) => {
+  val q22ApproxSketch: Plan = (s, d) => {
     val ring8 = graft.expressions.PortableHash.Ring62Over8
     val li = t(s, d, "lineitem")
     val sampled = li
@@ -675,7 +675,7 @@ object Relational {
     * key — at 100 TB the bucket width trades shuffle fanout (3x left)
     * against per-bucket pair blowup.
     */
-  val q24RangeJoin: Q = (s, d) => {
+  val q24RangeJoin: Plan = (s, d) => {
     val bucketUs = 5000000L
     val e = t(s, d, "events")
     val errs = e.filter(col("event_type") === "error")
@@ -725,7 +725,7 @@ object Relational {
     * plan a single-pass hash agg (no distinct-values pre-query); absent
     * cells align to the oracle's conditional counts as 0.
     */
-  val q25Pivot: Q = (s, d) =>
+  val q25Pivot: Plan = (s, d) =>
     t(s, d, "orders")
       .groupBy(month(col("o_orderdate")).as("mon"))
       .pivot("o_orderstatus", Seq("F", "O", "P"))
@@ -755,7 +755,7 @@ object Relational {
     * percentile()/quantile_cont exactly — verified by the unchanged
     * DuckDB oracle. Three small aggregates join on the 3-row group key.
     */
-  val q26DistinctQuantile: Q = (s, d) => {
+  val q26DistinctQuantile: Plan = (s, d) => {
     val li = t(s, d, "lineitem")
     def distinctCount(c: String, as: String) =
       li.groupBy(col("l_returnflag"), col(c)).agg(count(lit(1)))
@@ -807,7 +807,7 @@ object Relational {
     * produce unmatched rows (counts null-extended). Spark coalesces the
     * using-column; both engines shuffle on the key.
     */
-  val q27FullOuter: Q = (s, d) => {
+  val q27FullOuter: Plan = (s, d) => {
     val o = t(s, d, "orders")
     def monthly(m: Int, as: String) =
       o.filter(month(col("o_orderdate")) === m)
@@ -835,7 +835,7 @@ object Relational {
     * extension. The standard "typed view over a JSON payload column" shape
     * for event ingest.
     */
-  val q28JsonExtract: Q = (s, d) =>
+  val q28JsonExtract: Plan = (s, d) =>
     t(s, d, "events")
       .select(col("event_type"),
         from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
@@ -860,7 +860,7 @@ object Relational {
     * engines); the order key carries an id tiebreak so peer groups are
     * single rows and the distributions are deterministic.
     */
-  val q31RankDistributions: Q = (s, d) => {
+  val q31RankDistributions: Plan = (s, d) => {
     // distribution ranks over a 3-value status key: each stratum is a
     // corpus share, so the rank runs through keyedRank and the family is
     // derived arithmetically from (rn, n). The ORDER BY tuple is unique
@@ -905,7 +905,7 @@ object Relational {
     * levels from one Expand pass; the flags disambiguate roll-up NULLs
     * from data NULLs.
     */
-  val q32Cube: Q = (s, d) =>
+  val q32Cube: Plan = (s, d) =>
     t(s, d, "lineitem")
       .cube(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("cnt"), sum("l_quantity").as("qty"),
@@ -929,7 +929,7 @@ object Relational {
     * sets — and the grouping() flags disambiguate expansion NULLs from
     * data NULLs.
     */
-  val q38GroupingSets: Q = (s, d) =>
+  val q38GroupingSets: Plan = (s, d) =>
     t(s, d, "lineitem")
       .groupingSets(
         Seq(Seq(col("l_returnflag"), col("l_linestatus")),
@@ -958,7 +958,7 @@ object Relational {
     * user-partitioned single WindowExec shape as q21 (no global window);
     * money sums in integer cents for oracle parity.
     */
-  val q39TimeRangeWindow: Q = (s, d) => {
+  val q39TimeRangeWindow: Plan = (s, d) => {
     val w = Window.partitionBy(col("user_id")).orderBy(unix_micros(col("ts")))
       .rangeBetween(-3600L * 1000000L, 0L)
     t(s, d, "events").select(
@@ -989,7 +989,7 @@ object Relational {
     * token are never compared; here the planted typo-pairs all share
     * their noun, so measured recall is 24/24 at sf0.01).
     */
-  val q40FuzzyJoin: Q = (s, d) => {
+  val q40FuzzyJoin: Plan = (s, d) => {
     val names = t(s, d, "part")
       .groupBy(col("p_name")).agg(count(lit(1)).as("n_rows"))
       .withColumn("blk", element_at(split(col("p_name"), " "), -1))
@@ -1025,7 +1025,7 @@ object Relational {
     * one hash agg collapses them, one lead closes the intervals — all
     * windows customer-partitioned, no global ordering anywhere.
     */
-  val q41Scd2: Q = (s, d) => {
+  val q41Scd2: Plan = (s, d) => {
     val wRow = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
     val chg = when(lag(col("o_orderpriority"), 1).over(wRow).isNull ||
@@ -1075,7 +1075,7 @@ object Relational {
     * makes it deterministic; string form keeps the driver compare
     * scalar-only).
     */
-  val q33CollectSorted: Q = (s, d) =>
+  val q33CollectSorted: Plan = (s, d) =>
     t(s, d, "orders")
       .groupBy(col("o_custkey").as("custkey"))
       .agg(count(lit(1)).as("n_orders"),
@@ -1096,7 +1096,7 @@ object Relational {
     * CURRENT ROW — the classic trap; both engines get the full frame
     * spelled out).
     */
-  val q34ValueWindows: Q = (s, d) => {
+  val q34ValueWindows: Plan = (s, d) => {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -1126,7 +1126,7 @@ object Relational {
     * before any windowed model sees the series. The generated axis is
     * rows = hours x types, independent of event volume.
     */
-  val q35GapFill: Q = (s, d) => {
+  val q35GapFill: Plan = (s, d) => {
     val e = t(s, d, "events")
     val span = e.agg(
       date_trunc("hour", min(col("ts"))).as("h0"),
@@ -1172,7 +1172,7 @@ object Relational {
     * back as offsets — the classic two-phase parallel prefix sum, so no
     * single-partition WindowExec exists in the plan at any scale.
     */
-  val q36SweepConcurrency: Q = (s, d) => {
+  val q36SweepConcurrency: Plan = (s, d) => {
     val sessions = q20Sessionize(s, d)
       .select(col("session_start").cast("timestamp").as("st"),
         (unix_micros(col("session_start").cast("timestamp"))
@@ -1256,7 +1256,7 @@ object Relational {
       |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
       |ORDER BY c_custkey, o_orderkey""".stripMargin
 
-  val q37LateralTopk: Q = (s, d) => {
+  val q37LateralTopk: Plan = (s, d) => {
     Tables.registerAll(s, d)
     s.sql(q37LateralTopkSql)
   }
@@ -1270,7 +1270,7 @@ object Relational {
     * the DuckDB oracle re-derives the IDENTICAL estimate from the
     * 1024th-smallest distinct hash and the driver hash-checks it.
     */
-  val q30KmvDistinct: Q = (s, d) =>
+  val q30KmvDistinct: Plan = (s, d) =>
     t(s, d, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
@@ -1317,7 +1317,7 @@ object Relational {
     * 100 TB, skewed strata are the usual worry — the rank is computed
     * within the partition after AQE skew-splitting of the sort.
     */
-  val q29StratifiedSample: Q = (s, d) => {
+  val q29StratifiedSample: Plan = (s, d) => {
     // per-stratum hash rank through keyedRank (event_type is a tiny enum
     // but each stratum is corpus-sized — a naive per-type window sorts a
     // corpus share in one task; same reshape as t16), stratum totals via
@@ -1362,7 +1362,7 @@ object Relational {
     * batch. Copy-on-write table formats run precisely this plan per
     * touched file group.
     */
-  val q42MergeUpsert: Q = (s, d) => {
+  val q42MergeUpsert: Plan = (s, d) => {
     val target = t(s, d, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     val updates = target.filter(col("o_orderkey") % 10 === 0)
@@ -1418,7 +1418,7 @@ object Relational {
     * spells the same semantics as UNION ALL arms. Money sums go through
     * integer cents (sumCents) so the doubles are order-independent.
     */
-  val q43Unpivot: Q = (s, d) =>
+  val q43Unpivot: Plan = (s, d) =>
     t(s, d, "lineitem")
       .unpivot(
         Array(col("l_orderkey"), col("l_linenumber")),
@@ -1462,7 +1462,7 @@ object Relational {
     * HLL per group) — this query keeps the exact distinct alongside so
     * the error is visible, like t18 does for CMS.
     */
-  val q44HllDistinct: Q = (s, d) => {
+  val q44HllDistinct: Plan = (s, d) => {
     val m = 64
     val regs = t(s, d, "lineitem")
       .select(col("l_returnflag"),
@@ -1533,7 +1533,7 @@ object Relational {
     * double ops on the identical double, so the packed longs agree
     * bit-for-bit.
     */
-  val q45Argmax: Q = (s, d) => {
+  val q45Argmax: Plan = (s, d) => {
     val o = t(s, d, "orders")
     val two31 = 1L << 31
     val mask = two31 - 1
@@ -1591,7 +1591,7 @@ object Relational {
     * two in-partition sorts — the direct formulation (distinct-count per
     * prefix) would be quadratic.
     */
-  val q46Rcd: Q = (s, d) => {
+  val q46Rcd: Plan = (s, d) => {
     val e = t(s, d, "events")
     val wFirst = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("ts"), col("event_id"))
@@ -1634,7 +1634,7 @@ object Relational {
     * sketches and answer any union/intersection question later without
     * rescanning.
     */
-  val q47Setkmv: Q = (s, d) => {
+  val q47Setkmv: Plan = (s, d) => {
     val k = 512
     val o = t(s, d, "orders")
       .select(col("o_custkey"), month(col("o_orderdate")).as("m"))
@@ -1732,7 +1732,7 @@ object Relational {
     * stored view). The oracle recomputes the view from the post-change
     * table, so hash-parity PROVES incremental ≡ recompute.
     */
-  val q48Ivm: Q = (s, d) => {
+  val q48Ivm: Plan = (s, d) => {
     val cents = (c: org.apache.spark.sql.Column) =>
       floor(c * lit(100.0) + lit(0.5)).cast("long")
     val o = t(s, d, "orders").select(col("o_orderkey"),
@@ -1791,7 +1791,7 @@ object Relational {
     * in-partition sort shared by both window columns. No arithmetic on
     * the carried value (it is COPIED), so parity is exact.
     */
-  val q49Locf: Q = (s, d) => {
+  val q49Locf: Plan = (s, d) => {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1831,7 +1831,7 @@ object Relational {
     * double expression on both engines; the top edge folds into the last
     * bin via least(_, 15).
     */
-  val q50Histogram: Q = (s, d) => {
+  val q50Histogram: Plan = (s, d) => {
     val e = t(s, d, "events").select(col("event_type"), col("value"))
     val stats = e.agg(min(col("value")).as("mn"), max(col("value")).as("mx"))
     val width = (col("mx") - col("mn")) / lit(16.0)
@@ -1867,7 +1867,7 @@ object Relational {
     * is long-subtraction cast to double, divided then multiplied in the
     * same order on both engines — bit-exact parity on doubles.
     */
-  val q51InterpLinear: Q = (s, d) => {
+  val q51InterpLinear: Plan = (s, d) => {
     val tl = col("ts").cast("long")
     val isP = col("event_type") === "purchase"
     val order = Seq(col("ts"), col("event_id"))
@@ -1946,7 +1946,7 @@ object Relational {
     * 100 TB this is one map-side-combined shuffle on user_id, then
     * effectively nothing.
     */
-  val q52Funnel: Q = (s, d) => {
+  val q52Funnel: Plan = (s, d) => {
     val tl = col("ts").cast("long")
     def stageTs(stage: String) = min(when(col("event_type") === stage, tl))
     val u = t(s, d, "events")
@@ -2012,7 +2012,7 @@ object Relational {
     * half-up cents longs so re-association across salts cannot move a
     * floating-point bit.
     */
-  val q53SaltedAgg: Q = (s, d) => {
+  val q53SaltedAgg: Plan = (s, d) => {
     val e = t(s, d, "events")
     val cents = floor(col("value") * lit(100.0) + lit(0.5)).cast("long")
     val merged = e
@@ -2044,7 +2044,7 @@ object Relational {
     * per-channel rollup is a tiny hash aggregate; revenue sums ride as
     * half-up cents longs.
     */
-  val q54Attribution: Q = (s, d) => {
+  val q54Attribution: Plan = (s, d) => {
     val tl = col("ts").cast("long")
     val isTouch = col("event_type").isin("view", "click")
     val w = Window.partitionBy(col("user_id"))
@@ -2100,7 +2100,7 @@ object Relational {
     * TakeOrderedAndProject (per-partition top-k, then k·P merge on the
     * driver side of the shuffle) — no global sort at any scale.
     */
-  val q55WeightedSample: Q = (s, d) => {
+  val q55WeightedSample: Plan = (s, d) => {
     val h = graft.expressions.PortableHashExpressions.md5Hash62(
       col("doc_id").cast("string"))
     val u = (h.cast("double") + lit(1.0)) / lit(4611686018427387904.0)
@@ -2139,7 +2139,7 @@ object Relational {
     * id), so the oracle is plain COUNT(DISTINCT): no sketch replay, and
     * any hash mismatch is a real bug, not estimate drift.
     */
-  val q56BitmapDistinct: Q = (s, d) =>
+  val q56BitmapDistinct: Plan = (s, d) =>
     t(s, d, "events")
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(
@@ -2182,7 +2182,7 @@ object Relational {
     * than the staging, proving the two-stage plan computes the true
     * skyline.
     */
-  val q57Skyline: Q = (s, d) => {
+  val q57Skyline: Plan = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val pts = t(s, d, "events")
@@ -2279,7 +2279,7 @@ object Relational {
     * cross join), then scan → map-side partial agg → per-user hash agg →
     * TakeOrderedAndProject top-200. No window, no second shuffle.
     */
-  val q58DecayScore: Q = (s, d) => {
+  val q58DecayScore: Plan = (s, d) => {
     val ev = t(s, d, "events")
     val mx = ev.agg(max(to_date(col("ts"))).as("mx_day"))
     ev.crossJoin(broadcast(mx))
@@ -2354,7 +2354,7 @@ object Relational {
     * week-start conventions. The bitmaps are exact sets, so the oracle
     * is the plain DISTINCT self-join — hash parity proves the algebra.
     */
-  val q59Retention: Q = (s, d) => {
+  val q59Retention: Plan = (s, d) => {
     import graft.expressions.BitmapDistinct.bitmapWords
     val wk = floor(datediff(to_date(col("ts")), to_date(lit("2024-01-01")))
       / lit(7.0)).cast("long")
@@ -2412,7 +2412,7 @@ object Relational {
     * per-column aggregates — DuckDB re-scans per column, Spark doesn't,
     * results must agree anyway.
     */
-  val q60Profile: Q = (s, d) => {
+  val q60Profile: Plan = (s, d) => {
     val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
       "o_orderpriority")
     val stacked = t(s, d, "orders").select(expr(
@@ -2457,7 +2457,7 @@ object Relational {
     * integer CENTS — hashing the double's string form would couple the
     * result to each engine's float formatter.
     */
-  val q61TableDiff: Q = (s, d) => {
+  val q61TableDiff: Plan = (s, d) => {
     val o = t(s, d, "orders")
     val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast("long")
     def rowHash(price: org.apache.spark.sql.Column) =
@@ -2527,7 +2527,7 @@ object Relational {
     *
     * Output is the per-key keep accounting (kept/dropped), ordered.
     */
-  val q62Debounce: Q = (s, d) => {
+  val q62Debounce: Plan = (s, d) => {
     import s.implicits._
     val ev = t(s, d, "events")
       .select(col("user_id"), col("event_type"),
@@ -2603,7 +2603,7 @@ object Relational {
     * totals are tiny re-aggregations. Probabilities divide
     * identically-spelled integer counts.
     */
-  val q63Transitions: Q = (s, d) => {
+  val q63Transitions: Plan = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val steps = t(s, d, "events")
@@ -2646,7 +2646,7 @@ object Relational {
     * so the rank-derived doubles are identically-spelled integer
     * divisions — bit-stable across engines.
     */
-  val q64RankFamily: Q = (s, d) => {
+  val q64RankFamily: Plan = (s, d) => {
     // the q31 reshape with the whole rank family: a 5-value segment key
     // over the full customer table is 1/5th of the corpus per window
     // task, so the base rank is keyedRank's sharded row_number. The
@@ -2714,7 +2714,7 @@ object Relational {
     * an integer sum — association-order-free — with ONE double division
     * at the end (q58's discipline).
     */
-  val q65Twap: Q = (s, d) => {
+  val q65Twap: Plan = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
     t(s, d, "events")
@@ -2790,7 +2790,7 @@ object Relational {
     * (few partitions) is over a tiny frame by construction. Integers
     * end-to-end; the only division is the final cents→currency spell.
     */
-  val q66WeightedMedian: Q = (s, d) => {
+  val q66WeightedMedian: Plan = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val seg = t(s, d, "events")
       .select(col("user_id"), col("event_type"),
@@ -2857,7 +2857,7 @@ object Relational {
     * ONE user-keyed exchange + one sorted run serves all four window
     * columns; everything after is a per-user agg on the same key.
     */
-  val q67PatternMatch: Q = (s, d) => patternMatches(t(s, d, "events"))
+  val q67PatternMatch: Plan = (s, d) => patternMatches(t(s, d, "events"))
 
   /** q67 over an arbitrary events frame (user_id, ts, event_id,
     * event_type) — the spec plants a click→error→purchase sequence (rare
@@ -2935,7 +2935,7 @@ object Relational {
     * pops out of each day's own bitmap; stickiness = DAU/WAU divides
     * identically-spelled integers.
     */
-  val q68RollingDistinct: Q = (s, d) => {
+  val q68RollingDistinct: Plan = (s, d) => {
     import graft.expressions.BitmapDistinct.bitmapWords
     val ev = t(s, d, "events")
     val db = ev
@@ -2992,7 +2992,7 @@ object Relational {
     * both window sorts AND the aggregation; money is integer cents until
     * the final /100 spell.
     */
-  val q69Ohlc: Q = (s, d) => {
+  val q69Ohlc: Plan = (s, d) => {
     // open/close are argmin/argmax by (tus, event_id) — executed as
     // min/max over a (tus, event_id, cents) struct, NOT rank windows
     // partitioned by (event_type, day): a hot trading day would route
@@ -3048,7 +3048,7 @@ object Relational {
     * (≤ 10^8 per row). The arms pivot into one row per metric via
     * conditional aggregation on the same key — no join.
     */
-  val q70AbTest: Q = (s, d) => {
+  val q70AbTest: Plan = (s, d) => {
     val m = t(s, d, "events")
       .select(col("event_type"),
         (col("user_id") % 2 === 0).as("in_a"),
@@ -3138,7 +3138,7 @@ object Relational {
     * tot*80), so no float enters any boundary decision, and the shares
     * divide identically-spelled exact integers.
     */
-  val q71Pareto: Q = (s, d) => {
+  val q71Pareto: Plan = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val totals = t(s, d, "lineitem")
       .groupBy(col("l_partkey"))
@@ -3227,7 +3227,7 @@ object Relational {
     * the fact — the delta-cost shape IncrementalSpec proves for the six
     * uber models.
     */
-  val q72IncrementalModels: Q = (s, d) => {
+  val q72IncrementalModels: Plan = (s, d) => {
     import graft.uber.Incremental
     val dir = java.nio.file.Files.createTempDirectory("graft_q72").toString
     val pdir = s"$dir/partials"
@@ -3328,7 +3328,7 @@ object Relational {
     o.hint("merge").join(c, col("o_custkey") === col("c_custkey"))
   }
 
-  val q73BucketedJoin: Q = (s, d) =>
+  val q73BucketedJoin: Plan = (s, d) =>
     q73JoinOnly(s, d)
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_orders"),
@@ -3343,151 +3343,79 @@ object Relational {
       |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, Q] = Map(
-    "q1_agg" -> q1Agg,
-    "q2_count_nonnull" -> q2CountNonnull,
-    "q3_month_filter" -> q3MonthFilter,
-    "q4_filter_in" -> q4FilterIn,
-    "q5_join_broadcast" -> q5JoinBroadcast,
-    "q6_join_3way" -> q6Join3way,
-    "q7_topk_global" -> q7TopkGlobal,
-    "q8_window_rank" -> q8WindowRank,
-    "q9_window_avg_case" -> q9WindowAvgCase,
-    "q10_share_month" -> q10ShareMonth,
-    "q11_cte_chain" -> q11CteChain,
-    "q12_date_agg" -> q12DateAgg,
-    "q13_ingest_cdc" -> q13IngestCdc,
-    "q14_set_ops" -> q14SetOps,
-    "q15_events_hourly" -> q15EventsHourly,
-    "q16_rollup" -> q16Rollup,
-    "q17_semi_join" -> q17SemiJoin,
-    "q18_anti_join" -> q18AntiJoin,
-    "q19_except" -> q19Except,
-    "q20_sessionize" -> q20Sessionize,
-    "q21_frame_spec" -> q21FrameSpec,
-    "q22_approx_sketch" -> q22ApproxSketch,
-    "q24_range_join" -> q24RangeJoin,
-    "q25_pivot" -> q25Pivot,
-    "q26_distinct_quantile" -> q26DistinctQuantile,
-    "q27_full_outer" -> q27FullOuter,
-    "q28_json_extract" -> q28JsonExtract,
-    "q29_stratified_sample" -> q29StratifiedSample,
-    "q30_kmv_distinct" -> q30KmvDistinct,
-    "q31_rank_distributions" -> q31RankDistributions,
-    "q32_cube" -> q32Cube,
-    "q33_collect_sorted" -> q33CollectSorted,
-    "q34_value_windows" -> q34ValueWindows,
-    "q35_gap_fill" -> q35GapFill,
-    "q36_sweep_concurrency" -> q36SweepConcurrency,
-    "q37_lateral_topk" -> q37LateralTopk,
-    "q38_grouping_sets" -> q38GroupingSets,
-    "q39_time_range_window" -> q39TimeRangeWindow,
-    "q40_fuzzy_join" -> q40FuzzyJoin,
-    "q41_scd2" -> q41Scd2,
-    "q42_merge_upsert" -> q42MergeUpsert,
-    "q43_unpivot" -> q43Unpivot,
-    "q44_hll_distinct" -> q44HllDistinct,
-    "q45_argmax" -> q45Argmax,
-    "q46_rcd" -> q46Rcd,
-    "q47_setkmv" -> q47Setkmv,
-    "q48_ivm" -> q48Ivm,
-    "q49_locf" -> q49Locf,
-    "q50_histogram" -> q50Histogram,
-    "q51_interp_linear" -> q51InterpLinear,
-    "q52_funnel" -> q52Funnel,
-    "q53_salted_agg" -> q53SaltedAgg,
-    "q54_attribution" -> q54Attribution,
-    "q55_weighted_sample" -> q55WeightedSample,
-    "q56_bitmap_distinct" -> q56BitmapDistinct,
-    "q57_skyline" -> q57Skyline,
-    "q58_decay_score" -> q58DecayScore,
-    "q59_retention" -> q59Retention,
-    "q60_profile" -> q60Profile,
-    "q61_table_diff" -> q61TableDiff,
-    "q62_debounce" -> q62Debounce,
-    "q63_transitions" -> q63Transitions,
-    "q64_rank_family" -> q64RankFamily,
-    "q65_twap" -> q65Twap,
-    "q66_weighted_median" -> q66WeightedMedian,
-    "q67_pattern_match" -> q67PatternMatch,
-    "q68_rolling_distinct" -> q68RollingDistinct,
-    "q69_ohlc" -> q69Ohlc,
-    "q70_ab_test" -> q70AbTest,
-    "q71_pareto" -> q71Pareto,
-    "q72_incremental_models" -> q72IncrementalModels,
-    "q73_bucketed_join" -> q73BucketedJoin)
+  val registry: Seq[Query] = Seq(
+    Query("q1_agg", q1Agg, q1AggSql),
+    Query("q2_count_nonnull", q2CountNonnull, q2CountNonnullSql),
+    Query("q3_month_filter", q3MonthFilter, q3MonthFilterSql),
+    Query("q4_filter_in", q4FilterIn, q4FilterInSql),
+    Query("q5_join_broadcast", q5JoinBroadcast, q5JoinBroadcastSql),
+    Query("q6_join_3way", q6Join3way, q6Join3waySql),
+    Query("q7_topk_global", q7TopkGlobal, q7TopkGlobalSql),
+    Query("q8_window_rank", q8WindowRank, q8WindowRankSql),
+    Query("q9_window_avg_case", q9WindowAvgCase, q9WindowAvgCaseSql),
+    Query("q10_share_month", q10ShareMonth, q10ShareMonthSql),
+    Query("q11_cte_chain", q11CteChain, q11CteChainSql),
+    Query("q12_date_agg", q12DateAgg, q12DateAggSql),
+    Query("q13_ingest_cdc", q13IngestCdc, q13IngestCdcSql),
+    Query("q14_set_ops", q14SetOps, q14SetOpsSql),
+    Query("q15_events_hourly", q15EventsHourly, q15EventsHourlySql),
+    Query("q16_rollup", q16Rollup, q16RollupSql),
+    Query("q17_semi_join", q17SemiJoin, q17SemiJoinSql),
+    Query("q18_anti_join", q18AntiJoin, q18AntiJoinSql),
+    Query("q19_except", q19Except, q19ExceptSql),
+    Query("q20_sessionize", q20Sessionize, q20SessionizeSql),
+    Query("q21_frame_spec", q21FrameSpec, q21FrameSpecSql),
+    Query("q22_approx_sketch", q22ApproxSketch, q22ApproxSketchSql),
+    Query("q24_range_join", q24RangeJoin, q24RangeJoinSql),
+    Query("q25_pivot", q25Pivot, q25PivotSql),
+    Query("q26_distinct_quantile", q26DistinctQuantile, q26DistinctQuantileSql),
+    Query("q27_full_outer", q27FullOuter, q27FullOuterSql),
+    Query("q28_json_extract", q28JsonExtract, q28JsonExtractSql),
+    Query("q29_stratified_sample", q29StratifiedSample, q29StratifiedSampleSql),
+    Query("q30_kmv_distinct", q30KmvDistinct, q30KmvDistinctSql),
+    Query("q31_rank_distributions", q31RankDistributions, q31RankDistributionsSql),
+    Query("q32_cube", q32Cube, q32CubeSql),
+    Query("q33_collect_sorted", q33CollectSorted, q33CollectSortedSql),
+    Query("q34_value_windows", q34ValueWindows, q34ValueWindowsSql),
+    Query("q35_gap_fill", q35GapFill, q35GapFillSql),
+    Query("q36_sweep_concurrency", q36SweepConcurrency, q36SweepConcurrencySql),
+    Query("q37_lateral_topk", q37LateralTopk, q37LateralTopkSql),
+    Query("q38_grouping_sets", q38GroupingSets, q38GroupingSetsSql),
+    Query("q39_time_range_window", q39TimeRangeWindow, q39TimeRangeWindowSql),
+    Query("q40_fuzzy_join", q40FuzzyJoin, q40FuzzyJoinSql),
+    Query("q41_scd2", q41Scd2, q41Scd2Sql),
+    Query("q42_merge_upsert", q42MergeUpsert, q42MergeUpsertSql),
+    Query("q43_unpivot", q43Unpivot, q43UnpivotSql),
+    Query("q44_hll_distinct", q44HllDistinct, q44HllDistinctSql),
+    Query("q45_argmax", q45Argmax, q45ArgmaxSql),
+    Query("q46_rcd", q46Rcd, q46RcdSql),
+    Query("q47_setkmv", q47Setkmv, q47SetkmvSql),
+    Query("q48_ivm", q48Ivm, q48IvmSql),
+    Query("q49_locf", q49Locf, q49LocfSql),
+    Query("q50_histogram", q50Histogram, q50HistogramSql),
+    Query("q51_interp_linear", q51InterpLinear, q51InterpLinearSql),
+    Query("q52_funnel", q52Funnel, q52FunnelSql),
+    Query("q53_salted_agg", q53SaltedAgg, q53SaltedAggSql),
+    Query("q54_attribution", q54Attribution, q54AttributionSql),
+    Query("q55_weighted_sample", q55WeightedSample, q55WeightedSampleSql),
+    Query("q56_bitmap_distinct", q56BitmapDistinct, q56BitmapDistinctSql),
+    Query("q57_skyline", q57Skyline, q57SkylineSql),
+    Query("q58_decay_score", q58DecayScore, q58DecayScoreSql),
+    Query("q59_retention", q59Retention, q59RetentionSql),
+    Query("q60_profile", q60Profile, q60ProfileSql),
+    Query("q61_table_diff", q61TableDiff, q61TableDiffSql),
+    Query("q62_debounce", q62Debounce, q62DebounceSql),
+    Query("q63_transitions", q63Transitions, q63TransitionsSql),
+    Query("q64_rank_family", q64RankFamily, q64RankFamilySql),
+    Query("q65_twap", q65Twap, q65TwapSql),
+    Query("q66_weighted_median", q66WeightedMedian, q66WeightedMedianSql),
+    Query("q67_pattern_match", q67PatternMatch, q67PatternMatchSql),
+    Query("q68_rolling_distinct", q68RollingDistinct, q68RollingDistinctSql),
+    Query("q69_ohlc", q69Ohlc, q69OhlcSql),
+    Query("q70_ab_test", q70AbTest, q70AbTestSql),
+    Query("q71_pareto", q71Pareto, q71ParetoSql),
+    Query("q72_incremental_models", q72IncrementalModels, q72IncrementalModelsSql),
+    Query("q73_bucketed_join", q73BucketedJoin, q73BucketedJoinSql))
 
-  val oracles: Map[String, String] = Map(
-    "q1_agg" -> q1AggSql,
-    "q2_count_nonnull" -> q2CountNonnullSql,
-    "q3_month_filter" -> q3MonthFilterSql,
-    "q4_filter_in" -> q4FilterInSql,
-    "q5_join_broadcast" -> q5JoinBroadcastSql,
-    "q6_join_3way" -> q6Join3waySql,
-    "q7_topk_global" -> q7TopkGlobalSql,
-    "q8_window_rank" -> q8WindowRankSql,
-    "q9_window_avg_case" -> q9WindowAvgCaseSql,
-    "q10_share_month" -> q10ShareMonthSql,
-    "q11_cte_chain" -> q11CteChainSql,
-    "q12_date_agg" -> q12DateAggSql,
-    "q13_ingest_cdc" -> q13IngestCdcSql,
-    "q14_set_ops" -> q14SetOpsSql,
-    "q15_events_hourly" -> q15EventsHourlySql,
-    "q16_rollup" -> q16RollupSql,
-    "q17_semi_join" -> q17SemiJoinSql,
-    "q18_anti_join" -> q18AntiJoinSql,
-    "q19_except" -> q19ExceptSql,
-    "q20_sessionize" -> q20SessionizeSql,
-    "q21_frame_spec" -> q21FrameSpecSql,
-    "q22_approx_sketch" -> q22ApproxSketchSql,
-    "q24_range_join" -> q24RangeJoinSql,
-    "q25_pivot" -> q25PivotSql,
-    "q26_distinct_quantile" -> q26DistinctQuantileSql,
-    "q27_full_outer" -> q27FullOuterSql,
-    "q28_json_extract" -> q28JsonExtractSql,
-    "q29_stratified_sample" -> q29StratifiedSampleSql,
-    "q30_kmv_distinct" -> q30KmvDistinctSql,
-    "q31_rank_distributions" -> q31RankDistributionsSql,
-    "q32_cube" -> q32CubeSql,
-    "q33_collect_sorted" -> q33CollectSortedSql,
-    "q34_value_windows" -> q34ValueWindowsSql,
-    "q35_gap_fill" -> q35GapFillSql,
-    "q36_sweep_concurrency" -> q36SweepConcurrencySql,
-    "q37_lateral_topk" -> q37LateralTopkSql,
-    "q38_grouping_sets" -> q38GroupingSetsSql,
-    "q39_time_range_window" -> q39TimeRangeWindowSql,
-    "q40_fuzzy_join" -> q40FuzzyJoinSql,
-    "q41_scd2" -> q41Scd2Sql,
-    "q42_merge_upsert" -> q42MergeUpsertSql,
-    "q43_unpivot" -> q43UnpivotSql,
-    "q44_hll_distinct" -> q44HllDistinctSql,
-    "q45_argmax" -> q45ArgmaxSql,
-    "q46_rcd" -> q46RcdSql,
-    "q47_setkmv" -> q47SetkmvSql,
-    "q48_ivm" -> q48IvmSql,
-    "q49_locf" -> q49LocfSql,
-    "q50_histogram" -> q50HistogramSql,
-    "q51_interp_linear" -> q51InterpLinearSql,
-    "q52_funnel" -> q52FunnelSql,
-    "q53_salted_agg" -> q53SaltedAggSql,
-    "q54_attribution" -> q54AttributionSql,
-    "q55_weighted_sample" -> q55WeightedSampleSql,
-    "q56_bitmap_distinct" -> q56BitmapDistinctSql,
-    "q57_skyline" -> q57SkylineSql,
-    "q58_decay_score" -> q58DecayScoreSql,
-    "q59_retention" -> q59RetentionSql,
-    "q60_profile" -> q60ProfileSql,
-    "q61_table_diff" -> q61TableDiffSql,
-    "q62_debounce" -> q62DebounceSql,
-    "q63_transitions" -> q63TransitionsSql,
-    "q64_rank_family" -> q64RankFamilySql,
-    "q65_twap" -> q65TwapSql,
-    "q66_weighted_median" -> q66WeightedMedianSql,
-    "q67_pattern_match" -> q67PatternMatchSql,
-    "q68_rolling_distinct" -> q68RollingDistinctSql,
-    "q69_ohlc" -> q69OhlcSql,
-    "q70_ab_test" -> q70AbTestSql,
-    "q71_pareto" -> q71ParetoSql,
-    "q72_incremental_models" -> q72IncrementalModelsSql,
-    "q73_bucketed_join" -> q73BucketedJoinSql)
+  val queries: Map[String, Plan] = Query.plans(registry)
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Materialize._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.Plan
 import graft.functions.VectorFunctions._
 import graft.functions.TextFunctions.{sortedFoldSum, sround}
 
@@ -22,7 +23,6 @@ import graft.functions.TextFunctions.{sortedFoldSum, sround}
   * the data already provides) and verifies cosine within blocks.
   */
 object Similarity {
-  type Q = (SparkSession, String) => DataFrame
 
   private def emb(s: SparkSession, d: String) = Tables.load(s, d, "embeddings")
 
@@ -40,7 +40,7 @@ object Similarity {
   /** Exact cosine top-k: corpus ⋈ broadcast(queries), one pass. Ties broken
     * by neighbor id so ranking is deterministic and oracle-comparable.
     */
-  val v1KnnBrute: Q = (s, d) => {
+  val v1KnnBrute: Plan = (s, d) => {
     val e = emb(s, d)
     // squared norms once per VECTOR (not per pair): the corpus side computes
     // its norm in the scan projection, the query side in the broadcast
@@ -86,7 +86,7 @@ object Similarity {
     * double rendering) and reproduces buckets, probes, and ranking —
     * hash-checked by the driver; recall vs v1 is asserted in ScalaTest.
     */
-  val v2AnnLsh: Q = (s, d) => {
+  val v2AnnLsh: Plan = (s, d) => {
     // 4 planes → 16 coarse buckets: this synthetic corpus is near-uniform on
     // the sphere (no cluster structure), so recall needs wide buckets; a
     // clustered production corpus would take 8-16 planes.
@@ -155,7 +155,7 @@ object Similarity {
     * distribution). Oracle-checkable because the
     * cosine is pure double arithmetic in both engines.
     */
-  val v3EmbeddingNeardup: Q = (s, d) => {
+  val v3EmbeddingNeardup: Plan = (s, d) => {
     val e = emb(s, d)
     val a = e.select(col("vec_id").as("id_a"), col("label"), col("embedding").as("emb_a"),
       normSq(col("embedding")).as("nsq_a"))
@@ -236,7 +236,7 @@ object Similarity {
       }
   }
 
-  val v4IvfAnn: Q = (s, d) => {
+  val v4IvfAnn: Plan = (s, d) => {
     val k = 16
     val nprobe = 4
     val e = emb(s, d)
@@ -360,7 +360,7 @@ object Similarity {
     * the per-cell rank filter before the global rank runs.
     */
   val DivCap = 2
-  val v15DiverseAnn: Q = (s, d) => {
+  val v15DiverseAnn: Plan = (s, d) => {
     val e = emb(s, d)
     val refined = ivfRefined(e, 16)
     val corpus = e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
@@ -561,7 +561,7 @@ object Similarity {
     PqIndex(coded, qdf, adot, ansq)
   }
 
-  val v6PqAnn: Q = (s, d) => {
+  val v6PqAnn: Plan = (s, d) => {
     val ix = pqBuild(s, emb(s, d))
     // two-phase top-K over the ADC-scored brute frame (v1's audit class)
     KeyedRank.keyedTopK(
@@ -655,7 +655,7 @@ object Similarity {
     * Same join shape as v1: corpus streams once against the broadcast
     * quantized query set; per-query top-k via rank-limited window.
     */
-  val v5Int8Ann: Q = (s, d) => {
+  val v5Int8Ann: Plan = (s, d) => {
     val e = emb(s, d)
     // scale bound in its own projection: a lambda capturing a COMPUTED
     // column would re-evaluate it per element (no CSE inside HOFs)
@@ -727,7 +727,7 @@ object Similarity {
     * extra multiply-add per plane, computed in the same scan projection
     * as the norm.
     */
-  val v7Mips: Q = (s, d) => {
+  val v7Mips: Plan = (s, d) => {
     val nPlanes = 4
     val planes = hyperplanes(nPlanes, 65)
     val e = emb(s, d).select(col("vec_id"), col("embedding"),
@@ -819,7 +819,7 @@ object Similarity {
     * unchanged; here the verification path is exact brute force so the
     * oracle hash-checks instead of needing a recall bound.
     */
-  val v8FilteredAnn: Q = (s, d) => {
+  val v8FilteredAnn: Plan = (s, d) => {
     val en = Tables.load(s, d, "documents")
       .filter(col("lang") === "en").select(col("doc_id"))
     val e = emb(s, d)
@@ -872,7 +872,7 @@ object Similarity {
     * visible (coarse_rnk ≠ rnk rows are exactly the quantization errors
     * the second stage repairs).
     */
-  val v9Rerank: Q = (s, d) => {
+  val v9Rerank: Plan = (s, d) => {
     val SL = 4 * K
     val e = emb(s, d)
     val scaled = e.select(col("vec_id"), col("embedding"),
@@ -1026,7 +1026,7 @@ object Similarity {
     cents
   }
 
-  val v10Kmeans: Q = (s, d) => {
+  val v10Kmeans: Plan = (s, d) => {
     val cents = kmeansCentroids(s, d)
     val assigned = emb(s, d).select(col("vec_id"),
       nearestCell(cents, col("embedding")).as("cluster"))
@@ -1123,7 +1123,7 @@ object Similarity {
     * corpus keys) + one k-row agg. Cost scales with the delta, exactly
     * like d10/NearDupStream on the text side.
     */
-  val v12IvfAppend: Q = (s, d) => {
+  val v12IvfAppend: Plan = (s, d) => {
     val k = 16
     val split = 400L
     val e = emb(s, d)
@@ -1225,7 +1225,7 @@ object Similarity {
     * on a SAMPLED query set (NQ here); the corpus-side cost is v1's
     * audited broadcast-join scan, not a new shape.
     */
-  val v11RecallEval: Q = (s, d) => {
+  val v11RecallEval: Plan = (s, d) => {
     val exact = v1KnnBrute(s, d).select(col("q_id"), col("n_id"))
     val approx = v2AnnLsh(s, d).select(col("q_id"), col("n_id"))
     val nApprox = approx.groupBy(col("q_id"))
@@ -1275,7 +1275,7 @@ object Similarity {
     * the composed scoring as one CTE chain (iv_ / pq_ prefixes), so even
     * the two-level approximation hash-checks.
     */
-  val v14IvfPq: Q = (s, d) => {
+  val v14IvfPq: Plan = (s, d) => {
     val e = emb(s, d)
     // the two codebook builds are INDEPENDENT driver-side artifacts
     // (coarse on whole vectors, PQ on raw subvectors) whose corpus
@@ -1436,7 +1436,7 @@ object Similarity {
     */
   private val TruncDims = Seq(8, 16, 32)
 
-  val v13TruncationEval: Q = (s, d) => {
+  val v13TruncationEval: Plan = (s, d) => {
     val exact = v1KnnBrute(s, d).select(col("q_id"), col("n_id"))
       .withColumn("hit", lit(1L))
       .materialize() // joined under each truncated pass
@@ -1511,7 +1511,7 @@ object Similarity {
     * exactly this kind of cell-local pair set; v11's harness is how a
     * deploy measures what the boundary costs).
     */
-  val v16KnnJoin: Q = (s, d) => {
+  val v16KnnJoin: Plan = (s, d) => {
     val e = emb(s, d)
     val refined = ivfRefined(e, 16)
     val corpus = e.select(col("vec_id"), col("embedding"),
@@ -1599,7 +1599,7 @@ object Similarity {
     * both the negative ranking and the positive max — the second
     * consumer costs no second scan.
     */
-  val v17HardNegatives: Q = (s, d) => {
+  val v17HardNegatives: Plan = (s, d) => {
     val nprobe = 4
     val nNeg = 5
     val e = emb(s, d)
@@ -1693,7 +1693,7 @@ object Similarity {
     * count (ceil(cnt/5)), so the keep flag is deterministic under any
     * partitioning.
     */
-  val v18Prototypicality: Q = (s, d) => {
+  val v18Prototypicality: Plan = (s, d) => {
     val e = emb(s, d)
     val refined = ivfRefined(e, 16)
     val nsqC: Array[Double] = refined.map { c =>
@@ -1755,7 +1755,7 @@ object Similarity {
     * cross-joins broadcast; rank windows partition on (np, q_id) — K×NQ×4
     * rows past the candidate frame at any corpus size.
     */
-  val v19NprobeSweep: Q = (s, d) => {
+  val v19NprobeSweep: Plan = (s, d) => {
     import s.implicits._
     val maxProbe = 8
     val e = emb(s, d)
@@ -1864,7 +1864,7 @@ object Similarity {
     * bitwise-deterministic double reduction), and the margin is one
     * identically-spelled division, so the twin replays exactly.
     */
-  val v20BitextMining: Q = (s, d) => {
+  val v20BitextMining: Plan = (s, d) => {
     val kNN = 4
     val e = emb(s, d)
     val langs = Tables.load(s, d, "documents")
@@ -2084,7 +2084,7 @@ object Similarity {
        .select(col("q_id"), col("doc_id"), col("r").as("rb")))
   }
 
-  val v21HybridRrf: Q = (s, d) => {
+  val v21HybridRrf: Plan = (s, d) => {
     val kFuse = 3
     // dense ranker: v1's exact cosine top-K (v1's documented
     // brute-force eval contract — NQ sampled queries), cut through the
@@ -2206,7 +2206,7 @@ object Similarity {
     * a corpus-sized candidate list never sorts in one task. Everything
     * after the rank lists is NQ-bounded.
     */
-  val v22HybridEval: Q = (s, d) => {
+  val v22HybridEval: Plan = (s, d) => {
     val kFuse = 3
     // each scorer runs ONCE; the deployed v21 list is derived from the
     // same frames — a full rank filtered to <= K IS v21's top-K rank
@@ -2315,7 +2315,7 @@ object Similarity {
     * per-cell audit: size, shard count, max shard size (provably ≤ cap),
     * with cap = ceil(1.25 · N / k) in exact integer arithmetic.
     */
-  val v23CellShard: Q = (s, d) => {
+  val v23CellShard: Plan = (s, d) => {
     val k = V23K
     val e = emb(s, d)
     val n = e.count()
@@ -2464,7 +2464,7 @@ object Similarity {
       .orderBy("q_id")
   }
 
-  val v24AnnHybrid: Q = (s, d) => v24AnnHybridEval(s, d, nprobe = 4)
+  val v24AnnHybrid: Plan = (s, d) => v24AnnHybridEval(s, d, nprobe = 4)
 
   /** Oracle: v21's shared rank-CTE prefix (full drank/brank — one
     * spelling of both brute scorers) PLUS v4's IVF build CTEs (one
@@ -2579,7 +2579,7 @@ object Similarity {
       .orderBy("q_id", "rnk")
   }
 
-  val v25HybridServe: Q = (s, d) => v25HybridServeAt(s, d, nprobe = 4)
+  val v25HybridServe: Plan = (s, d) => v25HybridServeAt(s, d, nprobe = 4)
 
   /** Oracle: the shared BM25 CTEs (brank), v4's IVF build chain, the
     * shared ANN rank fragment, and v21's fusion/output spelling.
@@ -2605,57 +2605,32 @@ object Similarity {
        |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, Q] = Map(
-    "v25_hybrid_serve" -> v25HybridServe,
-    "v24_ann_hybrid" -> v24AnnHybrid,
-    "v23_cell_shard" -> v23CellShard,
-    "v22_hybrid_eval" -> v22HybridEval,
-    "v21_hybrid_rrf" -> v21HybridRrf,
-    "v20_bitext_mining" -> v20BitextMining,
-    "v19_nprobe_sweep" -> v19NprobeSweep,
-    "v17_hard_negatives" -> v17HardNegatives,
-    "v18_prototypicality" -> v18Prototypicality,
-    "v16_knn_join" -> v16KnnJoin,
-    "v13_truncation_eval" -> v13TruncationEval,
-    "v14_ivfpq" -> v14IvfPq,
-    "v15_diverse_ann" -> v15DiverseAnn,
-    "v1_knn_brute" -> v1KnnBrute,
-    "v2_ann_lsh" -> v2AnnLsh,
-    "v3_embedding_neardup" -> v3EmbeddingNeardup,
-    "v4_ivf_ann" -> v4IvfAnn,
-    "v5_int8_ann" -> v5Int8Ann,
-    "v6_pq_ann" -> v6PqAnn,
-    "v7_mips" -> v7Mips,
-    "v8_filtered_ann" -> v8FilteredAnn,
-    "v9_rerank" -> v9Rerank,
-    "v10_kmeans" -> v10Kmeans,
-    "v11_recall_eval" -> v11RecallEval,
-    "v12_ivf_append" -> v12IvfAppend)
+  val registry: Seq[Query] = Seq(
+    Query("v1_knn_brute", v1KnnBrute, v1KnnBruteSql),
+    Query("v2_ann_lsh", v2AnnLsh, v2AnnLshSql),
+    Query("v3_embedding_neardup", v3EmbeddingNeardup, v3EmbeddingNeardupSql),
+    Query("v4_ivf_ann", v4IvfAnn, v4IvfAnnSql),
+    Query("v5_int8_ann", v5Int8Ann, v5Int8AnnSql),
+    Query("v6_pq_ann", v6PqAnn, v6PqAnnSql),
+    Query("v7_mips", v7Mips, v7MipsSql),
+    Query("v8_filtered_ann", v8FilteredAnn, v8FilteredAnnSql),
+    Query("v9_rerank", v9Rerank, v9RerankSql),
+    Query("v10_kmeans", v10Kmeans, v10KmeansSql),
+    Query("v11_recall_eval", v11RecallEval, v11RecallEvalSql),
+    Query("v12_ivf_append", v12IvfAppend, v12IvfAppendSql),
+    Query("v13_truncation_eval", v13TruncationEval, v13TruncationEvalSql),
+    Query("v14_ivfpq", v14IvfPq, v14IvfPqSql),
+    Query("v15_diverse_ann", v15DiverseAnn, v15DiverseAnnSql),
+    Query("v16_knn_join", v16KnnJoin, v16KnnJoinSql),
+    Query("v17_hard_negatives", v17HardNegatives, v17HardNegativesSql),
+    Query("v18_prototypicality", v18Prototypicality, v18PrototypicalitySql),
+    Query("v19_nprobe_sweep", v19NprobeSweep, v19NprobeSweepSql),
+    Query("v20_bitext_mining", v20BitextMining, v20BitextMiningSql),
+    Query("v21_hybrid_rrf", v21HybridRrf, v21HybridRrfSql),
+    Query("v22_hybrid_eval", v22HybridEval, v22HybridEvalSql),
+    Query("v23_cell_shard", v23CellShard, v23CellShardSql),
+    Query("v24_ann_hybrid", v24AnnHybrid, v24AnnHybridSql),
+    Query("v25_hybrid_serve", v25HybridServe, v25HybridServeSql))
 
-  val oracles: Map[String, String] = Map(
-    "v25_hybrid_serve" -> v25HybridServeSql,
-    "v24_ann_hybrid" -> v24AnnHybridSql,
-    "v23_cell_shard" -> v23CellShardSql,
-    "v22_hybrid_eval" -> v22HybridEvalSql,
-    "v20_bitext_mining" -> v20BitextMiningSql,
-    "v21_hybrid_rrf" -> v21HybridRrfSql,
-    "v19_nprobe_sweep" -> v19NprobeSweepSql,
-    "v17_hard_negatives" -> v17HardNegativesSql,
-    "v18_prototypicality" -> v18PrototypicalitySql,
-    "v16_knn_join" -> v16KnnJoinSql,
-    "v13_truncation_eval" -> v13TruncationEvalSql,
-    "v14_ivfpq" -> v14IvfPqSql,
-    "v15_diverse_ann" -> v15DiverseAnnSql,
-    "v1_knn_brute" -> v1KnnBruteSql,
-    "v2_ann_lsh" -> v2AnnLshSql,
-    "v3_embedding_neardup" -> v3EmbeddingNeardupSql,
-    "v4_ivf_ann" -> v4IvfAnnSql,
-    "v5_int8_ann" -> v5Int8AnnSql,
-    "v6_pq_ann" -> v6PqAnnSql,
-    "v7_mips" -> v7MipsSql,
-    "v8_filtered_ann" -> v8FilteredAnnSql,
-    "v9_rerank" -> v9RerankSql,
-    "v10_kmeans" -> v10KmeansSql,
-    "v11_recall_eval" -> v11RecallEvalSql,
-    "v12_ivf_append" -> v12IvfAppendSql)
+  val queries: Map[String, Plan] = Query.plans(registry)
 }

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Materialize._
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.Plan
 import graft.functions.TextFunctions._
 
 /** Text-analysis operators over the `documents` table — the training-data
@@ -20,7 +21,6 @@ import graft.functions.TextFunctions._
   * TextFunctions.sround).
   */
 object TextAnalysis {
-  type Q = (SparkSession, String) => DataFrame
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 
@@ -28,7 +28,7 @@ object TextAnalysis {
   /** Token counting: chars, UTF-8 bytes, whitespace tokens, distinct tokens,
     * approx BPE-ish subword count (regex-boundary proxy).
     */
-  val t1TextStats: Q = (s, d) =>
+  val t1TextStats: Plan = (s, d) =>
     docs(s, d).select(
       col("doc_id"),
       length(col("text")).cast("long").as("len_chars"),
@@ -88,7 +88,7 @@ object TextAnalysis {
       (col("stop") / nullif(col("n_tok"), lit(0L))) * lit(0.3) +
       (lit(1.0) - col("digit") / nullif(col("len_c"), lit(0L))) * lit(0.2)
 
-  val t2Quality: Q = (s, d) =>
+  val t2Quality: Plan = (s, d) =>
     // Two layers: the expensive text passes (fused TokenStats, regex
     // strips) are each evaluated ONCE in the qualityCounts projection; the
     // ratio layer only references bound integer columns (writing ratios
@@ -157,7 +157,7 @@ object TextAnalysis {
     }
   }
 
-  val t3LangId: Q = (s, d) => {
+  val t3LangId: Plan = (s, d) => {
     val base = docs(s, d)
       .select(col("doc_id"), col("lang"), langScoresCol(col("text")).as("sc"))
     val predExpr = predExprFrom(col("sc"))
@@ -198,7 +198,7 @@ object TextAnalysis {
     * xxhash64/winnowing variants live in Dedup (engine-specific hashes, no
     * portable oracle).
     */
-  val t4Fingerprint: Q = (s, d) => {
+  val t4Fingerprint: Plan = (s, d) => {
     // Layered: norm (regex+trim+lower) is referenced three times below —
     // inline it and the projection evaluates the regex 3x per row (no CSE
     // across a multi-referenced non-cheap alias in one projection).
@@ -225,7 +225,7 @@ object TextAnalysis {
     * 100 TB the map-side partial agg absorbs the token skew before the
     * shuffle, and the top-k is TakeOrderedAndProject.
     */
-  val t5Vocab: Q = (s, d) =>
+  val t5Vocab: Plan = (s, d) =>
     docs(s, d)
       .select(explode(lowerTokens(col("text"))).as("token"))
       .groupBy(col("token"))
@@ -251,7 +251,7 @@ object TextAnalysis {
     * interpreted HOF eval recomputes captured expressions per element
     * (regex x grams x windows — minutes per 500 docs).
     */
-  val t6Winnowing: Q = (s, d) =>
+  val t6Winnowing: Plan = (s, d) =>
     docs(s, d)
       .select(col("doc_id"),
         explode(graft.expressions.SetSketchExpressions
@@ -289,7 +289,7 @@ object TextAnalysis {
     * output stays narrow. Chunk starts are 1-based; a document shorter
     * than one window yields exactly one chunk.
     */
-  val t7Chunking: Q = (s, d) => {
+  val t7Chunking: Plan = (s, d) => {
     val win = 160
     val stride = 120
     docs(s, d)
@@ -326,7 +326,7 @@ object TextAnalysis {
     * each engine's group aggregation order differs; pinning the
     * association order makes the doubles bit-identical before rounding.
     */
-  val t8CharEntropy: Q = (s, d) => {
+  val t8CharEntropy: Plan = (s, d) => {
     val freq = docs(s, d)
       .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
       .groupBy(col("doc_id"), col("ch"))
@@ -381,7 +381,7 @@ object TextAnalysis {
     * bloom-filter pre-pass substitutes when approximate membership is
     * acceptable.
     */
-  val t9Contamination: Q = (s, d) => {
+  val t9Contamination: Plan = (s, d) => {
     // md5-62 LONG lanes via the fused array expression (t23/d3's kernel):
     // the per-doc distinct happens inside the expression — no cross-row
     // distinct() shuffle — and the gram exchange carries longs, not
@@ -445,7 +445,7 @@ object TextAnalysis {
     * position-set semi-join and the driver hash-checks even this
     * approximate operator.
     */
-  val t14BloomContamination: Q = (s, d) => {
+  val t14BloomContamination: Plan = (s, d) => {
     // the fused md5-62 array kernel (t9/t23's rework): per-doc distinct
     // inside the expression, long lanes — no string gram rows anywhere
     val grams = docs(s, d)
@@ -523,7 +523,7 @@ object TextAnalysis {
     * the term, so they share a partitioning; the window shuffles on
     * source only after the heavy reduction.
     */
-  val t10Tfidf: Q = (s, d) => {
+  val t10Tfidf: Plan = (s, d) => {
     val toks = docs(s, d)
       .select(col("doc_id"), col("source"),
         explode(lowerTokens(col("text"))).as("term"))
@@ -577,7 +577,7 @@ object TextAnalysis {
     * so every partition packs independently; the q36 sweep shows the
     * offset-merge pattern if strict cross-shard continuity is required).
     */
-  val t11Packing: Q = (s, d) => {
+  val t11Packing: Plan = (s, d) => {
     val budget = 256L
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("doc_id"))
@@ -679,7 +679,7 @@ object TextAnalysis {
         sround(sum(col("n_tok")) / lit(budget.toDouble), 4).as("fill_ratio"))
       .orderBy("pack_id")
 
-  val t15GlobalPacking: Q = (s, d) =>
+  val t15GlobalPacking: Plan = (s, d) =>
     globalPacking(
       docs(s, d).select(col("doc_id"),
         size(lowerTokens(col("text"))).cast("long").as("n_tok")),
@@ -722,7 +722,7 @@ object TextAnalysis {
     * Scale shape: one shuffle on the source key for the rank; the final
     * share divides by a 1-row broadcast total (no global window).
     */
-  val t16CorpusMix: Q = (s, d) => {
+  val t16CorpusMix: Plan = (s, d) => {
     // unparseable source suffixes take the DEFAULT fraction instead of a
     // NULL that would silently drop the whole source from the mixture
     // (the oracle mirrors with TRY_CAST + coalesce)
@@ -826,7 +826,7 @@ object TextAnalysis {
           lit(0.0), (acc, x) => acc + x).as("h"))
   }
 
-  val t17LmScore: Q = (s, d) =>
+  val t17LmScore: Plan = (s, d) =>
     lmDocScores(
       docs(s, d).select(col("doc_id"), lowerTokens(col("text")).as("t"))
         .materialize())
@@ -921,7 +921,7 @@ object TextAnalysis {
         col("bucket"))
   }
 
-  val t27CcnetBuckets: Q = (s, d) =>
+  val t27CcnetBuckets: Plan = (s, d) =>
     ccnetDocBuckets(s, d)
       .groupBy(col("lang"), col("bucket"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
@@ -999,7 +999,7 @@ object TextAnalysis {
   private val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   private val phoneRe = "\\d{3}[-. ]\\d{3}[-. ]\\d{4}"
 
-  val t12Redact: Q = (s, d) =>
+  val t12Redact: Plan = (s, d) =>
     docs(s, d).select(
       col("doc_id"),
       regexp_count(col("text"), lit(emailRe)).cast("long").as("n_emails"),
@@ -1026,7 +1026,7 @@ object TextAnalysis {
     * max and total together; exact integer division for oracle parity.
     * Docs with fewer than two tokens have no bigrams and drop out.
     */
-  val t13Repetition: Q = (s, d) =>
+  val t13Repetition: Plan = (s, d) =>
     docs(s, d)
       .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
       .select(col("doc_id"), explode(wordNgrams(col("toks"), 2)).as("g"))
@@ -1073,7 +1073,7 @@ object TextAnalysis {
     * the error bound. A production pass would probe candidates from a
     * sample or a prior round instead.
     */
-  val t18HeavyHitters: Q = (s, d) => {
+  val t18HeavyHitters: Plan = (s, d) => {
     import graft.expressions.CmsSketch
     // toks feeds BOTH the sketch build and the exact groupBy; checkpoint so
     // the explode+md5 tokenization pass — the dominant scan — runs once.
@@ -1141,7 +1141,7 @@ object TextAnalysis {
     * plan keeps the plain partial-agg sum. Scale shape: narrow
     * explode → one doc-keyed hash agg; nothing wide.
     */
-  val t20QualityClassifier: Q = (s, d) =>
+  val t20QualityClassifier: Plan = (s, d) =>
     docs(s, d)
       .select(col("doc_id"), explode(lowerTokens(col("text"))).as("token"))
       .select(col("doc_id"),
@@ -1191,7 +1191,7 @@ object TextAnalysis {
     * exact-integer ratios; per-doc summation uses the sorted fold (t8's
     * trick) so the doubles match the oracle bit for bit.
     */
-  val t19DsirImportance: Q = (s, d) => {
+  val t19DsirImportance: Plan = (s, d) => {
     val B = 4096
     val toks = docs(s, d)
       .select(col("doc_id"), col("lang"), lowerTokens(col("text")).as("t"))
@@ -1271,7 +1271,7 @@ object TextAnalysis {
     * that scan rule, so the learned merges (and every intermediate
     * frequency) hash-match the oracle's 5 unrolled CTE rounds.
     */
-  val t21BpeMerges: Q = (s, d) => {
+  val t21BpeMerges: Plan = (s, d) => {
     val words0 = docs(s, d)
       .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
       .where(length(col("w")) >= 2 && length(col("w")) <= 12)
@@ -1383,7 +1383,7 @@ object TextAnalysis {
     * (length 1 or > 12 — never seen by the trainer) still pass through
     * the encoder, picking up any merge whose pair happens to occur.
     */
-  val t25BpeEncode: Q = (s, d) => {
+  val t25BpeEncode: Plan = (s, d) => {
     // driver-bound(k-bounded): the learned merge table, rank order — 5 rows by construction
     val merges = t21BpeMerges(s, d).collect()
       .sortBy(_.getInt(0))
@@ -1460,7 +1460,7 @@ object TextAnalysis {
     * the docs table. Integer counts throughout; the two ratios are
     * identically-spelled divisions.
     */
-  val t28Fertility: Q = (s, d) => {
+  val t28Fertility: Plan = (s, d) => {
     // driver-bound(k-bounded): the learned merge table, rank order — 5 rows by construction
     val merges = t21BpeMerges(s, d).collect()
       .sortBy(_.getInt(0))
@@ -1547,7 +1547,7 @@ object TextAnalysis {
   private val codeKwRe =
     "\\b(def|return|import|class|for|while|function|val|var)\\b"
 
-  val t29CodeDetect: Q = (s, d) =>
+  val t29CodeDetect: Plan = (s, d) =>
     docs(s, d).select(
       col("doc_id"),
       (regexp_count(col("text"), lit("\\n")) + 1).cast("long").as("n_lines"),
@@ -1625,7 +1625,7 @@ object TextAnalysis {
         sround(col("js_raw"), 9).as("js_term"))
   }
 
-  val t30CorpusDrift: Q = (s, d) => {
+  val t30CorpusDrift: Plan = (s, d) => {
     val toks = docs(s, d)
       .select((col("doc_id") % 2).as("side"),
         explode(lowerTokens(col("text"))).as("w"))
@@ -1671,7 +1671,7 @@ object TextAnalysis {
     * (everything after the first agg is ≤ |langs|² rows). Shares divide
     * identically-spelled integer counts, so the doubles are bit-stable.
     */
-  val t22LangidAudit: Q = (s, d) => {
+  val t22LangidAudit: Plan = (s, d) => {
     val cells = t3LangId(s, d)
       .groupBy(col("lang"), col("pred_lang")).agg(count(lit(1)).as("n"))
     val truth = cells.groupBy(col("lang")).agg(sum(col("n")).as("nt"))
@@ -1713,7 +1713,7 @@ object TextAnalysis {
     * hot-gram blowup (t9's lesson); boilerplate grams occurring in
     * millions of docs still carry 8 bytes of aggregate state.
     */
-  val t23Novelty: Q = (s, d) => {
+  val t23Novelty: Plan = (s, d) => {
     // md5-62 LONG lanes via the fused array expression (d3's kernel):
     // per-doc distinct happens INSIDE the expression, so there is no
     // cross-row distinct() shuffle at all, and the gram exchange carries
@@ -1771,7 +1771,7 @@ object TextAnalysis {
     * shuffles before the final sort; the split point is the character
     * midpoint, deterministic in both engines.
     */
-  val t24CodeSwitch: Q = (s, d) => codeSwitch(docs(s, d))
+  val t24CodeSwitch: Plan = (s, d) => codeSwitch(docs(s, d))
 
   /** t24 over an arbitrary documents frame — the spec plants a
     * half-English half-German document (the synthetic corpus is
@@ -1848,7 +1848,7 @@ object TextAnalysis {
     */
   private val bm25Terms = Seq("hash", "merge", "spark", "window")
 
-  val t26Bm25: Q = (s, d) => {
+  val t26Bm25: Plan = (s, d) => {
     val base = docs(s, d)
       .select(col("doc_id"), lowerTokens(col("text")).as("t"))
       .select(
@@ -1921,7 +1921,7 @@ object TextAnalysis {
     * it scales with input splits like t1. Integer token counts make the
     * share division bitwise-portable (sround 4).
     */
-  val t31SftMask: Q = (s, d) => {
+  val t31SftMask: Plan = (s, d) => {
     val turns = docs(s, d).select(col("doc_id"),
       filter(transform(split(col("text"), "\\. "), t => trim(t)),
         t => t =!= "").as("turns"))
@@ -2044,7 +2044,7 @@ object TextAnalysis {
       .orderBy("pair_id")
   }
 
-  val t32PreferencePairs: Q = (s, d) => preferencePairs(docs(s, d))
+  val t32PreferencePairs: Plan = (s, d) => preferencePairs(docs(s, d))
 
   /** DuckDB twin: identical spans/lead pairing (1-based list slicing),
     * d1's fingerprint spelling, t9's gram kernel. The CTE chain is shared
@@ -2148,7 +2148,7 @@ object TextAnalysis {
       .orderBy("prompt_id")
   }
 
-  val t33RejectionSampling: Q = (s, d) => rejectionSampling(qualityCounts(s, d))
+  val t33RejectionSampling: Plan = (s, d) => rejectionSampling(qualityCounts(s, d))
 
   /** DuckDB twin: t2's blend spelling, identical rank/agg shape. */
   val t33RejectionSamplingSql: String =
@@ -2205,7 +2205,7 @@ object TextAnalysis {
     * per-doc window carries one row of lag state; nothing holds a
     * document's positions in memory at once.
     */
-  val t34SpanDecontam: Q = (s, d) => {
+  val t34SpanDecontam: Plan = (s, d) => {
     import graft.expressions.PortableHashExpressions.md5HashArray62
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -2316,7 +2316,7 @@ object TextAnalysis {
     * all except the oracle ORDER BY; at 100 TB this scales with input
     * splits like t1/t29.
     */
-  val t35GopherRules: Q = (s, d) =>
+  val t35GopherRules: Plan = (s, d) =>
     docs(s, d)
       .selectExpr("doc_id", "text",
         "filter(split(lower(text), '\\\\s+'), w -> w != '') AS words",
@@ -2425,7 +2425,7 @@ object TextAnalysis {
     * strictly below every dropped one and |kept| ≥ ceil(N/4). Assumes a
     * non-empty seed (zero 2-token seed docs would make V_in = 0).
     */
-  val t36MooreLewis: Q = (s, d) => {
+  val t36MooreLewis: Plan = (s, d) => {
     val toks = docs(s, d)
       .select(col("doc_id"), (col("source") === "src0").as("tgt"),
         lowerTokens(col("text")).as("t"))
@@ -2556,7 +2556,7 @@ object TextAnalysis {
     * doubles replay bitwise (g12's never-pow rule: squares are spelled
     * as explicit products).
     */
-  val t37ZipfAudit: Q = (s, d) => {
+  val t37ZipfAudit: Plan = (s, d) => {
     val wc = docs(s, d)
       .select(col("lang"), explode(lowerTokens(col("text"))).as("w"))
       .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("c"))
@@ -2687,7 +2687,7 @@ object TextAnalysis {
     * is equivalent in VALUES: the duplicate-position set is the same,
     * and coverage diffs are base-shift-invariant.
     */
-  val t38DupNgramChars: Q = (s, d) =>
+  val t38DupNgramChars: Plan = (s, d) =>
     docs(s, d)
       .selectExpr("doc_id",
         "filter(split(lower(text), '\\\\s+'), w -> w != '') AS toks")
@@ -2792,7 +2792,7 @@ object TextAnalysis {
     * corpus scan more than the rules themselves, and the output is
     * constant-size (3 rows) at any corpus size.
     */
-  val t39FilterFunnel: Q = (s, d) => {
+  val t39FilterFunnel: Plan = (s, d) => {
     val gopher = t35GopherRules(s, d).select(col("doc_id"), col("keep").as("r_gopher"))
     val dup = t38DupNgramChars(s, d).select(col("doc_id"), col("keep").as("r_dup"))
     val ppl = ccnetDocBuckets(s, d)
@@ -2937,7 +2937,7 @@ object TextAnalysis {
     * occurrences (unseen bigrams hit add-one's floor via null-coalesced
     * counts), then one doc-keyed and one lang-keyed agg.
     */
-  val t40HeldoutPpl: Q = (s, d) => {
+  val t40HeldoutPpl: Plan = (s, d) => {
     val toks = docs(s, d)
       .select(col("doc_id"), col("lang"), (col("doc_id") % 10 =!= 9).as("train"),
         lowerTokens(col("text")).as("t"))
@@ -3042,7 +3042,7 @@ object TextAnalysis {
     * per-doc fold. Output is PER HELD-OUT DOC — this operator's job is
     * doc-level selection scores, t40's is the per-language eval.
     */
-  val t43KnLmScore: Q = (s, d) => {
+  val t43KnLmScore: Plan = (s, d) => {
     val toks = docs(s, d)
       .select(col("doc_id"), col("lang"), (col("doc_id") % 10 =!= 9).as("train"),
         lowerTokens(col("text")).as("t"))
@@ -3274,7 +3274,7 @@ object TextAnalysis {
     out.result()
   }
 
-  val t41BpeTrain64: Q = (s, d) => {
+  val t41BpeTrain64: Plan = (s, d) => {
     import s.implicits._
     bpeTrainDriver(s, d, BpeRounds64).toSeq
       .toDF("rank", "a", "b", "merged", "pf").orderBy("rank")
@@ -3354,7 +3354,7 @@ object TextAnalysis {
     * (the distinct-word table covers the corpus by construction), words
     * the trainer never saw just pick up whatever merges fire.
     */
-  val t42BpeEncode64: Q = (s, d) => {
+  val t42BpeEncode64: Plan = (s, d) => {
     val merges = bpeTrainDriver(s, d, BpeRounds64)
       .map { case (_, a, b, m, _) => (a, b, m) }.toSeq
     val words = docs(s, d)
@@ -3438,7 +3438,7 @@ object TextAnalysis {
     "slow fast", "value table", "big table", "sort column",
     "window s", "hash v")
 
-  val t44Blocklist: Q = (s, d) =>
+  val t44Blocklist: Plan = (s, d) =>
     docs(s, d)
       .select(col("doc_id"),
         graft.expressions.BlocklistExpressions
@@ -3479,7 +3479,7 @@ object TextAnalysis {
     * transform is position arithmetic + three substrings per row
     * regardless of corpus size.
     */
-  val t45FimPrep: Q = (s, d) => {
+  val t45FimPrep: Plan = (s, d) => {
     import graft.expressions.PortableHashExpressions.md5Hash62
     def lane(tag: String): Column =
       md5Hash62(concat(lit(tag), col("doc_id").cast("string")))
@@ -3678,7 +3678,7 @@ object TextAnalysis {
     (w, live)
   }
 
-  val t46ClassifierTrain: Q = (s, d) => {
+  val t46ClassifierTrain: Plan = (s, d) => {
     val feats = classifierFeats(s, d)
     // driver-bound(stat-frame): one groupless count row
     val nd = feats.agg(countDistinct(col("doc_id")).cast("double").as("nd"))
@@ -3801,7 +3801,7 @@ object TextAnalysis {
     * Scale shape: identical to t46 (the train-split restriction rides
     * the existing gradient join), plus one 4-row aggregate.
     */
-  val t47HeldoutEval: Q = (s, d) => {
+  val t47HeldoutEval: Plan = (s, d) => {
     val feats = classifierFeats(s, d)
     val isHeld = col("doc_id") % 10 === 0
     // driver-bound(stat-frame): one groupless count row
@@ -3839,101 +3839,54 @@ object TextAnalysis {
        |FROM sc GROUP BY split, label ORDER BY split, label""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, Q] = Map(
-    "t47_heldout_eval" -> t47HeldoutEval,
-    "t46_classifier_train" -> t46ClassifierTrain,
-    "t44_blocklist" -> t44Blocklist,
-    "t45_fim_prep" -> t45FimPrep,
-    "t41_bpe_train64" -> t41BpeTrain64,
-    "t42_bpe_encode64" -> t42BpeEncode64,
-    "t43_kn_lm_score" -> t43KnLmScore,
-    "t40_heldout_ppl" -> t40HeldoutPpl,
-    "t39_filter_funnel" -> t39FilterFunnel,
-    "t38_dup_ngram_chars" -> t38DupNgramChars,
-    "t37_zipf_audit" -> t37ZipfAudit,
-    "t36_moore_lewis" -> t36MooreLewis,
-    "t31_sft_mask" -> t31SftMask,
-    "t32_preference_pairs" -> t32PreferencePairs,
-    "t33_rejection_sampling" -> t33RejectionSampling,
-    "t34_span_decontam" -> t34SpanDecontam,
-    "t35_gopher_rules" -> t35GopherRules,
-    "t1_text_stats" -> t1TextStats,
-    "t2_quality" -> t2Quality,
-    "t3_lang_id" -> t3LangId,
-    "t4_fingerprint" -> t4Fingerprint,
-    "t5_vocab" -> t5Vocab,
-    "t6_winnowing" -> t6Winnowing,
-    "t7_chunking" -> t7Chunking,
-    "t8_char_entropy" -> t8CharEntropy,
-    "t9_contamination" -> t9Contamination,
-    "t14_bloom_contamination" -> t14BloomContamination,
-    "t15_global_packing" -> t15GlobalPacking,
-    "t16_corpus_mix" -> t16CorpusMix,
-    "t17_lm_score" -> t17LmScore,
-    "t18_heavy_hitters" -> t18HeavyHitters,
-    "t19_dsir_importance" -> t19DsirImportance,
-    "t20_quality_classifier" -> t20QualityClassifier,
-    "t21_bpe_merges" -> t21BpeMerges,
-    "t25_bpe_encode" -> t25BpeEncode,
-    "t26_bm25" -> t26Bm25,
-    "t27_ccnet_buckets" -> t27CcnetBuckets,
-    "t28_fertility" -> t28Fertility,
-    "t29_code_detect" -> t29CodeDetect,
-    "t30_corpus_drift" -> t30CorpusDrift,
-    "t22_langid_audit" -> t22LangidAudit,
-    "t23_novelty" -> t23Novelty,
-    "t24_code_switch" -> t24CodeSwitch,
-    "t10_tfidf" -> t10Tfidf,
-    "t11_packing" -> t11Packing,
-    "t12_redact" -> t12Redact,
-    "t13_repetition" -> t13Repetition)
+  val registry: Seq[Query] = Seq(
+    Query("t1_text_stats", t1TextStats, t1TextStatsSql),
+    Query("t2_quality", t2Quality, t2QualitySql),
+    Query("t3_lang_id", t3LangId, t3LangIdSql),
+    Query("t4_fingerprint", t4Fingerprint, t4FingerprintSql),
+    Query("t5_vocab", t5Vocab, t5VocabSql),
+    Query("t6_winnowing", t6Winnowing, t6WinnowingSql),
+    Query("t7_chunking", t7Chunking, t7ChunkingSql),
+    Query("t8_char_entropy", t8CharEntropy, t8CharEntropySql),
+    Query("t9_contamination", t9Contamination, t9ContaminationSql),
+    Query("t10_tfidf", t10Tfidf, t10TfidfSql),
+    Query("t11_packing", t11Packing, t11PackingSql),
+    Query("t12_redact", t12Redact, t12RedactSql),
+    Query("t13_repetition", t13Repetition, t13RepetitionSql),
+    Query("t14_bloom_contamination", t14BloomContamination, t14BloomContaminationSql),
+    Query("t15_global_packing", t15GlobalPacking, t15GlobalPackingSql),
+    Query("t16_corpus_mix", t16CorpusMix, t16CorpusMixSql),
+    Query("t17_lm_score", t17LmScore, t17LmScoreSql),
+    Query("t18_heavy_hitters", t18HeavyHitters, t18HeavyHittersSql),
+    Query("t19_dsir_importance", t19DsirImportance, t19DsirImportanceSql),
+    Query("t20_quality_classifier", t20QualityClassifier, t20QualityClassifierSql),
+    Query("t21_bpe_merges", t21BpeMerges, t21BpeMergesSql),
+    Query("t22_langid_audit", t22LangidAudit, t22LangidAuditSql),
+    Query("t23_novelty", t23Novelty, t23NoveltySql),
+    Query("t24_code_switch", t24CodeSwitch, t24CodeSwitchSql),
+    Query("t25_bpe_encode", t25BpeEncode, t25BpeEncodeSql),
+    Query("t26_bm25", t26Bm25, t26Bm25Sql),
+    Query("t27_ccnet_buckets", t27CcnetBuckets, t27CcnetBucketsSql),
+    Query("t28_fertility", t28Fertility, t28FertilitySql),
+    Query("t29_code_detect", t29CodeDetect, t29CodeDetectSql),
+    Query("t30_corpus_drift", t30CorpusDrift, t30CorpusDriftSql),
+    Query("t31_sft_mask", t31SftMask, t31SftMaskSql),
+    Query("t32_preference_pairs", t32PreferencePairs, t32PreferencePairsSql),
+    Query("t33_rejection_sampling", t33RejectionSampling, t33RejectionSamplingSql),
+    Query("t34_span_decontam", t34SpanDecontam, t34SpanDecontamSql),
+    Query("t35_gopher_rules", t35GopherRules, t35GopherRulesSql),
+    Query("t36_moore_lewis", t36MooreLewis, t36MooreLewisSql),
+    Query("t37_zipf_audit", t37ZipfAudit, t37ZipfAuditSql),
+    Query("t38_dup_ngram_chars", t38DupNgramChars, t38DupNgramCharsSql),
+    Query("t39_filter_funnel", t39FilterFunnel, t39FilterFunnelSql),
+    Query("t40_heldout_ppl", t40HeldoutPpl, t40HeldoutPplSql),
+    Query("t41_bpe_train64", t41BpeTrain64, t41BpeTrain64Sql),
+    Query("t42_bpe_encode64", t42BpeEncode64, t42BpeEncode64Sql),
+    Query("t43_kn_lm_score", t43KnLmScore, t43KnLmScoreSql),
+    Query("t44_blocklist", t44Blocklist, t44BlocklistSql),
+    Query("t45_fim_prep", t45FimPrep, t45FimPrepSql),
+    Query("t46_classifier_train", t46ClassifierTrain, t46ClassifierTrainSql),
+    Query("t47_heldout_eval", t47HeldoutEval, t47HeldoutEvalSql))
 
-  val oracles: Map[String, String] = Map(
-    "t47_heldout_eval" -> t47HeldoutEvalSql,
-    "t44_blocklist" -> t44BlocklistSql,
-    "t45_fim_prep" -> t45FimPrepSql,
-    "t46_classifier_train" -> t46ClassifierTrainSql,
-    "t41_bpe_train64" -> t41BpeTrain64Sql,
-    "t42_bpe_encode64" -> t42BpeEncode64Sql,
-    "t43_kn_lm_score" -> t43KnLmScoreSql,
-    "t40_heldout_ppl" -> t40HeldoutPplSql,
-    "t39_filter_funnel" -> t39FilterFunnelSql,
-    "t38_dup_ngram_chars" -> t38DupNgramCharsSql,
-    "t37_zipf_audit" -> t37ZipfAuditSql,
-    "t36_moore_lewis" -> t36MooreLewisSql,
-    "t31_sft_mask" -> t31SftMaskSql,
-    "t32_preference_pairs" -> t32PreferencePairsSql,
-    "t33_rejection_sampling" -> t33RejectionSamplingSql,
-    "t34_span_decontam" -> t34SpanDecontamSql,
-    "t35_gopher_rules" -> t35GopherRulesSql,
-    "t1_text_stats" -> t1TextStatsSql,
-    "t2_quality" -> t2QualitySql,
-    "t3_lang_id" -> t3LangIdSql,
-    "t4_fingerprint" -> t4FingerprintSql,
-    "t5_vocab" -> t5VocabSql,
-    "t6_winnowing" -> t6WinnowingSql,
-    "t7_chunking" -> t7ChunkingSql,
-    "t8_char_entropy" -> t8CharEntropySql,
-    "t9_contamination" -> t9ContaminationSql,
-    "t14_bloom_contamination" -> t14BloomContaminationSql,
-    "t15_global_packing" -> t15GlobalPackingSql,
-    "t16_corpus_mix" -> t16CorpusMixSql,
-    "t17_lm_score" -> t17LmScoreSql,
-    "t18_heavy_hitters" -> t18HeavyHittersSql,
-    "t19_dsir_importance" -> t19DsirImportanceSql,
-    "t20_quality_classifier" -> t20QualityClassifierSql,
-    "t21_bpe_merges" -> t21BpeMergesSql,
-    "t25_bpe_encode" -> t25BpeEncodeSql,
-    "t26_bm25" -> t26Bm25Sql,
-    "t27_ccnet_buckets" -> t27CcnetBucketsSql,
-    "t28_fertility" -> t28FertilitySql,
-    "t29_code_detect" -> t29CodeDetectSql,
-    "t30_corpus_drift" -> t30CorpusDriftSql,
-    "t22_langid_audit" -> t22LangidAuditSql,
-    "t23_novelty" -> t23NoveltySql,
-    "t24_code_switch" -> t24CodeSwitchSql,
-    "t10_tfidf" -> t10TfidfSql,
-    "t11_packing" -> t11PackingSql,
-    "t12_redact" -> t12RedactSql,
-    "t13_repetition" -> t13RepetitionSql)
+  val queries: Map[String, Plan] = Query.plans(registry)
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Materialize._
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 import graft.operators.Dedup
 import graft.functions.TextFunctions.sround
 
@@ -1291,32 +1291,20 @@ object CorpusPipeline {
        |  src_rank <= $P13Cap AS kept
        |FROM r ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("p1_corpus_pipeline" -> (p1CorpusPipeline _),
-      "p13_source_cap" -> (p13SourceCap _),
-      "p12_unimax_mixture" -> (p12UnimaxMixture _),
-      "p11_doremi_mixture" -> (p11DoremiMixture _),
-      "p10_curriculum" -> (p10Curriculum _),
-      "p9_leak_safe_split" -> (p9LeakSafeSplit _),
-      "p7_sft_packing" -> (p7SftPacking _),
-      "p8_dpo_batches" -> (p8DpoBatches _),
-      "p2_training_prep" -> (p2TrainingPrep _),
-      "p3_dataset_card" -> (p3DatasetCard _),
-      "p4_mixture_schedule" -> (p4MixtureSchedule _),
-      "p5_epoch_materialize" -> (p5EpochMaterialize _),
-      "p6_epoch_shuffle" -> (p6EpochShuffle _))
-  val oracles: Map[String, String] =
-    Map("p1_corpus_pipeline" -> p1CorpusPipelineSql,
-      "p13_source_cap" -> p13SourceCapSql,
-      "p12_unimax_mixture" -> p12UnimaxMixtureSql,
-      "p11_doremi_mixture" -> p11DoremiMixtureSql,
-      "p10_curriculum" -> p10CurriculumSql,
-      "p7_sft_packing" -> p7SftPackingSql,
-      "p8_dpo_batches" -> p8DpoBatchesSql,
-      "p9_leak_safe_split" -> p9LeakSafeSplitSql,
-      "p2_training_prep" -> p2TrainingPrepSql,
-      "p3_dataset_card" -> p3DatasetCardSql,
-      "p4_mixture_schedule" -> p4MixtureScheduleSql,
-      "p5_epoch_materialize" -> p5EpochMaterializeSql,
-      "p6_epoch_shuffle" -> p6EpochShuffleSql)
+  val registry: Seq[Query] = Seq(
+    Query("p1_corpus_pipeline", p1CorpusPipeline, p1CorpusPipelineSql),
+    Query("p2_training_prep", p2TrainingPrep, p2TrainingPrepSql),
+    Query("p3_dataset_card", p3DatasetCard, p3DatasetCardSql),
+    Query("p4_mixture_schedule", p4MixtureSchedule, p4MixtureScheduleSql),
+    Query("p5_epoch_materialize", p5EpochMaterialize, p5EpochMaterializeSql),
+    Query("p6_epoch_shuffle", p6EpochShuffle, p6EpochShuffleSql),
+    Query("p7_sft_packing", p7SftPacking, p7SftPackingSql),
+    Query("p8_dpo_batches", p8DpoBatches, p8DpoBatchesSql),
+    Query("p9_leak_safe_split", p9LeakSafeSplit, p9LeakSafeSplitSql),
+    Query("p10_curriculum", p10Curriculum, p10CurriculumSql),
+    Query("p11_doremi_mixture", p11DoremiMixture, p11DoremiMixtureSql),
+    Query("p12_unimax_mixture", p12UnimaxMixture, p12UnimaxMixtureSql),
+    Query("p13_source_cap", p13SourceCap, p13SourceCapSql))
+
+  val queries: Map[String, Query.Plan] = Query.plans(registry)
 }

@@ -15,6 +15,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.StructType
+import graft.Query
 
 /** AS-OF JOIN — the one operator family in the engine's surface that Spark's
   * built-ins cannot express as a single relational node (build-brief
@@ -242,8 +243,8 @@ object Asof {
       |  ON c.user_id = v.user_id AND c.ts >= v.ts
       |ORDER BY click_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("q23_asof_join" -> q23AsofJoin)
-  val oracles: Map[String, String] =
-    Map("q23_asof_join" -> q23AsofJoinSql)
+  val registry: Seq[Query] = Seq(
+    Query("q23_asof_join", q23AsofJoin, q23AsofJoinSql))
+
+  val queries: Map[String, Query.Plan] = Query.plans(registry)
 }

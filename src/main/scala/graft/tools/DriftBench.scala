@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession}
 
 /** Focused repeat-bench for drift triage (round-3 verdict item 7): time a
   * handful of queries n times each in one JVM and print min/median/max —
@@ -14,15 +13,9 @@ object DriftBench {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("d3_minhash_lsh", "d4_simhash", "t6_winnowing", "v2_ann_lsh")
     val spark = GraftSession.local("driftbench")
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    once(names.head) // warmup
+    Bench.timeQuery(spark, sfDir, names.head) // warmup
     names.foreach { name =>
-      val ts = (1 to n).map(_ => once(name)).sorted
+      val ts = (1 to n).map(_ => Bench.timeQuery(spark, sfDir, name)).sorted
       println(f"DRIFT $name%-18s min=${ts.head}%.2f med=${ts(n / 2)}%.2f max=${ts.last}%.2f")
     }
     spark.stop()

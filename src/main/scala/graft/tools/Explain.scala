@@ -7,7 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = GraftSession.local("explain")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.headline
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.registry.map(_.name)
     names.foreach { n =>
       println(s"===== $n =====")
       SparkEntry.queries(n)(spark, d).explain("formatted")

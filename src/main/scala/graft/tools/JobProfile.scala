@@ -3,10 +3,10 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SparkEntry}
 
-/** Optimization-round profiler (guide §1): per query, one warmed noop-sink
-  * run with a listener counting jobs / stages / tasks / shuffle bytes —
+/** Per-query profiler: one warmed `Bench.timeQuery` run with a listener
+  * counting jobs / stages / tasks / shuffle bytes —
   * separates action-count overhead (many tiny jobs: materialize calls,
   * driver stats collects, iterative rounds) from genuine shuffle volume.
   * Dev tool, not driver contract.
@@ -14,7 +14,7 @@ import graft.{GraftSession, SparkEntry}
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.headline
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.registry.map(_.name)
     val spark = GraftSession.local("jobprofile")
 
     val jobs = new AtomicInteger(0)
@@ -33,24 +33,16 @@ object JobProfile {
       }
     })
 
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    once(names.head) // warmup (JIT + table load memoization)
+    Bench.timeQuery(spark, sfDir, names.head) // warmup (JIT + table load memoization)
     println(f"${"query"}%-28s ${"sec"}%7s ${"jobs"}%5s ${"stage"}%5s ${"tasks"}%6s ${"shW_MB"}%7s ${"shR_MB"}%7s")
     names.foreach { n =>
       // settle listener queue from the previous query before zeroing
       org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
       jobs.set(0); stages.set(0); tasks.set(0); shufWrite.set(0L); shufRead.set(0L)
-      val dt = try once(n) catch { case e: Throwable =>
+      val dt = try Bench.timeQuery(spark, sfDir, n) catch { case e: Throwable =>
         System.err.println(s"[jobprofile] $n failed: ${e.getMessage}"); -1.0 }
       org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
       println(f"$n%-28s $dt%7.2f ${jobs.get}%5d ${stages.get}%5d ${tasks.get}%6d ${shufWrite.get / 1e6}%7.2f ${shufRead.get / 1e6}%7.2f")
-      // drop this query's lingering localCheckpoint blocks (Bench.run's idiom)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
     spark.stop()
   }

@@ -22,6 +22,25 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
+  test("the registry holds 204 names once each, split by family, each with an oracle") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 204 && names.distinct.size == 204)
+    assert(names.head == "q1_agg", "Bench's untimed warmup is the first registered query")
+    // perfbench attributes each query to the family whose `queries` has it
+    val families = Seq(Relational.queries, operators.TextAnalysis.queries,
+      operators.Dedup.queries, operators.Similarity.queries,
+      operators.Graph.queries, multimodal.Multimodal.queries,
+      pipeline.CorpusPipeline.queries, plans.Asof.queries).map(_.keySet)
+    assert(families.map(_.size).sum == 204, "a name is in two families")
+    assert(families.reduce(_ ++ _) == SparkEntry.queries.keySet)
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+    SparkEntry.oracleSql.foreach { case (name, sql) =>
+      assert(sql.trim.nonEmpty, s"$name has a blank oracle")
+      // a val read before its object initialised it interpolates as "null"
+      assert("\\bnull\\b".r.findFirstIn(sql).isEmpty, s"$name oracle interpolates null")
+    }
+  }
+
   test("rank() preserves tie-with-gap semantics (SURVEY §7.4.3)") {
     import spark.implicits._
     val df = Seq(("b1", "d1", 5L), ("b1", "d2", 5L), ("b1", "d3", 4L), ("b1", "d4", 3L))

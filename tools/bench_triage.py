@@ -14,6 +14,9 @@ Usage: python3 tools/bench_triage.py <old_board.json> <new_board.json> \
          <out.json> [topN=10]
 Writes {"_meta":..., "movers": {q: {old, new, drift_min, verdict}}} where
 verdict is "host-band" (min within 10% of old or faster) or "plan-change".
+`_meta.failed` lists the queries that failed on either board: a board's
+`failed` list, or a -1 entry on boards written before that list existed.
+A failed query is never ranked as a mover: its -1 wall is not a time.
 """
 import json, subprocess, sys, os
 
@@ -24,7 +27,16 @@ old = json.load(open(old_p))
 new = json.load(open(new_p))
 sf = new.get("sf", "/root/testdata/sf0.1")
 oq, nq = old["queries"], new["queries"]
-common = sorted(set(oq) & set(nq), key=lambda q: -(nq[q] - oq[q]))
+
+
+def failed(board):
+    return set(board.get("failed", [])) | {
+        q for q, v in board["queries"].items() if v < 0}
+
+
+failures = sorted(failed(old) | failed(new))
+common = sorted((set(oq) & set(nq)) - set(failures),
+                key=lambda q: -(nq[q] - oq[q]))
 movers = [q for q in common if nq[q] - oq[q] > 0.2][:top_n]
 if not movers:
     movers = common[:top_n]
@@ -65,10 +77,13 @@ meta = {
     "old_board": os.path.basename(old_p),
     "new_board": os.path.basename(new_p),
     "rule": "drift min(n=3, one warm JVM) <= 1.10 * old wall -> host-band; else plan-change",
+    "failed": failures,
     "regenerate": "python3 tools/bench_triage.py <old> <new> <out> [topN]",
 }
 json.dump({"_meta": meta, "movers": board}, open(out_p, "w"), indent=1)
 print(f"[triage] {len(board)} movers -> {out_p}")
+for q in failures:
+    print(f"[triage] {q}: FAILED (old={oq.get(q)} new={nq.get(q)})")
 for q, r in board.items():
     print(f"[triage] {q}: old={r['old']} new={r['new']} "
           f"min={r['drift_min_n3']} {r['verdict']}")
