@@ -34,6 +34,17 @@ import org.apache.spark.sql.types.StructType
   * shape Spark's partial aggregation uses within one query, persisted
   * across runs and shared across models.
   *
+  * In Spark jobs a single-month tick (Runner.runIncrement) costs 13:
+  * 1 for affectedMonths, 1 to land the fact partition, 3 for unter_grun's
+  * month (two broadcasts and the write), 3 for the shared partial's month
+  * (a broadcast, the aggregate's shuffle stage and the write) and 1 per
+  * fold; fullBuild costs the last 11. The folds read the partial as ONE
+  * partition: it holds bases × days rows whatever the fact's size (about
+  * 1.6k at benchmark size, about 110k for 300 bases over a year), so one
+  * task folds it, and its aggregates, windows, sorts and limits plan no
+  * exchange and no range-sampling job. At these sizes the tick is bound by
+  * job count, not by data, and an exchange would add 3 jobs per fold.
+  *
   * Correctness relies on month-sealed grains: each partial row belongs to
   * exactly one `month_num`, so re-deriving some months never double-counts
   * another month's state (IncrementalSpec proves incremental == full
@@ -159,12 +170,16 @@ object Incremental {
 
   /** The months a prepared increment restates (what ingestFactIncrement's
     * dynamic overwrite will replace): distinct pickup months, null for
-    * null-dated rows. Bounded by the calendar — a driver collect is safe.
+    * null-dated rows, in ascending order (None first). Each partition
+    * reduces its rows to its own set of months and the driver merges the
+    * sets, so this is one job with no `distinct` shuffle. Bounded by the
+    * calendar — a driver collect is safe.
     */
   def affectedMonths(increment: DataFrame): Seq[Option[Int]] =
-    increment.select(month(col("pickup_date")).as("m")).distinct()
-      // driver-bound(enum-bounded): distinct calendar months, <= 13 rows
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getInt(0))).toSeq
+    increment.select(month(col("pickup_date"))).rdd
+      .mapPartitions(_.map(r => if (r.isNullAt(0)) None else Some(r.getInt(0))).toSet.iterator)
+      // driver-bound(enum-bounded): <= 13 calendar months per partition
+      .collect().distinct.sorted.toSeq
 
   /** Overwrite exactly `months`' partition directories of a
     * month-partitioned table with `rows` (which must already be filtered
@@ -186,7 +201,10 @@ object Incremental {
     * back with the schema its writer held (no schema-inference job).
     */
   private def writeFolds(spark: SparkSession, dir: String, schema: StructType): Unit = {
-    val daily = spark.read.schema(schema).parquet(dailyCountsPath(dir))
+    // One partition: the partial has bases × days rows, not fact rows, so
+    // each fold's aggregate, window, sort and limit plan no exchange and
+    // no range-sampling job — one job per fold.
+    val daily = spark.read.schema(schema).parquet(dailyCountsPath(dir)).coalesce(1)
     folds.foreach { f =>
       f.fold(daily).write.mode("overwrite").parquet(finalPath(dir, f.model.name))
     }

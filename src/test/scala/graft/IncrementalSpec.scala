@@ -65,6 +65,21 @@ class IncrementalSpec extends SparkSpec {
       assert(inc == full, s"$clue: ${m.name} incremental != full rebuild")
     }
 
+  // restatement of months 2 and 5: February loses its Unter/Grun-Bronx
+  // rows entirely (the month-2 partials of unter_grun must become EMPTY
+  // — the case dynamic partition overwrite cannot express), May gains a
+  // Grun-Bronx row. New totals: B02512=5, B02598=3, B02765=2, B02617=1
+  // (still tie-free).
+  private val febMayRestatement =
+    """dispatching_base_num,pickup_date,affiliated_base_num,locationid
+      |B02598,2015-02-10 12:00:00,B02598,3
+      |B02598,2015-02-11 13:30:00,B02598,2
+      |B02765,2015-02-12 14:00:00,B02617,3
+      |B02765,2015-05-20 11:00:00,B02765,1
+      |B02512,2015-05-21 12:00:00,B02512,2
+      |B02512,2015-05-22 09:00:00,B02765,1
+      |""".stripMargin
+
   test("full build equals the full models; increment equals a full rebuild") {
     val (csv, wh, out) = dirs
     Incremental.fullBuild(spark, out)
@@ -81,21 +96,8 @@ class IncrementalSpec extends SparkSpec {
     assert(mtimesBefore.keys.exists(_.endsWith(".parquet")) &&
       jan.forall(d => mtimesBefore.keys.exists(_.startsWith(d.toString))))
 
-    // restatement of months 2 and 5: February loses its Unter/Grun-Bronx
-    // rows entirely (the month-2 partials of unter_grun must become EMPTY
-    // — the case dynamic partition overwrite cannot express), May gains a
-    // Grun-Bronx row. New totals: B02512=5, B02598=3, B02765=2, B02617=1
-    // (still tie-free).
     val incCsv = Paths.get(csv, "inc.csv")
-    Files.writeString(incCsv,
-      """dispatching_base_num,pickup_date,affiliated_base_num,locationid
-        |B02598,2015-02-10 12:00:00,B02598,3
-        |B02598,2015-02-11 13:30:00,B02598,2
-        |B02765,2015-02-12 14:00:00,B02617,3
-        |B02765,2015-05-20 11:00:00,B02765,1
-        |B02512,2015-05-21 12:00:00,B02512,2
-        |B02512,2015-05-22 09:00:00,B02765,1
-        |""".stripMargin)
+    Files.writeString(incCsv, febMayRestatement)
     val incDf = Ingest.readCsv(spark, incCsv.toString, uber.Schemas.rawDataJanjune15)
     val months = Incremental.affectedMonths(incDf)
     assert(months.toSet == Set(Some(2), Some(5)))
@@ -118,6 +120,47 @@ class IncrementalSpec extends SparkSpec {
 
     // restore shared-view state for any test ordering after this one
     Ingest.ingestAll(spark, csv, wh)
+  }
+
+  test("increment equals a full rebuild under 1 and 7 shuffle partitions, AQE on and off") {
+    val (csv, wh, _) = dirs
+    val incCsv = Files.createTempDirectory("inc_confs_csv").resolve("feb_may.csv")
+    Files.writeString(incCsv, febMayRestatement)
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (partitions <- Seq("1", "7"); aqe <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        Ingest.ingestAll(spark, csv, wh)
+        val out = Files.createTempDirectory("inc_confs").toString
+        Incremental.fullBuild(spark, out)
+        Runner.runIncrement(spark, incCsv.toString, wh, out)
+        assertAllModelsMatch(out, s"shuffle.partitions=$partitions adaptive=$aqe")
+      }
+    } finally {
+      before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      Ingest.ingestAll(spark, csv, wh)
+    }
+  }
+
+  test("affectedMonths merges each partition's months once, null month included") {
+    import org.apache.spark.sql.functions.{col, month, spark_partition_id}
+    import spark.implicits._
+    val inc = Seq("2015-02-01 08:00:00", "2015-02-03 09:00:00", "2015-02-05 10:00:00",
+        "2015-02-07 11:00:00", "2015-05-20 11:00:00", "2015-02-09 12:00:00",
+        "2015-05-21 12:00:00", null, "2015-02-11 13:00:00")
+      .toDF("s").select(col("s").cast("timestamp").as("pickup_date"))
+      .repartition(3)
+    val febParts = inc.filter(month(col("pickup_date")) === 2)
+      .select(spark_partition_id()).distinct().count()
+    assert(febParts > 1, s"February must span several partitions, got $febParts")
+    val months = Incremental.affectedMonths(inc)
+    assert(months == Seq(None, Some(2), Some(5)),
+      s"each affected month once, ascending: $months")
   }
 
   test("drop-folder increments apply once, in name order, and survive restarts") {
@@ -172,19 +215,19 @@ class IncrementalSpec extends SparkSpec {
     val (csv, wh, _) = dirs
     Ingest.ingestAll(spark, csv, wh)
     val out = Files.createTempDirectory("inc_jobs").toString
-    // 3 unter_grun + 3 shared partial + 4 per fold for the five
+    // 3 unter_grun + 3 shared partial + 1 per fold for the five
     // count-based models
     val build = jobsLaunched(Incremental.fullBuild(spark, out))
-    assert(build == 26, s"a full build launched $build jobs")
+    assert(build == 11, s"a full build launched $build jobs")
     val incCsv = Files.createTempDirectory("inc_jobs_csv").resolve("may.csv")
     Files.writeString(incCsv,
       """dispatching_base_num,pickup_date,affiliated_base_num,locationid
         |B02765,2015-05-20 11:00:00,B02765,1
         |B02512,2015-05-21 12:00:00,B02512,2
         |""".stripMargin)
-    // 2 affectedMonths + 1 fact landing + the build's 26 for one month
+    // 1 affectedMonths + 1 fact landing + the build's 11 for one month
     val tick = jobsLaunched(Runner.runIncrement(spark, incCsv.toString, wh, out))
-    assert(tick == 29, s"one single-month tick launched $tick jobs")
+    assert(tick == 13, s"one single-month tick launched $tick jobs")
     assertAllModelsMatch(out, "after a single-month increment")
     Ingest.ingestAll(spark, csv, wh)
   }
