@@ -1963,13 +1963,8 @@ object Similarity {
     * corpus pass; the lexical side is a token-keyed join of the
     * BROADCAST query-term set against the corpus term index (the
     * inverted-index probe — corpus-linear, never corpus×queries), with
-    * TWO scale guards on the probe: (1) a document-frequency ceiling on
-    * probe terms (`spark.graft.bm25.dfCapShare`, default 1.0 = off for
-    * oracle parity; production BM25 practice — a term in df > share×N
-    * docs contributes ~0 idf but corpus-sized postings, so a stopword
-    * in a query must not make the candidate list corpus-sized), and
-    * (2) the per-query top-K cut through [[KeyedRank.keyedTopK]]'s
-    * two-phase rank instead of a single-partition-per-q_id window, so a
+    * the per-query top-K cut through [[KeyedRank.keyedTopK]]'s two-phase
+    * rank instead of a single-partition-per-q_id window, so a
     * candidate-heavy query never sorts its full list in one task.
     * Fusion is a full-outer join of two ≤ NQ·K-row rank lists — bounded
     * by the probe budget, independent of corpus size. Float discipline:
@@ -1977,25 +1972,6 @@ object Similarity {
     * saturation, t26's proof), per-(q,doc) sums use the sorted fold, and
     * the RRF score is one fixed-order two-term sum of exact rationals.
     */
-  /** v21's lexical probe set: the query docs' distinct tokens joined to
-    * their corpus document frequencies, pruned by the conf-gated df
-    * ceiling `spark.graft.bm25.dfCapShare` (default 1.0 — keep every
-    * term, the oracle-parity setting; production sets ~0.5 so a
-    * stopword-bearing query can't pull corpus-sized postings into the
-    * candidate list — its idf contribution is ≈0 anyway, which is
-    * BM25's own justification for the cut, per t26). Exposed so
-    * SimilaritySpec can assert the cap drops exactly the ubiquitous
-    * terms and nothing else.
-    */
-  private[graft] def bm25ProbeTerms(s: SparkSession, qt: DataFrame,
-      dfq: DataFrame, stats: DataFrame): DataFrame = {
-    val share = s.conf.get("spark.graft.bm25.dfCapShare", "1.0").toDouble
-    broadcast(qt).join(dfq, "token")
-      .crossJoin(broadcast(stats))
-      .where(col("df") <= lit(share) * col("n_docs"))
-      .select(col("q_id"), col("token"), col("df"))
-  }
-
   /** v21's dense candidate scores: every (query, other-doc) cosine —
     * v1's broadcast-queries single corpus pass, shared by v21 (K-cut)
     * and v22 (full-rank ground truth).
@@ -2014,7 +1990,7 @@ object Similarity {
   }
 
   /** v21's lexical candidate scores: per-query BM25 over the corpus
-    * term index through the df-capped probe ([[bm25ProbeTerms]]) — the
+    * term index through the query-term probe — the
     * (q, doc)-keyed sorted-fold sums, before any rank cut. Shared by
     * v21 (top-K) and v22 (full-rank ground truth).
     */
@@ -2045,9 +2021,9 @@ object Similarity {
         (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
         ((col("tf") * lit(2.2)) /
           (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / avgdl))))
-    // df-capped probe terms (carries df, so no post-probe dfq join)
-    val qtCapped = bm25ProbeTerms(s, qt, dfq, stats)
-    broadcast(qtCapped).join(ti, "token")
+    // probe terms with their df, so no post-probe dfq join
+    val probe = broadcast(qt).join(dfq, "token")
+    broadcast(probe).join(ti, "token")
       .filter(col("doc_id") =!= col("q_id"))
       .crossJoin(broadcast(stats))
       .select(col("q_id"), col("doc_id"), contrib.as("c"))

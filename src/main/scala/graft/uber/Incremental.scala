@@ -1,16 +1,24 @@
 package graft.uber
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Incremental model maintenance — the capability the reference's dbt
-  * project lacks: it materializes every model as a FULL table on every
-  * daily run (`+materialized: table`, reference `dbt_project.yml:36-37`),
-  * so each run re-scans the whole fact table. At 100 TB that is a daily
-  * 100 TB scan to absorb a CDC delta touching one or two partitions.
+/** The DataFrame form of the six models, and their one materialization:
+  * [[fullBuild]] (what `Runner.runAll` writes) and [[applyIncrement]] (a
+  * daily tick) share this layout and derivation, so one output directory
+  * takes both full runs and increments. The SQL form in [[Models]] is the
+  * differential oracle.
+  *
+  * Incremental maintenance is the capability the reference's dbt project
+  * lacks: it materializes every model as a FULL table on every daily run
+  * (`+materialized: table`, reference `dbt_project.yml:36-37`), so each run
+  * re-scans the whole fact table six times. At 100 TB that is a daily
+  * 100 TB scan to absorb a CDC delta touching one or two partitions. A
+  * full build here scans the fact twice (unter_grun's rows and the daily
+  * partial), and a tick scans only the delta's months.
   *
   * Layout under the output directory:
   *
@@ -62,19 +70,21 @@ object Incremental {
   /** A count-based model as a fold over the shared daily partial. */
   private final case class Fold(model: Models.Model, fold: DataFrame => DataFrame)
 
-  private def src(t: String): String = SourceRegistry.resolve("airbyte_uber_data", t)
-  private def raw(s: SparkSession) = s.table(src("raw_data_janjune_15"))
-  private def base(s: SparkSession) = s.table(src("base_num_and_name"))
-  private def zone(s: SparkSession) = s.table(src("taxi_zone_lookup"))
+  private def raw(s: SparkSession) = s.table(Models.src("raw_data_janjune_15"))
+  private def base(s: SparkSession) = s.table(Models.src("base_num_and_name"))
+  private def zone(s: SparkSession) = s.table(Models.src("taxi_zone_lookup"))
 
   /** The fact's month, preferring the ingest-derived partition column so
-    * the affected-month filter prunes at the file listing (Models'
-    * mayFilter logic; month(pickup_date) cannot prune).
+    * the affected-month filter prunes at the file listing
+    * (month(pickup_date) cannot prune).
     */
   private def monthOf(df: DataFrame): Column =
     if (df.columns.contains("pickup_month")) col("pickup_month")
     else month(col("pickup_date"))
 
+  /** Month-name CASE with NO else: months 7-12 → NULL, as the reference
+    * (`dbt_Models/pickup_count_vs_average_per_base.sql:6-13`).
+    */
   private def monthName(mo: Column): Column =
     when(mo === 1, "January").when(mo === 2, "February").when(mo === 3, "March")
       .when(mo === 4, "April").when(mo === 5, "May").when(mo === 6, "June")
@@ -112,7 +122,7 @@ object Incremental {
 
   /** Per-(base, month) re-sum with the no-ELSE month NAME (months 7-12 →
     * NULL — and the folds' windows partition by the NAME, so null-named
-    * months share one window partition exactly as the full model's X3
+    * months share one window partition exactly as the SQL model's X3
     * semantics demand).
     */
   private def baseMonthCounts(d: DataFrame, countCol: String): DataFrame = d
@@ -127,7 +137,7 @@ object Incremental {
       .agg(sum(col("cnt")).as("Number of Pick Ups for Base"))
       .orderBy(col("Number of Pick Ups for Base").desc)),
     // COUNT(pickup_date): null-date rows add 0, but a base whose rows all
-    // have null dates still appears with a 0 total, as in the full model
+    // have null dates still appears with a 0 total, as in the SQL model
     Fold(Models.top3BaseNamesByTotalPickups, d => d
       .groupBy(col("dispatching_base_num").as("Dispatching Base Number"),
         col("base_name").as("Base Name"))
@@ -151,9 +161,11 @@ object Incremental {
         col("Monthly Count"), col("Average for Month"),
         ((col("Monthly Count") / col("Average for Month") - 1) * 100)
           .as("Percentage Difference"))),
+    // the SQL form counts a month with `sub.month = counting_base.month`,
+    // which matches no row for a NULL month name: x / 0 is a NULL share
     Fold(Models.pickupPercentileByBasePerMonth, d => baseMonthCounts(d, "Count per Base per Month")
-      .withColumn("Count per Month",
-        sum(col("Count per Base per Month")).over(Window.partitionBy(col("Month"))))
+      .withColumn("Count per Month", when(col("Month").isNotNull,
+        sum(col("Count per Base per Month")).over(Window.partitionBy(col("Month")))))
       .orderBy(col("month_num").asc, col("Count per Base per Month").desc)
       .select(col("Dispatching Base Name"), col("Month").as("month"),
         col("Count per Base per Month"),
@@ -197,31 +209,42 @@ object Incremental {
         .write.mode("overwrite").parquet(s"$path/$part")
     }
 
-  /** Rewrite the five count-based finals from the shared partial, read
-    * back with the schema its writer held (no schema-inference job).
+  /** Runs `write` on `df` and returns the rows it wrote, counted by an
+    * `Observation` on the write's own pass: no re-read, no extra job. */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val written = Observation()
+    write(df.observe(written, count(lit(1)).as("rows")))
+    written.get("rows").asInstanceOf[Long]
+  }
+
+  /** The five count-based finals, each with its output path, as folds
+    * over the shared partial read back with the schema its writer held
+    * (no schema-inference job).
     */
-  private def writeFolds(spark: SparkSession, dir: String, schema: StructType): Unit = {
+  private def foldedFinals(
+      spark: SparkSession, dir: String, schema: StructType): Seq[(String, String, DataFrame)] = {
     // One partition: the partial has bases × days rows, not fact rows, so
     // each fold's aggregate, window, sort and limit plan no exchange and
     // no range-sampling job — one job per fold.
     val daily = spark.read.schema(schema).parquet(dailyCountsPath(dir)).coalesce(1)
-    folds.foreach { f =>
-      f.fold(daily).write.mode("overwrite").parquet(finalPath(dir, f.model.name))
-    }
+    folds.map(f => (f.model.name, finalPath(dir, f.model.name), f.fold(daily)))
   }
 
   /** Initial materialization: one full-scan pass writes unter_grun's
     * final and the shared partial (static overwrite clears any stale
     * state), then the folds. Equivalent cost to the reference's full
     * rebuild — paid once, after which increments are delta-sized.
+    * Returns each model's row count, observed on its write.
     */
-  def fullBuild(spark: SparkSession, dir: String): Unit = {
+  def fullBuild(spark: SparkSession, dir: String): Map[String, Long] = {
     val fact = raw(spark)
-    unterGrunRows(spark, fact)
-      .write.mode("overwrite").partitionBy("month_num").parquet(unterGrunPath(dir))
+    val unterGrun = countedWrite(unterGrunRows(spark, fact))(
+      _.write.mode("overwrite").partitionBy("month_num").parquet(unterGrunPath(dir)))
     val daily = dailyCounts(spark, fact)
     daily.write.mode("overwrite").partitionBy("month_num").parquet(dailyCountsPath(dir))
-    writeFolds(spark, dir, daily.schema)
+    foldedFinals(spark, dir, daily.schema).map { case (name, path, rows) =>
+      name -> countedWrite(rows)(_.write.mode("overwrite").parquet(path))
+    }.toMap + (Models.unterGrunPickupsInBronx.name -> unterGrun)
   }
 
   /** Absorb a fact restatement of `months` (after ingestFactIncrement has
@@ -247,10 +270,13 @@ object Incremental {
     overwriteMonths(unterGrunRows(spark, pruned), unterGrunPath(dir), months)
     val daily = dailyCounts(spark, pruned)
     overwriteMonths(daily, dailyCountsPath(dir), months)
-    writeFolds(spark, dir, daily.schema)
+    // not observed: no caller reads a tick's counts, and an Observation adds writes
+    foldedFinals(spark, dir, daily.schema).foreach { case (_, path, rows) =>
+      rows.write.mode("overwrite").parquet(path)
+    }
   }
 
-  /** The materialized model, as the full model's column set (unter_grun's
+  /** The materialized model, as the SQL model's column set (unter_grun's
     * month-local final carries a month_num partition column — dropped here).
     */
   def readModel(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -1,9 +1,5 @@
 package graft.uber
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-
 /** dbt-style source registry (SURVEY §1.3): the models reference sources
   * abstractly; resolution to a catalog/view name happens here — the Spark
   * equivalent of `dbt_Models/sources.yml`.
@@ -15,44 +11,25 @@ object SourceRegistry {
   }
 }
 
-/** The six reference models (reference `dbt_Models/`), each in BOTH forms:
+/** The six reference models (reference `dbt_Models/`) in their SQL form:
+  * each model re-expressed in Spark SQL, preserving the reference's output
+  * column names VERBATIM (spaces, casing — e.g. `` `Dispatching Base Name` ``),
+  * its CASE-without-ELSE null semantics, its RANK() tie-with-gap semantics,
+  * its COUNT(col) null-skipping, and its correlated scalar subquery
+  * (exercising Catalyst decorrelation). `Runner.runModel` runs this form.
   *
-  *  - `sql`: the model re-expressed in Spark SQL, preserving the reference's
-  *    output column names VERBATIM (spaces, casing — e.g.
-  *    `` `Dispatching Base Name` ``), its CASE-without-ELSE null semantics,
-  *    its RANK() tie-with-gap semantics, its COUNT(col) null-skipping, and
-  *    its correlated scalar subquery (exercising Catalyst decorrelation).
-  *  - `frame`: the same semantics built with the DataFrame API the way a
-  *    Spark-first engineer would write it (window sum instead of correlated
-  *    subquery, explicit broadcast of the ~9-row dim).
-  *
-  * The two forms are differential-tested against each other (UberSpec), which
-  * is free cross-checking the reference never had (it shipped zero tests —
+  * The one DataFrame form is [[Incremental]]'s shared-scan
+  * materialization: unter_grun's row projection plus five folds over one
+  * shared daily partial, which `Runner.runAll` and every increment write.
+  * The SQL form is its differential oracle (UberSpec, IncrementalSpec) —
+  * free cross-checking the reference never had (it shipped zero tests —
   * SURVEY §5).
-  *
-  * Scale notes: every model is fact ⋈ broadcast(dim) + hash agg — the only
-  * shuffle is on the (small) group keys; the May model prunes to one month
-  * partition (see Ingest).
   */
 object Models {
 
-  final case class Model(
-      name: String,
-      sql: String,
-      frame: SparkSession => DataFrame)
+  final case class Model(name: String, sql: String)
 
-  private def src(t: String): String = SourceRegistry.resolve("airbyte_uber_data", t)
-
-  private def raw(s: SparkSession) = s.table(src("raw_data_janjune_15"))
-  private def base(s: SparkSession) = s.table(src("base_num_and_name"))
-  private def zone(s: SparkSession) = s.table(src("taxi_zone_lookup"))
-
-  /** Month-name CASE with NO else: months 7-12 → NULL, as the reference
-    * (`dbt_Models/pickup_count_vs_average_per_base.sql:6-13`).
-    */
-  private def monthName(mo: Column): Column =
-    when(mo === 1, "January").when(mo === 2, "February").when(mo === 3, "March")
-      .when(mo === 4, "April").when(mo === 5, "May").when(mo === 6, "June")
+  private[uber] def src(t: String): String = SourceRegistry.resolve("airbyte_uber_data", t)
 
   // -------------------------------------------- unter_grun_pickups_in_bronx
   /** Reference `dbt_Models/unter_grun_pickups_in_bronx.sql`: 3-way join on
@@ -69,21 +46,11 @@ object Models {
       |JOIN ${src("base_num_and_name")} AS base ON base.base_num = raw.affiliated_base_num
       |JOIN ${src("taxi_zone_lookup")} AS t_zone ON t_zone.locationid = raw.locationid
       |WHERE base.base_name IN ('Unter', 'Grun') AND t_zone.Borough = 'Bronx'
-      |""".stripMargin,
-    frame = s => raw(s)
-      .join(broadcast(base(s)), col("base_num") === col("affiliated_base_num"))
-      .join(broadcast(zone(s)), zone(s)("locationid") === raw(s)("locationid"))
-      .filter(col("base_name").isin("Unter", "Grun") && col("borough") === "Bronx")
-      .select(
-        col("pickup_date").as("Pickup Date"),
-        col("base_name").as("Base Name"),
-        col("borough").as("Borough"),
-        col("zone").as("Zone")))
+      |""".stripMargin)
 
   // ---------------------------------------------- total_pickups_in_may_by_base
   /** Reference `dbt_Models/total_pickups_in_may_by_base.sql`: May-only
-    * grouped count (F1+A1). The month predicate hits the pickup_month
-    * partition column → partition pruning (the reference full-scans here).
+    * grouped count (F1+A1), kept as the reference's literal EXTRACT filter.
     */
   val totalPickupsInMayByBase: Model = Model(
     name = "total_pickups_in_may_by_base",
@@ -95,23 +62,7 @@ object Models {
       |WHERE EXTRACT(MONTH FROM raw.pickup_date) = 5
       |GROUP BY base.base_name
       |ORDER BY COUNT(*) DESC
-      |""".stripMargin,
-    frame = s => {
-      val r = raw(s)
-      // Prefer the ingest-derived partition column: month(pickup_date) = 5
-      // cannot prune (Catalyst can't see through the derivation), while
-      // pickup_month = 5 skips 5/6ths of the table at the file listing.
-      // The SQL twin keeps the reference's literal EXTRACT filter.
-      val mayFilter =
-        if (r.columns.contains("pickup_month")) col("pickup_month") === 5
-        else month(col("pickup_date")) === 5
-      r.filter(mayFilter)
-        .join(broadcast(base(s)), col("base_num") === col("dispatching_base_num"))
-    }
-      .groupBy(col("base_name"))
-      .agg(count(lit(1)).as("Number of Pick Ups for Base"))
-      .withColumnRenamed("base_name", "Dispatching Base Name")
-      .orderBy(col("Number of Pick Ups for Base").desc))
+      |""".stripMargin)
 
   // ------------------------------------------ top_3_base_names_by_total_pickups
   /** Reference `dbt_Models/top_3_base_names_by_total_pickups.sql`: global
@@ -129,17 +80,7 @@ object Models {
       |GROUP BY base.base_num, base.base_name
       |ORDER BY COUNT(raw.pickup_date) DESC
       |LIMIT 3
-      |""".stripMargin,
-    frame = s => raw(s)
-      .join(broadcast(base(s)), col("base_num") === col("dispatching_base_num"))
-      .groupBy(col("base_num"), col("base_name"))
-      .agg(count(col("pickup_date")).as("Total Number of Pick Ups"))
-      .select(
-        col("base_num").as("Dispatching Base Number"),
-        col("base_name").as("Base Name"),
-        col("Total Number of Pick Ups"))
-      .orderBy(col("Total Number of Pick Ups").desc)
-      .limit(3))
+      |""".stripMargin)
 
   // -------------------------------------------- top_3_pickup_dates_per_base
   /** Reference `dbt_Models/top_3_pickup_dates_per_base.sql`: per-base top
@@ -170,25 +111,7 @@ object Models {
       |FROM ranked_cte
       |WHERE ranked_cte.rank IN (1,2,3)
       |ORDER BY ranked_cte.`Base NAME` ASC, ranked_cte.rank ASC
-      |""".stripMargin,
-    frame = s => {
-      val perDate = raw(s)
-        .join(broadcast(base(s)), col("base_num") === col("dispatching_base_num"))
-        .groupBy(col("base_name"), col("dispatching_base_num"),
-          to_date(col("pickup_date")).as("pick_up_date"))
-        .agg(count(lit(1)).as("Count"))
-      val w = Window.partitionBy(col("dispatching_base_num"))
-        .orderBy(col("Count").desc)
-      perDate
-        .withColumn("Rank", rank().over(w))
-        .filter(col("Rank").isin(1, 2, 3))
-        .select(
-          col("base_name").as("Base Name"),
-          col("dispatching_base_num").as("Dispatching Base Number"),
-          col("Rank"), col("Count"),
-          col("pick_up_date").as("Pick Up Date"))
-        .orderBy(col("Base Name").asc, col("Rank").asc)
-    })
+      |""".stripMargin)
 
   // ---------------------------------------- pickup_count_vs_average_per_base
   /** Reference `dbt_Models/pickup_count_vs_average_per_base.sql`: monthly
@@ -230,32 +153,13 @@ object Models {
       |       ((monthly_counts_and_avg.`Monthly Count` / monthly_counts_and_avg.`Average for Month`) - 1) * 100 AS `Percentage Difference`
       |FROM monthly_counts_and_avg
       |ORDER BY monthly_counts_and_avg.month_num ASC, monthly_counts_and_avg.`Monthly Count` DESC
-      |""".stripMargin,
-    frame = s => {
-      val me = raw(s)
-        .join(broadcast(base(s)), col("base_num") === col("dispatching_base_num"))
-        .select(
-          col("base_name").as("Dispatching Base Name"),
-          month(col("pickup_date")).as("month_num"),
-          monthName(month(col("pickup_date"))).as("Month"))
-      val counts = me.groupBy(col("Dispatching Base Name"), col("Month"), col("month_num"))
-        .agg(count(lit(1)).as("Monthly Count"))
-        .withColumn("Average for Month",
-          avg(col("Monthly Count")).over(Window.partitionBy(col("Month"))))
-      counts
-        .orderBy(col("month_num").asc, col("Monthly Count").desc)
-        .select(
-          col("Dispatching Base Name"), col("Month").as("month"),
-          col("Monthly Count"), col("Average for Month"),
-          ((col("Monthly Count") / col("Average for Month") - 1) * 100)
-            .as("Percentage Difference"))
-    })
+      |""".stripMargin)
 
   // -------------------------------------- pickup_percentile_by_base_per_month
   /** Reference `dbt_Models/pickup_percentile_by_base_per_month.sql`:
     * share-of-month via a CORRELATED SCALAR SUBQUERY over a twice-referenced
-    * CTE (A5+C3+X5) — kept literal in the SQL form (Catalyst decorrelates);
-    * the frame form uses the equivalent window sum.
+    * CTE (A5+C3+X5) — kept literal (Catalyst decorrelates); the fold uses
+    * the equivalent window sum.
     */
   val pickupPercentileByBasePerMonth: Model = Model(
     name = "pickup_percentile_by_base_per_month",
@@ -297,26 +201,7 @@ object Models {
       |       (counting_cte.`Count per Base per Month` / counting_cte.`Count per Month`) * 100 AS `Percentile of Pick Ups`
       |FROM counting_cte
       |ORDER BY counting_cte.month_num ASC, counting_cte.`Count per Base per Month` DESC
-      |""".stripMargin,
-    frame = s => {
-      val me = raw(s)
-        .join(broadcast(base(s)), col("base_num") === col("dispatching_base_num"))
-        .select(
-          col("base_name").as("Dispatching Base Name"),
-          month(col("pickup_date")).as("month_num"),
-          monthName(month(col("pickup_date"))).as("Month"))
-      val counts = me.groupBy(col("Month"), col("Dispatching Base Name"), col("month_num"))
-        .agg(count(lit(1)).as("Count per Base per Month"))
-        .withColumn("Count per Month",
-          sum(col("Count per Base per Month")).over(Window.partitionBy(col("Month"))))
-      counts
-        .orderBy(col("month_num").asc, col("Count per Base per Month").desc)
-        .select(
-          col("Dispatching Base Name"), col("Month").as("month"),
-          col("Count per Base per Month"),
-          (col("Count per Base per Month") / col("Count per Month") * 100)
-            .as("Percentile of Pick Ups"))
-    })
+      |""".stripMargin)
 
   /** All six, in the reference's build order (they are independent siblings
     * over the same three sources — `dbt build` runs them sequentially,

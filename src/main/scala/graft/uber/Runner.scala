@@ -1,7 +1,6 @@
 package graft.uber
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftSession
 
 /** Orchestration layer (SURVEY §2.10): dependency-ordered materialization of
@@ -11,52 +10,39 @@ import graft.GraftSession
   *
   * The reference's four process boundaries (Dagster→Airbyte→Postgres→GCS→
   * BigQuery) collapse into one driver: ingest writes the source tables,
-  * transform materializes each model as a parquet table (the reference
-  * materializes `table`, rebuilt per run — `dbt_project.yml:36-37`).
-  * Scheduling stays out-of-process (cron → spark-submit), as in the
-  * reference (`@daily` ScheduleDefinition).
+  * transform materializes the six models as parquet tables in
+  * [[Incremental]]'s layout (the reference materializes `table`, rebuilt
+  * per run — `dbt_project.yml:36-37`), so later increments apply to the
+  * same directory. [[Scheduler]] runs it on the reference's `@daily`
+  * ScheduleDefinition.
   */
 object Runner {
 
-  /** Which form executes a model: the SQL twin (Catalyst SQL path) or the
-    * DataFrame twin. Both are semantically identical (differential-tested);
-    * SQL is the default to mirror the reference's dbt execution.
+  /** One model in its SQL form (the Catalyst SQL path), as the
+    * reference's dbt runs it.
     */
-  sealed trait Form
-  case object SqlForm extends Form
-  case object FrameForm extends Form
+  def runModel(spark: SparkSession, m: Models.Model): DataFrame = spark.sql(m.sql)
 
-  def runModel(spark: SparkSession, m: Models.Model, form: Form = SqlForm): DataFrame =
-    form match {
-      case SqlForm => spark.sql(m.sql)
-      case FrameForm => m.frame(spark)
-    }
-
-  /** Full pipeline: ingest CSVs, run the source checks, then materialize
-    * all six models as parquet tables under `outDir` (overwrite per run).
-    * A failed check throws, naming the failing checks, before any model is
-    * written, so the previous models stay as they were. Returns row counts
-    * per model (the reference's manual `SELECT COUNT(*)` check, automated),
-    * observed on each model's write rather than read back.
+  /** Full pipeline: ingest CSVs, run the source checks, then
+    * [[Incremental.fullBuild]] into `outDir` (two fact scans), the layout
+    * [[runIncrement]] applies increments to: unter_grun is partitioned by
+    * `month_num` and `partials/` holds the shared daily partial, so read
+    * models back with [[Incremental.readModel]]. A failed check throws,
+    * naming the failing checks, before any model is written. Returns row
+    * counts per model (the reference's manual `SELECT COUNT(*)` check),
+    * observed on each write rather than read back.
     */
   def runAll(
       spark: SparkSession,
       csvDir: String,
       warehouseDir: String,
-      outDir: String,
-      form: Form = SqlForm): Map[String, Long] = {
+      outDir: String): Map[String, Long] = {
     Ingest.ingestAll(spark, csvDir, warehouseDir)
     val failed = runChecks(spark).filterNot(_.passed)
     if (failed.nonEmpty)
       throw new IllegalStateException("source checks failed, no model written: " +
         failed.map(r => s"${r.table}.${r.column} ${r.check} (${r.failures})").mkString(", "))
-    Models.all.map { m =>
-      // the write's own pass counts the rows: no re-read of the output
-      val written = Observation()
-      runModel(spark, m, form).observe(written, count(lit(1)).as("rows"))
-        .write.mode("overwrite").parquet(s"$outDir/${m.name}")
-      m.name -> written.get("rows").asInstanceOf[Long]
-    }.toMap
+    Incremental.fullBuild(spark, outDir)
   }
 
   /** The `dbt test` half of `dbt build`: source-contract checks after
@@ -69,8 +55,8 @@ object Runner {
   /** One daily-delta run: land the increment's fact partitions (dynamic
     * overwrite) and absorb them into every model through the shared daily
     * partial — scan(delta) + fold(grain) instead of runAll's full rebuild.
-    * Requires a prior Incremental.fullBuild of `outDir` (applyIncrement
-    * refuses otherwise). Returns the restated months.
+    * Requires a prior [[runAll]] or Incremental.fullBuild of `outDir`
+    * (applyIncrement refuses otherwise). Returns the restated months.
     */
   def runIncrement(
       spark: SparkSession,

@@ -107,9 +107,11 @@ object Scheduler {
 
   /** Daemon CLI: Scheduler <csvDir> <warehouseDir> <outDir> [periodMs].
     * Each tick = the full `dbt build` equivalent (ingest → checks →
-    * models, Runner.runAll); a failed check aborts the build before any
-    * model is written, and the daemon logs it and retries the same tick
-    * because the build is an idempotent rebuild.
+    * models, Runner.runAll), which writes the layout increments apply to
+    * (applying new increment files in place of the rebuild is not wired
+    * here yet); a failed check aborts the build before any model is
+    * written, and the daemon logs it and retries the same tick because
+    * the build is an idempotent rebuild.
     */
   def main(args: Array[String]): Unit = {
     val Array(csvDir, warehouseDir, outDir, rest @ _*) = args

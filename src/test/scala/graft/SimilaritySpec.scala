@@ -1064,74 +1064,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("v21 df cap prunes exactly the ubiquitous probe term and bounds the lexical candidates") {
-    import graft.functions.TextFunctions.lowerTokens
-    // every doc carries the stopword; each query shares a DISTINCTIVE
-    // token (df=4, under the cap) with exactly 3 other docs. Cap off:
-    // the stopword makes every doc a candidate for every query — the
-    // corpus-sized-candidate-list regime the cap exists for. Cap on
-    // (0.5): the stopword leaves the probe set and the candidate list
-    // collapses to exactly the distinctive-overlap docs.
-    val stop = "the"
-    val docsSeq = (0L until 16L).map { i =>
-      val t =
-        if (i < 8) s"$stop q${i}tok shared${i % 4} extra$i"
-        else s"$stop c${i}tok shared${(i - 8) % 4} other$i"
-      (i, t, "en", "web", t.length.toLong)
-    }
-    def toksOf(i: Long): Set[String] =
-      docsSeq(i.toInt)._2.split(" ").toSet
-    def distinctiveOverlap(q: Long, d0: Long): Boolean =
-      ((toksOf(q) & toksOf(d0)) - stop).nonEmpty
-    val dir = java.nio.file.Files.createTempDirectory("graft_v21cap").toString
-    docsSeq.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.parquet(s"$dir/documents.parquet")
-    // embeddings for the dense side: deterministic near-orthogonal vectors
-    (0L until 16L).map(i => (i,
-        Array.tabulate(8)(j => if (j == (i % 8).toInt) 1f else 0.1f), 0))
-      .toDF("vec_id", "embedding", "label")
-      .write.parquet(s"$dir/embeddings.parquet")
-    def probeTokens(): Set[String] = {
-      val toks = Tables.load(spark, dir, "documents")
-        .select($"doc_id", lowerTokens($"text").as("t"))
-      val ti = toks.select($"doc_id", explode($"t").as("token"))
-        .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
-      val dfq = ti.groupBy($"token").agg(count(lit(1)).as("df"))
-      val dl = toks.select($"doc_id", size($"t").cast("long").as("dl"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"), sum($"dl").as("sum_dl"))
-      val qt = toks.filter($"doc_id" < 8)
-        .select($"doc_id".as("q_id"), explode($"t").as("token")).distinct()
-      Similarity.bm25ProbeTerms(spark, qt, dfq, stats)
-        .select($"token").as[String].collect().toSet
-    }
-    def lexicalRows(): Seq[(Long, Long)] =
-      Similarity.v21HybridRrf(spark, dir).collect()
-        .filter(!_.isNullAt(4)) // rows the BM25 ranker put forward
-        .map(r => (r.getLong(0), r.getLong(2))).toSeq
-    val uncappedProbe = probeTokens()
-    assert(uncappedProbe.contains(stop), "cap off: stopword must be probed")
-    val uncappedLex = lexicalRows()
-    assert(uncappedLex.exists { case (q, d0) => !distinctiveOverlap(q, d0) },
-      "cap off: stopword-only docs should reach the lexical list (the exposure)")
-    try {
-      spark.conf.set("spark.graft.bm25.dfCapShare", "0.5")
-      val cappedProbe = probeTokens()
-      assert(!cappedProbe.contains(stop), "cap on: stopword must be pruned")
-      assert(uncappedProbe -- cappedProbe == Set(stop),
-        s"cap dropped more than the stopword: ${uncappedProbe -- cappedProbe}")
-      val cappedLex = lexicalRows()
-      assert(cappedLex.nonEmpty)
-      // bounded: only distinctive-overlap docs are candidates, ≤ 3 per query
-      cappedLex.foreach { case (q, d0) =>
-        assert(distinctiveOverlap(q, d0),
-          s"($q,$d0) has no sub-cap shared term but was ranked")
-      }
-      cappedLex.groupBy(_._1).foreach { case (q, rows) =>
-        assert(rows.size <= 3, s"query $q candidates not bounded: $rows")
-      }
-    } finally spark.conf.unset("spark.graft.bm25.dfCapShare")
-  }
-
   test("mm12 audio near-dup: exact copies pair at 1.0 and fingerprints are gain-invariant") {
     import graft.multimodal.Multimodal
     // pseudo-audio: byte streams long enough for 16-delta shingles at

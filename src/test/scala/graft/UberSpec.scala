@@ -1,17 +1,22 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import graft.uber.{Checks, Ingest, Models, Runner}
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.uber.{Checks, Incremental, Ingest, Models, Runner}
 import graft.uber.Checks.CheckResult
 
 /** Reference-parity tests for the uber module: fixture per FIXTURES.md
   * (months 1-6 + a July row + a NULL timestamp + rank ties + dispatching ≠
-  * affiliated), goldens precomputed with DuckDB, SQL ≡ DataFrame
-  * differential for all six models. The reference itself shipped zero tests
-  * (SURVEY §5) — these are the tests it should have had.
+  * affiliated), goldens precomputed with DuckDB, and every model that
+  * `runAll` materializes held equal to its SQL twin. The reference itself
+  * shipped zero tests (SURVEY §5) — these are the tests it should have had.
   */
 class UberSpec extends SparkSpec {
 
@@ -74,6 +79,14 @@ class UberSpec extends SparkSpec {
 
   private def model(name: String) = Models.all.find(_.name == name).get
 
+  // runAll re-ingests the same CSVs into the same warehouse, so the
+  // fixture's views end as they started
+  private lazy val built: (String, Map[String, Long]) = {
+    val (csv, wh) = dirs
+    val out = Files.createTempDirectory("uber_out").toString
+    (out, Runner.runAll(spark, csv, wh, out))
+  }
+
   test("ingest: declared schema + airbyte provenance columns + month partitioning") {
     ingested()
     val raw = spark.table("raw_data_janjune_15")
@@ -116,25 +129,17 @@ class UberSpec extends SparkSpec {
     assert(!r.passed && r.failures == 3L)
   }
 
-  test("SQL twin ≡ DataFrame twin for every model (reference-valid rows)") {
-    ingested()
+  test("runAll's models equal their SQL twins, null months included") {
+    val (out, _) = built
     Models.all.foreach { m =>
-      val sqlOut = Runner.runModel(spark, m, Runner.SqlForm)
-      val dfOut = Runner.runModel(spark, m, Runner.FrameForm)
-      assert(sqlOut.columns.toSeq == dfOut.columns.toSeq,
-        s"${m.name}: column mismatch ${sqlOut.columns.toSeq} vs ${dfOut.columns.toSeq}")
-      // The one documented divergence: on NULL-month groups (impossible in
-      // the reference's Jan-June data) the literal correlated subquery's
-      // `sub.month = month` misses NULLs → NULL share (BigQuery would
-      // divide-by-zero); the window-sum form treats NULL as a group. Compare
-      // the reference-valid (non-null Month) rows for that model.
-      def norm(df: DataFrame): Seq[Seq[Any]] = {
-        val d = if (m.name == "pickup_percentile_by_base_per_month")
-          df.filter(col("Month").isNotNull) else df
-        d.collect().map(_.toSeq).toSeq
+      val sqlOut = Runner.runModel(spark, m)
+      val mat = Incremental.readModel(spark, out, m.name)
+      assert(sqlOut.columns.toSeq == mat.columns.toSeq,
+        s"${m.name}: column mismatch ${sqlOut.columns.toSeq} vs ${mat.columns.toSeq}")
+      def norm(df: DataFrame): Seq[Seq[Any]] =
+        df.collect().map(_.toSeq).toSeq
           .sortBy(_.map(v => if (v == null) "" else v.toString).mkString("|"))
-      }
-      assert(norm(sqlOut) == norm(dfOut), s"${m.name}: row mismatch")
+      assert(norm(sqlOut) == norm(mat), s"${m.name}: row mismatch")
     }
   }
 
@@ -210,20 +215,42 @@ class UberSpec extends SparkSpec {
       .map(_.getDouble(3)).toSeq == Seq(100.0))
   }
 
-  test("May model prunes to the pickup_month=5 partition (beats reference full scan)") {
-    ingested()
-    val plan = Runner.runModel(spark, model("total_pickups_in_may_by_base"),
-      Runner.FrameForm).queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("pickup_month"),
-      s"no partition pruning in plan:\n$plan")
+  test("an increment's fact scans prune to the restated pickup_month partition") {
+    val (csv, wh) = dirs
+    val out = Files.createTempDirectory("uber_prune").toString
+    Incremental.fullBuild(spark, out)
+    val inc = Files.createTempDirectory("uber_prune_inc").resolve("may.csv")
+    Files.writeString(inc,
+      """dispatching_base_num,pickup_date,affiliated_base_num,locationid
+        |B02765,2015-05-20 11:00:00,B02512,1
+        |""".stripMargin)
+    val factScans = ArrayBuffer.empty[FileSourceScanExec]
+    val plans = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        factScans ++= plans.collect(qe.executedPlan) {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.getName == "raw_data_janjune_15") => s
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try Runner.runIncrement(spark, inc.toString, wh, out)
+    finally {
+      ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    // unter_grun's month and the shared partial's month each scan the fact
+    assert(factScans.size == 2, s"expected 2 fact scans, got ${factScans.size}")
+    factScans.foreach { s =>
+      assert(s.partitionFilters.exists(_.references.exists(_.name == "pickup_month")),
+        s"fact scan without a pickup_month partition filter:\n$s")
+    }
+    Ingest.ingestAll(spark, csv, wh)
   }
 
   test("runner materializes all six models with expected row counts") {
-    // runAll re-ingests the same CSVs into the same warehouse, so the
-    // fixture's views end as they started
-    val (csv, wh) = dirs
-    val out = Files.createTempDirectory("uber_out").toString
-    val counts = Runner.runAll(spark, csv, wh, out)
+    val (out, counts) = built
     assert(counts == Map(
       "top_3_base_names_by_total_pickups" -> 3L,
       "total_pickups_in_may_by_base" -> 2L,
@@ -233,7 +260,15 @@ class UberSpec extends SparkSpec {
       "pickup_percentile_by_base_per_month" -> 11L))
     // the counts observed on the writes are the rows the files hold
     assert(counts == Models.all.map(m =>
-      m.name -> spark.read.parquet(s"$out/${m.name}").count()).toMap)
+      m.name -> Incremental.readModel(spark, out, m.name).count()).toMap)
+  }
+
+  test("runAll runs a fixed number of Spark jobs") {
+    val (csv, wh) = dirs
+    val out = Files.createTempDirectory("uber_jobs").toString
+    // 3 source writes + 7 checks + Incremental.fullBuild's 11
+    val jobs = jobsLaunched(Runner.runAll(spark, csv, wh, out))
+    assert(jobs == 21, s"runAll launched $jobs jobs")
   }
 
   test("source checks: fixture passes the DDL contract; violations are caught") {
