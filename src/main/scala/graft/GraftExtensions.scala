@@ -8,7 +8,10 @@ import graft.functions.TextFunctions
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * Catalyst expressions as SQL functions, so the SQL surface is as complete
-  * as the DataFrame surface. Activate with
+  * as the DataFrame surface, and injects the one plan rule: the as-of
+  * join planner strategy ([[graft.plans.AsofJoinStrategy]]). There is no
+  * optimizer rewrite — an approximate distinct count is always the
+  * explicit `graft_kmv_distinct` call, never a silent swap. Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)`.
   *
@@ -21,6 +24,7 @@ import graft.functions.TextFunctions
   *   graft_winnow(string, n, w)                                → array<bigint>
   *   graft_hash62(string)                                      → bigint
   *   graft_hash62_array(array<string>, distinctSorted)         → array<bigint>
+  *   graft_kmv_distinct(x, k)  [aggregate]                     → double
   *   graft_bloom_build(bigint)  [aggregate]                    → binary
   *   graft_bloom_hit(binary, bigint)                           → boolean
   *   graft_cms_build(bigint)  [aggregate]                      → binary
@@ -40,9 +44,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // whole-plan operator: AS-OF join (logical node -> sort-merge exec)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    // opt-in approximate rewrite: exact count(DISTINCT x) -> KMV sketch
-    // when spark.graft.approxCountDistinct.enabled=true
-    ext.injectOptimizerRule(session => graft.plans.ApproxDistinctRewrite(session))
 
     def register(name: String, builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((

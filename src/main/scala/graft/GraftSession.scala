@@ -43,15 +43,12 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** Shuffle partition count: defaults to the core count (right for the
-    * driver's sf0.01/sf0.1 scales), overridable via
-    * SPARK_GRAFT_SHUFFLE_PARTITIONS as a manual escape hatch. The
-    * data-scaled path is `seedForData` below — partitions must scale
-    * with DATA, not cores, and AQE does the per-stage scaling at runtime
-    * once seeded with a data-derived initial count.
+  /** Shuffle partition count: the core count (right for the driver's
+    * sf0.01/sf0.1 scales). Partitions scale with DATA, not cores, through
+    * `seedForData` below: AQE does the per-stage scaling at runtime once
+    * seeded with a data-derived initial count.
     */
-  def shufflePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores.toString)
+  def shufflePartitions: String = cores.toString
 
   /** Total bytes under a local data directory (0 if unreadable). Local
     * filesystem walk — at configure time there is no SparkContext yet; a
@@ -79,12 +76,11 @@ object GraftSession {
     * shuffle writes one file + index per task regardless), so erring high
     * costs little — AQE coalesces excess away against its 64 MB advisory
     * size — while erring low (the old fixed 32 at sf10) puts millions of
-    * rows in every window sort: spill + GC variance the env knob
-    * previously had to patch by hand. 8 MB because the input is
-    * compressed parquet that expands ~4x into in-memory shuffle rows
-    * (sf10's 1.5 GB derives ~190, bracketing the empirically-tuned 256;
-    * sf0.1/sf1 clamp to the core floor, matching their proven configs).
-    * A manual SPARK_GRAFT_SHUFFLE_PARTITIONS override still wins if set.
+    * rows in every window sort: spill + GC variance. 8 MB because the
+    * input is compressed parquet that expands ~4x into in-memory shuffle
+    * rows (sf10's 1.5 GB derives ~190, bracketing the empirically-tuned
+    * 256; sf0.1/sf1 clamp to the core floor, matching their proven
+    * configs).
     */
   def initialPartitionsFor(dataDir: String): Int = {
     val derived = dataBytes(dataDir) / (8L << 20)
@@ -94,14 +90,11 @@ object GraftSession {
   /** `configure` plus data-scaled AQE seeding for sessions that know
     * their input directory (Verify, Bench, scale probes).
     */
-  def seedForData(b: SparkSession.Builder, dataDir: String): SparkSession.Builder = {
-    val init = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .map(_.toInt).getOrElse(initialPartitionsFor(dataDir))
+  def seedForData(b: SparkSession.Builder, dataDir: String): SparkSession.Builder =
     configure(b)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        init.toString)
-  }
+        initialPartitionsFor(dataDir).toString)
 
   /** Local session sized for this container; cores come from env, and
     * when SPARK_GRAFT_SF_DIR names the data directory (Bench/probe

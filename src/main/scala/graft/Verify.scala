@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 /** Correctness dump: each `SparkEntry.registry` result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (tools/check.py). Both follow
   * registration order, so two dumps of one registry list the same queries
-  * in the same order. */
+  * in the same order. A query that fails leaves no result directory, and
+  * the run exits 1 naming every failed query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
@@ -13,10 +14,42 @@ object Verify {
     val spark = GraftSession.seedForData(
       SparkSession.builder().master(s"local[${GraftSession.cores}]"), sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = dump(spark, sfDir, outDir,
+      SparkEntry.registry.filter(query => only.forall(_.contains(query.name))))
+    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    // — a tab or CR in builder-authored SQL would otherwise make the
+    // driver's json.load fail and silently zero the round's correctness.
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val json = SparkEntry.registry
+      .map(query => s"${q(query.name)}: ${q(query.oracleSql)}").mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Write each query's result to `<outDir>/<name>` and return the names
+    * of those that failed. A query's directory is deleted before it runs,
+    * so a failed query leaves no result from an earlier dump for the
+    * oracle compare to pass on.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[Query]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.registry
-      .filter(query => only.forall(_.contains(query.name)))
-      .foreach { case Query(name, plan, _) =>
+    queries.flatMap { case Query(name, plan, _) =>
+      val dir = new org.apache.hadoop.fs.Path(outDir, name)
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
       try {
         val df = plan(spark, sfDir)
         // Type guard: the driver's result hash is TYPE-sensitive while
@@ -46,27 +79,13 @@ object Verify {
         // (the compare tools glob part files either way)
         val out = if (sys.env.get("SPARK_GRAFT_NO_COALESCE").contains("1")) df
                   else df.coalesce(1)
-        out.write.mode("overwrite").parquet(s"$outDir/$name")
+        out.write.parquet(dir.toString)
+        None
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.registry
-      .map(query => s"${q(query.name)}: ${q(query.oracleSql)}").mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

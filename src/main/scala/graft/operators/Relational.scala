@@ -576,8 +576,8 @@ object Relational {
     * DETERMINISTIC portable sketches so the driver hash-checks them
     * (Spark's builtin approx_count_distinct/percentile_approx are
     * HLL++/KLL — engine-private layouts no oracle can reproduce; the
-    * builtins stay available and the flag-gated ApproxDistinctRewrite in
-    * GraftExtensions rewrites them onto this same KMV):
+    * builtins stay available, and SQL reaches this same KMV by name as
+    * `graft_kmv_distinct`):
     *  - distinct counts: the KMV TypedImperativeAggregate (k=1024 →
     *    ~3% s.e., constant state per group, map-side partial merge);
     *  - quantiles: a hash-Bernoulli 1/8 sample (rows whose md5-62 row-key

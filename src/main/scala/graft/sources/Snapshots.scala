@@ -87,145 +87,61 @@ object Snapshots {
       stats.contains(column) && !hasNulls(column)
   }
 
-  /** Trailing sentinel line closing every manifest. The claim point is
-    * the create-EXCLUSIVE manifest create, but on filesystems where
+  /** Trailing sentinel line closing every manifest and ref. The claim
+    * point is the create-EXCLUSIVE create, but on filesystems where
     * create and write are separately visible (local FS, HDFS — object
-    * stores PUT atomically) a concurrent reader can open a manifest
-    * whose bytes are still in flight and see a TORN prefix: the
-    * append-race spec caught exactly this, a rebasing appender reading
-    * a half-written parent list and silently dropping rows. A manifest
-    * is complete iff its last line is the terminator; readers spin
-    * briefly until it appears.
+    * stores PUT atomically) a concurrent reader can open a file whose
+    * bytes are still in flight and see a TORN prefix: the append-race
+    * spec caught exactly this, a rebasing appender reading a half-written
+    * parent list and silently dropping rows. A file is complete iff its
+    * last line is the terminator; [[readTerminated]] re-reads briefly
+    * until it appears and otherwise REFUSES the file — a prefix is never
+    * guessed complete, whatever its age. A file that stays unterminated
+    * was left by a writer that died mid-write (or before any byte
+    * landed). Repair: if no writer is alive, delete the file — a torn
+    * manifest drops its version (its staged data files are
+    * [[vacuumOrphans]]' documented class), a torn ref drops its tag.
     */
   private val Terminator = "#end"
 
-  /** All lines of a complete manifest (note line first, terminator
-    * stripped), retrying torn reads — see [[Terminator]].
-    *
-    * Terminator-less manifests are NOT bricked: a manifest written by a
-    * pre-terminator writer (legacy format) — or left by a writer that
-    * died after some bytes landed — never gains the sentinel, and
-    * failing forever would make the whole table permanently unreadable
-    * (currentVersion counts the manifest, appends read the parent's
-    * lines). Instead, a non-empty manifest whose content is IDENTICAL
-    * across several spaced re-reads is accepted as complete: an
-    * in-flight writer's bytes are still landing (content grows between
-    * reads, microseconds apart in practice), a legacy or crashed
-    * writer's never change — AND whose mtime is at least
-    * the legacy-accept age old. The age gate NARROWS (it cannot fully
-    * close) the stalled-writer window: a writer paused mid-write (GC
-    * pause, multi-chunk flush of a >4KB manifest) exposes a prefix that
-    * is byte-stable for tens of milliseconds, but its file is usually
-    * FRESH — any flush it eventually makes bumps mtime and resets the
-    * gate — while a legacy or crashed writer's manifest only ages. A
-    * writer stalled LONGER than the window, or reader/writer clock skew
-    * exceeding it on a remote FS, can still get a terminator-less prefix
-    * accepted; the default window (30s) is sized well past realistic GC
-    * pauses and NTP skew, and is configurable via
-    * `spark.graft.snapshots.legacyAcceptAgeMs` for filesystems with
-    * weaker mtime fidelity. Both content AND stat'd file length must
-    * hold across the stable reads, so a flush that lands between a
-    * content read and the accept (changing length but not yet the read
-    * bytes on an FS with read-path caching) resets the count.
-    * Acceptance emits a WARN naming the manifest so the legacy path is
-    * never silent. The crashed-writer case is indistinguishable from
-    * legacy by construction and accepting its stable, aged prefix
-    * trades a bounded, loudly-logged risk for availability. Truly
-    * empty manifests (claimed, zero bytes) still fail — with the
-    * repair path in the message.
+  /** How long a file without its [[Terminator]] is re-read before it is
+    * refused: a live writer's manifest lands in milliseconds, so this
+    * only has to outlast a writer's GC pause or slow flush.
     */
-  private val StableReads = 5
-  private val StableReadSpacingMs = 25L
-  /** Default minimum manifest age before a terminator-less manifest can
-    * be accepted as legacy/crashed rather than in-flight; override with
-    * `spark.graft.snapshots.legacyAcceptAgeMs`. Assumes reader-vs-writer
-    * clock skew and writer stall pauses are both well under this bound. */
-  private[graft] val LegacyAcceptAgeMsDefault = 30000L
-  private def legacyAcceptAgeMs(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.snapshots.legacyAcceptAgeMs")
-      .map(_.toLong).getOrElse(LegacyAcceptAgeMsDefault)
+  private val TornReadBoundMs = 10000L
+  private val TornReadSpacingMs = 25L
+
+  /** The lines of a manifest or ref before its [[Terminator]], re-reading
+    * a torn file for up to [[TornReadBoundMs]]; fails naming the file and
+    * its repair after that.
+    */
+  private def readTerminated(f: FileSystem, p: Path): Vector[String] = {
+    val deadline = System.currentTimeMillis() + TornReadBoundMs
+    while (true) {
+      val in = f.open(p)
+      val all =
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+        finally in.close()
+      if (all.lastOption.contains(Terminator)) return all.dropRight(1)
+      require(System.currentTimeMillis() < deadline,
+        s"$p has no $Terminator terminator after ${TornReadBoundMs}ms of " +
+          "re-reads: its writer died mid-write. Repair: if no writer is " +
+          s"alive, delete $p (a torn manifest drops its version, a torn " +
+          "ref its tag)")
+      Thread.sleep(TornReadSpacingMs)
+    }
+    Vector.empty // unreachable
+  }
+
+  /** All lines of a complete manifest (note line first, terminator
+    * stripped); a torn manifest is refused — see [[Terminator]].
+    */
   private def manifestLines(spark: SparkSession, table: String,
       version: Int): Seq[String] = {
     val mp = manifestPath(table, version)
     val f = fs(spark, mp)
     require(f.exists(mp), s"no version $version at $table")
-    val acceptAgeMs = legacyAcceptAgeMs(spark)
-    val t0 = System.currentTimeMillis()
-    var attempt = 0
-    var prev: (Vector[String], Long) = null
-    var stable = 0
-    while (true) {
-      // overall wall bound: a manifest whose mtime keeps refreshing
-      // without content ever changing (touch loop, severe clock skew)
-      // must not spin forever on the stable-but-young path. Enforced
-      // only while content is byte-stable (stable > 0): a live writer
-      // still APPENDING past this bound is a different situation — its
-      // changing reads are governed by the torn-write attempt cap — and
-      // must not be reported as a touch loop (an operator reading that
-      // message could delete a manifest a live writer is producing)
-      require(stable == 0 ||
-        System.currentTimeMillis() - t0 < acceptAgeMs * 4 + 10000L,
-        s"manifest $mp neither completed nor aged past the " +
-          s"${acceptAgeMs}ms accept window after ${
-            System.currentTimeMillis() - t0}ms — mtime keeps refreshing " +
-          "with no content change. Check reader/writer clock skew or " +
-          s"raise spark.graft.snapshots.legacyAcceptAgeMs; repair: delete " +
-          s"$mp to drop the version if no writer is alive")
-      val in = f.open(mp)
-      val all =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-        finally in.close()
-      if (all.nonEmpty && all.last == Terminator) return all.dropRight(1)
-      val st = f.getFileStatus(mp)
-      val ageMs = System.currentTimeMillis() - st.getModificationTime
-      if (all.isEmpty && ageMs >= acceptAgeMs)
-        // claimed but zero bytes ever landed, and no writer has touched
-        // it for the full age window: fail fast with the repair path
-        require(false,
-          s"manifest $mp is empty and ${ageMs}ms old — writer died before " +
-            "any content landed. Repair: verify no writer is alive, then " +
-            s"delete $mp to drop the torn version (its staged data files " +
-            "are vacuumOrphans' documented class)")
-      if (all.nonEmpty && (all, st.getLen) == prev) {
-        stable += 1
-        // legacy terminator-less manifest, or a writer that died after
-        // its write: content AND stat'd length settled, and the file is
-        // old enough that no live writer is plausibly mid-flush — accept
-        // it, loudly
-        if (stable >= StableReads && ageMs >= acceptAgeMs) {
-          System.err.println(
-            s"[snapshots] WARN accepting terminator-less manifest $mp " +
-              s"(${all.size} lines, stable over $stable reads, ${ageMs}ms " +
-              "old) as legacy/crashed-writer format")
-          return all
-        }
-      } else {
-        stable = 0
-        // only CHANGING (or first) reads count against the torn-write
-        // cap: a content-stable manifest that is merely YOUNGER than the
-        // accept-age window is not torn — it waits the window out below,
-        // which the 400×25ms cap could never fit now that the default
-        // window is 30s (a stable legacy manifest seconds old must
-        // bridge to the gate, not die at ~10s with a torn-write message)
-        attempt += 1
-      }
-      prev = (all, st.getLen)
-      require(attempt < 400,
-        s"manifest $mp still changing after $attempt reads — torn write " +
-          "or a writer died before any content landed. Repair: verify no " +
-          s"writer is alive, then delete $mp to drop the torn version " +
-          "(its staged data files are vacuumOrphans' documented class)")
-      // stable-but-young: no point re-reading every 25ms for the rest of
-      // the age window; sleep toward the gate in bounded steps so a
-      // late flush (which resets both stability and the gate) is still
-      // noticed within a second
-      val sleepMs =
-        if (stable >= StableReads) math.min(1000L, math.max(
-          StableReadSpacingMs, acceptAgeMs - ageMs))
-        else StableReadSpacingMs
-      Thread.sleep(sleepMs)
-    }
-    Nil // unreachable
+    readTerminated(f, mp)
   }
 
   /** The raw manifest lines of a version (after the note line). */
@@ -826,26 +742,16 @@ object Snapshots {
     finally out.close()
   }
 
-  /** Resolve a tag to its version, retrying torn reads like
-    * [[manifestLines]]; loud if the tag does not exist.
+  /** Resolve a tag to its version; loud if the tag does not exist, and a
+    * torn ref is refused like a torn manifest (see [[Terminator]]).
     */
   def resolveTag(spark: SparkSession, table: String, name: String): Int = {
     val rp = refPath(table, name)
     val f = fs(spark, rp)
     require(f.exists(rp), s"no tag '$name' at $table")
-    var attempt = 0
-    while (true) {
-      val in = f.open(rp)
-      val all =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-        finally in.close()
-      if (all.length == 2 && all.last == Terminator) return all.head.toInt
-      attempt += 1
-      require(attempt < 200,
-        s"ref $rp still incomplete after $attempt reads — torn write")
-      Thread.sleep(10)
-    }
-    -1 // unreachable
+    val lines = readTerminated(f, rp)
+    require(lines.size == 1, s"ref $rp holds ${lines.size} lines, not one version")
+    lines.head.toInt
   }
 
   /** All tags of a table as (name, version), name-sorted. */

@@ -90,28 +90,6 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(r._1 == exact && r._2 == exact)
   }
 
-  test("ApproxDistinctRewrite: opt-in flag swaps exact distinct for KMV") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val li = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
-    def q() = li.groupBy($"l_returnflag")
-      .agg(countDistinct($"l_partkey").as("n"))
-    val exact = q().as[(String, Long)].collect().toMap
-    try {
-      spark.conf.set("spark.graft.approxCountDistinct.enabled", "true")
-      val approx = q()
-      assert(approx.queryExecution.optimizedPlan.toString
-        .contains("graft_kmv_distinct"), "rule must fire when enabled")
-      approx.as[(String, Long)].collect().foreach { case (flag, est) =>
-        val ex = exact(flag)
-        assert(math.abs(est.toDouble - ex) / ex < 0.15, s"$flag: $est vs $ex")
-      }
-    } finally spark.conf.set("spark.graft.approxCountDistinct.enabled", "false")
-    // disabled again: byte-identical exact results
-    assert(q().as[(String, Long)].collect().toMap == exact)
-    assert(!q().queryExecution.optimizedPlan.toString.contains("graft_kmv_distinct"))
-  }
-
   test("AC automaton counts == naive all-occurrence counts (incl. nested patterns)") {
     import graft.expressions.AcAutomaton
     // "can" ends inside every "scan" (collapsed output links), "art"

@@ -829,70 +829,85 @@ class FormatsSpec extends SparkSpec {
       == d2.select($"event_id").as[Long].collect().sorted.toSeq)
   }
 
-  test("legacy terminator-less manifest reads after stabilization; empty torn manifest fails with the repair path") {
-    import graft.sources.Snapshots
-    val table = Files.createTempDirectory("snap_legacy").toString + "/t"
-    Snapshots.commitOverwrite(Seq(1L, 2L).toDF("id"), table, "v1")
-    Snapshots.commitAppend(Seq(3L).toDF("id"), table, "v2")
-    val f = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // strip v2's terminator in place — the pre-terminator manifest format
-    val mp = new org.apache.hadoop.fs.Path(s"$table/_versions/v00002.manifest")
-    val src = scala.io.Source.fromInputStream(f.open(mp), "UTF-8")
-    val lines = try src.getLines().toVector finally src.close()
-    assert(lines.last == "#end")
-    f.delete(mp, false)
-    val out = f.create(mp, true)
-    try out.write(lines.dropRight(1).mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    // a legacy manifest is OLD by definition — backdate past the age gate
-    // (a fresh terminator-less file is treated as an in-flight writer)
-    f.setTimes(mp, System.currentTimeMillis() - 60000L, -1L)
-    // the table is NOT bricked: stable re-reads accept the legacy manifest
-    assert(Snapshots.readVersion(spark, table)
-      .as[Long].collect().toSet == Set(1L, 2L, 3L))
-    // and appends on top of it keep the legacy lines
-    val v3 = Snapshots.commitAppend(Seq(4L).toDF("id"), table, "v3")
-    assert(Snapshots.readVersion(spark, table, Some(v3))
-      .as[Long].collect().toSet == Set(1L, 2L, 3L, 4L))
-    // a zero-byte manifest (claimed, writer died before content) still
-    // fails loudly, naming the repair path
-    val torn = new org.apache.hadoop.fs.Path(s"$table/_versions/v00004.manifest")
-    f.create(torn, true).close()
-    f.setTimes(torn, System.currentTimeMillis() - 60000L, -1L)
-    val e = intercept[IllegalArgumentException] {
-      Snapshots.readVersion(spark, table).collect()
-    }
-    assert(e.getMessage.contains("delete"), s"no repair path: ${e.getMessage}")
+  /** Rewrite a snapshot file in place with `text`, as a writer's bytes
+    * land: plain file IO, with the Hadoop checksum sibling removed so the
+    * local filesystem reads the new bytes unverified.
+    */
+  private def rewriteRaw(file: String, text: String,
+      opts: java.nio.file.OpenOption*): Unit = {
+    val p = java.nio.file.Paths.get(file)
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    Files.write(p, text.getBytes("UTF-8"), opts: _*)
   }
 
-  test("a stable legacy manifest YOUNGER than the accept window bridges to the gate instead of dying at the torn-write cap") {
+  private def readLines(file: String): Vector[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.readAllLines(java.nio.file.Paths.get(file)).asScala.toVector
+  }
+
+  test("a manifest without its terminator is refused at any age") {
     import graft.sources.Snapshots
-    val table = Files.createTempDirectory("snap_young").toString + "/t"
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def twoVersions(name: String): String = {
+      val table = Files.createTempDirectory(name).toString + "/t"
+      Snapshots.commitOverwrite(Seq(1L, 2L).toDF("id"), table, "v1")
+      Snapshots.commitAppend(Seq(3L).toDF("id"), table, "v2")
+      table
+    }
+    def stripTerminator(file: String): Unit = {
+      val lines = readLines(file)
+      assert(lines.last == "#end")
+      rewriteRaw(file, lines.dropRight(1).mkString("", "\n", "\n"))
+    }
+    // each case is re-read for the full torn-read bound before it is
+    // refused, so the four run side by side
+    def refused(file: String)(read: => Any): Future[Unit] = Future {
+      val e = intercept[IllegalArgumentException](read)
+      assert(e.getMessage.contains(file) && e.getMessage.contains("delete"),
+        s"no file or repair in: ${e.getMessage}")
+    }
+    val aged = twoVersions("snap_torn_aged")
+    val agedManifest = s"$aged/_versions/v00002.manifest"
+    stripTerminator(agedManifest)
+    new java.io.File(agedManifest).setLastModified(System.currentTimeMillis() - 60000L)
+    val fresh = twoVersions("snap_torn_fresh")
+    val freshManifest = s"$fresh/_versions/v00002.manifest"
+    stripTerminator(freshManifest)
+    val empty = twoVersions("snap_torn_empty")
+    val emptyManifest = s"$empty/_versions/v00003.manifest"
+    rewriteRaw(emptyManifest, "")
+    val tagged = twoVersions("snap_torn_ref")
+    Snapshots.tag(spark, tagged, "run-a", 1)
+    val ref = s"$tagged/_refs/run-a.ref"
+    stripTerminator(ref)
+    Await.result(Future.sequence(Seq(
+      refused(agedManifest)(Snapshots.readVersion(spark, aged)),
+      refused(freshManifest)(Snapshots.readVersion(spark, fresh)),
+      refused(emptyManifest)(Snapshots.readVersion(spark, empty)),
+      refused(ref)(Snapshots.resolveTag(spark, tagged, "run-a")))), 2.minutes)
+  }
+
+  test("a manifest whose writer is still in flight is read once its terminator lands") {
+    import graft.sources.Snapshots
+    val table = Files.createTempDirectory("snap_inflight").toString + "/t"
     Snapshots.commitOverwrite(Seq(1L, 2L).toDF("id"), table, "v1")
-    val f = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mp = new org.apache.hadoop.fs.Path(s"$table/_versions/v00001.manifest")
-    val src = scala.io.Source.fromInputStream(f.open(mp), "UTF-8")
-    val lines = try src.getLines().toVector finally src.close()
-    f.delete(mp, false)
-    val out = f.create(mp, true)
-    try out.write(lines.dropRight(1).mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    // mtime is NOW — younger than the window. With a 2s window the read
-    // must WAIT OUT the gate and then accept (the old code spun its 400
-    // 25ms retries ≈ 10s and failed with a misleading torn-write error
-    // whenever the window exceeded that; content-stable young reads no
-    // longer count against the torn cap)
-    spark.conf.set("spark.graft.snapshots.legacyAcceptAgeMs", "2000")
-    try {
-      val t0 = System.currentTimeMillis()
-      assert(Snapshots.readVersion(spark, table)
-        .as[Long].collect().toSet == Set(1L, 2L))
-      val waited = System.currentTimeMillis() - t0
-      assert(waited >= 1000L, s"accepted a ${waited}ms-old terminator-less " +
-        "manifest without waiting out the age gate")
-    } finally spark.conf.unset("spark.graft.snapshots.legacyAcceptAgeMs")
+    Snapshots.commitAppend(Seq(3L).toDF("id"), table, "v2")
+    val manifest = s"$table/_versions/v00002.manifest"
+    val lines = readLines(manifest)
+    assert(lines.last == "#end") // note, v1's files, v2's file, #end
+    // v2's own file line has not landed: read as is, v2 would lose row 3
+    rewriteRaw(manifest, lines.dropRight(2).mkString("", "\n", "\n"))
+    val writer = new Thread(() => {
+      Thread.sleep(200)
+      rewriteRaw(manifest, lines.takeRight(2).mkString("", "\n", "\n"),
+        java.nio.file.StandardOpenOption.APPEND)
+    })
+    writer.start()
+    try assert(Snapshots.readVersion(spark, table)
+      .as[Long].collect().toSet == Set(1L, 2L, 3L))
+    finally writer.join()
   }
 
   test("epoch-stamped commits: replayed epochs no-op for append and merge; history stays time-travelable") {

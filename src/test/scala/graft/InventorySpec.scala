@@ -4,11 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drift guards over the source tree itself: the session knobs the code
-  * reads are exactly the ones README documents, the runnable entry
-  * points are exactly the listed set, and every driver collect is
-  * annotated with its row bound. A new knob, `main` or collect has to be
-  * documented (or listed) in the same change that adds it.
+/** Drift guards over the source tree itself: the session knobs and
+  * environment variables the code reads are exactly the ones README
+  * documents, the runnable entry points are exactly the listed set, and
+  * every driver collect is annotated with its row bound. A new knob,
+  * variable, `main` or collect has to be documented (or listed) in the
+  * same change that adds it.
   */
 class InventorySpec extends AnyFunSuite {
 
@@ -37,18 +38,31 @@ class InventorySpec extends AnyFunSuite {
       s"missing: ${missing.toSeq.sorted.mkString(", ")}")
   }
 
+  /** The first-column names of the README table under `### heading`. */
+  private def readmeTable(heading: String): Set[String] = {
+    val readme = Files.readAllLines(root.resolve("README.md")).asScala.toSeq
+    val table = readme.dropWhile(_.trim != s"### $heading")
+      .drop(1).dropWhile(l => !l.startsWith("|")).takeWhile(_.startsWith("|"))
+    assert(table.nonEmpty, s"README has no $heading table")
+    val row = """^\|\s*`([^`]+)`""".r
+    table.flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
+  }
+
+  /** Every first capture group of `read` over the main sources. */
+  private def readsInCode(read: scala.util.matching.Regex): Set[String] =
+    mainSources.flatMap { case (_, src) =>
+      read.findAllMatchIn(src).map(_.group(1)) }.toSet
+
   test("every spark.graft.* conf read in src/main is in README's Session configuration table, and vice versa") {
     val read = """\.conf\s*\.\s*(?:get|getOption)\(\s*"(spark\.graft\.[^"]+)"""".r
-    val inCode = mainSources.flatMap { case (_, src) =>
-      read.findAllMatchIn(src).map(_.group(1)) }.toSet
-    val readme = Files.readAllLines(root.resolve("README.md")).asScala.toSeq
-    val table = readme.dropWhile(_.trim != "### Session configuration")
-      .drop(1).dropWhile(l => !l.startsWith("|")).takeWhile(_.startsWith("|"))
-    assert(table.nonEmpty, "README has no Session configuration table")
-    val row = """^\|\s*`(spark\.graft\.[^`]+)`""".r
-    val documented = table.flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
     diff("code-read knobs (extra) vs README table (missing)",
-      inCode, documented).foreach(fail(_))
+      readsInCode(read), readmeTable("Session configuration")).foreach(fail(_))
+  }
+
+  test("every environment variable read in src/main is in README's Environment variables table, and vice versa") {
+    val read = """sys\.env\s*\.\s*(?:get|getOrElse)\(\s*"([^"]+)"""".r
+    diff("code-read env vars (extra) vs README table (missing)",
+      readsInCode(read), readmeTable("Environment variables")).foreach(fail(_))
   }
 
   test("the objects defining `def main` in src/main are exactly the listed entry points") {
