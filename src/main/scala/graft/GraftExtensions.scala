@@ -8,10 +8,13 @@ import graft.functions.TextFunctions
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * Catalyst expressions as SQL functions, so the SQL surface is as complete
-  * as the DataFrame surface, and injects the one plan rule: the as-of
-  * join planner strategy ([[graft.plans.AsofJoinStrategy]]). There is no
-  * optimizer rewrite — an approximate distinct count is always the
-  * explicit `graft_kmv_distinct` call, never a silent swap. Activate with
+  * as the DataFrame surface, and injects two plan rules: the as-of join
+  * planner strategy ([[graft.plans.AsofJoinStrategy]]) and the AQE runtime
+  * rule [[graft.plans.CoalesceSmallStages]], which runs the rest of a query
+  * whose inputs are small materialized shuffle stages on one partition, so
+  * a sort or window over a grain-sized aggregate plans no exchange of its
+  * own. Neither rewrites results — an approximate distinct count is always
+  * the explicit `graft_kmv_distinct` call, never a silent swap. Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)`.
   *
@@ -44,6 +47,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // whole-plan operator: AS-OF join (logical node -> sort-merge exec)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    // re-optimization after each wave of AQE query stages
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.CoalesceSmallStages)
 
     def register(name: String, builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((

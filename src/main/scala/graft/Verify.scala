@@ -5,17 +5,21 @@ import java.nio.file.{Files, Paths}
   * oracle_sql.json, for the DuckDB compare (tools/check.py). Both follow
   * registration order, so two dumps of one registry list the same queries
   * in the same order. A query that fails leaves no result directory, and
-  * the run exits 1 naming every failed query. */
+  * the run exits 1 naming every failed query. An optional third argument
+  * names the queries to dump; an unknown name exits 1 before any runs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     // Dev-only third arg: comma-separated query names to (re)dump.
-    val only: Option[Set[String]] = rest.headOption.map(_.split(',').toSet)
+    val queries = try selected(rest.headOption) catch {
+      case e: IllegalArgumentException =>
+        System.err.println(s"[verify] ${e.getMessage}")
+        sys.exit(1)
+    }
     val spark = GraftSession.seedForData(
       SparkSession.builder().master(s"local[${GraftSession.cores}]"), sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val failed = dump(spark, sfDir, outDir,
-      SparkEntry.registry.filter(query => only.forall(_.contains(query.name))))
+    val failed = dump(spark, sfDir, outDir, queries)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -37,6 +41,20 @@ object Verify {
         s"[verify] ${failed.size} queries failed: ${failed.mkString(",")}")
       sys.exit(1)
     }
+  }
+
+  /** The registry queries `only` names (comma-separated), in registration
+    * order, or all of them when it is absent. A name that is not registered
+    * throws, naming every unknown entry: a typo must not shrink the dump.
+    */
+  def selected(only: Option[String]): Seq[Query] = only match {
+    case None => SparkEntry.registry
+    case Some(names) =>
+      val wanted = names.split(',').toSet
+      val unknown = wanted -- SparkEntry.queries.keySet
+      if (unknown.nonEmpty) throw new IllegalArgumentException(
+        s"unknown query names, nothing run: ${unknown.toSeq.sorted.mkString(",")}")
+      SparkEntry.registry.filter(q => wanted.contains(q.name))
   }
 
   /** Write each query's result to `<outDir>/<name>` and return the names

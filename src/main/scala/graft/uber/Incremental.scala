@@ -52,6 +52,9 @@ import org.apache.spark.sql.types.StructType
   * task folds it, and its aggregates, windows, sorts and limits plan no
   * exchange and no range-sampling job. At these sizes the tick is bound by
   * job count, not by data, and an exchange would add 3 jobs per fold.
+  * The folds keep this explicit `coalesce(1)`: `plans.CoalesceSmallStages`
+  * reaches only shuffle stages, whose runtime size AQE knows, and a fold
+  * reads parquet files, which carry no runtime statistics.
   *
   * Correctness relies on month-sealed grains: each partial row belongs to
   * exactly one `month_num`, so re-deriving some months never double-counts

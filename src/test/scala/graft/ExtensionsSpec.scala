@@ -1,19 +1,99 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition, Union}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.adaptive.{
+  AdaptiveSparkPlanHelper, LogicalQueryStage, ShuffleQueryStageExec}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import graft.plans.CoalesceSmallStages
 
-/** The SQL surface of the custom expressions, registered via
-  * SparkSessionExtensions — a session built with the extension can call the
-  * sketch functions from plain SQL.
+/** The session extensions: the SQL surface of the custom expressions — a
+  * session built with the extension can call the sketch functions from
+  * plain SQL — and the AQE rule [[CoalesceSmallStages]].
   */
-class ExtensionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = GraftSession.configure(
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .withExtensions(new GraftExtensions)
-  ).getOrCreate()
+class ExtensionsSpec extends SparkSpec {
+
+  private val plans = new AdaptiveSparkPlanHelper {}
+
+  /** Collects `df` and returns its rows in a canonical order, the Spark
+    * jobs it ran and the partitionings of its final AQE plan's exchanges.
+    */
+  private def run(df: => DataFrame): (Seq[String], Int, Seq[String]) = {
+    var rows = Seq.empty[String]
+    var exchanges = Seq.empty[String]
+    val jobs = jobsLaunched {
+      val d = df
+      rows = d.collect().map(_.mkString("|")).toSeq.sorted
+      exchanges = plans.collect(d.queryExecution.executedPlan) {
+        case e: ShuffleExchangeLike => e.outputPartitioning.getClass.getSimpleName
+      }
+    }
+    (rows, jobs, exchanges)
+  }
+
+  private def ranges(exchanges: Seq[String]): Int =
+    exchanges.count(_ == classOf[RangePartitioning].getSimpleName)
+
+  /** A grain-sized aggregate (97 keys) over a 20k-row range. */
+  private def counts: DataFrame = spark.range(0, 20000, 1, 4)
+    .select((col("id") % 97).as("k")).groupBy("k").count()
+
+  test("the small-stage rule drops the sort and window exchanges over a small aggregate") {
+    def sorted = counts.orderBy(desc("count"), asc("k"))
+    def ranked = counts
+      .withColumn("r", rank().over(Window.partitionBy(col("k") % 7).orderBy(desc("count"))))
+      .filter(col("r") <= 3)
+    Seq(() => sorted, () => ranked).foreach { df =>
+      val (rows, jobs, exchanges) = run(df())
+      val (rowsOff, jobsOff, exchangesOff) = withConf(smallStageRuleExcluded)(run(df()))
+      // only the aggregate's own exchange is left
+      assert(exchanges.size == 1 && ranges(exchanges) == 0, exchanges)
+      assert(exchangesOff.size == 2, exchangesOff)
+      assert(jobs < jobsOff, s"$jobs jobs with the rule, $jobsOff without")
+      assert(rows == rowsOff)
+    }
+  }
+
+  test("the small-stage rule keeps the plan above minPartitionSize, an explode, a cross join and a repartition(n)") {
+    def keeps(df: => DataFrame): Unit = {
+      val (rows, jobs, exchanges) = run(df)
+      val (rowsOff, jobsOff, exchangesOff) = withConf(smallStageRuleExcluded)(run(df))
+      assert(ranges(exchanges) == 1, exchanges)
+      assert(exchanges == exchangesOff && jobs == jobsOff && rows == rowsOff)
+    }
+    // the same aggregate against a 1 KB bound
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1024")(
+      keeps(counts.orderBy(desc("count"), asc("k"))))
+    keeps(counts.select(col("k"), explode(array(col("count"), col("k"))).as("x"))
+      .orderBy("k", "x"))
+    keeps(counts.crossJoin(counts.select(col("k").as("k2"))).orderBy("k", "k2"))
+    keeps(counts.repartition(3).orderBy("k"))
+  }
+
+  test("the small-stage rule waits while a leaf is not a materialized stage") {
+    // a materialized shuffle stage of the small aggregate, as AQE holds it
+    val done = counts
+    done.collect()
+    val stage = plans.collectFirst(done.queryExecution.executedPlan) {
+      case s: ShuffleQueryStageExec => s
+    }.get
+    assert(stage.isMaterialized)
+    val lqs = LogicalQueryStage(done.queryExecution.optimizedPlan, stage)
+    // beside a local relation it fires; beside a pending file scan it waits
+    val local = Union(lqs, LocalRelation(lqs.output))
+    val wrapped = CoalesceSmallStages(local)
+    assert(wrapped == Union(Repartition(1, shuffle = false, lqs), LocalRelation(lqs.output)))
+    val fileScan = Tables.load(spark, sfDir, "lineitem")
+      .select(col("l_partkey").as("k"), col("l_partkey").as("count"))
+      .queryExecution.optimizedPlan
+    val pending = Union(lqs, fileScan)
+    assert(CoalesceSmallStages(pending) == pending)
+    // a plan it has wrapped stays as it is
+    assert(CoalesceSmallStages(wrapped) == wrapped)
+  }
 
   test("sketch functions are callable from SQL") {
     val r = spark.sql(

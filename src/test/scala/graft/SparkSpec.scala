@@ -27,6 +27,20 @@ trait SparkSpec extends AnyFunSuite {
     mark() - before - 1
   }
 
+  /** Runs `f` with the given session confs set, then restores them. */
+  def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The conf that switches [[graft.plans.CoalesceSmallStages]] off. */
+  val smallStageRuleExcluded: (String, String) =
+    "spark.sql.adaptive.optimizer.excludedRules" -> graft.plans.CoalesceSmallStages.ruleName
+
   /** Connected components by in-memory BFS closure — the independent
     * oracle the Spark components paths are held to: every node maps to
     * the minimum node it reaches. `nodes` must cover every endpoint.

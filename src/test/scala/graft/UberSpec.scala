@@ -79,6 +79,19 @@ class UberSpec extends SparkSpec {
 
   private def model(name: String) = Models.all.find(_.name == name).get
 
+  /** A result's rows in a canonical order, for results whose ties may
+    * come out in any order.
+    */
+  private def norm(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq
+      .sortBy(_.map(v => if (v == null) "" else v.toString).mkString("|"))
+
+  /** Each SQL model written as parquet under `out`, as a pipeline pass
+    * writes them.
+    */
+  private def writeModels(out: String): Unit = Models.all.foreach(m =>
+    Runner.runModel(spark, m).write.mode("overwrite").parquet(s"$out/${m.name}"))
+
   // runAll re-ingests the same CSVs into the same warehouse, so the
   // fixture's views end as they started
   private lazy val built: (String, Map[String, Long]) = {
@@ -136,9 +149,6 @@ class UberSpec extends SparkSpec {
       val mat = Incremental.readModel(spark, out, m.name)
       assert(sqlOut.columns.toSeq == mat.columns.toSeq,
         s"${m.name}: column mismatch ${sqlOut.columns.toSeq} vs ${mat.columns.toSeq}")
-      def norm(df: DataFrame): Seq[Seq[Any]] =
-        df.collect().map(_.toSeq).toSeq
-          .sortBy(_.map(v => if (v == null) "" else v.toString).mkString("|"))
       assert(norm(sqlOut) == norm(mat), s"${m.name}: row mismatch")
     }
   }
@@ -266,9 +276,45 @@ class UberSpec extends SparkSpec {
   test("runAll runs a fixed number of Spark jobs") {
     val (csv, wh) = dirs
     val out = Files.createTempDirectory("uber_jobs").toString
-    // 3 source writes + 7 checks + Incremental.fullBuild's 11
+    // 3 source writes + 6 checks + Incremental.fullBuild's 11; 7 checks
+    // with the small-stage rule excluded
     val jobs = jobsLaunched(Runner.runAll(spark, csv, wh, out))
-    assert(jobs == 21, s"runAll launched $jobs jobs")
+    val jobsOff = withConf(smallStageRuleExcluded)(jobsLaunched(Runner.runAll(spark, csv, wh, out)))
+    assert((jobs, jobsOff) == ((20, 21)), s"runAll launched $jobs jobs, $jobsOff with the rule excluded")
+  }
+
+  test("the six SQL models run a fixed number of Spark jobs") {
+    ingested()
+    val on = Files.createTempDirectory("uber_models").toString
+    val off = Files.createTempDirectory("uber_models_off").toString
+    val jobs = jobsLaunched(writeModels(on))
+    val jobsOff = withConf(smallStageRuleExcluded)(jobsLaunched(writeModels(off)))
+    // 31 with the rule excluded, as before it: each sort and window over a
+    // grain-sized aggregate planned its own exchange
+    assert((jobs, jobsOff) == ((21, 31)), s"$jobs jobs, $jobsOff with the small-stage rule excluded")
+    Models.all.foreach { m =>
+      assert(norm(spark.read.parquet(s"$on/${m.name}")) ==
+        norm(spark.read.parquet(s"$off/${m.name}")), s"${m.name}: row mismatch")
+    }
+  }
+
+  test("the SQL models and a query per family do not depend on the small-stage rule or partitions") {
+    ingested()
+    // one cheap query per registry family, at the spec's sf0.001
+    val queries = Seq("q8_window_rank", "t5_vocab", "d1_exact_dedup", "v3_embedding_neardup",
+      "g9_walks", "mm2_frame_sample", "p6_epoch_shuffle", "q23_asof_join")
+    val names = Models.all.map(_.name) ++ queries
+    def results(): Seq[Seq[Seq[Any]]] =
+      Models.all.map(m => norm(Runner.runModel(spark, m))) ++
+        queries.map(q => norm(SparkEntry.queries(q)(spark, sfDir)))
+    val configs = for (partitions <- Seq("1", "7"); rule <- Seq(Nil, Seq(smallStageRuleExcluded)))
+      yield ("spark.sql.shuffle.partitions" -> partitions) +: rule
+    val expected = withConf(configs.head: _*)(results())
+    configs.tail.foreach { conf =>
+      withConf(conf: _*)(names.zip(results()).zip(expected).foreach {
+        case ((name, got), want) => assert(got == want, s"$name under $conf")
+      })
+    }
   }
 
   test("source checks: fixture passes the DDL contract; violations are caught") {
@@ -355,9 +401,13 @@ class UberSpec extends SparkSpec {
   test("the source checks run a fixed number of Spark jobs") {
     ingested()
     val jobs = jobsLaunched(Runner.runChecks(spark))
-    // dims: 2 shuffle stages + the collect; fact: 2 dim broadcasts + the
-    // aggregate's 2 stages
-    assert(jobs == 7, s"the 8 source checks launched $jobs jobs")
+    val jobsOff = withConf(smallStageRuleExcluded)(jobsLaunched(Runner.runChecks(spark)))
+    // dims: the key groups' shuffle stage + the collect, whose per-table
+    // aggregate reads that small stage on one partition (its own shuffle
+    // stage, with the small-stage rule excluded); fact: 2 dim broadcasts +
+    // the aggregate's 2 stages
+    assert((jobs, jobsOff) == ((6, 7)),
+      s"the 8 source checks launched $jobs jobs, $jobsOff with the rule excluded")
   }
 
   test("a failing source check aborts runAll before any model is written") {

@@ -21,4 +21,13 @@ class VerifySpec extends SparkSpec {
     assert(!Files.exists(stale), "the stale result survived the failed query")
     assert(spark.read.parquet(out.resolve("ok").toString).count() == 3)
   }
+
+  test("an unknown query name is refused before any query runs, naming it") {
+    val e = intercept[IllegalArgumentException](
+      Verify.selected(Some("q10_share_month,no_such_query,q99_typo")))
+    assert(e.getMessage.contains("no_such_query,q99_typo"), e.getMessage)
+    assert(Verify.selected(Some("q23_asof_join,q10_share_month")).map(_.name) ==
+      Seq("q10_share_month", "q23_asof_join"))
+    assert(Verify.selected(None) == SparkEntry.registry)
+  }
 }
