@@ -158,8 +158,11 @@ object Models {
   // -------------------------------------- pickup_percentile_by_base_per_month
   /** Reference `dbt_Models/pickup_percentile_by_base_per_month.sql`:
     * share-of-month via a CORRELATED SCALAR SUBQUERY over a twice-referenced
-    * CTE (A5+C3+X5) — kept literal (Catalyst decorrelates); the fold uses
-    * the equivalent window sum.
+    * CTE (A5+C3+X5) — kept literal. Catalyst decorrelates it into a second
+    * aggregate and a left outer join, which
+    * [[graft.plans.CorrelatedCountToWindow]] turns into a window sum over
+    * `counting_base`, so the fact is scanned once; the fold uses the same
+    * window sum.
     */
   val pickupPercentileByBasePerMonth: Model = Model(
     name = "pickup_percentile_by_base_per_month",
@@ -189,8 +192,8 @@ object Models {
       |counting_cte AS (
       |    -- Spark disallows BigQuery's correlated scalar subquery inside a
       |    -- grouped SELECT (SCALAR_SUBQUERY_IS_IN_GROUP_BY_OR_AGGREGATE_FUNCTION);
-      |    -- hoisting it one CTE up preserves the A5 semantics verbatim and
-      |    -- Catalyst still decorrelates it to an aggregate + left outer join.
+      |    -- hoisting it one CTE up preserves the A5 semantics verbatim; the
+      |    -- decorrelated join becomes a window sum over counting_base.
       |    SELECT counting_base.*,
       |           (SELECT COUNT(*) FROM month_extract AS sub WHERE sub.month = counting_base.month) AS `Count per Month`
       |    FROM counting_base

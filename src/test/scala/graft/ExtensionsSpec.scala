@@ -12,7 +12,8 @@ import graft.plans.CoalesceSmallStages
 
 /** The session extensions: the SQL surface of the custom expressions — a
   * session built with the extension can call the sketch functions from
-  * plain SQL — and the AQE rule [[CoalesceSmallStages]].
+  * plain SQL — the AQE rule [[CoalesceSmallStages]] and the optimizer rule
+  * [[graft.plans.CorrelatedCountToWindow]].
   */
 class ExtensionsSpec extends SparkSpec {
 
@@ -93,6 +94,88 @@ class ExtensionsSpec extends SparkSpec {
     assert(CoalesceSmallStages(pending) == pending)
     // a plan it has wrapped stays as it is
     assert(CoalesceSmallStages(wrapped) == wrapped)
+  }
+
+  /** Parquet tables of trips: key `k` (NULL on every 13th row), `x` and
+    * `v`, read back as the views `trips` (400 rows) and `other_trips` (the
+    * first 300 of them, in another file).
+    */
+  private lazy val trips: Unit = {
+    val root = java.nio.file.Files.createTempDirectory("trips")
+    Seq("trips" -> 400, "other_trips" -> 300).foreach { case (name, n) =>
+      val dir = root.resolve(name).toString
+      spark.range(0, n, 1, 4).select(
+        when(col("id") % 13 =!= 0, col("id") % 5).as("k"),
+        (col("id") % 3).cast("string").as("x"),
+        (col("id") % 7).as("v")).write.parquet(dir)
+      spark.read.parquet(dir).createOrReplaceTempView(name)
+    }
+  }
+
+  /** The percentile model's shape over `trips`: a per-(k, x) count and a
+    * correlated subquery over the same CTE, `total`, with the parts a
+    * negative case swaps out.
+    */
+  private def shareSql(
+      cte: String = "SELECT k, x, v FROM trips",
+      agg: String = "COUNT(*)",
+      sub: String = "SELECT COUNT(*) FROM m AS sub WHERE sub.k = counted.k"): String =
+    s"""WITH m AS ($cte),
+       |counted AS (SELECT k, x, $agg AS c FROM m GROUP BY k, x),
+       |shared AS (SELECT counted.*, ($sub) AS total FROM counted)
+       |SELECT k, x, c, total, c / total * 100 AS share FROM shared""".stripMargin
+
+  private def nodes(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect { case p => p.nodeName }
+
+  test("the count rule turns a correlated COUNT over the same rows into one window") {
+    trips
+    val (rows, jobs, _) = run(spark.sql(shareSql()))
+    val (rowsOff, jobsOff, _) = withConf(countRuleExcluded)(run(spark.sql(shareSql())))
+    val plan = nodes(spark.sql(shareSql()))
+    assert(!plan.contains("Join") && plan.count(_ == "Window") == 1, plan)
+    assert(withConf(countRuleExcluded)(nodes(spark.sql(shareSql()))).contains("Join"))
+    assert(jobs < jobsOff, s"$jobs jobs with the rule, $jobsOff without")
+    assert(rows == rowsOff)
+  }
+
+  test("the count rule gives a NULL key a count of 0, as the outer join does") {
+    trips
+    def nullKey() = spark.sql(shareSql()).filter(col("k").isNull)
+      .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3), r.isNullAt(4))).toSet
+    val got = nullKey()
+    // one row per x, each with its own count, a total of 0 and a NULL share
+    assert(got.map(_._1) == Set("0", "1", "2") && got.forall(r => r._2 > 0 && r._3 == 0L && r._4), got)
+    assert(got == withConf(countRuleExcluded)(nullKey()))
+  }
+
+  test("the count rule keeps the plan of every other subquery shape") {
+    trips
+    def keeps(sql: String): Unit = {
+      val on = spark.sql(sql)
+      val off = withConf(countRuleExcluded)(spark.sql(sql))
+      val (plan, planOff) = (nodes(on), withConf(countRuleExcluded)(nodes(off)))
+      assert(plan.contains("Join") && plan == planOff, s"$plan\n$sql")
+      assert(run(on)._1 == withConf(countRuleExcluded)(run(off)._1), sql)
+    }
+    // an extra inner predicate
+    keeps(shareSql(sub = "SELECT COUNT(*) FROM m AS sub WHERE sub.k = counted.k AND sub.x = '1'"))
+    // other aggregates in the subquery
+    Seq("MIN(v)", "MAX(v)", "AVG(v)", "SUM(v)").foreach(a =>
+      keeps(shareSql(sub = s"SELECT $a FROM m AS sub WHERE sub.k = counted.k")))
+    // a non-equi correlation
+    keeps(shareSql(sub = "SELECT COUNT(*) FROM m AS sub WHERE sub.k <= counted.k"))
+    // a different relation, and the same CTE under a WHERE
+    keeps(shareSql(sub = "SELECT COUNT(*) FROM other_trips AS sub WHERE sub.k = counted.k"))
+    keeps(shareSql(sub = "SELECT COUNT(*) FROM (SELECT * FROM m WHERE v < 6) AS sub WHERE sub.k = counted.k"))
+    // a nondeterministic relation
+    keeps(shareSql(cte = "SELECT k, x, v FROM trips WHERE rand(7) < 0.5"))
+    // a left aggregate with no COUNT(*)
+    keeps(shareSql(agg = "SUM(v)"))
+    // RelationalSpec's q10 form: a SUM over the outer aggregate itself
+    keeps("""WITH m AS (SELECT k, x, COUNT(*) AS cnt FROM trips GROUP BY k, x)
+            |SELECT k, x, cnt, cnt * 100.0 / (SELECT sum(cnt) FROM m sub WHERE sub.k = m.k) AS share
+            |FROM m""".stripMargin)
   }
 
   test("sketch functions are callable from SQL") {

@@ -41,6 +41,10 @@ trait SparkSpec extends AnyFunSuite {
   val smallStageRuleExcluded: (String, String) =
     "spark.sql.adaptive.optimizer.excludedRules" -> graft.plans.CoalesceSmallStages.ruleName
 
+  /** The conf that switches [[graft.plans.CorrelatedCountToWindow]] off. */
+  val countRuleExcluded: (String, String) =
+    "spark.sql.optimizer.excludedRules" -> graft.plans.CorrelatedCountToWindow.ruleName
+
   /** Connected components by in-memory BFS closure — the independent
     * oracle the Spark components paths are held to: every node maps to
     * the minimum node it reaches. `nodes` must cover every endpoint.

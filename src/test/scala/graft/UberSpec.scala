@@ -223,6 +223,11 @@ class UberSpec extends SparkSpec {
     assert(math.abs(shares("Hinter") - 33.33333333333333) < 1e-9)
     assert(out.filter(col("Month") === "January").collect()
       .map(_.getDouble(3)).toSeq == Seq(100.0))
+    // July and the NULL timestamp: no month, so the count per month is 0
+    // and the share is NULL, while each keeps its own count
+    val nullMonth = out.filter(col("Month").isNull).collect()
+      .map(r => (r.getString(0), r.getLong(2), r.isNullAt(3))).toSeq
+    assert(nullMonth == Seq(("Weiter", 1L, true), ("Weiter", 1L, true)))
   }
 
   test("an increment's fact scans prune to the restated pickup_month partition") {
@@ -287,14 +292,19 @@ class UberSpec extends SparkSpec {
     ingested()
     val on = Files.createTempDirectory("uber_models").toString
     val off = Files.createTempDirectory("uber_models_off").toString
+    val noCount = Files.createTempDirectory("uber_models_no_count").toString
     val jobs = jobsLaunched(writeModels(on))
     val jobsOff = withConf(smallStageRuleExcluded)(jobsLaunched(writeModels(off)))
-    // 31 with the rule excluded, as before it: each sort and window over a
-    // grain-sized aggregate planned its own exchange
-    assert((jobs, jobsOff) == ((21, 31)), s"$jobs jobs, $jobsOff with the small-stage rule excluded")
+    val jobsNoCount = withConf(countRuleExcluded)(jobsLaunched(writeModels(noCount)))
+    // with the small-stage rule excluded each sort and window over a
+    // grain-sized aggregate plans its own exchange; with the count rule
+    // excluded the percentile model scans the fact twice and joins
+    assert((jobs, jobsOff, jobsNoCount) == ((18, 29, 21)),
+      s"$jobs jobs, $jobsOff with the small-stage rule excluded, $jobsNoCount with the count rule excluded")
     Models.all.foreach { m =>
-      assert(norm(spark.read.parquet(s"$on/${m.name}")) ==
-        norm(spark.read.parquet(s"$off/${m.name}")), s"${m.name}: row mismatch")
+      val rows = norm(spark.read.parquet(s"$on/${m.name}"))
+      assert(rows == norm(spark.read.parquet(s"$off/${m.name}")) &&
+        rows == norm(spark.read.parquet(s"$noCount/${m.name}")), s"${m.name}: row mismatch")
     }
   }
 
@@ -307,7 +317,8 @@ class UberSpec extends SparkSpec {
     def results(): Seq[Seq[Seq[Any]]] =
       Models.all.map(m => norm(Runner.runModel(spark, m))) ++
         queries.map(q => norm(SparkEntry.queries(q)(spark, sfDir)))
-    val configs = for (partitions <- Seq("1", "7"); rule <- Seq(Nil, Seq(smallStageRuleExcluded)))
+    val configs = for (partitions <- Seq("1", "7");
+        rule <- Seq(Nil, Seq(smallStageRuleExcluded), Seq(countRuleExcluded)))
       yield ("spark.sql.shuffle.partitions" -> partitions) +: rule
     val expected = withConf(configs.head: _*)(results())
     configs.tail.foreach { conf =>
