@@ -30,7 +30,7 @@ object SparkEntry {
 
   /** Every registered query, in registration order: the families in the
     * order below, each by query number. Bench times the queries in this
-    * order, and Verify, Explain and JobProfile run them in it; `q1_agg`
+    * order, and Verify and JobProfile run them in it; `q1_agg`
     * comes first and is Bench's untimed warmup. A name registered twice
     * fails initialisation here, naming it — a by-name map would silently
     * keep only one of the two.

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 
 /** Bench's two shared pieces: the full-board side-file line, and the one
-  * timed query run that Bench, JobProfile and DriftBench share.
+  * timed query run that Bench and JobProfile share.
   */
 class BenchSpec extends SparkSpec {
 

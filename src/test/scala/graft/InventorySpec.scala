@@ -69,10 +69,9 @@ class InventorySpec extends AnyFunSuite {
     val expected = Set(
       "graft.Bench", "graft.Verify",
       "graft.uber.Runner", "graft.uber.Scheduler",
-      "graft.tools.DedupEconomics", "graft.tools.DriftBench",
-      "graft.tools.Explain", "graft.tools.JobProfile",
-      "graft.tools.ScaleUp", "graft.tools.SkewAudit",
-      "graft.tools.UberScaleBench", "graft.tools.ZipfCorpus")
+      "graft.tools.DedupEconomics", "graft.tools.JobProfile",
+      "graft.tools.ScaleUp", "graft.tools.UberScaleBench",
+      "graft.tools.ZipfCorpus")
     val pkg = """(?m)^package\s+([\w.]+)""".r
     val obj = """(?m)^\s*(?:private\s+|final\s+)*object\s+(\w+)""".r
     val main = """\bdef\s+main\s*\(""".r
@@ -99,5 +98,22 @@ class InventorySpec extends AnyFunSuite {
       val review = out.filter(_.contains("REVIEW")).mkString("\n")
       assert(exit == 0, s"collect_audit.py exited $exit:\n$review")
     } finally Files.deleteIfExists(board)
+  }
+
+  test("tools/collect_audit.py refuses an option-like argument and writes nothing") {
+    val cwd = Files.createTempDirectory("collectaudit")
+    try {
+      val err = new StringBuilder
+      val exit = scala.sys.process.Process(
+        Seq("python3", root.resolve("tools/collect_audit.py").toString, "--help"),
+        cwd.toFile).!(scala.sys.process.ProcessLogger(_ => (), err ++= _))
+      assert(exit != 0, "collect_audit.py --help exited 0")
+      assert(err.toString.contains("Usage"), s"no usage printed: $err")
+      assert(cwd.toFile.list().isEmpty,
+        s"collect_audit.py --help wrote ${cwd.toFile.list().mkString(", ")}")
+    } finally {
+      cwd.toFile.listFiles().foreach(_.delete())
+      Files.delete(cwd)
+    }
   }
 }

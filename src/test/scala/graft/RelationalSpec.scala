@@ -14,12 +14,42 @@ class RelationalSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every registered query runs at sf0.001 and matches declared-oracle arity") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sfDir)
-      assert(df.columns.nonEmpty, s"$name has no columns")
-      df.count() // materializes; throws on broken plans
+  test("every registered query runs at sf0.001 and passes the skew audit") {
+    val failures = scala.collection.mutable.ListBuffer.empty[String]
+    val reports = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        if (df.columns.isEmpty) failures += s"$name has no columns"
+        val report = SkewAudit(name, df)
+        df.count() // materializes; throws on broken plans
+        Some(name -> report)
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          failures += s"$name error:${e.getClass.getSimpleName}: ${e.getMessage}"
+          None
+      }
     }
+    reports.foreach { case (name, r) =>
+      r.windows.filter(_._2 == "review").foreach { case (keys, c) =>
+        failures += s"$name window [$keys] $c" }
+      r.joins.filter(_._3 == "review").foreach { case (node, build, c) =>
+        failures += s"$name $node [$build] $c" }
+    }
+    // an entry is a justification only while a window needs it; a query
+    // that threw is reported above and not judged here
+    val covering = reports.collect {
+      case (name, r) if r.windows.exists(_._2.startsWith("allowlisted")) => name }
+    val threw = SparkEntry.queries.keySet -- reports.map(_._1)
+    SkewAudit.Allowlist.keys.toSeq.sorted
+      .filterNot(n => threw(n) || covering.contains(n))
+      .foreach(n => failures += s"stale Allowlist entry $n: it covers no review window")
+    // a walker that finds no nodes would pass every query
+    val classes = reports.flatMap(_._2.windows.map(_._2))
+    Seq("sharded", "bounded", "allowlisted").filterNot(c => classes.exists(_.startsWith(c)))
+      .foreach(c => failures += s"no window classified $c across the registry")
+    if (!reports.exists(_._2.joins.nonEmpty))
+      failures += "no join or broadcast classified across the registry"
+    if (failures.nonEmpty) fail(failures.mkString("\n", "\n", ""))
   }
 
   test("the registry holds 204 names once each, split by family, each with an oracle") {

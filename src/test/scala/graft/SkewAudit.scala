@@ -1,5 +1,6 @@
-package graft.tools
+package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, LessThan, LessThanOrEqual, GreaterThan, GreaterThanOrEqual, Literal, AttributeReference}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -10,12 +11,9 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.catalyst.plans.{logical => logical}
 
-import graft.{GraftSession, SparkEntry}
-
-/** Standing scale audit (round 15, extended round 16): every driver
-  * query's physical plan walked for the two 100-TB scale-killer classes,
-  * committed as a regenerable board (SKEWAUDIT.json) that exits 1 on
-  * anything unclassified.
+/** Standing scale audit: a driver query's physical plan walked for the
+  * two 100-TB scale-killer classes. RelationalSpec's registry walk calls
+  * it on every registered query and fails on any `review` window or join.
   *
   * == Window audit ==
   * Every WindowExec, with its partition keys, classified by whether a hot
@@ -53,14 +51,13 @@ import graft.{GraftSession, SparkEntry}
   *  - `const-dim`     — build scans only constant-cardinality dims
   *                      (region: 5 rows, nation: 25 at any SF).
   *  - `review`        — anything else (e.g. a corpus-sized broadcast);
-  *                      exits 1 unless allowlisted by query with a
-  *                      written justification.
+  *                      fails the audit (there is no join allowlist).
   *
   * Scope note: plans are audited LAZILY end-to-end, but a frame
   * materialized inside an operator (localCheckpoint) truncates its
   * upstream plan — those iterative internals are covered by the per-
   * operator specs (plan asserts in PipelineSpec/CurationSpec/GraphSpec),
-  * not this board. The audit walks into cached relations
+  * not this audit. The audit walks into cached relations
   * (InMemoryTableScan) where Spark keeps the child plan.
   */
 object SkewAudit {
@@ -72,10 +69,11 @@ object SkewAudit {
     * every streaming/batch engine shares (Flink keyed state, SQL windowed
     * analytics): per-key volume is one entity's activity; (c) frames
     * already sharded or output-bounded by construction. Every entry is a
-    * justification, not an exemption — delete the entry and the board
-    * goes red if the plan still carries the window.
+    * justification, not an exemption — delete the entry and the audit
+    * fails if the plan still carries the window; an entry that covers no
+    * `review` window fails as stale.
     */
-  private val Allowlist: Map[String, String] = Map(
+  val Allowlist: Map[String, String] = Map(
     "p12_unimax_mixture" -> "global rank/cumsum windows over the CHECKPOINTED per-lang aggregate (one row per language — the checkpoint hides the groupBy(lang) from the in-plan aggUnder proof)",
     "p3_dataset_card" -> "per-source LANG-STATS frame: rows per source = #langs (enum), not docs",
     "q10_share_month" -> "window over the 12-row monthly aggregate",
@@ -103,12 +101,6 @@ object SkewAudit {
     "v10_kmeans" -> "hand-rolled two-phase sampler: (cluster, hash%32) local prune to quota, then the bounded final rank",
     "v16_knn_join" -> "per-src candidate list bounded by the block join's candidate bill",
     "v20_bitext_mining" -> "per-English-doc neighborhood: cell-local candidates (v4 quantizer bill)")
-
-  /** Review-class JOIN nodes / broadcast builds accepted with a written
-    * reason — same contract as [[Allowlist]]: a justification, not an
-    * exemption.
-    */
-  private val JoinAllowlist: Map[String, String] = Map.empty
 
   /** Tiny enumerations + per-shard keys: bounded by a value domain or a
     * sharding constant, never by corpus size.
@@ -507,98 +499,39 @@ object SkewAudit {
           side(j.hint.rightHint, j.right, "right")
     }.flatten
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = if (args.length > 1) args(1) else "SKEWAUDIT.json"
-    val spark = GraftSession.local("skewaudit")
-    spark.sparkContext.setLogLevel("ERROR")
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        // executedPlan, not sparkPlan: exchange insertion (including the
-        // BroadcastExchange nodes the join audit inspects) happens in the
-        // preparation rules; under AQE take the initial physical plan
-        val plan = df.queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.initialPlan
-          case p => p
-        }
-        val ws = windows(plan)
-        // keyedTopK's phase-2 window partitions by the bare keys over the
-        // ALREADY-PRUNED frame (<= partitions x k rows per key); recognize
-        // the two-phase pair by its (keys + _pid) phase-1 sibling in the
-        // same plan rather than key names alone
-        val keySets = ws.map(_.keys.flatMap(_.split("\\|")).toSet)
-        def hasPhase1(keys: Set[String]): Boolean =
-          keySets.exists(_ == keys + "_pid")
-        val classed = ws.map { w =>
-          val c0 = classify(w)
-          val keys = w.keys.flatMap(_.split("\\|")).toSet
-          val c = if (c0 == "review" && hasPhase1(keys)) "sharded" else c0
-          val c2 = if (c == "review" && Allowlist.contains(name))
-            s"allowlisted: ${Allowlist(name)}" else c
-          (w.keys.mkString(","), c2)
-        }
-        val js = (joins(plan) ++ forcedBroadcasts(df.queryExecution.optimizedPlan))
-          .map { case (node, info, cls0) =>
-            val cls = if (cls0 == "review" && JoinAllowlist.contains(name))
-              s"allowlisted: ${JoinAllowlist(name)}" else cls0
-            (node, info, cls)
-          }
-        def worstOf(classes: Seq[String]): String =
-          if (classes.isEmpty) "none"
-          else if (classes.contains("review")) "review"
-          else if (classes.exists(_.startsWith("allowlisted"))) "allowlisted"
-          else if (classes.contains("sharded")) "sharded"
-          else "bounded"
-        (name, worstOf(classed.map(_._2)), classed, worstOf(js.map(_._3)), js)
-      } catch {
-        case e: Throwable => (name, s"error:${e.getClass.getSimpleName}", Nil,
-          "error", Nil)
-      }
+  /** One query's audit. `windows` holds each WindowExec's partition keys
+    * and class; an allowlisted window's class reads
+    * `allowlisted: <reason>`. `joins` holds each join node or broadcast
+    * build as (node, build tables, class).
+    */
+  case class Report(windows: Seq[(String, String)],
+      joins: Seq[(String, String, String)])
+
+  def apply(name: String, df: DataFrame): Report = {
+    // executedPlan, not sparkPlan: exchange insertion (including the
+    // BroadcastExchange nodes the join audit inspects) happens in the
+    // preparation rules; under AQE take the initial physical plan
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
     }
-    val reviews = results.filter(r => r._2 == "review" || r._4 == "review")
-    val errors = results.filter(_._2.startsWith("error"))
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val body = results.map { case (name, worstW, classed, worstJ, js) =>
-      val ws = classed.map { case (k, c) =>
-        s"""{"keys":${jstr(k)},"class":${jstr(c)}}"""
-      }.mkString("[", ",", "]")
-      val jss = js.map { case (node, info, c) =>
-        s"""{"node":${jstr(node)},"build":${jstr(info)},"class":${jstr(c)}}"""
-      }.mkString("[", ",", "]")
-      s""" ${jstr(name)}: {"class":${jstr(worstW)},"windows":$ws,"join_class":${jstr(worstJ)},"joins":$jss}"""
-    }.mkString(",\n")
-    def summarize(cs: Seq[String]): String =
-      cs.groupBy(identity).map { case (c, rs) => c -> rs.size }
-        .toSeq.sortBy(_._1)
-        .map { case (c, n) => s"${jstr(c)}:$n" }.mkString("{", ",", "}")
-    val summary = summarize(results.map(_._2))
-    val joinSummary = summarize(results.map(_._4))
-    val json =
-      s"""{
-         |"_meta": {
-         |  "tool": "graft.tools.SkewAudit",
-         |  "sf": ${jstr(sfDir)},
-         |  "regenerate": "SPARK_GRAFT_CPUS=32 tools/run_main.sh graft.tools.SkewAudit",
-         |  "contract": "windows: no driver query may carry a WindowExec partitioned by a key a 100-TB corpus can make hot (a brute corpus-pairing frame under the window is review-class for EVERY key family, r17); joins: every CartesianProduct/BroadcastNestedLoopJoin BUILD side and every BroadcastExchange build side must be a stat frame, const dim, sample cut, rank-cut (window+bounding-filter pair), or enum agg",
-         |  "summary": $summary,
-         |  "join_summary": $joinSummary,
-         |  "review_count": ${reviews.size}
-         |},
-         |"queries": {
-         |$body
-         |}
-         |}""".stripMargin + "\n"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json)
-    println(s"[skewaudit] ${results.size} queries; windows $summary; joins $joinSummary -> $out")
-    reviews.foreach { case (n, wc, cs, jc, js) =>
-      val wmsg = cs.filter(_._2 == "review").map(_._1).mkString("; ")
-      val jmsg = js.filter(_._3 == "review")
-        .map(j => s"${j._1}[${j._2}]").mkString("; ")
-      println(s"[skewaudit] REVIEW $n: windows($wc) $wmsg joins($jc) $jmsg")
+    val ws = windows(plan)
+    // keyedTopK's phase-2 window partitions by the bare keys over the
+    // ALREADY-PRUNED frame (<= partitions x k rows per key); recognize
+    // the two-phase pair by its (keys + _pid) phase-1 sibling in the
+    // same plan rather than key names alone
+    val keySets = ws.map(_.keys.flatMap(_.split("\\|")).toSet)
+    def hasPhase1(keys: Set[String]): Boolean =
+      keySets.exists(_ == keys + "_pid")
+    val classed = ws.map { w =>
+      val c0 = classify(w)
+      val keys = w.keys.flatMap(_.split("\\|")).toSet
+      val c = if (c0 == "review" && hasPhase1(keys)) "sharded" else c0
+      val c2 = if (c == "review" && Allowlist.contains(name))
+        s"allowlisted: ${Allowlist(name)}" else c
+      (w.keys.mkString(","), c2)
     }
-    errors.foreach { case (n, e, _, _, _) => println(s"[skewaudit] $n $e") }
-    spark.stop()
-    if (reviews.nonEmpty) sys.exit(1)
+    Report(classed,
+      joins(plan) ++ forcedBroadcasts(df.queryExecution.optimizedPlan))
   }
 }

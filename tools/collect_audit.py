@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Driver-collect audit board (round-17 VERDICT item 2): extend the
-SkewAudit discipline to the one scale-killer class the plan walks can't
+"""Driver-collect audit board (round-17 VERDICT item 2): extend the skew
+audit's discipline to the one scale-killer class the plan walks can't
 see — driver-side materialization. Every `collect()` / `collectAsList` /
 `toLocalIterator` / `collectAsMap` site in main sources must carry a
 machine-readable bound annotation
@@ -24,14 +24,20 @@ to exactly ONE following site). Classes:
 
 `head()`/`first()`/`take(k)` are <= k rows by API contract and out of
 scope. The board is regenerable: any new un-annotated site (or an
-unknown class) exits 1, same contract as SKEWAUDIT.
+unknown class) exits 1. InventorySpec runs it in Tier-1, as RelationalSpec
+runs the skew audit (src/test/scala/graft/SkewAudit.scala).
 
 Usage: python3 tools/collect_audit.py [out.json]   (default COLLECTAUDIT.json)
+More than one argument, or one starting with "-", prints this usage and
+exits 1, writing nothing.
 """
 import json, os, re, sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = os.path.join(ROOT, "src", "main", "scala")
+USAGE = "Usage: python3 tools/collect_audit.py [out.json]   (default COLLECTAUDIT.json)"
+if len(sys.argv) > 2 or (len(sys.argv) == 2 and sys.argv[1].startswith("-")):
+    sys.exit(USAGE)
 OUT = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "COLLECTAUDIT.json")
 
 CLASSES = {"stat-frame", "enum-bounded", "k-bounded", "sample-bounded",
