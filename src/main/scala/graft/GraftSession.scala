@@ -37,6 +37,12 @@ object GraftSession {
     // as raw long and let Tables.load convert ns → microsecond timestamp.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    // Spark caches 100 compiled classes by default, in LRU segments. An
+    // Uber full build plus a daily tick compiles about 110, so which
+    // classes a tick recompiles depended on hashing: 2 of them in one run
+    // and 20-50 in another (over 0.3 s per tick). The cap is a bound on
+    // driver memory, not on anything the engine computes.
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   /** Local core count: SPARK_GRAFT_CPUS when set, else the host's cores. */
   def cores: Int =

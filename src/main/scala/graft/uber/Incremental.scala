@@ -42,11 +42,15 @@ import org.apache.spark.sql.types.StructType
   * shape Spark's partial aggregation uses within one query, persisted
   * across runs and shared across models.
   *
-  * In Spark jobs a single-month tick (Runner.runIncrement) costs 13:
-  * 1 for affectedMonths, 1 to land the fact partition, 3 for unter_grun's
-  * month (two broadcasts and the write), 3 for the shared partial's month
-  * (a broadcast, the aggregate's shuffle stage and the write) and 1 per
-  * fold; fullBuild costs the last 11. The folds read the partial as ONE
+  * In Spark jobs a single-month tick (Runner.runIncrement) costs 10:
+  * 1 to land the fact partition (whose Observation reports the restated
+  * months), 2 for unter_grun's month (the one broadcast of the crossed
+  * dims and the write), 2 for the shared partial's month (the aggregate's
+  * shuffle-map stage and the write, which merge-joins the dim without a
+  * broadcast) and 1 per fold; fullBuild costs the last 9. Each of these
+  * jobs is one a table needs: the landing write, a broadcast for the fact
+  * join, a map stage for the fact aggregate and a write per output, so
+  * this layout cannot go lower. The folds read the partial as ONE
   * partition: it holds bases × days rows whatever the fact's size (about
   * 1.6k at benchmark size, about 110k for 300 bases over a year), so one
   * task folds it, and its aggregates, windows, sorts and limits plan no
@@ -101,27 +105,49 @@ object Incremental {
   // ------------------------------------------------------------ partials
 
   /** unter_grun rows plus their month: the fold is identity, so these are
-    * the model's month-partitioned final rows.
+    * the model's month-partitioned final rows. The Unter/Grun bases × the
+    * Bronx zones are crossed first (`shuffle_replicate_nl`: a cartesian
+    * product of the two dim scans, so no broadcast inside the broadcast)
+    * and the fact joins that pair once, on both keys: one broadcast where
+    * a dim each would be two. The fact side keeps its own partitions.
     */
-  private def unterGrunRows(s: SparkSession, fact: DataFrame): DataFrame = fact
-    .join(broadcast(base(s)), col("base_num") === col("affiliated_base_num"))
-    .join(broadcast(zone(s)), zone(s)("locationid") === fact("locationid"))
-    .filter(col("base_name").isin("Unter", "Grun") && col("borough") === "Bronx")
-    .select(col("pickup_date").as("Pickup Date"), col("base_name").as("Base Name"),
-      col("borough").as("Borough"), col("zone").as("Zone"),
-      monthOf(fact).as("month_num"))
+  private def unterGrunRows(s: SparkSession, fact: DataFrame): DataFrame = {
+    val bases = base(s).filter(col("base_name").isin("Unter", "Grun"))
+      .select(col("base_num"), col("base_name"))
+    val bronx = zone(s).filter(col("borough") === "Bronx")
+      .select(col("locationid").as("zone_locationid"), col("borough"), col("zone"))
+    val dims = bases.hint("shuffle_replicate_nl").crossJoin(bronx)
+    fact.join(broadcast(dims),
+        col("affiliated_base_num") === col("base_num") &&
+          fact("locationid") === col("zone_locationid"))
+      .select(col("pickup_date").as("Pickup Date"), col("base_name").as("Base Name"),
+        col("borough").as("Borough"), col("zone").as("Zone"),
+        monthOf(fact).as("month_num"))
+  }
 
   /** The shared partial: per-(base, date) counts, month last so the
     * partitioned read-back has the writer's column order. A pick-up DATE
     * belongs to exactly one month, so the rows are month-sealed, and
     * `pick_up_date` is null exactly when `pickup_date` is, which keeps
     * COUNT(pickup_date) derivable.
+    *
+    * The fact is counted per (base number, date) BEFORE the base name is
+    * joined: an inner join commutes with a group-by on its key, so the
+    * rows are those of join-then-count, duplicate `base_num` and unknown
+    * or null bases included. The grain-sized counts and the dim then sit
+    * on one partition each, and the merge join between them plans no
+    * exchange. The `merge` hint is required: without it Spark broadcasts
+    * the dim, one more job per write.
     */
   private def dailyCounts(s: SparkSession, fact: DataFrame): DataFrame =
-    fact.join(broadcast(base(s)), col("base_num") === col("dispatching_base_num"))
-      .groupBy(col("dispatching_base_num"), col("base_name"),
+    fact.groupBy(col("dispatching_base_num"),
         to_date(col("pickup_date")).as("pick_up_date"), monthOf(fact).as("month_num"))
       .agg(count(lit(1)).as("cnt"))
+      .coalesce(1)
+      .join(base(s).coalesce(1).hint("merge"),
+        col("base_num") === col("dispatching_base_num"))
+      .select(col("dispatching_base_num"), col("base_name"), col("pick_up_date"),
+        col("month_num"), col("cnt"))
 
   /** Per-(base, month) re-sum with the no-ELSE month NAME (months 7-12 →
     * NULL — and the folds' windows partition by the NAME, so null-named
@@ -189,6 +215,11 @@ object Incremental {
     * reduces its rows to its own set of months and the driver merges the
     * sets, so this is one job with no `distinct` shuffle. Bounded by the
     * calendar — a driver collect is safe.
+    *
+    * Runner.runIncrement does not call this: ingestFactIncrement returns
+    * the same list, observed on the landing write, which saves this job
+    * and a second parse of the CSV. It stays public for callers that need
+    * the months before landing, such as a tick traced step by step.
     */
   def affectedMonths(increment: DataFrame): Seq[Option[Int]] =
     increment.select(month(col("pickup_date"))).rdd

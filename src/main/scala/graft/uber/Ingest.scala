@@ -1,6 +1,6 @@
 package graft.uber
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -84,19 +84,31 @@ object Ingest {
     * overwrite replaces exactly the `pickup_month` partitions present in
     * the increment, leaving all others untouched. At 100 TB a daily run
     * rewrites one day's partitions, not the table.
+    *
+    * Returns the months it restated, observed on the write's own pass (one
+    * job, one CSV parse): ascending, `None` first for null-dated rows, the
+    * same list [[Incremental.affectedMonths]] gives for the same file.
+    * `collect_set` drops nulls, so a second metric counts the null months.
     */
   def ingestFactIncrement(
       spark: SparkSession,
       csvPath: String,
-      warehouseDir: String): DataFrame = {
+      warehouseDir: String): Seq[Option[Int]] = {
     val name = "raw_data_janjune_15"
     val schema = Schemas.sources.toMap.apply(name)
     val path = s"$warehouseDir/$name"
     val landed = withPickupMonth(withAirbyteMeta(readCsv(spark, csvPath, schema)))
-    landed.write.mode("overwrite")
+    val restated = Observation()
+    landed.observe(restated,
+        collect_set(col("pickup_month")).as("months"),
+        count_if(col("pickup_month").isNull).as("null_months"))
+      .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("pickup_month").parquet(path)
     register(spark, name, path, landed.schema)
+    val m = restated.get
+    val months = m("months").asInstanceOf[scala.collection.Seq[Int]].sorted.map(Some(_))
+    (if (m("null_months").asInstanceOf[Long] > 0) None +: months else months).toSeq
   }
 
   /** Ingest one source and register it; returns the registered DataFrame. */

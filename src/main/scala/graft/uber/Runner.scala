@@ -55,17 +55,18 @@ object Runner {
   /** One daily-delta run: land the increment's fact partitions (dynamic
     * overwrite) and absorb them into every model through the shared daily
     * partial — scan(delta) + fold(grain) instead of runAll's full rebuild.
-    * Requires a prior [[runAll]] or Incremental.fullBuild of `outDir`
-    * (applyIncrement refuses otherwise). Returns the restated months.
+    * The landing write reports the months it restated, so the CSV is
+    * parsed once; a single-month tick is 10 Spark jobs (the breakdown is
+    * in [[Incremental]]). Requires a prior [[runAll]] or
+    * Incremental.fullBuild of `outDir` (applyIncrement refuses otherwise).
+    * Returns the restated months.
     */
   def runIncrement(
       spark: SparkSession,
       incCsvPath: String,
       warehouseDir: String,
       outDir: String): Seq[Option[Int]] = {
-    val inc = Ingest.readCsv(spark, incCsvPath, Schemas.rawDataJanjune15)
-    val months = Incremental.affectedMonths(inc)
-    Ingest.ingestFactIncrement(spark, incCsvPath, warehouseDir)
+    val months = Ingest.ingestFactIncrement(spark, incCsvPath, warehouseDir)
     Incremental.applyIncrement(spark, outDir, months)
     months
   }

@@ -2,7 +2,19 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 
 import graft.uber.{Incremental, Ingest, Models, Runner}
 
@@ -11,7 +23,7 @@ import graft.uber.{Incremental, Ingest, Models, Runner}
   * every model's SQL form over the landed sources — and must not touch
   * untouched months' files.
   */
-class IncrementalSpec extends SparkSpec {
+class IncrementalSpec extends SparkSpec with TimeLimits {
 
   // Fixture designed so top_3_base_names is tie-free before AND after the
   // increment (LIMIT 3 over tied counts is content-unstable, which would
@@ -138,25 +150,133 @@ class IncrementalSpec extends SparkSpec {
     val (csv, wh, _) = dirs
     val incCsv = Files.createTempDirectory("inc_confs_csv").resolve("feb_may.csv")
     Files.writeString(incCsv, febMayRestatement)
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    val before = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      for (partitions <- Seq("1", "7"); aqe <- Seq("true", "false")) {
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    // the last cell turns Spark's own broadcast choice off: the plans rest
+    // on explicit join hints, so the rows must not depend on it
+    val cells = (for (partitions <- Seq("1", "7"); aqe <- Seq("true", "false"))
+      yield Seq("spark.sql.shuffle.partitions" -> partitions,
+        "spark.sql.adaptive.enabled" -> aqe)) :+
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    try cells.foreach { cell =>
+      withConf(cell: _*) {
         Ingest.ingestAll(spark, csv, wh)
         val out = Files.createTempDirectory("inc_confs").toString
         Incremental.fullBuild(spark, out)
         Runner.runIncrement(spark, incCsv.toString, wh, out)
-        assertAllModelsMatch(out, s"shuffle.partitions=$partitions adaptive=$aqe")
+        assertAllModelsMatch(out, cell.map { case (k, v) => s"$k=$v" }.mkString(" "))
       }
-    } finally {
-      before.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      Ingest.ingestAll(spark, csv, wh)
+    } finally Ingest.ingestAll(spark, csv, wh)
+  }
+
+  test("a null-dated tick restates the null month, as affectedMonths lists it") {
+    val (csv, wh, _) = dirs
+    Ingest.ingestAll(spark, csv, wh)
+    val out = Files.createTempDirectory("inc_null_month").toString
+    Incremental.fullBuild(spark, out)
+    val nullPart = Paths.get(Incremental.dailyCountsPath(out),
+      "month_num=__HIVE_DEFAULT_PARTITION__")
+    def files() = Files.list(nullPart).iterator().asScala
+      .map(p => p.toString -> Files.getLastModifiedTime(p)).toMap
+    val before = files()
+    assert(before.keys.exists(_.endsWith(".parquet")), s"no null-month partial in $nullPart")
+
+    val incCsv = Files.createTempDirectory("inc_null_month_csv").resolve("null.csv")
+    Files.writeString(incCsv,
+      """dispatching_base_num,pickup_date,affiliated_base_num,locationid
+        |B02617,,B02617,1
+        |B02617,,B02598,3
+        |B02765,2015-05-20 11:00:00,B02765,1
+        |""".stripMargin)
+    val listed = Incremental.affectedMonths(
+      Ingest.readCsv(spark, incCsv.toString, uber.Schemas.rawDataJanjune15))
+    val applied = Runner.runIncrement(spark, incCsv.toString, wh, out)
+    assert(applied == listed && applied == Seq(None, Some(5)),
+      s"runIncrement restated $applied, affectedMonths lists $listed")
+    assert(files() != before, s"the null month's partial $nullPart was not rewritten")
+    val nullRows = spark.read.parquet(Incremental.dailyCountsPath(out))
+      .filter(org.apache.spark.sql.functions.col("month_num").isNull)
+    assert(rows(nullRows.drop("month_num")) == Seq("B02617|Weiter|null|2"))
+    assertAllModelsMatch(out, "after a null-month increment")
+    Ingest.ingestAll(spark, csv, wh)
+  }
+
+  test("a header-only tick restates no month, runs 1 job and changes no model") {
+    val (csv, wh, _) = dirs
+    Ingest.ingestAll(spark, csv, wh)
+    val out = Files.createTempDirectory("inc_header_only").toString
+    Incremental.fullBuild(spark, out)
+    def models() = Models.all.map(m => m.name -> rows(Incremental.readModel(spark, out, m.name)))
+    val before = models()
+    val incCsv = Files.createTempDirectory("inc_header_only_csv").resolve("empty.csv")
+    Files.writeString(incCsv, "dispatching_base_num,pickup_date,affiliated_base_num,locationid\n")
+    // the months come from an Observation on the landing write: a bound
+    // turns a metric that is never delivered into a failure, not a hang
+    implicit val signaler: Signaler = ThreadSignaler
+    var applied: Seq[Option[Int]] = null
+    val jobs = failAfter(2.minutes) {
+      jobsLaunched { applied = Runner.runIncrement(spark, incCsv.toString, wh, out) }
     }
+    assert(applied == Seq.empty, s"a header-only tick restated $applied")
+    assert(jobs == 1, s"a header-only tick launched $jobs jobs")
+    assert(models() == before, "a header-only tick changed a model")
+    // a zero-byte drop has no split to read at all
+    val zero = Files.writeString(incCsv.resolveSibling("zero.csv"), "")
+    val appliedZero = failAfter(2.minutes)(Runner.runIncrement(spark, zero.toString, wh, out))
+    assert(appliedZero == Seq.empty, s"a zero-byte tick restated $appliedZero")
+    assert(models() == before, "a zero-byte tick changed a model")
+    Ingest.ingestAll(spark, csv, wh)
+  }
+
+  test("a single-month tick plans one broadcast and one shuffle, the partial's aggregate") {
+    val (csv, wh, _) = dirs
+    Ingest.ingestAll(spark, csv, wh)
+    val out = Files.createTempDirectory("inc_plan_shape").toString
+    Incremental.fullBuild(spark, out)
+    val incCsv = Files.createTempDirectory("inc_plan_shape_csv").resolve("may.csv")
+    Files.writeString(incCsv,
+      """dispatching_base_num,pickup_date,affiliated_base_num,locationid
+        |B02765,2015-05-20 11:00:00,B02765,1
+        |""".stripMargin)
+    val broadcasts = ArrayBuffer.empty[BroadcastExchangeExec]
+    val shuffles = ArrayBuffer.empty[ShuffleExchangeExec]
+    val plans = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.foreach(qe.executedPlan) {
+          case b: BroadcastExchangeExec => broadcasts += b
+          case e: ShuffleExchangeExec => shuffles += e
+          case _ =>
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try Runner.runIncrement(spark, incCsv.toString, wh, out)
+    finally {
+      ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    def named(p: SparkPlan): String = p.treeString(verbose = false).linesIterator.take(8).mkString("\n")
+    // unter_grun's crossed Unter/Grun × Bronx dims, broadcast once
+    assert(broadcasts.size == 1 &&
+      broadcasts.forall(_.collectFirst { case c: CartesianProductExec => c }.isDefined),
+      s"expected one broadcast, of the crossed dims; got ${broadcasts.size}:\n" +
+        broadcasts.map(named).mkString("\n---\n"))
+    // the shared partial's aggregate: a partial count hashed on the base
+    // number (the date key is pulled out under a generated name). The
+    // folds and the partial's dim join read single partitions and plan none
+    def partialAggregate(e: ShuffleExchangeExec): Boolean = (e.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.exists(_.references.exists(_.name == "dispatching_base_num"))
+      case _ => false
+    }) && (e.child match {
+      case w: WholeStageCodegenExec => w.child.isInstanceOf[HashAggregateExec]
+      case c => c.isInstanceOf[HashAggregateExec]
+    })
+    val offending = shuffles.filterNot(partialAggregate)
+    assert(offending.isEmpty, "a shuffle other than the partial's aggregate:\n" +
+      offending.map(named).mkString("\n---\n"))
+    assert(shuffles.size == 1, s"expected the partial's one shuffle, got ${shuffles.size}")
+    assertAllModelsMatch(out, "after the plan-shape tick")
+    Ingest.ingestAll(spark, csv, wh)
   }
 
   test("affectedMonths merges each partition's months once, null month included") {
@@ -227,19 +347,21 @@ class IncrementalSpec extends SparkSpec {
     val (csv, wh, _) = dirs
     Ingest.ingestAll(spark, csv, wh)
     val out = Files.createTempDirectory("inc_jobs").toString
-    // 3 unter_grun + 3 shared partial + 1 per fold for the five
-    // count-based models
+    // 2 unter_grun (the crossed dims' broadcast, the write) + 2 shared
+    // partial (the aggregate's map stage, the write) + 1 per fold for the
+    // five count-based models
     val build = jobsLaunched(Incremental.fullBuild(spark, out))
-    assert(build == 11, s"a full build launched $build jobs")
+    assert(build == 9, s"a full build launched $build jobs")
     val incCsv = Files.createTempDirectory("inc_jobs_csv").resolve("may.csv")
     Files.writeString(incCsv,
       """dispatching_base_num,pickup_date,affiliated_base_num,locationid
         |B02765,2015-05-20 11:00:00,B02765,1
         |B02512,2015-05-21 12:00:00,B02512,2
         |""".stripMargin)
-    // 1 affectedMonths + 1 fact landing + the build's 11 for one month
+    // 1 fact landing (its Observation reports the months) + the build's
+    // 9 for one month
     val tick = jobsLaunched(Runner.runIncrement(spark, incCsv.toString, wh, out))
-    assert(tick == 13, s"one single-month tick launched $tick jobs")
+    assert(tick == 10, s"one single-month tick launched $tick jobs")
     assertAllModelsMatch(out, "after a single-month increment")
     Ingest.ingestAll(spark, csv, wh)
   }

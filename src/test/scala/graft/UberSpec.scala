@@ -281,11 +281,11 @@ class UberSpec extends SparkSpec {
   test("runAll runs a fixed number of Spark jobs") {
     val (csv, wh) = dirs
     val out = Files.createTempDirectory("uber_jobs").toString
-    // 3 source writes + 6 checks + Incremental.fullBuild's 11; 7 checks
+    // 3 source writes + 6 checks + Incremental.fullBuild's 9; 7 checks
     // with the small-stage rule excluded
     val jobs = jobsLaunched(Runner.runAll(spark, csv, wh, out))
     val jobsOff = withConf(smallStageRuleExcluded)(jobsLaunched(Runner.runAll(spark, csv, wh, out)))
-    assert((jobs, jobsOff) == ((20, 21)), s"runAll launched $jobs jobs, $jobsOff with the rule excluded")
+    assert((jobs, jobsOff) == ((18, 19)), s"runAll launched $jobs jobs, $jobsOff with the rule excluded")
   }
 
   test("the six SQL models run a fixed number of Spark jobs") {
