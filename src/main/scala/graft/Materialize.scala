@@ -27,13 +27,13 @@ import org.apache.spark.storage.StorageLevel
   *    consumer, and `LocalRDDCheckpointData.doCheckpoint` back-fills any
   *    partition a partial consumer skipped). Recoverability unchanged:
   *    exactly as recoverable as the JVM.
-  *  - cluster master with a checkpoint dir (either `sc.setCheckpointDir`
-  *    already called, or `spark.graft.checkpointDir` set — GraftSession
-  *    forwards it): eager RELIABLE `checkpoint()` to that dir (HDFS /
-  *    object store). Survives any executor loss; also the only option
-  *    that truncates the LOGICAL plan, which the iterative operators
-  *    (connected components, PageRank, k-core, BFS) rely on to keep
-  *    per-round planning flat.
+  *  - cluster master with a checkpoint dir (`sc.setCheckpointDir`
+  *    called, or Spark's own `spark.checkpoint.dir` set at submit, which
+  *    SparkContext applies at start): eager RELIABLE `checkpoint()` to
+  *    that dir (HDFS / object store). Survives any executor loss; also
+  *    the only option that truncates the LOGICAL plan, which the
+  *    iterative operators (connected components, PageRank, k-core, BFS)
+  *    rely on to keep per-round planning flat.
   *  - cluster master with NO checkpoint dir: replicated persist
   *    (MEMORY_AND_DISK_2) forced eager — survives single-executor loss
   *    and recomputes (lineage intact) on worse failures. Logged once per
@@ -69,28 +69,22 @@ object Materialize {
   def apply[T](ds: Dataset[T]): Dataset[T] = {
     val spark = ds.sparkSession
     val sc = spark.sparkContext
-    def ensureDir(): Boolean = sc.getCheckpointDir.isDefined || {
-      spark.conf.getOption("spark.graft.checkpointDir") match {
-        case Some(dir) => sc.setCheckpointDir(dir); true
-        case None => false
-      }
-    }
     spark.conf.getOption("spark.graft.materialize").getOrElse("auto") match {
       case "local" => pinned(ds, ds.localCheckpoint(false))
       case "reliable" =>
-        require(ensureDir(),
-          "spark.graft.materialize=reliable needs sc.setCheckpointDir or spark.graft.checkpointDir")
+        require(sc.getCheckpointDir.isDefined,
+          "spark.graft.materialize=reliable needs sc.setCheckpointDir or spark.checkpoint.dir")
         ds.checkpoint(true)
       case "persist" => persistEager(ds)
       case _ => // auto
         if (sc.isLocal) pinned(ds, ds.localCheckpoint(false))
-        else if (ensureDir()) ds.checkpoint(true)
+        else if (sc.getCheckpointDir.isDefined) ds.checkpoint(true)
         else {
           if (warnedNoDir.compareAndSet(false, true)) {
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               "Materialize: cluster master with no checkpoint dir — falling back to " +
                 "replicated persist (recoverable but lineage-preserving; iterative " +
-                "operators re-plan against growing lineage). Set spark.graft.checkpointDir.")
+                "operators re-plan against growing lineage). Set spark.checkpoint.dir.")
           }
           persistEager(ds)
         }

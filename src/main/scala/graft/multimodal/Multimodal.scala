@@ -504,8 +504,8 @@ object Multimodal {
     * the shard. Payload here is the document's UTF-8 bytes standing in
     * for media bytes (the mm1 convention).
     *
-    * Distributed shape: shard assignment is t15's two-phase distributed
-    * prefix sum over byte lengths (NO single-partition window — the
+    * Distributed shape: shard assignment is t15's globalPackingDocs, a
+    * KeyedRank.prefixBefore over byte lengths (NO single-partition window — the
     * boundary placement is exactly a sequential packer's); the manifest
     * is one shard-keyed agg. Signature = sum of per-payload md5-62
     * hashes masked to 40 bits — order-independent (commutative sum) and

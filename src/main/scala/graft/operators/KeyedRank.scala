@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,7 @@ import graft.Materialize._
   * r14 asked for so operators stop re-creating the hot-key
   * single-partition-window exposure one at a time.
   *
-  * The problem both helpers remove: `row_number().over(Window
+  * The problem these helpers remove: `row_number().over(Window
   * .partitionBy(key))` routes EVERY row of a key into one task and
   * sorts it there. Window functions have no map-side partial
   * aggregation, and WindowExec partitions cannot be AQE-skew-split, so
@@ -18,65 +18,65 @@ import graft.Materialize._
   * boilerplate span) is a straggler-or-OOM at 100-TB scale even though
   * the same plan is fast at test scale.
   *
-  * Two shapes, for the two contracts operators actually need:
+  * Three shapes, for the three contracts operators actually need:
   *
   *  - [[keyedTopK]] — the output only needs each key's top k rows
-  *    (ranks ≤ k). Two-phase: a per-(key, input-partition) local rank
-  *    prunes to ≤ k rows per key per partition, then the global per-key
-  *    rank runs over that bounded frame (≤ partitions × k rows per
-  *    key). The q7 TakeOrderedAndProject idea, per key.
+  *    (ranks ≤ k). One `row_number` window plus its rank filter: Spark's
+  *    `InferWindowGroupLimit` plans a `Partial` WindowGroupLimit that
+  *    prunes each (key, input partition) slice to k rows before the key
+  *    exchange, and a `Final` one after it, so the window sees
+  *    ≤ partitions × k rows per key.
+  *  - [[prefixBefore]] — the output needs each row's exclusive running
+  *    sum within its key (a packer's tokens-before, a permutation's
+  *    position, a sweep's live count). The caller shards the order into
+  *    contiguous ranges; each (key, shard) runs its window in parallel
+  *    and one RDD pass folds the per-(key, shard) totals into exclusive
+  *    offsets that ride back as a literal map. [[rangeShard]] gives the
+  *    equal-width shards of a numeric order.
   *  - [[keyedRank]] — the output needs EVERY row's exact per-key rank
-  *    (p13 emits a rank per document). Top-k truncation can't express
-  *    that, so this is keyed RANGE sharding, the per-key analog of
-  *    Spark's own RangePartitioner-backed global sort: a bounded
-  *    proportional sample picks per-key boundary (ord, tie) pairs, each
-  *    row's shard is the count of boundaries at-or-before it in the
-  *    sort order, per-(key, shard) windows rank locally in parallel,
-  *    and driver-collected per-(key, shard) counts become broadcast
-  *    exclusive-prefix offsets (the [[graft.pipeline.CorpusPipeline
-  *    .keyedPrefixBefore]] offset idiom). rank = local rank + offset.
-  *    Boundary pairs are compared WITH the tie column, so equal-ord
-  *    rows split deterministically and the result is exact for ANY
-  *    data distribution — sampling quality affects only balance, never
-  *    the ranks.
+  *    (p13 emits a rank per document). This is keyed RANGE sharding, the
+  *    per-key analog of Spark's own RangePartitioner-backed global sort:
+  *    a bounded proportional sample picks per-key boundary (ord, tie)
+  *    pairs, each row's shard is the count of boundaries at-or-before it
+  *    in the sort order, and rank = [[prefixBefore]] of 1 + 1. Boundary
+  *    pairs are compared WITH the tie column, so equal-ord rows split
+  *    deterministically and the result is exact for ANY data
+  *    distribution — sampling quality affects only balance, never the
+  *    ranks.
   *
-  * Both are property-tested against the naive per-key window in
+  * All three are property-tested against the naive per-key window in
   * PropertySpec; callers must pass a TOTAL per-key order (include a
-  * unique tiebreaker) or ranks are nondeterministic under either shape.
+  * unique tiebreaker) or ranks are nondeterministic under any shape.
   */
 object KeyedRank {
 
   /** Per-key top-k with the true global per-key rank in `rankCol`,
     * without ever sorting a whole key in one task. `order` must totally
-    * order rows within each key (unique tiebreaker). Phase 1 prunes each
-    * (key, partition) slice to k rows BEFORE the per-key shuffle, so
-    * the phase-2 window sees ≤ partitions × k rows per key no matter
-    * how hot the key is. Every global top-k row has local rank ≤ k in
-    * whatever slice it lands in, so the two-phase cut is exact for any
-    * partition assignment.
+    * order rows within each key (unique tiebreaker). The rank filter
+    * right above the window is what Spark's `InferWindowGroupLimit`
+    * turns into a `Partial` WindowGroupLimit before the key exchange and
+    * a `Final` one after it (k must stay within
+    * `spark.sql.optimizer.windowGroupLimitThreshold`, 1000 by default),
+    * so the window sees ≤ partitions × k rows per key no matter how hot
+    * the key is. Every global top-k row has local rank ≤ k in whatever
+    * partition it lands in, so the cut is exact for any assignment.
     *
-    * PRECONDITION phase 1 needs: a hot key's rows must SPAN multiple
-    * input partitions. A scan split or any shuffle on other columns
-    * does this, but an input freshly hash-partitioned by exactly (a
-    * subset of) the keys — a fresh groupBy/join ON the key — colocates
-    * every key in one partition and phase 1 degenerates to the naive
-    * single-task sort. [[spreadIfKeyAligned]] detects that shape from
-    * the plan's output partitioning and re-spreads by (keys, salt)
-    * first, where the salt is a deterministic hash of the row's
-    * non-map columns (map type is not hashable); the extra shuffle is
-    * paid only in the degenerate case.
+    * PRECONDITION the partial limit needs: a hot key's rows must SPAN
+    * multiple input partitions. A scan split or any shuffle on other
+    * columns does this, but an input freshly hash-partitioned by exactly
+    * (a subset of) the keys — a fresh groupBy/join ON the key —
+    * colocates every key in one partition, no exchange is planned and
+    * the limit degenerates to the naive single-task sort.
+    * [[spreadIfKeyAligned]] detects that shape from the plan's output
+    * partitioning and re-spreads by (keys, salt) first, where the salt is
+    * a deterministic hash of the row's non-map columns (map type is not
+    * hashable); the extra shuffle is paid only in the degenerate case.
     */
   def keyedTopK(df: DataFrame, keys: Seq[String], order: Seq[Column],
       k: Int, rankCol: String): DataFrame = {
-    val keyCols = keys.map(col)
     val (spread, _) = spreadIfKeyAligned(df, keys)
-    val w1 = Window.partitionBy(keyCols :+ col("_pid"): _*).orderBy(order: _*)
-    val w2 = Window.partitionBy(keyCols: _*).orderBy(order: _*)
-    spread.withColumn("_pid", spark_partition_id())
-      .withColumn("_lr", row_number().over(w1))
-      .where(col("_lr") <= k)
-      .drop("_pid", "_lr")
-      .withColumn(rankCol, row_number().over(w2))
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+    spread.withColumn(rankCol, row_number().over(w))
       .where(col(rankCol) <= k)
   }
 
@@ -156,13 +156,12 @@ object KeyedRank {
     * (`ord` desc-if-`descending`, `tie` asc) within each `key`, exactly
     * as the naive `Window.partitionBy(key)` would, but with no key ever
     * funneled through a single partition. `tie` must be unique per row
-    * and both columns non-null. Driver-bounded metadata by
-    * construction: one proportional sample of ≤ ~`sampleTarget` rows
+    * and the key, ord and tie columns non-null. Driver-bounded metadata
+    * by construction: one proportional sample of ≤ ~`sampleTarget` rows
     * picks the boundaries (keys with small slices get few or no
-    * boundaries — they don't need them), and the per-(key, shard)
-    * count table is ≤ |keys| × `shards` rows; like keyedPrefixBefore,
-    * key cardinality must be driver-bounded (sources, languages,
-    * shards — not documents).
+    * boundaries — they don't need them), and [[prefixBefore]]'s offset
+    * table is ≤ |keys| × `shards` entries, so key cardinality must be
+    * driver-bounded (sources, languages, shards — not documents).
     */
   def keyedRank(df: DataFrame, key: String, ord: String, tie: String,
       rankCol: String, descending: Boolean = true, shards: Int = 64,
@@ -175,9 +174,8 @@ object KeyedRank {
     // bottom-k = a uniform size-k subset, proportional per key exactly
     // like the old rate-threshold draw); boundaries derived from it may
     // differ from the old draw's, which affects only shard BALANCE —
-    // rank = local rank + exclusive shard offset is exact for ANY
-    // monotone boundary set (PropertySpec asserts equality with the
-    // naive window).
+    // rank = prefixBefore + 1 is exact for ANY monotone boundary set
+    // (PropertySpec asserts equality with the naive window).
     val base = graft.Materialize(df)
     val (n, sample) = countAndBottomK(base, key, ord, tie, sampleTarget)
     if (n == 0L) return base.withColumn(rankCol, lit(1))
@@ -186,11 +184,9 @@ object KeyedRank {
       val c = cmp(o1, o2)
       if (c != 0) { if (descending) c > 0 else c < 0 } else cmp(t1, t2) < 0
     }
-    val bounds: Map[String, Seq[(Any, Any)]] = sample
-      .groupBy(_.getString(0))
+    val bounds: Map[Any, Seq[(Any, Any)]] = sample
+      .groupBy(_.get(0))
       .map { case (k0, rows) =>
-        require(!k0.contains("#"),
-          s"keyedRank: key value '$k0' contains '#' (reserved)")
         val sorted = rows.map(r => (r.get(1), r.get(2)))
           .sortWith { case ((o1, t1), (o2, t2)) => precedes(o1, t1, o2, t2) }
         val m = sorted.length
@@ -199,12 +195,16 @@ object KeyedRank {
         k0 -> idx.map(sorted)
       }
     // shard(row) = # boundaries at-or-before the row in sort order —
-    // monotone along the order, deterministic on ties via the tie pair
+    // monotone along the order, deterministic on ties via the tie pair.
+    // Its per-row cost (element_at on the boundary map + a struct-array
+    // filter) is why prefixBefore materializes the shard column rather
+    // than re-deriving it in the fold and the window (r17: +0.3–0.4 s on
+    // q29/q31 when recomputed).
     val bArrays = bounds.filter(_._2.nonEmpty)
-    val ranked =
-      if (bArrays.isEmpty) base.withColumn("_shard", lit(0))
+    val shard =
+      if (bArrays.isEmpty) lit(0)
       else {
-        val bmap = map(bArrays.toSeq.sortBy(_._1).flatMap { case (k0, bs) =>
+        val bmap = map(bArrays.toSeq.sortBy(_._1.toString).flatMap { case (k0, bs) =>
           Seq(lit(k0), array(bs.map { case (o, t) =>
             struct(lit(o).as("o"), lit(t).as("t")) }: _*))
         }: _*)
@@ -215,48 +215,97 @@ object KeyedRank {
           else (b: Column) =>
             b.getField("o") < col(ord) ||
               (b.getField("o") === col(ord) && b.getField("t") <= col(tie))
-        base.withColumn("_shard", coalesce(
+        coalesce(
           size(filter(element_at(bmap, col(key)), boundaryPrecedesOrEq)),
-          lit(0)))
+          lit(0))
       }
-    // Second materialize RE-CONFIRMED r17: the shard column's per-row
-    // cost (element_at on the boundary map + a struct-array filter
-    // allocation) is NOT cheap enough to recompute — dropping this
-    // checkpoint and letting the offset agg and the final window each
-    // re-derive _shard from base's blocks measured +0.3–0.4 s on the
-    // mid-size keyedRank callers (q29/q31, interleaved n=5 minima),
-    // with no offsetting win. One eager cut per phase stands.
-    val sharded = ranked.materialize() // shard counts AND the final rank
-    val offMap: Map[String, Long] = {
-      // |keys| x shards count rows (stat-frame; the collect inside
-      // countByKeyShard carries the audited annotation). The counts ride
-      // the SAME RDD job that writes sharded's checkpoint (r18 §5 — the
-      // old groupBy(key, _shard).count() planned an exchange and two
-      // more stage jobs for a frequency table the pass folds driver-side).
-      val totals = countByKeyShard(sharded, key)
-      totals.keysIterator.foreach { case (k0, _) =>
-        require(!k0.contains("#"),
-          s"keyedRank: key value '$k0' contains '#' (reserved)")
-      }
-      totals.toSeq.groupBy(_._1._1).flatMap { case (k0, entries) =>
-        val sorted = entries.sortBy(_._1._2)
-        sorted.map(_._1._2).zip(
-          sorted.map(_._2).scanLeft(0L)(_ + _).init)
-          .map { case (sh, off) => s"$k0#$sh" -> off }
-      }
-    }
-    val offCol = coalesce(
-      element_at(
-        map(offMap.toSeq.sortBy(_._1).flatMap { case (k0, v0) =>
-          Seq(lit(k0), lit(v0)) }: _*),
-        concat(col(key), lit("#"), col("_shard"))),
-      lit(0L))
     val ordSort = if (descending) col(ord).desc else col(ord).asc
-    val w = Window.partitionBy(col(key), col("_shard"))
-      .orderBy(ordSort, col(tie).asc)
-    sharded
-      .withColumn(rankCol, (row_number().over(w) + offCol).cast("int"))
+    prefixBefore(base, Some(key), shard, Seq(ordSort, col(tie).asc), lit(1L))
+      .withColumn(rankCol, (col("before") + 1L).cast("int"))
+      .drop("before")
+  }
+
+  /** Exclusive running sum: adds `before` = the sum of `v` over the
+    * earlier rows of the same `key` (no key: the whole frame) in
+    * `order`, as `sum(v) OVER (PARTITION BY key ORDER BY order ROWS
+    * BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)` would, coalesced to
+    * 0 — but with no key ever funneled through a single partition.
+    *
+    * The caller supplies `shard`, a non-null int that NEVER DECREASES
+    * along `order` within a key (a hash's top bits under a hash order,
+    * [[rangeShard]] under a numeric one, keyedRank's sampled boundaries).
+    * The frame is materialized once with the shard column; one RDD pass
+    * over its blocks folds the per-(key, shard) long totals of `v`
+    * (that pass is the lazy checkpoint's first consumer, so totals and
+    * block write are one job); their exclusive prefix per key comes back
+    * as a literal map keyed by key then shard; and one window over (key,
+    * shard) adds the in-shard exclusive sum to the shard's offset.
+    * `order` must be total within a key for a deterministic result. The
+    * key must be non-null, and |keys| × shards driver-bounded (sources,
+    * stages, cells — not documents). `v` is read as a long.
+    */
+  def prefixBefore(df: DataFrame, key: Option[String], shard: Column,
+      order: Seq[Column], v: Column): DataFrame = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    val base = df.withColumn("_shard", shard.cast("int")).materialize()
+    val vl = v.cast("long")
+    val keyType = key.map(k => base.schema(k).dataType)
+    val ks = keyType.size // ordinal of _shard in the projection below
+    val totals = base.select(key.map(col).toSeq ++ Seq(col("_shard"), vl): _*)
+      .queryExecution.toRdd.mapPartitions { it =>
+        val toKey = keyType.map(CatalystTypeConverters.createToScalaConverter)
+        val m = scala.collection.mutable.HashMap.empty[(Any, Int), Long]
+        it.foreach { r =>
+          // no key: every row shares the key ()
+          val kk = (toKey.fold[Any](())(_(r.get(0, keyType.get))), r.getInt(ks))
+          val x = if (r.isNullAt(ks + 1)) 0L else r.getLong(ks + 1)
+          m(kk) = m.getOrElse(kk, 0L) + x
+        }
+        m.iterator
+        // driver-bound(stat-frame): |keys| x shards long totals per partition; key cardinality driver-bounded by contract
+      }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+    require(!totals.keysIterator.exists(_._1 == null),
+      s"prefixBefore: key column ${key.getOrElse("")} holds a null")
+    val offsets = totals.toSeq.groupBy(_._1._1).map { case (k0, es) =>
+      val sorted = es.map { case ((_, sh), t) => sh -> t }.sortBy(_._1)
+      k0 -> sorted.map(_._1).zip(sorted.map(_._2).scanLeft(0L)(_ + _))
+    }
+    def shardMap(offs: Seq[(Int, Long)]): Column =
+      map(offs.flatMap { case (sh, o) => Seq(lit(sh), lit(o)) }: _*)
+    val off =
+      if (offsets.isEmpty) lit(0L)
+      else key match {
+        case None => element_at(shardMap(offsets(())), col("_shard"))
+        case Some(k) => element_at(element_at(
+          map(offsets.toSeq.sortBy(_._1.toString).flatMap { case (k0, offs) =>
+            Seq(lit(k0), shardMap(offs)) }: _*), col(k)), col("_shard"))
+      }
+    val w = Window.partitionBy(key.map(col).toSeq :+ col("_shard"): _*)
+      .orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    base.withColumn("before", coalesce(sum(vl).over(w), lit(0L)) + off)
       .drop("_shard")
+  }
+
+  /** Equal-width range shards of the numeric `c` over `df`, for
+    * [[prefixBefore]] under an order ascending in `c`: shard = (c − lo) /
+    * width, width = (hi − lo) / defaultParallelism + 1, from one min/max
+    * probe job, so shards never decrease as `c` grows and number at most
+    * defaultParallelism. Shard a descending order by `-c`. The `extra`
+    * aggregates ride the same probe and come back as the returned row.
+    * An empty `df` gets shard 0.
+    */
+  def rangeShard(df: DataFrame, c: Column, extra: Column*): (Column, Row) = {
+    val cl = c.cast("long")
+    val probe = df.agg(min(cl), max(cl) +: extra: _*).head()
+    val shard =
+      if (probe.isNullAt(0)) lit(0)
+      else {
+        val (lo, hi) = (probe.getLong(0), probe.getLong(1))
+        val width = (hi - lo) / math.max(1, df.sparkSession.sparkContext.defaultParallelism) + 1L
+        ((cl - lit(lo)) / lit(width)).cast("int")
+      }
+    (shard, Row.fromSeq(probe.toSeq.drop(2)))
   }
 
   /** ONE RDD job over a just-materialized frame returning (row count,
@@ -300,26 +349,5 @@ object KeyedRank {
     val sample = parts.iterator.flatMap(_._2).toArray
       .sortBy(_._1).take(k).map(_._2)
     (n, sample)
-  }
-
-  /** Per-(key, _shard) row counts of the just-materialized sharded frame
-    * in ONE RDD job (folded per task, merged on the driver) — the counts
-    * ride the checkpoint-writing pass instead of a dedicated exchange +
-    * aggregate. State is |keys| × shards entries, driver-bounded by the
-    * caller contract.
-    */
-  private def countByKeyShard(sharded: DataFrame,
-      key: String): Map[(String, Int), Long] = {
-    val idxK = sharded.schema.fieldIndex(key)
-    val idxS = sharded.schema.fieldIndex("_shard")
-    sharded.queryExecution.toRdd.mapPartitions { it =>
-      val m = scala.collection.mutable.HashMap.empty[(String, Int), Long]
-      it.foreach { r =>
-        val kk = (r.getUTF8String(idxK).toString, r.getInt(idxS))
-        m(kk) = m.getOrElse(kk, 0L) + 1L
-      }
-      m.iterator
-      // driver-bound(stat-frame): |keys| x shards count entries per partition; key cardinality driver-bounded by contract
-    }.collect().groupBy(_._1).map { case (kk, vs) => kk -> vs.map(_._2).sum }
   }
 }

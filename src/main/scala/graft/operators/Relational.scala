@@ -1165,11 +1165,9 @@ object Relational {
     * definition) become +1/-1 boundary points; a running sum over the
     * time-ordered points is the live-session count, aggregated to the
     * concurrency profile per level. Ends sort before starts at the same
-    * instant (half-open intervals). The sweep itself is DISTRIBUTED: the
-    * timeline is cut into equal-width shards, each shard running-sums in
-    * parallel (partitioned window), and the per-shard delta totals (one
-    * long each) are exclusive-prefix-summed on the driver and broadcast
-    * back as offsets — the classic two-phase parallel prefix sum, so no
+    * instant (half-open intervals). The sweep is
+    * [[KeyedRank.prefixBefore]] over [[KeyedRank.rangeShard]]'s
+    * equal-width timeline shards (live = before + delta), so no
     * single-partition WindowExec exists in the plan at any scale.
     */
   val q36SweepConcurrency: Plan = (s, d) => {
@@ -1180,35 +1178,11 @@ object Relational {
     val points = sessions
       .select(unix_micros(col("st")).as("pt_us"), lit(1).as("delta"))
       .unionAll(sessions.select(col("end_us").as("pt_us"), lit(-1).as("delta")))
-      .materialize() // sweep reads it twice (totals + ranked pass)
-    // Distributed prefix sum: shard the timeline into equal-width buckets,
-    // running-sum within each shard (parallel windows), then add each
-    // shard's exclusive-prefix offset (per-shard totals are one tiny row
-    // each — collected and broadcast, never a global single-key window).
-    val Row(lo: Long, hi: Long) =
-      points.agg(min(col("pt_us")), max(col("pt_us"))).head()
-    val nShards = math.max(1, s.sparkContext.defaultParallelism)
-    val width = math.max(1L, (hi - lo) / nShards + 1L)
-    val sharded = points
-      .withColumn("shard", ((col("pt_us") - lit(lo)) / lit(width)).cast("int"))
-    val offsets: Map[Int, Long] = {
-      val totals = sharded.groupBy(col("shard"))
-        .agg(sum(col("delta")).as("tot"))
-        // driver-bound(stat-frame): one total per shard (<= parallelism rows)
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val ids = totals.keys.toSeq.sorted
-      ids.zip(ids.scanLeft(0L)((acc, id) => acc + totals(id)).init).toMap
-    }
-    val offsetCol = coalesce(
-      element_at(
-        map(offsets.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-          Seq(lit(k), lit(v)) }: _*),
-        col("shard")),
-      lit(0L))
-    val w = Window.partitionBy(col("shard")).orderBy(col("pt_us"), col("delta"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sharded
-      .withColumn("live", (sum(col("delta")).over(w) + offsetCol).cast("long"))
+      .materialize() // read twice: the shard probe and the prefix sum
+    val (shard, _) = KeyedRank.rangeShard(points, col("pt_us"))
+    KeyedRank.prefixBefore(points, None, shard,
+        Seq(col("pt_us"), col("delta")), col("delta"))
+      .withColumn("live", col("before") + col("delta"))
       .groupBy(col("live"))
       .agg(count(lit(1)).as("n_points"), min(col("pt_us")).as("first_at_us"))
       .orderBy("live")
@@ -2174,8 +2148,9 @@ object Relational {
     *     skylines (≤ frontier size per partition, guarded by
     *     `graft.skyline.maxMergeRows`), never the raw point set; and the
     *     running min itself is SHARDED over the v domain with a driver-
-    *     folded exclusive prefix-min (the q36/q71 two-phase prefix
-    *     pattern), so no single-partition WindowExec exists in the plan.
+    *     folded exclusive prefix-min (KeyedRank.prefixBefore's shape
+    *     with min for sum), so no single-partition WindowExec exists in
+    *     the plan.
     *
     * Money rides as integer cents so dominance compares are exact; the
     * oracle states the SEMANTICS (NOT EXISTS a dominating point) rather
@@ -3127,47 +3102,26 @@ object Relational {
     * the part key before any window runs, so the ranking window's input
     * is bounded by the CATALOG size, not the fact count (q66's histogram
     * discipline — at 100 TB the lineitems are billions but the parts are
-    * still a catalog). The running cum-sum itself is DISTRIBUTED via the
-    * q36 two-phase prefix sum: the cents domain is cut into equal-width
-    * shards (shard asc = cents strictly desc, ties co-sharded), each
-    * shard running-sums in parallel, and the per-shard totals (one long
-    * each) are exclusive-prefix-summed on the driver and broadcast back
-    * as offsets — so even a 100M-part catalog never funnels through a
+    * still a catalog). The running cum-sum is [[KeyedRank.prefixBefore]]
+    * + cents over [[KeyedRank.rangeShard]] of `-cents` (shards ascend as
+    * cents descend, ties co-sharded), whose probe also reads the grand
+    * total — so even a 100M-part catalog never funnels through a
     * single-partition WindowExec. Money is integer cents throughout; the
     * class predicates are integer cross-multiplications (cum*100 vs
     * tot*80), so no float enters any boundary decision, and the shares
     * divide identically-spelled exact integers.
     */
   val q71Pareto: Plan = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val totals = t(s, d, "lineitem")
       .groupBy(col("l_partkey"))
       .agg(sumCents(col("l_extendedprice")).as("cents"))
-      .materialize() // read thrice: domain probe, shard totals, ranked pass
-    val Row(loC: Long, hiC: Long) =
-      totals.agg(min(col("cents")), max(col("cents"))).head()
-    val nShards = math.max(1, s.sparkContext.defaultParallelism)
-    val width = math.max(1L, (hiC - loC) / nShards + 1L)
-    // shard 0 holds the HIGHEST cents; monotone float division keeps
-    // shard non-decreasing as cents decreases, equal cents co-sharded
-    val sharded = totals.withColumn("shard",
-      ((lit(hiC) - col("cents")) / lit(width)).cast("int"))
-    val byShard = sharded.groupBy(col("shard")).agg(sum(col("cents")).as("t"))
-      // driver-bound(stat-frame): one total per shard (<= parallelism rows)
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val ids = byShard.keys.toSeq.sorted
-    val offsets = ids.zip(ids.scanLeft(0L)((a, i) => a + byShard(i)).init).toMap
-    val grand = byShard.values.sum
-    val offsetCol = coalesce(element_at(
-      map(offsets.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-        Seq(lit(k), lit(v)) }: _*),
-      col("shard")), lit(0L))
-    val wrun = Window.partitionBy(col("shard"))
-      .orderBy(col("cents").desc, col("l_partkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sharded
-      .withColumn("cum", sum(col("cents")).over(wrun) + offsetCol)
-      .withColumn("tot", lit(grand))
+      .materialize() // read twice: the shard probe and the prefix sum
+    val (shard, probe) =
+      KeyedRank.rangeShard(totals, -col("cents"), sum(col("cents")))
+    KeyedRank.prefixBefore(totals, None, shard,
+        Seq(col("cents").desc, col("l_partkey")), col("cents"))
+      .withColumn("cum", col("before") + col("cents"))
+      .withColumn("tot", lit(probe.get(0)))
       .select(col("l_partkey"),
         (col("cents").cast("double") / lit(100.0)).as("revenue"),
         sround(col("cents").cast("double") / col("tot"), 6).as("share"),

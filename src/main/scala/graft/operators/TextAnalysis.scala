@@ -620,54 +620,23 @@ object TextAnalysis {
     * budget) across the whole corpus, so every pack boundary is exactly
     * where a single sequential packer would put it.
     *
-    * The global running sum is the q36 two-phase distributed prefix sum:
-    * the id range is cut into equal-width shards, each shard running-sums
-    * in a parallel window, and the per-shard token totals (one long each)
-    * are exclusive-prefix-summed on the driver and broadcast back as
-    * offsets — NO single-partition WindowExec at any scale (the naive
-    * global `Window.orderBy` formulation funnels 100 TB through one
-    * task). CurationSpec asserts equality with the naive form.
+    * The global running sum is [[KeyedRank.prefixBefore]] over
+    * [[KeyedRank.rangeShard]]'s equal-width doc_id shards — NO
+    * single-partition WindowExec at any scale (the naive global
+    * `Window.orderBy` formulation funnels 100 TB through one task).
+    * CurationSpec asserts equality with the naive form.
     */
-  /** Per-DOCUMENT pack assignment (doc_id, n_tok, pack_id) via the
-    * two-phase distributed prefix sum — t15's core, also what the
-    * training-set exporter writes (each doc must know its pack).
+  /** Per-DOCUMENT pack assignment (doc_id, n_tok, pack_id) — t15's core,
+    * also what the training-set exporter writes (each doc must know its
+    * pack). An empty corpus gives an empty assignment.
     */
   def globalPackingDocs(countedIn: DataFrame, budget: Long): DataFrame = {
-    val s = countedIn.sparkSession
     val counted = countedIn
-      .materialize() // read twice: shard totals + the ranked pass
-    val row = counted.agg(min(col("doc_id")), max(col("doc_id"))).head()
-    if (row.isNullAt(0)) { // empty corpus → empty assignment
-      return counted.select(col("doc_id"), lit(0L).as("n_tok"),
-        lit(0L).as("pack_id")).limit(0)
-    }
-    val (lo, hi) = (row.getLong(0), row.getLong(1))
-    val nShards = math.max(1, s.sparkContext.defaultParallelism)
-    val width = math.max(1L, (hi - lo) / nShards + 1L)
-    val sharded = counted
-      .withColumn("shard", ((col("doc_id") - lit(lo)) / lit(width)).cast("int"))
-    val offsets: Map[Int, Long] = {
-      val totals = sharded.groupBy(col("shard"))
-        .agg(sum(col("n_tok")).as("tot"))
-        // driver-bound(stat-frame): one total per shard (<= parallelism rows)
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val ids = totals.keys.toSeq.sorted
-      ids.zip(ids.scanLeft(0L)((acc, id) => acc + totals(id)).init).toMap
-    }
-    val offsetCol = coalesce(
-      element_at(
-        map(offsets.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-          Seq(lit(k), lit(v)) }: _*),
-        col("shard")),
-      lit(0L))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("shard")).orderBy(col("doc_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    sharded
-      .withColumn("pack_id",
-        floor((coalesce(sum(col("n_tok")).over(w), lit(0L)) + offsetCol)
-          / lit(budget)).cast("long"))
-      .select(col("doc_id"), col("n_tok"), col("pack_id"))
+      .materialize() // read twice: the shard probe and the prefix sum
+    val (shard, _) = KeyedRank.rangeShard(counted, col("doc_id"))
+    KeyedRank.prefixBefore(counted, None, shard, Seq(col("doc_id")), col("n_tok"))
+      .select(col("doc_id"), col("n_tok"),
+        floor(col("before") / lit(budget)).cast("long").as("pack_id"))
   }
 
   /** Per-pack accounting over the assignment — t15's driver-facing shape. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Materialize._
 import org.apache.spark.sql.functions._
 import graft.{Query, Tables}
-import graft.operators.Dedup
+import graft.operators.{Dedup, KeyedRank}
 import graft.functions.TextFunctions.sround
 
 /** End-to-end training-corpus preparation — the composition the individual
@@ -524,6 +524,12 @@ object CorpusPipeline {
       |FROM mixed ORDER BY epoch, source""".stripMargin
 
   // ----------------------------------------------- p5_epoch_materialize
+  /** The top 6 bits of a non-negative 62-bit hash: 64 contiguous,
+    * uniformly filled shards of the hash order, for
+    * [[graft.operators.KeyedRank.prefixBefore]].
+    */
+  private def topBits(h: Column): Column = shiftright(h, 62 - 6).cast("int")
+
   /** Materialize the FINAL epoch of p4's schedule — the step that turns
     * the mixture plan into an actual selection: per source, take
     * documents in md5-hash order (q29's deterministic sampling
@@ -534,65 +540,12 @@ object CorpusPipeline {
     *
     * The interesting part at 100 TB is the PER-SOURCE token prefix sum:
     * a naive `Window.partitionBy(source)` funnels each source's slice of
-    * the corpus through ONE task (sources are few and huge). This is
-    * t15's two-phase distributed prefix sum generalized to a KEYED
-    * stream: the hash order is sharded by the hash's top 6 bits (64
-    * contiguous ranges — uniform because md5 is), each (source, shard)
-    * runs a parallel window, and the per-(source, shard) totals (at most
-    * sources x 64 longs, collected driver-side — bounded by construction)
-    * are exclusive-prefix-summed per source and broadcast back as
-    * offsets. Selection is then a narrow filter: prefix-before < quota
+    * the corpus through ONE task (sources are few and huge). Here it is
+    * [[graft.operators.KeyedRank.prefixBefore]] keyed by source, sharded
+    * by the hash's top 6 bits (64 contiguous ranges — uniform because md5
+    * is). Selection is then a narrow filter: prefix-before < quota
     * (greedy fill, last doc may overshoot — the standard packer rule).
     */
-  /** Exclusive KEYED running sum — t15's two-phase distributed prefix
-    * generalized per key: rows of `df` ordered by (`h`, `tie`) within
-    * each `key` get a `before` column = the sum of `v` over all earlier
-    * rows of the SAME key, without ever routing a key through a single
-    * partition. `h` must be a uniform non-negative 62-bit hash (shards
-    * are its top 6 bits — 64 contiguous ranges); the per-(key, shard)
-    * totals (≤ keys x 64 longs, driver-collected — bounded by
-    * construction) become broadcast offsets. Property-tested against
-    * the naive per-key window in PropertySpec.
-    */
-  def keyedPrefixBefore(df: DataFrame, key: String, h: String,
-      tie: String, v: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = df
-      .withColumn("_shard", shiftright(col(h), 62 - 6).cast("int"))
-      .materialize() // feeds shard totals + the ranked pass
-    val offMap: Map[String, Long] = {
-      // driver-bound(stat-frame): |keys| x 64 shard totals; key cardinality is driver-bounded per the keyedPrefixBefore contract
-      val totals = base.groupBy(col(key), col("_shard"))
-        .agg(sum(col(v)).as("tot")).collect()
-        .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2))
-      // offsets are keyed "<key>#<shard>": a '#' inside a key value could
-      // alias another (key, shard) pair ("a#1"+2 vs "a"+12) and silently
-      // merge offsets — refuse loudly instead
-      totals.foreach { case ((k0, _), _) =>
-        require(!k0.contains("#"),
-          s"keyedPrefixBefore: key value '$k0' contains '#' (reserved)")
-      }
-      totals.groupBy(_._1._1).flatMap { case (k, entries) =>
-        val sorted = entries.sortBy(_._1._2)
-        sorted.map(_._1._2).zip(
-          sorted.map(_._2).scanLeft(0L)(_ + _).init)
-          .map { case (sh, off) => s"$k#$sh" -> off }
-      }
-    }
-    val offCol = coalesce(
-      element_at(
-        map(offMap.toSeq.sortBy(_._1).flatMap { case (k0, v0) =>
-          Seq(lit(k0), lit(v0)) }: _*),
-        concat(col(key), lit("#"), col("_shard"))),
-      lit(0L))
-    val w = Window.partitionBy(col(key), col("_shard"))
-      .orderBy(col(h), col(tie))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    base
-      .withColumn("before", coalesce(sum(col(v)).over(w), lit(0L)) + offCol)
-      .drop("_shard")
-  }
-
   def p5EpochMaterialize(s: SparkSession, d: String): DataFrame = {
     import graft.expressions.PortableHashExpressions.md5Hash62
     val quota = p4MixtureSchedule(s, d)
@@ -603,7 +556,8 @@ object CorpusPipeline {
         size(graft.functions.TextFunctions.lowerTokens(col("text")))
           .cast("long").as("n_tok"),
         md5Hash62(col("doc_id").cast("string")).as("h"))
-    val agged = keyedPrefixBefore(base, "source", "h", "doc_id", "n_tok")
+    val agged = KeyedRank.prefixBefore(base, Some("source"), topBits(col("h")),
+        Seq(col("h"), col("doc_id")), col("n_tok"))
       .join(broadcast(quota), "source")
       .filter(col("before") < col("token_quota"))
       .groupBy(col("source"))
@@ -668,10 +622,11 @@ object CorpusPipeline {
     *
     * The 100 TB point: the naive formulation is row_number() over ONE
     * global hash order — a single-partition window (or a full range
-    * exchange + zipWithIndex dance). Here the rank is
-    * [[keyedPrefixBefore]] with a constant key and v = 1: the hash's top
-    * bits shard the permutation into 64 contiguous ranges, each counts
-    * in parallel, and 64 offsets rebuild the exact global position.
+    * exchange + zipWithIndex dance). Here the position is
+    * [[graft.operators.KeyedRank.prefixBefore]] with no key and v = 1:
+    * the hash's top 6 bits shard the permutation into 64 contiguous
+    * ranges, each counts in parallel, and 64 offsets rebuild the exact
+    * global position.
     * Shuffling 100 TB costs one narrow projection + one bounded-window
     * pass, not a global sort.
     */
@@ -684,9 +639,9 @@ object CorpusPipeline {
       .select(col("doc_id"),
         md5Hash62(concat(lit(s"$epoch#"), col("doc_id").cast("string")))
           .as("h"),
-        md5Hash62(col("text")).bitwiseAND(lit(1099511627775L)).as("sig"),
-        lit("_").as("k"), lit(1L).as("one"))
-    keyedPrefixBefore(base, "k", "h", "doc_id", "one")
+        md5Hash62(col("text")).bitwiseAND(lit(1099511627775L)).as("sig"))
+    KeyedRank.prefixBefore(base, None, topBits(col("h")),
+        Seq(col("h"), col("doc_id")), lit(1L))
       .select(col("doc_id"), col("sig"),
         col("before").as("pos"),
         (col("before") / lit(DocsPerShard)).cast("long").as("shard_id"))
@@ -726,8 +681,8 @@ object CorpusPipeline {
     * user-heavy dialogues teaches less per step than its token count
     * suggests); the pretraining path (p2) has no mask, so this is the
     * post-training twin of its packing stage. Shapes inherited: one
-    * narrow t31 pass + the audited keyed two-phase prefix sum + a
-    * pack-keyed agg.
+    * narrow t31 pass + t15's globalPackingDocs (a sharded prefix sum) +
+    * a pack-keyed agg.
     */
   def p7SftPacking(s: SparkSession, d: String): DataFrame = {
     val perDoc = graft.operators.TextAnalysis.t31SftMask(s, d)
@@ -788,8 +743,8 @@ object CorpusPipeline {
     * per-batch rollup carries pair count, token totals, and loss share,
     * the numbers a DPO trainer weights its batch loss by.
     *
-    * Scale shape: one t32 pass (bounded 4096-row windows), the audited
-    * keyed two-phase prefix-sum pack (no single-partition window), one
+    * Scale shape: one t32 pass (bounded 4096-row windows), t15's
+    * globalPackingDocs pack (no single-partition window), one
     * batch-keyed agg. The pair relation is materialized once and read
     * twice (pack assignment + rollup join).
     */
@@ -947,10 +902,11 @@ object CorpusPipeline {
     * within a stage the order is a deterministic hash permutation (p6's
     * discipline — a content-correlated order would leak curriculum
     * position into content). The global rank is stage-major:
-    * keyedPrefixBefore on the stage key (3 keys × 64 hash shards, no
-    * single-partition window at any scale) plus a 3-row driver offset
-    * table. Per-LANG terciles keep every stage's language mix balanced —
-    * a global cut would front-load whichever language the LM scores
+    * [[graft.operators.KeyedRank.prefixBefore]] with no key, v = 1 and
+    * shard = stage × 64 + the hash's top 6 bits (192 contiguous ranges of
+    * the (stage, hash) order, no single-partition window at any scale).
+    * Per-LANG terciles keep every stage's language mix balanced — a
+    * global cut would front-load whichever language the LM scores
     * easiest. Domain = scored docs (≥ 2 tokens), t17's.
     */
   def p10Curriculum(s: SparkSession, d: String): DataFrame = {
@@ -961,21 +917,11 @@ object CorpusPipeline {
           .when(col("bucket") === "middle", 1).otherwise(2))
       .withColumn("h",
         md5Hash62(concat(lit("curr#"), col("doc_id").cast("string"))))
-      .withColumn("one", lit(1L))
-      .withColumn("skey", col("stage").cast("string"))
-    val ranked = keyedPrefixBefore(staged, "skey", "h", "doc_id", "one")
-      .materialize() // feeds the offset agg AND the final projection
-    val offs = ranked.groupBy(col("stage")).agg(count(lit(1)).as("n"))
-      // driver-bound(enum-bounded): one count per curriculum stage (3 rows)
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offMap = offs.map(_._1)
-      .zip(offs.map(_._2).scanLeft(0L)(_ + _).init).toMap
-    val offCol = coalesce(element_at(
-      map(offMap.toSeq.sortBy(_._1)
-        .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*),
-      col("stage")), lit(0L))
-    ranked.select(col("doc_id"), col("lang"), col("bucket"), col("stage"),
-        (col("before") + offCol).as("curriculum_rank"))
+    KeyedRank.prefixBefore(staged, None,
+        col("stage") * 64 + topBits(col("h")),
+        Seq(col("stage"), col("h"), col("doc_id")), lit(1L))
+      .select(col("doc_id"), col("lang"), col("bucket"), col("stage"),
+        col("before").as("curriculum_rank"))
       .orderBy("curriculum_rank")
   }
 

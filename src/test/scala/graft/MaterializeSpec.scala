@@ -43,7 +43,7 @@ class MaterializeSpec extends SparkSpec {
     val baseline = clusters(spark) // auto → local[4] → localCheckpoint path
     val dir = Files.createTempDirectory("graft_mat_reliable").toString
     val s = spark.newSession()
-    s.conf.set("spark.graft.checkpointDir", dir)
+    s.sparkContext.setCheckpointDir(dir)
     s.conf.set("spark.graft.materialize", "reliable")
     try {
       val got = clusters(s)

@@ -409,34 +409,54 @@ class PropertySpec extends SparkSpec {
   }
 
   test("keyed two-phase prefix == naive per-key window on random keyed streams") {
-    import graft.pipeline.CorpusPipeline
+    import graft.operators.KeyedRank
     import org.apache.spark.sql.expressions.Window
+    def before(df: org.apache.spark.sql.DataFrame, w: org.apache.spark.sql.expressions.WindowSpec) =
+      df.withColumn("before", coalesce(sum($"v").over(
+        w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
     // rows: (key from a small alphabet, hash anywhere in [0, 2^62),
-    // including shard-boundary extremes, tie id, small value)
+    // including shard-boundary extremes, tie id, small value). Keys may
+    // hold '#': "a#1" beside "a" with hashes in shard 12
     val rowGen = Gen.listOfN(60, Gen.zip(
-      Gen.oneOf("a", "b", "c"),
+      Gen.oneOf("a", "b", "c", "a#1"),
       Gen.oneOf(Gen.choose(0L, (1L << 62) - 1), Gen.oneOf(0L, (1L << 56) - 1,
-        1L << 56, (1L << 62) - 1)),
+        1L << 56, 12L << 56, (13L << 56) - 1, (1L << 62) - 1)),
       Gen.choose(0L, 1000L), Gen.choose(0L, 50L)))
     forAll(rowGen, n = 8) { rows =>
-      val df = rows.toDF("k", "h", "tie", "v")
-      val got = CorpusPipeline.keyedPrefixBefore(df, "k", "h", "tie", "v")
-        .select($"k", $"h", $"tie", $"v", $"before")
+      // a unique tie makes (h, tie) a total order
+      val df = rows.groupBy(_._3).map(_._2.head).toSeq.toDF("k", "h", "tie", "v")
+      val got = KeyedRank.prefixBefore(df, Some("k"),
+          shiftright($"h", 56).cast("int"), Seq($"h", $"tie"), $"v")
         .as[(String, Long, Long, Long, Long)].collect().toSet
-      val naive = df.withColumn("before",
-        coalesce(sum($"v").over(Window.partitionBy($"k")
-          .orderBy($"h", $"tie")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      val naive = before(df, Window.partitionBy($"k").orderBy($"h", $"tie"))
         .as[(String, Long, Long, Long, Long)].collect().toSet
-      assert(got == naive)
+      assert(got == naive, "keyed hash-sharded prefix != naive window")
     }
-    // reserved-character guard: a '#' in a key value could alias another
-    // (key, shard) offset — must refuse loudly, never merge silently
-    val bad = Seq(("a#1", 5L, 0L, 1L)).toDF("k", "h", "tie", "v")
-    val ex = intercept[Exception] {
-      CorpusPipeline.keyedPrefixBefore(bad, "k", "h", "tie", "v").collect()
+    // a null key has no entry in the literal offset map: refused loudly
+    val nullKey = Seq[(String, Long, Long, Long)](("a", 1L, 0L, 1L), (null, 2L, 1L, 1L))
+      .toDF("k", "h", "tie", "v")
+    val ex = intercept[IllegalArgumentException] {
+      KeyedRank.prefixBefore(nullKey, Some("k"), lit(0), Seq($"h"), $"v")
     }
-    assert(ex.getMessage.contains("reserved"), ex.getMessage)
+    assert(ex.getMessage.contains("null"), ex.getMessage)
+    // no key: equal-width range shards of a numeric order, ascending and
+    // (sharding the negation) descending, duplicates included
+    val globalGen = Gen.listOfN(60, Gen.zip(
+      Gen.oneOf(Gen.choose(-1000L, 1000L), Gen.oneOf(-1000L, 0L, 1000L)),
+      Gen.choose(0L, 1000L), Gen.choose(-50L, 50L)))
+    forAll(globalGen, n = 8) { rows =>
+      val df = rows.groupBy(_._2).map(_._2.head).toSeq
+        .toDF("x", "tie", "v").repartition(3)
+      for ((shardBy, order) <- Seq(
+          ($"x", Seq($"x", $"tie")), (-$"x", Seq($"x".desc, $"tie")))) {
+        val (shard, _) = KeyedRank.rangeShard(df, shardBy)
+        val got = KeyedRank.prefixBefore(df, None, shard, order, $"v")
+          .as[(Long, Long, Long, Long)].collect().toSet
+        val naive = before(df, Window.orderBy(order: _*))
+          .as[(Long, Long, Long, Long)].collect().toSet
+        assert(got == naive, s"range-sharded prefix over $order != naive window")
+      }
+    }
   }
 
   test("keyedTopK / keyedRank == naive per-key windows on random skewed keyed frames") {
@@ -479,12 +499,15 @@ class PropertySpec extends SparkSpec {
         assert(gotTop == naive.filter(_._4 <= k), "keyedTopK != naive top-k")
       }
     }
-    // reserved-character guard, same contract as keyedPrefixBefore
-    val bad = Seq(("x#1", 1.0, 5L)).toDF("k", "q", "id")
-    val ex = intercept[Exception] {
-      KeyedRank.keyedRank(bad, "k", "q", "id", "rank").collect()
-    }
-    assert(ex.getMessage.contains("reserved"), ex.getMessage)
+    // a '#' in a key value is an ordinary key: "x#1" beside "x"
+    val hashKeys = Seq(("x#1", 1.0, 5L), ("x", 2.0, 6L), ("x", 1.0, 7L),
+      ("x#1", 3.0, 8L)).toDF("k", "q", "id")
+    val naiveHash = hashKeys.withColumn("rank", row_number().over(
+      Window.partitionBy($"k").orderBy($"q".desc, $"id".asc)))
+      .as[(String, Double, Long, Int)].collect().toSet
+    assert(KeyedRank.keyedRank(hashKeys, "k", "q", "id", "rank", shards = 2)
+      .as[(String, Double, Long, Int)].collect().toSet == naiveHash,
+      "keyedRank over '#'-bearing keys != naive window")
   }
 
   test("keyedTopK re-spreads a key-aligned input (hot key colocated by a prior shuffle on the key)") {

@@ -1185,10 +1185,8 @@ class SimilaritySpec extends SparkSpec {
   test("v25 plan assert: no keyedRank full-rank subtree; every window is a local-slice rank or literally K-cut") {
     // the serving-path guarantee as a STRUCTURAL plan test (VERDICT r16
     // item 4): v25 must never compute a corpus-sized rank list — no
-    // keyedRank `_shard` window anywhere, and every WindowExec either
-    // ranks a per-(key, input-partition) local slice (keyedTopK phase 1,
-    // `_pid` key — frame bounded by the partition) or has a bounding
-    // literal filter on its (possibly aliased/offset) rank output.
+    // keyedRank `_shard` window anywhere, and every WindowExec has a
+    // bounding literal filter on its (possibly aliased/offset) rank output.
     import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.window.WindowExec
@@ -1231,12 +1229,8 @@ class SimilaritySpec extends SparkSpec {
     }
     val filters = plan.collect { case f: FilterExec => f }
     windows.foreach { w =>
-      val localSlice = keyNames(w).exists(_.startsWith("_pid"))
-      val cut = {
-        val ids = closure(w.windowExpression.map(_.toAttribute.exprId.id).toSet)
-        filters.exists(f => bounds(f.condition, ids))
-      }
-      assert(localSlice || cut,
+      val ids = closure(w.windowExpression.map(_.toAttribute.exprId.id).toSet)
+      assert(filters.exists(f => bounds(f.condition, ids)),
         s"un-cut corpus-frame window over keys ${keyNames(w)}:\n$w")
     }
   }

@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, LessThan, LessThanOrEqual, GreaterThan, GreaterThanOrEqual, Literal, AttributeReference}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.execution.window.{Final, Partial, WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.catalyst.plans.{logical => logical}
 
@@ -18,9 +18,12 @@ import org.apache.spark.sql.catalyst.plans.{logical => logical}
   * == Window audit ==
   * Every WindowExec, with its partition keys, classified by whether a hot
   * key can serialize one task:
-  *  - `sharded`   — carries keyedRank's `_shard` or keyedTopK's `_pid`:
-  *                  per-key volume is structurally bounded by the
-  *                  two-phase/range-sharded construction.
+  *  - `sharded`   — carries prefixBefore's `_shard` (range/hash shards
+  *                  of the key's order), or sits on a `Final`
+  *                  WindowGroupLimit over an exchange over a `Partial` one
+  *                  on the same keys (keyedTopK: each input partition's
+  *                  slice of a key is pruned to k rows before the key
+  *                  exchange): per-key volume is structurally bounded.
   *  - `bounded`   — per-doc keys (a document's own chunks/windows/lines,
   *                  bounded by doc length), tiny enumerations (lang, cell
   *                  of a 16-cell quantizer, np of a 4-point sweep), or
@@ -80,13 +83,11 @@ object SkewAudit {
     "q9_window_avg_case" -> "window over the 12-row monthly aggregate (reference A4 semantics)",
     "q8_window_rank" -> "rank over the per-(suppkey, flag) AGGREGATE: <= #flags rows per supplier",
     "q26_distinct_quantile" -> "windows over the (flag, quantity) VALUE HISTOGRAM: rows per key = |quantity domain|",
-    "q45_argmax" -> "mode window over the (priority, status) count table: <= #statuses rows per key",
     "q66_weighted_median" -> "cents-histogram windows (value domain) + one per-entity lead()",
     "q57_skyline" -> "stage-2 window over the materialized skyline survivors (output-bounded)",
     "q20_sessionize" -> "per-entity event history (sessionization contract)",
     "q21_frame_spec" -> "per-entity event history",
     "q34_value_windows" -> "per-entity event history",
-    "q37_lateral_topk" -> "per-customer order history (entity-bounded)",
     "q39_time_range_window" -> "per-entity event history",
     "q41_scd2" -> "per-entity key history (SCD2 contract)",
     "q46_rcd" -> "per-entity event history",
@@ -96,11 +97,8 @@ object SkewAudit {
     "q63_transitions" -> "per-entity event history",
     "q65_twap" -> "per-entity event history",
     "q67_pattern_match" -> "per-entity event history",
-    "t11_packing" -> "documented sharded-stream contract: at scale the pack key is (source, shard); q36 holds the offset-merge pattern",
-    "t32_preference_pairs" -> "already block-sharded: partition key includes floor(doc_id/4096)",
-    "v10_kmeans" -> "hand-rolled two-phase sampler: (cluster, hash%32) local prune to quota, then the bounded final rank",
-    "v16_knn_join" -> "per-src candidate list bounded by the block join's candidate bill",
-    "v20_bitext_mining" -> "per-English-doc neighborhood: cell-local candidates (v4 quantizer bill)")
+    "t11_packing" -> "documented sharded-stream contract: at scale the pack key is (source, shard); KeyedRank.prefixBefore holds the offset-merge pattern",
+    "t32_preference_pairs" -> "already block-sharded: partition key includes floor(doc_id/4096)")
 
   /** Tiny enumerations + per-shard keys: bounded by a value domain or a
     * sharding constant, never by corpus size.
@@ -190,14 +188,42 @@ object SkewAudit {
   }
 
   private case class Win(keys: Seq[String], brute: Boolean,
-      aggBounded: Boolean)
+      aggBounded: Boolean, groupLimited: Boolean)
+
+  /** Whether `w` reads a `Final` WindowGroupLimit whose input crossed an
+    * exchange from a `Partial` one, both on `w`'s own partition keys —
+    * the two-phase per-key limit Spark's `InferWindowGroupLimit` plans
+    * under a rank filter. Single-child nodes (sorts, projections) between
+    * them are looked through; another window or a join stops the walk.
+    */
+  private def groupLimited(w: WindowExec): Boolean = {
+    def sameKeys(g: WindowGroupLimitExec) =
+      g.partitionSpec.length == w.partitionSpec.length &&
+        g.partitionSpec.zip(w.partitionSpec).forall { case (a, b) => a.semanticEquals(b) }
+    def partialBelow(p: SparkPlan, crossed: Boolean): Boolean = p match {
+      case g: WindowGroupLimitExec if g.mode == Partial => crossed && sameKeys(g)
+      case e: ShuffleExchangeExec => partialBelow(e.child, crossed = true)
+      case _: WindowExec => false
+      case o if o.children.size == 1 => partialBelow(o.children.head, crossed)
+      case _ => false
+    }
+    def finalBelow(p: SparkPlan): Boolean = p match {
+      case g: WindowGroupLimitExec if g.mode == Final =>
+        sameKeys(g) && partialBelow(g.child, crossed = false)
+      case _: WindowExec | _: ShuffleExchangeExec => false
+      case o if o.children.size == 1 => finalBelow(o.children.head)
+      case _ => false
+    }
+    finalBelow(w.child)
+  }
 
   private def windows(p: SparkPlan): Seq[Win] = {
     val here = p.collect {
       case w: WindowExec =>
         Win(w.partitionSpec.map(e =>
           e.references.map(_.name.replaceAll("#\\d+.*$", "")).toSeq.sorted
-            .mkString("|")), bruteFrame(w.child), aggUnder(w.child))
+            .mkString("|")), bruteFrame(w.child), aggUnder(w.child),
+          groupLimited(w))
     }
     val cached = p.collect { case s: InMemoryTableScanExec => s }
       .flatMap(s => windows(s.relation.cachedPlan))
@@ -206,7 +232,7 @@ object SkewAudit {
 
   private def classify(w: Win): String = {
     val flat = w.keys.flatMap(_.split("\\|")).map(_.trim).filter(_.nonEmpty)
-    if (flat.exists(k => k.startsWith("_shard") || k.startsWith("_pid"))) "sharded"
+    if (flat.exists(_.startsWith("_shard")) || w.groupLimited) "sharded"
     else if (flat.isEmpty) {
       // single-partition window: bounded ONLY with in-plan aggregate
       // evidence; otherwise it needs a per-query allowlist justification
@@ -515,21 +541,10 @@ object SkewAudit {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
     }
-    val ws = windows(plan)
-    // keyedTopK's phase-2 window partitions by the bare keys over the
-    // ALREADY-PRUNED frame (<= partitions x k rows per key); recognize
-    // the two-phase pair by its (keys + _pid) phase-1 sibling in the
-    // same plan rather than key names alone
-    val keySets = ws.map(_.keys.flatMap(_.split("\\|")).toSet)
-    def hasPhase1(keys: Set[String]): Boolean =
-      keySets.exists(_ == keys + "_pid")
-    val classed = ws.map { w =>
-      val c0 = classify(w)
-      val keys = w.keys.flatMap(_.split("\\|")).toSet
-      val c = if (c0 == "review" && hasPhase1(keys)) "sharded" else c0
-      val c2 = if (c == "review" && Allowlist.contains(name))
-        s"allowlisted: ${Allowlist(name)}" else c
-      (w.keys.mkString(","), c2)
+    val classed = windows(plan).map { w =>
+      val c = classify(w)
+      (w.keys.mkString(","), if (c == "review" && Allowlist.contains(name))
+        s"allowlisted: ${Allowlist(name)}" else c)
     }
     Report(classed,
       joins(plan) ++ forcedBroadcasts(df.queryExecution.optimizedPlan))

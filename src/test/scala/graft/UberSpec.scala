@@ -310,9 +310,13 @@ class UberSpec extends SparkSpec {
 
   test("the SQL models and a query per family do not depend on the small-stage rule or partitions") {
     ingested()
-    // one cheap query per registry family, at the spec's sf0.001
+    // one cheap query per registry family, at the spec's sf0.001, then
+    // the sharded prefix sums (range shards: t15, q36, q71; stage-major
+    // hash shards: p10) and keyedTopK's window group limit (t10)
     val queries = Seq("q8_window_rank", "t5_vocab", "d1_exact_dedup", "v3_embedding_neardup",
-      "g9_walks", "mm2_frame_sample", "p6_epoch_shuffle", "q23_asof_join")
+      "g9_walks", "mm2_frame_sample", "p6_epoch_shuffle", "q23_asof_join",
+      "t15_global_packing", "q36_sweep_concurrency", "q71_pareto", "p10_curriculum",
+      "t10_tfidf")
     val names = Models.all.map(_.name) ++ queries
     def results(): Seq[Seq[Seq[Any]]] =
       Models.all.map(m => norm(Runner.runModel(spark, m))) ++
