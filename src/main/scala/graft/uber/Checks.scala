@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * accepted_values, relationships (FK into a parent table). Each check's
   * failing rows are defined once, as a `Column` predicate below; the
   * single-table functions count one predicate, and [[sourceChecks]]
-  * evaluates the whole contract in two aggregates built from the same
-  * predicates (at pipeline sizes each Spark action costs more in
-  * scheduling than in scanning, so the contract runs as few as it can).
+  * evaluates the whole contract as one action over one grouped aggregate
+  * with no join, reading every check off the same key groups (at pipeline
+  * sizes each Spark job costs more in scheduling than in scanning, so the
+  * contract runs as few as it can).
   */
 object Checks {
 
@@ -26,15 +27,21 @@ object Checks {
     def passed: Boolean = failures == 0L
   }
 
-  private val Tag = "__table"
-  private val Key = "__key"
   private val Rows = "__rows"
+  private val BaseKey = "__base_key"
+  private val ZoneKey = "__zone_key"
+  private val BaseParent = "__base_parent"
+  private val ZoneParent = "__zone_parent"
+  private val Child = "__child"
+  private val Dirty = "__dirty"
+  private val ByBase = "__by_base"
 
   /** not_null: the row's key is NULL. */
   private def nullKey(key: Column): Column = key.isNull
 
   /** unique: a key group (the NULL key is a group too) holds more than one
-    * row; applied to the `Rows` count of [[keyGroups]].
+    * row; applied to the `Rows` count of [[keyGroups]], or to a
+    * [[sourceChecks]] group's parent count.
     */
   private def duplicated(rows: Column): Column = rows > 1
 
@@ -109,49 +116,70 @@ object Checks {
 
   /** The reference schema's implicit contract (DDL PKs + FKs,
     * `Diary of Making.md:64-68`), expressed as the checks dbt never wrote,
-    * in two aggregates:
-    *   - both dims' keys, tagged by table and cast to string (exact for
-    *     the integer and string keys here), in ONE grouped aggregate:
-    *     per table, not_null is the row count of the NULL key group and
-    *     unique the number of key groups with more than one row;
-    *   - the fact's not_null, both relationships (existence joins against
-    *     the broadcast dims) and meta_envelope_clean as four counts of ONE
-    *     aggregate.
+    * in one Spark action with no join and no broadcast. The three tables
+    * share one row shape (base key, zone key, base parent, zone parent,
+    * child, dirty): a dim row is a parent row of its own key, with the
+    * other key NULL; each fact row, scanned once, is a child row of both
+    * its dispatching base and its zone, and carries its dirty-envelope
+    * flag. ONE grouped aggregate, over the grouping sets (base key) and
+    * (zone key), gives each row to a group per relation — one group per
+    * (relation, key), with its parent, child and dirty counts. The two
+    * keys keep their own typed columns, so a base number spelled like a
+    * zone id never meets it. One global aggregate reads the 8 counts off
+    * the groups, per relation:
+    *   - dim not_null: the parent rows of the NULL key group;
+    *   - dim unique: the key groups with more than one parent row (the
+    *     NULL key group counts too);
+    *   - fact not_null: the child rows of the base relation's NULL key;
+    *   - relationships: the child rows of a non-null key group with no
+    *     parent row — left-anti semantics, so a duplicated parent key
+    *     neither multiplies nor hides a row, and a NULL parent key matches
+    *     nothing;
+    *   - meta_envelope_clean: the base relation's summed dirty flag.
     * Results keep the per-check order: each dim's not_null and unique,
     * then the fact's four.
     */
   def sourceChecks(spark: SparkSession): Seq[CheckResult] = {
-    val dims = Seq(
-      ("taxi_zone_lookup", "locationid"),
-      ("base_num_and_name", "base_num"))
-    val tagged = dims.map { case (table, column) =>
-      spark.table(table).select(lit(table).as(Tag), col(column).cast("string").as(Key))
-    }.reduce(_ unionByName _)
-    // driver-bound(stat-frame): grouped by table tag, one row per dim at most
-    val perDim = keyGroups(tagged, col(Tag), col(Key)).groupBy(col(Tag)).agg(
-      sum(when(nullKey(col(Key)), col(Rows)).otherwise(0L)),
-      failures(duplicated(col(Rows))))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val dimResults = dims.flatMap { case (table, column) =>
-      val (nulls, dups) = perDim.getOrElse(table, (0L, 0L))
-      Seq(CheckResult(table, "not_null", column, nulls),
-        CheckResult(table, "unique", column, dups))
-    }
-
+    val zone = "taxi_zone_lookup"; val base = "base_num_and_name"
     val fact = "raw_data_janjune_15"
-    val counts = Ingest.typedAirbyteMeta(spark.table(fact))
-      .withColumn("__fk_base", col("dispatching_base_num"))
-      .withColumn("__fk_zone", col("locationid"))
-      .agg(
-        failures(nullKey(col("dispatching_base_num"))),
-        failures(dangling("__fk_base", spark.table("base_num_and_name"), "base_num")),
-        failures(dangling("__fk_zone", spark.table("taxi_zone_lookup"), "locationid")),
-        failures(dirtyEnvelope))
-      .head()
-    dimResults ++ Seq(
-      CheckResult(fact, "not_null", "dispatching_base_num", counts.getLong(0)),
-      CheckResult(fact, "relationships", "dispatching_base_num", counts.getLong(1)),
-      CheckResult(fact, "relationships", "locationid", counts.getLong(2)),
-      CheckResult(fact, "meta_envelope_clean", "_airbyte_meta", counts.getLong(3)))
+    def row(baseKey: Column, zoneKey: Column, baseParent: Long, zoneParent: Long,
+        child: Long, dirty: Column): Seq[Column] =
+      Seq(baseKey.as(BaseKey), zoneKey.as(ZoneKey), lit(baseParent).as(BaseParent),
+        lit(zoneParent).as(ZoneParent), lit(child).as(Child), dirty.as(Dirty))
+    val rows = Seq(
+      spark.table(zone).select(row(lit(null), col("locationid"), 0L, 1L, 0L, lit(0L)): _*),
+      spark.table(base).select(row(col("base_num"), lit(null), 1L, 0L, 0L, lit(0L)): _*),
+      Ingest.typedAirbyteMeta(spark.table(fact)).select(row(col("dispatching_base_num"),
+        col("locationid"), 0L, 0L, 1L, when(dirtyEnvelope, 1L).otherwise(0L)): _*))
+      .reduce(_ unionByName _)
+    // the (base key) set aggregates the zone key away
+    val groups = rows
+      .groupingSets(Seq(Seq(col(BaseKey)), Seq(col(ZoneKey))), col(BaseKey), col(ZoneKey))
+      .agg((grouping(col(ZoneKey)) === 1).as(ByBase),
+        Seq(BaseParent, ZoneParent, Child, Dirty).map(c => sum(c).as(c)): _*)
+    val inBase = col(ByBase); val inZone = !col(ByBase)
+    def rowsWhere(groupsWhere: Column, rows: String): Column =
+      coalesce(sum(when(groupsWhere, col(rows))), lit(0L))
+    // a key column is non-null only in its own relation's groups
+    def orphanRows(key: String, parent: String): Column =
+      rowsWhere(col(key).isNotNull && col(parent) === 0L, Child)
+    val counts = groups.agg(
+      rowsWhere(inZone && nullKey(col(ZoneKey)), ZoneParent),
+      failures(inZone && duplicated(col(ZoneParent))),
+      rowsWhere(inBase && nullKey(col(BaseKey)), BaseParent),
+      failures(inBase && duplicated(col(BaseParent))),
+      rowsWhere(inBase && nullKey(col(BaseKey)), Child),
+      orphanRows(BaseKey, BaseParent),
+      orphanRows(ZoneKey, ZoneParent),
+      rowsWhere(inBase, Dirty)).head()
+    Seq(
+      (zone, "not_null", "locationid"), (zone, "unique", "locationid"),
+      (base, "not_null", "base_num"), (base, "unique", "base_num"),
+      (fact, "not_null", "dispatching_base_num"),
+      (fact, "relationships", "dispatching_base_num"),
+      (fact, "relationships", "locationid"),
+      (fact, "meta_envelope_clean", "_airbyte_meta")).zipWithIndex.map {
+      case ((table, check, column), i) => CheckResult(table, check, column, counts.getLong(i))
+    }
   }
 }

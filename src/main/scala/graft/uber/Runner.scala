@@ -46,8 +46,9 @@ object Runner {
   }
 
   /** The `dbt test` half of `dbt build`: source-contract checks after
-    * ingest, before transform. Returns all results; [[runAll]] aborts on
-    * any failure.
+    * ingest, before transform — the 8 checks of [[Checks.sourceChecks]],
+    * one grouped aggregate and one action (2 Spark jobs). Returns all
+    * results; [[runAll]] aborts on any failure.
     */
   def runChecks(spark: SparkSession): Seq[Checks.CheckResult] =
     Checks.sourceChecks(spark)

@@ -28,12 +28,15 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** Runs `f` with the given session confs set, then restores them. */
-  def withConf[A](kv: (String, String)*)(f: => A): A = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+  def withConf[A](kv: (String, String)*)(f: => A): A = withConfOn(spark)(kv: _*)(f)
+
+  /** [[withConf]] on another session, such as one from `spark.newSession()`. */
+  def withConfOn[A](session: SparkSession)(kv: (String, String)*)(f: => A): A = {
+    val before = kv.map { case (k, _) => k -> session.conf.getOption(k) }
+    kv.foreach { case (k, v) => session.conf.set(k, v) }
     try f finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+      case (k, Some(v)) => session.conf.set(k, v)
+      case (k, None) => session.conf.unset(k)
     }
   }
 

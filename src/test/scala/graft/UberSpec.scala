@@ -5,8 +5,10 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.uber.{Checks, Incremental, Ingest, Models, Runner}
@@ -19,6 +21,24 @@ import graft.uber.Checks.CheckResult
   * shipped zero tests (SURVEY §5) — these are the tests it should have had.
   */
 class UberSpec extends SparkSpec {
+
+  private val plans = new AdaptiveSparkPlanHelper {}
+
+  /** The executed plans of the actions `f` runs, in the order they end. */
+  private def executedPlans(f: => Unit): Seq[SparkPlan] = {
+    val executed = ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executed += qe.executedPlan
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try f finally {
+      ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    executed.toSeq
+  }
 
   private lazy val dirs: (String, String) = {
     val root = Files.createTempDirectory("uber_fixture").toString
@@ -239,22 +259,11 @@ class UberSpec extends SparkSpec {
       """dispatching_base_num,pickup_date,affiliated_base_num,locationid
         |B02765,2015-05-20 11:00:00,B02512,1
         |""".stripMargin)
-    val factScans = ArrayBuffer.empty[FileSourceScanExec]
-    val plans = new AdaptiveSparkPlanHelper {}
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        factScans ++= plans.collect(qe.executedPlan) {
-          case s: FileSourceScanExec
-              if s.relation.location.rootPaths.exists(_.getName == "raw_data_janjune_15") => s
-        }
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try Runner.runIncrement(spark, inc.toString, wh, out)
-    finally {
-      ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      spark.listenerManager.unregister(listener)
-    }
+    val factScans = executedPlans(Runner.runIncrement(spark, inc.toString, wh, out))
+      .flatMap(plans.collect(_) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.getName == "raw_data_janjune_15") => s
+      })
     // unter_grun's month and the shared partial's month each scan the fact
     assert(factScans.size == 2, s"expected 2 fact scans, got ${factScans.size}")
     factScans.foreach { s =>
@@ -281,11 +290,11 @@ class UberSpec extends SparkSpec {
   test("runAll runs a fixed number of Spark jobs") {
     val (csv, wh) = dirs
     val out = Files.createTempDirectory("uber_jobs").toString
-    // 3 source writes + 6 checks + Incremental.fullBuild's 9; 7 checks
+    // 3 source writes + 2 checks + Incremental.fullBuild's 9; 3 checks
     // with the small-stage rule excluded
     val jobs = jobsLaunched(Runner.runAll(spark, csv, wh, out))
     val jobsOff = withConf(smallStageRuleExcluded)(jobsLaunched(Runner.runAll(spark, csv, wh, out)))
-    assert((jobs, jobsOff) == ((18, 19)), s"runAll launched $jobs jobs, $jobsOff with the rule excluded")
+    assert((jobs, jobsOff) == ((14, 15)), s"runAll launched $jobs jobs, $jobsOff with the rule excluded")
   }
 
   test("the six SQL models run a fixed number of Spark jobs") {
@@ -362,13 +371,16 @@ class UberSpec extends SparkSpec {
       "not json at all", null, clean, clean)
     // two NULL zone keys: the NULL key group counts as a duplicated key
     val zoneKeys: Seq[Option[Int]] =
-      (1 to 8).map(Some(_)) ++ Seq(None, Some(3), Some(3), Some(5), None)
+      (1 to 9).map(Some(_)) ++ Seq(None, Some(3), Some(3), Some(5), None)
+    // keys that collide across relations: base "7" is spelled like zone 7
     val baseKeys: Seq[Option[String]] =
-      Seq("B1", "B2", "B3", "B4").map(Some(_)) ++ Seq(Some("B2"), None)
-    // dispatching bases B1..B6 (B5, B6 dangle) and every 9th one NULL;
-    // zones 1..10 (9, 10 dangle) and every 13th one NULL
+      Seq("B1", "B2", "B3", "B4", "7").map(Some(_)) ++ Seq(Some("B2"), None)
+    // dispatching bases B1..B6 and "7", "9" (B5, B6 and "9" dangle, though
+    // zone 9 exists) and every 9th one NULL; zones 1..10 (10 dangles) and
+    // every 13th one NULL
+    val bases = (1 to 6).map(i => s"B$i") ++ Seq("7", "9")
     val facts: Seq[(Option[String], Option[Int], String)] = (0 until 240).map { i =>
-      (if (i % 9 == 4) None else Some(s"B${i % 6 + 1}"),
+      (if (i % 9 == 4) None else Some(bases(i % bases.size)),
         if (i % 13 == 7) None else Some(i % 10 + 1),
         envelopes(i % envelopes.size))
     }
@@ -401,6 +413,14 @@ class UberSpec extends SparkSpec {
     // every planted kind is present, so no count passes by being zero
     assert(expected.forall(!_.passed), expected)
     assert(Checks.sourceChecks(planted) == expected)
+    // the counts do not depend on partitioning, AQE, broadcasts or the
+    // small-stage rule
+    Seq(Seq("spark.sql.shuffle.partitions" -> "1"), Seq("spark.sql.shuffle.partitions" -> "7"),
+      Seq("spark.sql.adaptive.enabled" -> "false"),
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"), Seq(smallStageRuleExcluded))
+      .foreach { conf =>
+        assert(withConfOn(planted)(conf: _*)(Checks.sourceChecks(planted)) == expected, conf)
+      }
     // the single-table checks count the same failures
     val z = planted.table(zone); val b = planted.table(base)
     val f = planted.table(fact)
@@ -415,13 +435,20 @@ class UberSpec extends SparkSpec {
 
   test("the source checks run a fixed number of Spark jobs") {
     ingested()
+    // one action, with no join (an FK probe) and no broadcast
+    val executed = executedPlans(Runner.runChecks(spark))
+    assert(executed.size == 1, s"${executed.size} actions")
+    val probes = plans.collect(executed.head) {
+      case p: BaseJoinExec => p
+      case p: BroadcastExchangeExec => p
+    }
+    assert(probes.isEmpty, s"join or broadcast in the source checks:\n${executed.head}")
     val jobs = jobsLaunched(Runner.runChecks(spark))
     val jobsOff = withConf(smallStageRuleExcluded)(jobsLaunched(Runner.runChecks(spark)))
-    // dims: the key groups' shuffle stage + the collect, whose per-table
-    // aggregate reads that small stage on one partition (its own shuffle
-    // stage, with the small-stage rule excluded); fact: 2 dim broadcasts +
-    // the aggregate's 2 stages
-    assert((jobs, jobsOff) == ((6, 7)),
+    // the (relation, key) groups' shuffle stage + the result, whose
+    // global aggregate reads that small stage on one partition (its own
+    // shuffle stage, with the small-stage rule excluded)
+    assert((jobs, jobsOff) == ((2, 3)),
       s"the 8 source checks launched $jobs jobs, $jobsOff with the rule excluded")
   }
 
