@@ -38,23 +38,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Snapshots {
 
-  private def fs(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def conf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
+  private def fs(spark: SparkSession, p: Path): FileSystem = p.getFileSystem(conf(spark))
 
   private def vdir(table: String) = new Path(table, "_versions")
   private def manifestPath(table: String, v: Int) =
     new Path(vdir(table), f"v$v%05d.manifest")
 
-  /** Latest committed version, 0 if the table has none. */
-  def currentVersion(spark: SparkSession, table: String): Int = {
+  /** The versions that have a manifest (expired ones are gone), ascending. */
+  private def versions(spark: SparkSession, table: String): Seq[Int] = {
     val d = vdir(table)
     val f = fs(spark, d)
-    if (!f.exists(d)) 0
-    else f.listStatus(d).map(_.getPath.getName)
+    if (!f.exists(d)) Nil
+    else f.listStatus(d).toSeq.map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toInt)
-      .foldLeft(0)(math.max)
+      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toInt).sorted
   }
+
+  /** Latest committed version, 0 if the table has none. */
+  def currentVersion(spark: SparkSession, table: String): Int =
+    versions(spark, table).lastOption.getOrElse(0)
 
   /** One manifest file entry: table-relative path, absolute path, and the
     * per-file column statistics carried on its manifest line — zero or
@@ -87,61 +90,17 @@ object Snapshots {
       stats.contains(column) && !hasNulls(column)
   }
 
-  /** Trailing sentinel line closing every manifest and ref. The claim
-    * point is the create-EXCLUSIVE create, but on filesystems where
-    * create and write are separately visible (local FS, HDFS — object
-    * stores PUT atomically) a concurrent reader can open a file whose
-    * bytes are still in flight and see a TORN prefix: the append-race
-    * spec caught exactly this, a rebasing appender reading a half-written
-    * parent list and silently dropping rows. A file is complete iff its
-    * last line is the terminator; [[readTerminated]] re-reads briefly
-    * until it appears and otherwise REFUSES the file — a prefix is never
-    * guessed complete, whatever its age. A file that stays unterminated
-    * was left by a writer that died mid-write (or before any byte
-    * landed). Repair: if no writer is alive, delete the file — a torn
-    * manifest drops its version (its staged data files are
-    * [[vacuumOrphans]]' documented class), a torn ref drops its tag.
-    */
-  private val Terminator = "#end"
-
-  /** How long a file without its [[Terminator]] is re-read before it is
-    * refused: a live writer's manifest lands in milliseconds, so this
-    * only has to outlast a writer's GC pause or slow flush.
-    */
-  private val TornReadBoundMs = 10000L
-  private val TornReadSpacingMs = 25L
-
-  /** The lines of a manifest or ref before its [[Terminator]], re-reading
-    * a torn file for up to [[TornReadBoundMs]]; fails naming the file and
-    * its repair after that.
-    */
-  private def readTerminated(f: FileSystem, p: Path): Vector[String] = {
-    val deadline = System.currentTimeMillis() + TornReadBoundMs
-    while (true) {
-      val in = f.open(p)
-      val all =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-        finally in.close()
-      if (all.lastOption.contains(Terminator)) return all.dropRight(1)
-      require(System.currentTimeMillis() < deadline,
-        s"$p has no $Terminator terminator after ${TornReadBoundMs}ms of " +
-          "re-reads: its writer died mid-write. Repair: if no writer is " +
-          s"alive, delete $p (a torn manifest drops its version, a torn " +
-          "ref its tag)")
-      Thread.sleep(TornReadSpacingMs)
-    }
-    Vector.empty // unreachable
-  }
-
-  /** All lines of a complete manifest (note line first, terminator
-    * stripped); a torn manifest is refused — see [[Terminator]].
+  /** All lines of a complete manifest (note line first): a claimed
+    * [[DurableRecord]]. Deleting a torn one drops its version; its staged
+    * data files are [[vacuumOrphans]]' documented class.
     */
   private def manifestLines(spark: SparkSession, table: String,
       version: Int): Seq[String] = {
     val mp = manifestPath(table, version)
-    val f = fs(spark, mp)
-    require(f.exists(mp), s"no version $version at $table")
-    readTerminated(f, mp)
+    val lines = DurableRecord.read(conf(spark), mp,
+      s"delete $mp (a torn manifest drops its version)", claimed = true)
+    require(lines.isDefined, s"no version $version at $table")
+    lines.get
   }
 
   /** The raw manifest lines of a version (after the note line). */
@@ -220,18 +179,10 @@ object Snapshots {
   private def writeManifest(
       spark: SparkSession, table: String, v: Int,
       note: String, rels: Seq[String]): Int = {
-    val mp = manifestPath(table, v)
-    val f = fs(spark, mp)
-    f.mkdirs(vdir(table))
-    val out = f.create(mp, false) // fail loudly if the version exists
     // the manifest is line-oriented (note line + one path per line): a
-    // newline inside the note would shift every file path by one line.
-    // The closing Terminator line is what makes the content READABLE —
-    // concurrent readers treat a manifest without it as still in flight.
-    val safeNote = note.replaceAll("[\\r\\n]+", " ")
-    try out.write((safeNote +: rels :+ Terminator)
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
+    // newline inside the note would shift every file path by one line
+    DurableRecord.claim(conf(spark), manifestPath(table, v),
+      note.replaceAll("[\\r\\n]+", " ") +: rels)
     v
   }
 
@@ -302,33 +253,35 @@ object Snapshots {
     // with the same staged lines. Semantics are last-writer-wins by
     // construction — the racing commit's state stays time-travelable at
     // its own serialized version, the overwrite lands after it.
-    val MaxRetries = 10
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, table) + 1
-      if (tryClaim(spark, table, v, note, lines)) return v
-      attempt += 1
-      require(attempt < MaxRetries,
-        s"snapshot overwrite on $table: lost the version claim $MaxRetries " +
-          "times in a row — giving up with nothing published (staged files " +
-          "are orphans; vacuumOrphans reclaims them)")
-    }
-    -1 // unreachable
+    claimNext(spark, table, "overwrite")(_ => Some((note, lines)))
   }
 
-  /** Attempt the create-exclusive manifest claim; false = LOST the race
-    * (the version now exists), any other IO failure propagates. The
-    * existence re-check distinguishes "beaten to the claim" from a real
-    * filesystem error — object stores surface both as IOException.
+  /** Claim the version after the current one with the (note, lines)
+    * manifest `build` makes against that parent; `None` from `build` ends
+    * without a commit (a replayed epoch), returning the current version.
+    * A lost claim race — an IOException with the version now existing;
+    * object stores surface a real filesystem error the same way, hence
+    * the re-check — re-lists and rebuilds. Ten lost races in a row fail
+    * loudly with nothing published (staged files are orphans;
+    * [[vacuumOrphans]] reclaims them).
     */
-  private def tryClaim(spark: SparkSession, table: String, v: Int,
-      note: String, lines: Seq[String]): Boolean =
-    try { writeManifest(spark, table, v, note, lines); true }
-    catch {
-      case e: java.io.IOException =>
-        val mp = manifestPath(table, v)
-        if (fs(spark, mp).exists(mp)) false else throw e
+  private def claimNext(spark: SparkSession, table: String, what: String)(
+      build: Int => Option[(String, Seq[String])]): Int = {
+    var lost = 0
+    while (lost < 10) {
+      val parent = currentVersion(spark, table)
+      val mp = manifestPath(table, parent + 1)
+      build(parent) match {
+        case None => return currentVersion(spark, table)
+        case Some((note, lines)) =>
+          try return writeManifest(spark, table, parent + 1, note, lines)
+          catch { case _: java.io.IOException if fs(spark, mp).exists(mp) => lost += 1 }
+      }
     }
+    throw new IllegalArgumentException(s"snapshot $what on $table: lost the " +
+      s"version claim $lost times in a row — giving up with nothing published " +
+      "(staged files are orphans; vacuumOrphans reclaims them)")
+  }
 
   /** Commit `df` as an APPEND: the new version = parent's files + the
     * delta's files; nothing is rewritten (prior manifest LINES are
@@ -366,24 +319,11 @@ object Snapshots {
     val spark = df.sparkSession
     val lines = relLines(spark, table,
       stage(df, table, currentVersion(spark, table) + 1), statsCols)
-    val MaxRetries = 10
-    var attempt = 0
-    while (true) {
-      val parent = currentVersion(spark, table)
-      if (epoch.exists(e => lastEpoch(spark, table).exists(_ >= e)))
-        return currentVersion(spark, table)
-      val prior =
-        if (parent == 0) Seq.empty
-        else fileLines(spark, table, parent)
-      val v = parent + 1
-      if (tryClaim(spark, table, v, note, prior ++ lines)) return v
-      attempt += 1
-      require(attempt < MaxRetries,
-        s"snapshot append on $table: lost the version claim $MaxRetries times " +
-          "in a row — giving up with nothing published (staged files are " +
-          "orphans; vacuumOrphans reclaims them)")
+    claimNext(spark, table, "append") { parent =>
+      if (epoch.exists(e => lastEpoch(spark, table).exists(_ >= e))) None
+      else Some((note,
+        (if (parent == 0) Seq.empty else fileLines(spark, table, parent)) ++ lines))
     }
-    -1 // unreachable
   }
 
   /** Reserved note token stamping the commit with a streaming epoch:
@@ -407,13 +347,10 @@ object Snapshots {
     * note — O(1) manifest reads at streaming cadence; O(versions) only
     * for a table never written by an epoch sink.
     */
-  def lastEpoch(spark: SparkSession, table: String): Option[Long] = {
-    val f = fs(spark, new Path(table))
-    (currentVersion(spark, table) to 1 by -1).iterator
-      .filter(v => f.exists(manifestPath(table, v)))
+  def lastEpoch(spark: SparkSession, table: String): Option[Long] =
+    versions(spark, table).reverseIterator
       .map(v => epochOf(noteOf(spark, table, v)))
       .collectFirst { case Some(e) => e }
-  }
 
   /** [[commitAppend]] stamped with a streaming epoch: a replayed epoch
     * (id at or below the last stamped one) is a NO-OP returning the
@@ -515,38 +452,29 @@ object Snapshots {
   private def commitRowLevel(spark: SparkSession, table: String,
       firstParent: Int, touchedRels: Set[String],
       note: Int => String, newLines: Seq[String],
-      epoch: Option[Long] = None): Int = {
-    val MaxRetries = 10
-    var attempt = 0
-    while (true) {
-      val parent = currentVersion(spark, table)
+      epoch: Option[Long] = None): Int =
+    claimNext(spark, table, "row-level commit") { parent =>
       // exactly-once guard INSIDE the loop — a concurrent committer
       // replaying the same epoch may have applied it after this
       // committer's entry check; see commitAppendLoop's doc for why
       // claim-exclusivity makes the per-attempt re-check airtight
-      if (epoch.exists(e => lastEpoch(spark, table).exists(_ >= e)))
-        return currentVersion(spark, table)
-      val parentLines =
-        if (parent == 0) Seq.empty else fileLines(spark, table, parent)
-      if (parent != firstParent) {
-        val present = parentLines.map(relOf).toSet
-        val missing = touchedRels.filterNot(present)
-        require(missing.isEmpty,
-          s"row-level commit on $table: concurrent v$parent rewrote or " +
-            s"dropped ${missing.size} file(s) this commit had read " +
-            s"(${missing.take(3).mkString(", ")}) — the staged result is " +
-            "stale; nothing published, re-run against the new state")
+      if (epoch.exists(e => lastEpoch(spark, table).exists(_ >= e))) None
+      else {
+        val parentLines =
+          if (parent == 0) Seq.empty else fileLines(spark, table, parent)
+        if (parent != firstParent) {
+          val present = parentLines.map(relOf).toSet
+          val missing = touchedRels.filterNot(present)
+          require(missing.isEmpty,
+            s"row-level commit on $table: concurrent v$parent rewrote or " +
+              s"dropped ${missing.size} file(s) this commit had read " +
+              s"(${missing.take(3).mkString(", ")}) — the staged result is " +
+              "stale; nothing published, re-run against the new state")
+        }
+        val carried = parentLines.filterNot(l => touchedRels(relOf(l)))
+        Some((note(carried.size), carried ++ newLines))
       }
-      val carried = parentLines.filterNot(l => touchedRels(relOf(l)))
-      if (tryClaim(spark, table, parent + 1, note(carried.size),
-          carried ++ newLines)) return parent + 1
-      attempt += 1
-      require(attempt < MaxRetries,
-        s"row-level commit on $table: lost the version claim $MaxRetries " +
-          "times in a row — giving up with nothing published")
     }
-    -1 // unreachable
-  }
 
   /** Row-level DELETE of `column` in [lo, hi] — the takedown/expiry verb
     * a training-data store cannot ship without (a removal request against
@@ -690,11 +618,8 @@ object Snapshots {
     */
   def versionAt(spark: SparkSession, table: String, tsMillis: Long): Int = {
     val f = fs(spark, new Path(table))
-    (1 to currentVersion(spark, table))
-      .filter { v =>
-        val mp = manifestPath(table, v)
-        f.exists(mp) && f.getFileStatus(mp).getModificationTime <= tsMillis
-      }
+    versions(spark, table)
+      .filter(v => f.getFileStatus(manifestPath(table, v)).getModificationTime <= tsMillis)
       .foldLeft(-1)(math.max)
   }
 
@@ -726,32 +651,28 @@ object Snapshots {
     * that silently moves is worse than none; drop it first to re-point)
     * and PROTECT their target: [[expire]] retains tagged versions and
     * their files regardless of `keepLast`, so the audited bytes survive
-    * routine retention until the tag itself is dropped. The ref file
-    * carries the manifest [[Terminator]] so concurrent readers detect
-    * torn writes the same way manifests do.
+    * routine retention until the tag itself is dropped. A ref is a
+    * claimed [[DurableRecord]], like a manifest.
     */
   def tag(spark: SparkSession, table: String, name: String, version: Int): Unit = {
     require(name.matches("[A-Za-z0-9][A-Za-z0-9._-]*"),
       s"tag name must be [A-Za-z0-9][A-Za-z0-9._-]*, got '$name'")
     val mp = manifestPath(table, version)
-    val f = fs(spark, mp)
-    require(f.exists(mp), s"no version $version at $table")
-    f.mkdirs(refsDir(table))
-    val out = f.create(refPath(table, name), false) // loud if the tag exists
-    try out.write(s"$version\n$Terminator\n".getBytes("UTF-8"))
-    finally out.close()
+    require(fs(spark, mp).exists(mp), s"no version $version at $table")
+    // claimed: loud if the tag exists
+    DurableRecord.claim(conf(spark), refPath(table, name), Seq(version.toString))
   }
 
   /** Resolve a tag to its version; loud if the tag does not exist, and a
-    * torn ref is refused like a torn manifest (see [[Terminator]]).
+    * torn ref is refused like a torn manifest.
     */
   def resolveTag(spark: SparkSession, table: String, name: String): Int = {
     val rp = refPath(table, name)
-    val f = fs(spark, rp)
-    require(f.exists(rp), s"no tag '$name' at $table")
-    val lines = readTerminated(f, rp)
-    require(lines.size == 1, s"ref $rp holds ${lines.size} lines, not one version")
-    lines.head.toInt
+    val lines = DurableRecord.read(conf(spark), rp,
+      s"delete $rp (a torn ref drops its tag)", claimed = true)
+    require(lines.isDefined, s"no tag '$name' at $table")
+    require(lines.get.size == 1, s"ref $rp holds ${lines.get.size} lines, not one version")
+    lines.get.head.toInt
   }
 
   /** All tags of a table as (name, version), name-sorted. */
@@ -878,10 +799,7 @@ object Snapshots {
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     val f = fs(spark, new Path(table))
-    val cur = currentVersion(spark, table)
-    (1 to cur)
-      .filter(v => f.exists(manifestPath(table, v))) // expired versions are gone
-      .map { v =>
+    versions(spark, table).map { v =>
       val fl = files(spark, table, v)
       val note = noteOf(spark, table, v)
       (v, note, fl.size.toLong,
@@ -932,19 +850,17 @@ object Snapshots {
     */
   def expire(spark: SparkSession, table: String, keepLast: Int): ExpireResult = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val cur = currentVersion(spark, table)
+    val all = versions(spark, table)
+    val cur = all.lastOption.getOrElse(0)
     require(cur > 0, s"nothing to expire at $table")
     val floor = math.max(1, cur - keepLast + 1) // retained: [floor, cur]
     val f = fs(spark, new Path(table))
     // tagged versions are retention-pinned (see [[tag]]): their manifests
     // and files survive any keepLast until the tag is dropped
     val tagged = tags(spark, table).map(_._2).toSet
-    val expired = (1 until floor)
-      .filter(v => !tagged(v) && f.exists(manifestPath(table, v)))
+    val (expired, kept) = all.partition(v => v < floor && !tagged(v))
     if (expired.isEmpty) return ExpireResult(Nil, Nil, 0)
-    val retained = ((floor to cur) ++ tagged.filter(_ < floor))
-      .filter(v => f.exists(manifestPath(table, v)))
-      .flatMap(files(spark, table, _)).toSet
+    val retained = kept.flatMap(files(spark, table, _)).toSet
     val candidates = expired.flatMap(files(spark, table, _)).distinct
     val (shared, doomed) = candidates.partition(retained)
     expired.foreach { v =>
@@ -977,8 +893,7 @@ object Snapshots {
     // string compare would miss every live file and vacuum the table
     // (caught by FormatsSpec before it could ship)
     def qual(p: Path): String = f.makeQualified(p).toString
-    val live: Set[String] = (1 to currentVersion(spark, table))
-      .filter(v => f.exists(manifestPath(table, v)))
+    val live: Set[String] = versions(spark, table)
       .flatMap(v => files(spark, table, v)).map(p => qual(new Path(p))).toSet
     val dataDir = new Path(table, "data")
     val orphanFiles =

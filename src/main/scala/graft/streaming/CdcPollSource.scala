@@ -1,7 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import graft.Materialize._
+import graft.sources.DurableRecord
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,8 +29,9 @@ import CdcApply.{Change, Current}
   * written AFTER the merge commits, so a crash between the two replays the
   * batch on restart — and latest-LSN-wins applied twice is a no-op
   * (StreamingSpec asserts replay convergence explicitly). The watermark
-  * write itself is write-tmp + atomic rename, so a torn write can't corrupt
-  * the resume point.
+  * is a published [[DurableRecord]]: a crash mid-write leaves the previous
+  * resume point, and a torn one is refused, never read as "from the
+  * start".
   *
   * Scale: each poll ships ONE range predicate to the database (index range
   * scan on the lsn column — the WAL-read analog), moves only the delta, and
@@ -41,23 +45,14 @@ object CdcPollSource {
   /** Log positions are non-negative (WAL offsets); -1 = "from the start". */
   val InitialWatermark: Long = -1L
 
-  def readWatermark(path: String): Long = {
-    val p = Paths.get(path)
-    if (Files.exists(p)) new String(Files.readAllBytes(p)).trim.toLong
-    else InitialWatermark
-  }
+  def readWatermark(path: String): Long =
+    DurableRecord.read(new Configuration(), new Path(path),
+      s"rewrite it as the last merged lsn and a ${DurableRecord.Terminator} line")
+      .fold(InitialWatermark)(_.head.toLong)
 
-  /** Durable watermark advance: tmp-file + atomic rename, so a crash
-    * mid-write leaves the previous watermark intact (replay, not a hole).
-    */
-  def writeWatermark(path: String, lsn: Long): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, lsn.toString.getBytes("UTF-8"))
-    Files.move(tmp, p,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** Durable watermark advance (see the object doc). */
+  def writeWatermark(path: String, lsn: Long): Unit =
+    DurableRecord.publish(new Configuration(), new Path(path), Seq(lsn.toString))
 
   /** One incremental read: rows with lsn > `after`, shaped as the Change
     * feed. The predicate rides inside the dbtable subquery, so the

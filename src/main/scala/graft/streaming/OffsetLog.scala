@@ -18,6 +18,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.DurableRecord
+
 /** A partitioned, offset-addressed, replayable log as a Spark DataSource
   * V2 streaming source — the Kafka CONSUMER CONTRACT (the reference's
   * unbuilt streaming TO-DO, `Diary of Making.md:383-386`) without the
@@ -32,19 +34,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * is the source-agnosticism claim EventsStream makes.
   *
   * Layout (`<dir>`):
-  *   _meta                 one line: the partition count
+  *   _meta                 the partition count (claimed)
   *   p=<k>/<start20>-<count>.log   records [start, start+count), one per
   *                         line: `offset \t tsMillis \t b64(key) \t b64(value)`
-  *   p=<k>/_start          retention watermark (log-start offset); absent = 0
-  *   _epochs/e<epoch>.manifest     sink epoch commit points (see commitEpoch)
-  *   _epochs/_watermark    highest expired epoch (see expireEpochs); absent = -1
+  *   p=<k>/_start          log-start offset (published); absent = 0
+  *   _epochs/e<epoch>.manifest     sink epoch commit points (claimed)
+  *   _epochs/_watermark    highest expired epoch (published); absent = -1
   *
-  * Segment files are immutable once visible and named by their offset
-  * range, so the high-water mark and batch planning are pure LISTING
-  * (no data reads on the driver), and a segment is published
-  * atomically by rename — the same manifest-last discipline as
-  * Snapshots (a crashed producer leaves a `.tmp`, never a torn
-  * segment). Base64 keeps arbitrary keys/values line-safe.
+  * All but the segments are [[DurableRecord]]s, so a torn one is refused,
+  * never read as its default. Segment files are immutable once visible
+  * and named by their offset range, so the high-water mark and batch
+  * planning are pure LISTING (no data reads on the driver); a crashed
+  * producer leaves a staged `.tmp`, never a torn segment. Base64 keeps
+  * arbitrary keys/values line-safe.
   *
   * Scale shape: one InputPartition per log partition per micro-batch —
   * the Kafka parallelism model; readers stream lines and never
@@ -64,22 +66,31 @@ object OffsetLog {
   }
 
   private def pdir(dir: String, p: Int) = new Path(dir, s"p=$p")
+  private def metaPath(dir: String) = new Path(dir, "_meta")
+  private def startPath(dir: String, p: Int) = new Path(pdir(dir, p), "_start")
+  private def watermarkPath(dir: String) = new Path(dir, "_epochs/_watermark")
+  private def epochPath(dir: String, epochId: Long) =
+    new Path(dir, f"_epochs/e$epochId%020d.manifest")
+
+  /** The one value of a published record, `absent` if none was written. */
+  private def publishedLong(conf: Configuration, f: Path, absent: Long,
+      what: String): Long =
+    DurableRecord.read(conf, f, s"rewrite it as the $what and a " +
+        s"${DurableRecord.Terminator} line").fold(absent)(_.head.toLong)
 
   /** Initialize an empty log with `partitions` partitions. */
   def create(spark: SparkSession, dir: String, partitions: Int): Unit = {
     require(partitions > 0)
     val conf = spark.sessionState.newHadoopConf()
-    val (fs, root) = fsFor(dir, conf)
+    val (fs, _) = fsFor(dir, conf)
     (0 until partitions).foreach(p => fs.mkdirs(pdir(dir, p)))
-    val out = fs.create(new Path(root, "_meta"), false)
-    try out.write(s"$partitions\n".getBytes("UTF-8")) finally out.close()
+    DurableRecord.claim(conf, metaPath(dir), Seq(partitions.toString))
   }
 
   def numPartitions(conf: Configuration, dir: String): Int = {
-    val (fs, root) = fsFor(dir, conf)
-    val in = fs.open(new Path(root, "_meta"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next().trim.toInt
-    finally in.close()
+    val meta = metaPath(dir)
+    DurableRecord.read(conf, meta, s"delete $meta and create the log again",
+      claimed = true).getOrElse(sys.error(s"no offset log at $dir")).head.toInt
   }
 
   /** Visible segments of a partition: (path, startOffset, count), offset
@@ -101,6 +112,18 @@ object OffsetLog {
   def highWater(conf: Configuration, dir: String, p: Int): Long =
     segments(conf, dir, p).foldLeft(0L) { case (hw, (_, s, c)) => math.max(hw, s + c) }
 
+  /** Write records [start, start + records.size) to the segment tmp `tmp`. */
+  private def stageSegment(fs: FileSystem, tmp: Path, start: Long,
+      tsMillis: Long, records: Seq[(String, String)]): Unit = {
+    val b64 = Base64.getEncoder
+    def enc(s: String) = b64.encodeToString(Option(s).getOrElse("").getBytes("UTF-8"))
+    val out = fs.create(tmp, true)
+    try out.write(records.zipWithIndex.map { case ((k, v), i) =>
+      s"${start + i}\t$tsMillis\t${enc(k)}\t${enc(v)}"
+    }.mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
   /** Producer: append `records` (key, value) to one partition as a single
     * immutable segment; returns the new high-water mark. Write-then-rename
     * so a crash mid-write leaves no visible torn segment.
@@ -114,16 +137,7 @@ object OffsetLog {
     val name = f"$start%020d-${records.size}.log"
     val d = pdir(dir, partition)
     val tmp = new Path(d, s".$name.tmp")
-    val out = fs.create(tmp, true)
-    val b64 = Base64.getEncoder
-    try {
-      val body = records.zipWithIndex.map { case ((k, v), i) =>
-        val ko = b64.encodeToString(Option(k).getOrElse("").getBytes("UTF-8"))
-        val vo = b64.encodeToString(Option(v).getOrElse("").getBytes("UTF-8"))
-        s"${start + i}\t$tsMillis\t$ko\t$vo"
-      }.mkString("", "\n", "\n")
-      out.write(body.getBytes("UTF-8"))
-    } finally out.close()
+    stageSegment(fs, tmp, start, tsMillis, records)
     require(fs.rename(tmp, new Path(d, name)),
       s"offsetlog append: publish rename failed for $name")
     start + records.size
@@ -140,33 +154,15 @@ object OffsetLog {
   // of silently replaying a hole. The active (last) segment is never
   // deleted, so the high-water mark stays a pure listing like before.
 
-  /** Durable log-start offset of a partition (0 until first expire).
-    * Stored as one line in `p=<k>/_start`, published by rename like
-    * segments — a crashed expire leaves the old value, never a torn one.
+  /** Durable log-start offset of a partition (0 until first expire),
+    * published to `p=<k>/_start` — a crashed expire leaves the old value,
+    * and a concurrent reader sees the old value or the new one.
     */
-  def logStart(conf: Configuration, dir: String, p: Int): Long = {
-    val (fs, _) = fsFor(dir, conf)
-    val f = new Path(pdir(dir, p), "_start")
-    if (!fs.exists(f)) 0L
-    else {
-      val in = fs.open(f)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next().trim.toLong
-      finally in.close()
-    }
-  }
+  def logStart(conf: Configuration, dir: String, p: Int): Long =
+    publishedLong(conf, startPath(dir, p), 0L, s"p=$p log-start offset")
 
   def logStarts(conf: Configuration, dir: String): Map[Int, Long] =
     (0 until numPartitions(conf, dir)).map(p => p -> logStart(conf, dir, p)).toMap
-
-  private def writeLogStart(fs: FileSystem, dir: String, p: Int, v: Long): Unit = {
-    val d = pdir(dir, p)
-    val tmp = new Path(d, "._start.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-    fs.delete(new Path(d, "_start"), false)
-    require(fs.rename(tmp, new Path(d, "_start")),
-      s"offsetlog expire: publish rename failed for p=$p _start")
-  }
 
   /** Advance a partition's retention watermark to `upTo` (exclusive: all
     * offsets below it are declared expired) and delete every whole
@@ -182,9 +178,9 @@ object OffsetLog {
     val segs = segments(conf, dir, p)
     val hw = segs.foldLeft(0L) { case (m, (_, s, c)) => math.max(m, s + c) }
     val newStart = math.max(logStart(conf, dir, p), math.min(upTo, hw))
-    writeLogStart(fs, dir, p, newStart) // fence FIRST: a crash between the
-    // two steps leaves expired-but-present segments (harmless), never
-    // deleted-but-readable offsets
+    // fence FIRST: a crash between the two steps leaves expired-but-present
+    // segments (harmless), never deleted-but-readable offsets
+    DurableRecord.publish(conf, startPath(dir, p), Seq(newStart.toString))
     segs.dropRight(1).foreach { case (path, s, c) =>
       if (s + c <= newStart) fs.delete(new Path(path), false)
     }
@@ -210,7 +206,7 @@ object OffsetLog {
   /** Expire epoch manifests at or below `upToEpoch` and reclaim crashed
     * `.e<epoch>-p<k>.tmp` stagings of those epochs (the two unbounded-
     * growth classes — ADVICE round 10). Durable watermark first
-    * (`_epochs/_watermark`, rename-published): [[commitEpoch]] refuses an
+    * (`_epochs/_watermark`, published): [[commitEpoch]] refuses an
     * epoch at or below it whose manifest is gone, because completing such
     * a replay without its manifest would re-append rows and break
     * exactly-once. Only manifests whose renames have COMPLETED (no
@@ -218,28 +214,16 @@ object OffsetLog {
     * below the watermark fails loudly rather than vanishing.
     */
   def expireEpochs(conf: Configuration, dir: String, upToEpoch: Long): Unit = {
-    val (fs, root) = fsFor(dir, conf)
-    val edir = new Path(root, "_epochs")
-    if (!fs.exists(edir)) fs.mkdirs(edir)
-    val wmFile = new Path(edir, "_watermark")
-    val cur = epochWatermark(conf, dir)
-    val wm = math.max(cur, upToEpoch)
-    val tmp = new Path(edir, "._watermark.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$wm\n".getBytes("UTF-8")) finally out.close()
-    fs.delete(wmFile, false)
-    require(fs.rename(tmp, wmFile), "offsetlog expireEpochs: watermark rename failed")
+    val (fs, _) = fsFor(dir, conf)
+    val wm = math.max(epochWatermark(conf, dir), upToEpoch)
+    DurableRecord.publish(conf, watermarkPath(dir), Seq(wm.toString))
     val ManifestRe = """e(\d{20})\.manifest""".r
-    fs.listStatus(edir).foreach { st =>
+    fs.listStatus(watermarkPath(dir).getParent).foreach { st =>
       st.getPath.getName match {
         case ManifestRe(e) if e.toLong <= wm =>
           // safe to drop only once every recorded rename completed
-          val in = fs.open(st.getPath)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toList finally in.close()
-          val pending = lines.filter(_.nonEmpty).exists { ln =>
-            val Array(p, _, fin) = ln.split("\t", 3)
-            !fs.exists(new Path(pdir(dir, p.toInt), fin))
+          val pending = epochEntries(conf, dir, e.toLong).exists {
+            case (p, _, fin) => !fs.exists(new Path(pdir(dir, p), fin))
           }
           require(!pending,
             s"offsetlog expireEpochs: epoch ${e.toLong} at/below watermark $wm has " +
@@ -263,15 +247,21 @@ object OffsetLog {
   }
 
   /** Highest expired epoch (-1 until first [[expireEpochs]]). */
-  def epochWatermark(conf: Configuration, dir: String): Long = {
-    val (fs, root) = fsFor(dir, conf)
-    val f = new Path(root, "_epochs/_watermark")
-    if (!fs.exists(f)) -1L
-    else {
-      val in = fs.open(f)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next().trim.toLong
-      finally in.close()
-    }
+  def epochWatermark(conf: Configuration, dir: String): Long =
+    publishedLong(conf, watermarkPath(dir), -1L, "highest expired epoch")
+
+  /** An epoch manifest's (partition, staged tmp, final segment) entries;
+    * empty when the epoch has no manifest.
+    */
+  private def epochEntries(conf: Configuration, dir: String,
+      epochId: Long): Seq[(Int, String, String)] = {
+    val manifest = epochPath(dir, epochId)
+    DurableRecord.read(conf, manifest, s"delete $manifest; the epoch's " +
+        "replay stages its rows again", claimed = true)
+      .getOrElse(Vector.empty).map { ln =>
+        val Array(p, tmp, fin) = ln.split("\t", 3)
+        (p.toInt, tmp, fin)
+      }
   }
 
   /** Sink partition for a record key: stable key-hash routing, Kafka's
@@ -287,8 +277,10 @@ object OffsetLog {
     *  1. no epoch manifest → stage every partition's records as a hidden
     *     `.e<epoch>-p<k>.tmp` (overwrite-safe: a crash BEFORE the
     *     manifest restages from scratch, tmps are invisible to readers);
-    *  2. create the epoch manifest EXCLUSIVELY, listing each staged tmp
-    *     and its final offset-range segment name — the commit point;
+    *  2. claim the epoch manifest, a [[DurableRecord]] listing each staged
+    *     tmp and its final offset-range segment name — the commit point.
+    *     A torn manifest is refused on replay: completing only the
+    *     partitions it still lists would lose the rest;
     *  3. rename tmps to their recorded final names.
     *
     * A replayed epoch (Spark re-delivers after a crash anywhere past the
@@ -299,49 +291,34 @@ object OffsetLog {
     */
   def commitEpoch(conf: Configuration, dir: String, epochId: Long,
       rows: Seq[(Int, String, String)]): Unit = {
-    val (fs, root) = fsFor(dir, conf)
-    val marker = new Path(root, f"_epochs/e$epochId%020d.manifest")
-    def completeRenames(): Unit = {
-      val in = fs.open(marker)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-      lines.filter(_.nonEmpty).foreach { ln =>
-        val Array(p, tmp, fin) = ln.split("\t", 3)
-        val d = pdir(dir, p.toInt)
+    val (fs, _) = fsFor(dir, conf)
+    val marker = epochPath(dir, epochId)
+    def completeRenames(entries: Seq[(Int, String, String)]): Unit =
+      entries.foreach { case (p, tmp, fin) =>
+        val d = pdir(dir, p)
         val (tp, fp) = (new Path(d, tmp), new Path(d, fin))
         if (!fs.exists(fp)) {
           require(fs.exists(tp), s"epoch $epochId: lost staged segment $tmp")
           require(fs.rename(tp, fp), s"epoch $epochId: rename $tmp failed")
         } else if (fs.exists(tp)) fs.delete(tp, false) // rename raced a retry
       }
-    }
-    if (fs.exists(marker)) { completeRenames(); return }
+    if (fs.exists(marker)) { completeRenames(epochEntries(conf, dir, epochId)); return }
     require(epochId > epochWatermark(conf, dir),
       s"offsetlog $dir: replay of epoch $epochId at/below the expired-epoch " +
         s"watermark ${epochWatermark(conf, dir)} with its manifest gone — " +
         "appending would duplicate rows; restart from a fresh checkpoint")
-    if (rows.isEmpty) { fs.create(marker, false).close(); return }
     val now = System.currentTimeMillis()
-    val b64 = Base64.getEncoder
     val entries = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (p, rs) =>
       val start = highWater(conf, dir, p)
       val tmpName = f".e$epochId%020d-p$p.tmp"
-      val finName = f"$start%020d-${rs.size}.log"
-      val out = fs.create(new Path(pdir(dir, p), tmpName), true)
-      try {
-        val body = rs.zipWithIndex.map { case ((_, k, v), i) =>
-          val ko = b64.encodeToString(Option(k).getOrElse("").getBytes("UTF-8"))
-          val vo = b64.encodeToString(Option(v).getOrElse("").getBytes("UTF-8"))
-          s"${start + i}\t$now\t$ko\t$vo"
-        }.mkString("", "\n", "\n")
-        out.write(body.getBytes("UTF-8"))
-      } finally out.close()
-      s"$p\t$tmpName\t$finName"
+      stageSegment(fs, new Path(pdir(dir, p), tmpName), start, now,
+        rs.map { case (_, k, v) => (k, v) })
+      (p, tmpName, f"$start%020d-${rs.size}.log")
     }
-    val out = fs.create(marker, false) // exclusive: the commit point
-    try out.write(entries.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    completeRenames()
+    // the commit point; an epoch with no rows claims an empty manifest
+    DurableRecord.claim(conf, marker,
+      entries.map { case (p, tmp, fin) => s"$p\t$tmp\t$fin" })
+    completeRenames(entries)
   }
 }
 

@@ -1,7 +1,9 @@
 package graft.uber
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftSession
+import graft.sources.DurableRecord
 
 /** Orchestration layer (SURVEY §2.10): dependency-ordered materialization of
   * ingest → models, the Spark equivalent of the reference's Dagster
@@ -75,9 +77,10 @@ object Runner {
   /** Drop-folder increment processing — the scheduler-facing shape of the
     * Airbyte-sync-then-rebuild loop: each tick, any NEW `*.csv` under
     * `incDir` (by name, lexicographic = arrival order for timestamped
-    * drops) is applied via [[runIncrement]]; processed names persist in
-    * `stateFile` so restarts do not replay. Returns the files applied
-    * this call.
+    * drops) is applied via [[runIncrement]]. The processed names are a
+    * [[DurableRecord]] at `stateFile`, the whole set published after each
+    * increment lands: a crash mid-file replays that file next tick (both
+    * halves are idempotent re-overwrites). Returns the files applied.
     */
   def processNewIncrements(
       spark: SparkSession,
@@ -87,11 +90,11 @@ object Runner {
       stateFile: String): Seq[String] = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val statePath = Paths.get(stateFile)
-    val done: Set[String] =
-      if (Files.exists(statePath))
-        Files.readAllLines(statePath).asScala.map(_.trim).filter(_.nonEmpty).toSet
-      else Set.empty
+    val conf = spark.sparkContext.hadoopConfiguration
+    val state = new Path(stateFile)
+    var done: Set[String] = DurableRecord.read(conf, state,
+      s"rewrite it as the applied file names, one a line, and a " +
+        s"${DurableRecord.Terminator} line").fold(Set.empty[String])(_.toSet)
     val dir = Paths.get(incDir)
     val fresh =
       if (!Files.isDirectory(dir)) Seq.empty[String]
@@ -101,11 +104,8 @@ object Runner {
         .toSeq.sorted
     fresh.foreach { n =>
       runIncrement(spark, s"$incDir/$n", warehouseDir, outDir)
-      // append AFTER the increment lands: a crash mid-file replays that
-      // file next tick, and both halves are idempotent re-overwrites
-      Files.writeString(statePath, n + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+      done += n
+      DurableRecord.publish(conf, state, done.toSeq.sorted)
     }
     fresh
   }

@@ -1,8 +1,10 @@
 package graft.uber
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 
 import graft.GraftSession
+import graft.sources.DurableRecord
 
 /** In-engine scheduling — the Dagster `ScheduleDefinition` equivalent the
   * reference runs out-of-process (reference `Dagster_Files/definitions.py:
@@ -21,9 +23,10 @@ import graft.GraftSession
   *    (dbt-style), so replaying each missed tick is pure waste;
   *  - **skip-while-running**: ticks arriving mid-build coalesce into at
   *    most one follow-up run, never a queue;
-  *  - **restart-safe state**: the last completed tick persists next to the
-  *    output (`_schedule_state`), so a restart inside the period does not
-  *    re-run.
+  *  - **restart-safe state**: the last completed tick is a published
+  *    [[DurableRecord]] next to the output (`_schedule_state`), so a
+  *    restart inside the period does not re-run, and a torn state file is
+  *    refused at startup rather than read as "no tick completed".
   */
 object Scheduler {
 
@@ -54,19 +57,12 @@ object Scheduler {
       clock: () => Long = () => System.currentTimeMillis(),
       stateFile: Option[String] = None) {
 
-    private var lastCompleted: Long = readState().getOrElse(-1L)
+    private val state = stateFile.map(f => (new Configuration(), new Path(f)))
 
-    private def readState(): Option[Long] = stateFile.flatMap { f =>
-      val p = Paths.get(f)
-      if (Files.exists(p)) scala.util.Try(Files.readString(p).trim.toLong).toOption
-      else None
-    }
-
-    private def writeState(tick: Long): Unit = stateFile.foreach { f =>
-      Files.writeString(Paths.get(f), tick.toString,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE)
-    }
+    private var lastCompleted: Long = state.flatMap { case (conf, p) =>
+      DurableRecord.read(conf, p, s"rewrite it as the last completed tick " +
+        s"and a ${DurableRecord.Terminator} line")
+    }.fold(-1L)(_.head.toLong)
 
     /** Run the build iff a newer tick than the last completed one is due.
       * All missed ticks coalesce: the build runs once, stamped with the
@@ -77,7 +73,7 @@ object Scheduler {
       if (due > lastCompleted) {
         build(due)
         lastCompleted = due
-        writeState(due)
+        state.foreach { case (conf, p) => DurableRecord.publish(conf, p, Seq(due.toString)) }
         Some(due)
       } else None
     }

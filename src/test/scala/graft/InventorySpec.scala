@@ -97,6 +97,14 @@ class InventorySpec extends AnyFunSuite {
         .!(scala.sys.process.ProcessLogger(out += _, _ => ()))
       val review = out.filter(_.contains("REVIEW")).mkString("\n")
       assert(exit == 0, s"collect_audit.py exited $exit:\n$review")
+      // the committed board is the tree's: a moved, added or reclassified
+      // site fails here until the board is regenerated
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      val (fresh, committed) =
+        (json.readTree(board.toFile), json.readTree(root.resolve("COLLECTAUDIT.json").toFile))
+      Seq("/sites", "/_meta/summary").filterNot(at => fresh.at(at) == committed.at(at))
+        .foreach(at => fail(s"COLLECTAUDIT.json $at differs from the tree; " +
+          "regenerate it: python3 tools/collect_audit.py"))
     } finally Files.deleteIfExists(board)
   }
 

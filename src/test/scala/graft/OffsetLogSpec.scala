@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.sources.DurableRecord
 import graft.streaming.{EventsStream, LogOffsets, OffsetLog}
 
 /** The offset-log source: Kafka's consumer contract (partitioned
@@ -396,5 +397,78 @@ class OffsetLogSpec extends SparkSpec {
     // watermark is monotone
     OffsetLog.expireEpochs(conf, dir, 0L)
     assert(OffsetLog.epochWatermark(conf, dir) == 1L)
+  }
+
+  /** Replace `file`'s bytes with `text`, as a writer that died mid-write
+    * leaves them; the checksum sibling goes, so the bytes read unverified.
+    */
+  private def tear(file: String, text: String): Unit = {
+    val p = java.nio.file.Paths.get(file)
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    Files.write(p, text.getBytes("UTF-8"))
+  }
+
+  test("a torn epoch manifest is refused on replay, not completed for the partitions it still lists") {
+    val dir = newLog(2)
+    val conf = spark.sessionState.newHadoopConf()
+    val rows = Seq((0, "k1", "v1"), (1, "k2", "v2"))
+    OffsetLog.commitEpoch(conf, dir, 7L, rows)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    val manifest = new org.apache.hadoop.fs.Path(dir, f"_epochs/e${7L}%020d.manifest")
+    import scala.jdk.CollectionConverters._
+    val lines = Files.readAllLines(java.nio.file.Paths.get(manifest.toString)).asScala.toSeq
+    val entries = lines.filter(_.contains("\t"))
+    assert(entries.size == 2)
+    // the crash came before any rename: both finals go back to their tmps,
+    // and the manifest's writer died after its first line
+    entries.foreach { ln =>
+      val Array(p, tmp, fin) = ln.split("\t", 3)
+      val pd = new org.apache.hadoop.fs.Path(dir, s"p=$p")
+      assert(fs.rename(new org.apache.hadoop.fs.Path(pd, fin),
+        new org.apache.hadoop.fs.Path(pd, tmp)))
+    }
+    tear(manifest.toString, entries.head + "\n")
+    val e = DurableRecord.tornReadBound.withValue(50L)(intercept[IllegalArgumentException](
+      OffsetLog.commitEpoch(conf, dir, 7L, rows)))
+    assert(e.getMessage.contains(manifest.toString), s"manifest not named: ${e.getMessage}")
+  }
+
+  test("a torn _meta is refused, not read as a smaller partition count") {
+    val dir = newLog(12)
+    val conf = spark.sessionState.newHadoopConf()
+    tear(s"$dir/_meta", "1")
+    val e = DurableRecord.tornReadBound.withValue(50L)(intercept[IllegalArgumentException](
+      OffsetLog.numPartitions(conf, dir)))
+    assert(e.getMessage.contains(s"$dir/_meta"), s"_meta not named: ${e.getMessage}")
+  }
+
+  test("a reader never sees a replaced _start or _watermark missing, torn or going backward") {
+    val dir = newLog(1)
+    val conf = spark.sessionState.newHadoopConf()
+    OffsetLog.append(spark, dir, 0, 1000L, (0 until 600).map(i => s"k$i" -> "v"))
+    OffsetLog.expire(conf, dir, 0, 1L)
+    OffsetLog.expireEpochs(conf, dir, 0L)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[String](null)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
+    val reader = new Thread(() => {
+      var (lastStart, lastWm) = (1L, 0L)
+      try while (!done.get && failure.get == null) {
+        val (s, w) = (OffsetLog.logStart(conf, dir, 0), OffsetLog.epochWatermark(conf, dir))
+        if (s < lastStart || w < lastWm)
+          failure.set(s"read _start $s after $lastStart, _watermark $w after $lastWm")
+        lastStart = s; lastWm = w
+        reads.incrementAndGet()
+      } catch { case e: Throwable => failure.set(e.toString) }
+    })
+    reader.start()
+    try (1 to 500).foreach { i =>
+      OffsetLog.expire(conf, dir, 0, 1L + i)
+      OffsetLog.expireEpochs(conf, dir, i.toLong)
+    } finally { done.set(true); reader.join() }
+    Option(failure.get).foreach(fail(_))
+    assert(reads.get > 0)
+    assert(OffsetLog.logStart(conf, dir, 0) == 501L)
+    assert(OffsetLog.epochWatermark(conf, dir) == 500L)
   }
 }

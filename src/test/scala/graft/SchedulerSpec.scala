@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.uber.Scheduler.{Schedule, ScheduledRunner}
 
@@ -55,5 +55,22 @@ class SchedulerSpec extends AnyFunSuite {
     intercept[RuntimeException](r.pollOnce())
     assert(r.pollOnce().contains(0L)) // same tick retries after the failure
     assert(attempts == 2)
+  }
+
+  test("an empty or torn state file is refused, naming the file, not read as no tick completed") {
+    val state = Files.createTempDirectory("sched_torn").toString + "/_schedule_state"
+    val now = 1250L
+    var runs = 0
+    new ScheduledRunner(Schedule(100L), _ => runs += 1, () => now, Some(state)).pollOnce()
+    assert(runs == 1)
+    val whole = Files.readAllBytes(Paths.get(state))
+    // a writer that died before its first byte, and one cut after it
+    Seq(0, 1).foreach { n =>
+      Files.write(Paths.get(state), whole.take(n))
+      val e = intercept[IllegalArgumentException](
+        new ScheduledRunner(Schedule(100L), _ => runs += 1, () => now, Some(state)))
+      assert(e.getMessage.contains(state), s"file not named: ${e.getMessage}")
+    }
+    assert(runs == 1, "a torn state file re-ran the build")
   }
 }
