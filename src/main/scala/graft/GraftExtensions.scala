@@ -8,14 +8,16 @@ import graft.functions.TextFunctions
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * Catalyst expressions as SQL functions, so the SQL surface is as complete
-  * as the DataFrame surface, and injects three plan rules: the as-of join
+  * as the DataFrame surface, and injects four plan rules: the as-of join
   * planner strategy ([[graft.plans.AsofJoinStrategy]]); the AQE runtime
   * rule [[graft.plans.CoalesceSmallStages]], which runs the rest of a query
   * whose inputs are small materialized shuffle stages on one partition, so
   * a sort or window over a grain-sized aggregate plans no exchange of its
-  * own; and the optimizer rule [[graft.plans.CorrelatedCountToWindow]],
-  * which turns a correlated `COUNT(*)` over the outer query's own rows into
-  * a window sum, so those rows are read once. None rewrites results — an
+  * own; the optimizer rule [[graft.plans.CorrelatedCountToWindow]], which
+  * turns a correlated `COUNT(*)` over the outer query's own rows into a
+  * window sum, so those rows are read once; and the AQE query-stage
+  * preparation rule [[graft.plans.BroadcastOnDriver]], which broadcasts a
+  * local relation from the driver without a Spark job. None rewrites results — an
   * approximate distinct count is always the explicit `graft_kmv_distinct`
   * call, never a silent swap. Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
@@ -54,6 +56,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectRuntimeOptimizerRule(_ => graft.plans.CoalesceSmallStages)
     // a correlated COUNT over the outer query's own rows becomes a window sum
     ext.injectOptimizerRule(_ => graft.plans.CorrelatedCountToWindow)
+    // a broadcast of a local relation is built on the driver, with no job
+    ext.injectQueryStagePrepRule(_ => graft.plans.BroadcastOnDriver)
 
     def register(name: String, builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Complete, Count, Sum}
 import org.apache.spark.sql.catalyst.optimizer.{
-  BooleanSimplification, ConstantFolding, NullPropagation, PushFoldableIntoBranches,
-  SimplifyConditionals}
+  BooleanSimplification, CollapseProject, ColumnPruning, ConstantFolding, ConvertToLocalRelation,
+  NullPropagation, PushFoldableIntoBranches, RemoveNoopOperators, SimplifyConditionals}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate, CTERelationRef, Filter, Join, LocalRelation, LogicalPlan, Project, Union, Window}
@@ -46,7 +46,11 @@ import org.apache.spark.sql.types.BooleanType
   *    right loses the conjuncts that are Spark's simplification of
   *    `isnotnull(k)` (Infer Filters adds them from the join; without them
   *    the right's NULL-key group, which joins nothing, comes back); and the
-  *    right's key, mapped onto `L`'s input, is `L`'s key.
+  *    right's key, mapped onto `L`'s input, is `L`'s key. Failing that, the
+  *    two inputs projected onto their keys, with unread columns pruned and
+  *    local relations folded, have the same result: the subquery is
+  *    optimized whole, so a local relation in it (a driver-held dim)
+  *    arrives pruned and folded while `L`'s copy keeps every column.
   * Switch it off with `spark.sql.optimizer.excludedRules`.
   */
 object CorrelatedCountToWindow extends Rule[LogicalPlan] with PredicateHelper {
@@ -76,22 +80,33 @@ object CorrelatedCountToWindow extends Rule[LogicalPlan] with PredicateHelper {
   private def resolve(e: Expression, aliases: AttributeMap[Expression]): Expression =
     e.transformUp { case a: Attribute => aliases.getOrElse(a, a) }
 
+  /** `p` with `rules` applied until it stops changing, at most 10 rounds. */
+  @annotation.tailrec
+  private def fixedPoint(p: LogicalPlan, rules: Seq[Rule[LogicalPlan]], rounds: Int = 10): LogicalPlan = {
+    val next = rules.foldLeft(p)((q, r) => r(q))
+    if (rounds == 0 || next.fastEquals(p)) next else fixedPoint(next, rules, rounds - 1)
+  }
+
   /** Spark's simplification of `isnotnull(e)`, the form Infer Filters
     * leaves in a `Filter`.
     */
-  private def notNullConjunct(e: Expression): Expression = {
-    val rules = Seq(NullPropagation, PushFoldableIntoBranches, ConstantFolding,
-      SimplifyConditionals, BooleanSimplification)
-    @annotation.tailrec
-    def fixedPoint(p: LogicalPlan, rounds: Int): LogicalPlan = {
-      val next = rules.foldLeft(p)((q, r) => r(q))
-      if (rounds == 0 || next.fastEquals(p)) next else fixedPoint(next, rounds - 1)
-    }
-    fixedPoint(Filter(IsNotNull(e), LocalRelation(e.references.toSeq)), 10) match {
+  private def notNullConjunct(e: Expression): Expression =
+    fixedPoint(Filter(IsNotNull(e), LocalRelation(e.references.toSeq)), Seq(NullPropagation,
+      PushFoldableIntoBranches, ConstantFolding, SimplifyConditionals, BooleanSimplification)) match {
       case Filter(c, _) => c
       case _ => IsNotNull(e)
     }
-  }
+
+  /** `plan`'s rows projected onto `key`, with the columns nothing reads
+    * pruned and local relations folded. A scalar subquery is optimized
+    * whole, so a local relation in it arrives already pruned and folded
+    * while the outer copy still has every column; this form of both is
+    * the same plan. A `Project` keeps row multiplicity, so equal forms
+    * give equal per-key counts.
+    */
+  private def keyRows(plan: LogicalPlan, key: Expression): LogicalPlan =
+    fixedPoint(Project(Seq(Alias(key, "key")()), plan),
+      Seq(ColumnPruning, ConvertToLocalRelation, CollapseProject, RemoveNoopOperators))
 
   /** `plan` without the filter conjuncts equal to `c`, looking through
     * filters and inner joins only, where a row filter commutes with the
@@ -136,12 +151,13 @@ object CorrelatedCountToWindow extends Rule[LogicalPlan] with PredicateHelper {
         !deterministic(left) || !deterministic(right)) return None
     val (inL, aliasesL) = input(left)
     val (inR, aliasesR) = input(right)
-    val keyDefR = resolve(keyR, aliasesR)
-    val sameRows = !Seq(inL, inR).exists(_.exists(_.isInstanceOf[Union])) &&
-      inL.sameResult(without(inR, notNullConjunct(keyDefR)))
+    val (keyDefL, keyDefR) = (resolve(groupL.get, aliasesL), resolve(keyR, aliasesR))
+    val rowsR = without(inR, notNullConjunct(keyDefR))
     lazy val ontoL = AttributeMap[Expression](inR.output.zip(inL.output))
-    if (!sameRows || !resolve(keyDefR, ontoL)
-        .semanticEquals(resolve(groupL.get, aliasesL))) return None
+    val sameRows = !Seq(inL, inR).exists(_.exists(_.isInstanceOf[Union])) && (
+      inL.sameResult(rowsR) && resolve(keyDefR, ontoL).semanticEquals(keyDefL) ||
+        keyRows(inL, keyDefL).sameResult(keyRows(rowsR, keyDefR)))
+    if (!sameRows) return None
 
     val total = Alias(WindowExpression(
       AggregateExpression(Sum(countL.get), Complete, isDistinct = false),

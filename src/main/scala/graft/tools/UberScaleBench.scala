@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.uber.{Incremental, Models, Runner}
@@ -8,8 +8,8 @@ import graft.uber.{Incremental, Models, Runner}
 /** Reference-scale throughput check: synthesize the Uber dataset at the
   * REFERENCE's size (~14.3M fact rows, 9-row base dim, 265-row zone dim —
   * reference `Diary of Making.md:51`, `Images/bq_base_num_and_name.png`,
-  * `Images/bq_taxi_zone_lookup.png`), lay it out exactly as Ingest does
-  * (month-partitioned parquet), and time the six models against the
+  * `Images/bq_taxi_zone_lookup.png`), lay it out as Ingest does
+  * (month-partitioned parquet for the fact, driver-held dims), and time the six models against the
   * reference's BigQuery numbers (22.05s total, 2.59-5.82s per model —
   * BASELINE.md), two ways per round:
   *
@@ -33,14 +33,18 @@ object UberScaleBench {
   private val baseNames = Seq("Unter", "Hinter", "Weiter", "Schmecken",
     "Danach-NY", "Grun", "Alfred", "Dreist", "Drinnen")
 
-  def build(spark: SparkSession, out: String): Unit = {
+  /** The two dims, as the local relations Ingest registers dims as. */
+  private def dims(spark: SparkSession): Seq[(String, DataFrame)] = {
     import spark.implicits._
+    Seq("base_num_and_name" -> baseNums.zip(baseNames).toDF("base_num", "base_name"),
+      "taxi_zone_lookup" ->
+        (1 to 265).map(i => (i, if (i % 6 == 0) "Bronx" else s"Borough${i % 5}", s"Zone$i"))
+          .toDF("locationid", "borough", "zone"))
+  }
+
+  def build(spark: SparkSession, out: String): Unit = {
     if (new java.io.File(s"$out/_built").exists()) return
-    baseNums.zip(baseNames).toDF("base_num", "base_name")
-      .write.mode("overwrite").parquet(s"$out/base_num_and_name")
-    (1 to 265).map(i => (i, if (i % 6 == 0) "Bronx" else s"Borough${i % 5}", s"Zone$i"))
-      .toDF("locationid", "borough", "zone")
-      .write.mode("overwrite").parquet(s"$out/taxi_zone_lookup")
+    dims(spark).foreach { case (name, dim) => dim.write.mode("overwrite").parquet(s"$out/$name") }
     // fact: uniform Jan-Jun 2015 timestamps, base FKs skewed like the
     // reference's top-3 distribution, zone uniform
     val jan1Us = java.sql.Timestamp.valueOf("2015-01-01 00:00:00").getTime * 1000L
@@ -65,8 +69,8 @@ object UberScaleBench {
     val wh = s"$work/wh"
     val spark = GraftSession.local("uber-scale")
     build(spark, wh)
-    Seq("base_num_and_name", "taxi_zone_lookup", "raw_data_janjune_15")
-      .foreach(n => spark.read.parquet(s"$wh/$n").createOrReplaceTempView(n))
+    dims(spark).foreach { case (name, dim) => dim.createOrReplaceTempView(name) }
+    spark.read.parquet(s"$wh/raw_data_janjune_15").createOrReplaceTempView("raw_data_janjune_15")
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

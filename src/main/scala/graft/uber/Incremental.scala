@@ -42,19 +42,18 @@ import org.apache.spark.sql.types.StructType
   * shape Spark's partial aggregation uses within one query, persisted
   * across runs and shared across models.
   *
-  * In Spark jobs a single-month tick (Runner.runIncrement) costs 10:
-  * 1 to land the fact partition (whose Observation reports the restated
-  * months), 2 for unter_grun's month (the one broadcast of the crossed
-  * dims and the write), 2 for the shared partial's month (the aggregate's
-  * shuffle-map stage and the write, which merge-joins the dim without a
-  * broadcast) and 1 per fold; fullBuild costs the last 9. Each of these
-  * jobs is one a table needs: the landing write, a broadcast for the fact
-  * join, a map stage for the fact aggregate and a write per output, so
-  * this layout cannot go lower. The folds read the partial as ONE
-  * partition: it holds bases × days rows whatever the fact's size (about
-  * 1.6k at benchmark size, about 110k for 300 bases over a year), so one
-  * task folds it, and its aggregates, windows, sorts and limits plan no
-  * exchange and no range-sampling job. At these sizes the tick is bound by
+  * In Spark jobs a single-month tick (Runner.runIncrement) costs 9: 1 to
+  * land the fact partition (whose Observation reports the restated
+  * months), 1 for unter_grun's month (its write; the dims it joins are
+  * driver-held, so their broadcasts run no job), 2 for the shared
+  * partial's month (the aggregate's shuffle-map stage and the write) and
+  * 1 per fold; fullBuild costs the last 8. Each of these jobs is one a
+  * table needs: the landing write, a map stage for the fact aggregate and
+  * a write per output, so this layout cannot go lower. The folds read the
+  * partial as ONE partition: it holds bases × days rows whatever the
+  * fact's size (about 1.6k at benchmark size, about 110k for 300 bases
+  * over a year), so one task folds it, and its aggregates, windows, sorts
+  * and limits plan no exchange and no range-sampling job. At these sizes the tick is bound by
   * job count, not by data, and an exchange would add 3 jobs per fold.
   * The folds keep this explicit `coalesce(1)`: `plans.CoalesceSmallStages`
   * reaches only shuffle stages, whose runtime size AQE knows, and a fold
@@ -105,21 +104,19 @@ object Incremental {
   // ------------------------------------------------------------ partials
 
   /** unter_grun rows plus their month: the fold is identity, so these are
-    * the model's month-partitioned final rows. The Unter/Grun bases × the
-    * Bronx zones are crossed first (`shuffle_replicate_nl`: a cartesian
-    * product of the two dim scans, so no broadcast inside the broadcast)
-    * and the fact joins that pair once, on both keys: one broadcast where
-    * a dim each would be two. The fact side keeps its own partitions.
+    * the model's month-partitioned final rows. The Unter/Grun bases and the
+    * Bronx zones are each broadcast to the fact, which keeps its own
+    * partitions. The dims are driver-held views, so neither broadcast runs
+    * a Spark job; the hints keep the plan when Spark's own broadcast choice
+    * is off.
     */
   private def unterGrunRows(s: SparkSession, fact: DataFrame): DataFrame = {
     val bases = base(s).filter(col("base_name").isin("Unter", "Grun"))
       .select(col("base_num"), col("base_name"))
     val bronx = zone(s).filter(col("borough") === "Bronx")
       .select(col("locationid").as("zone_locationid"), col("borough"), col("zone"))
-    val dims = bases.hint("shuffle_replicate_nl").crossJoin(bronx)
-    fact.join(broadcast(dims),
-        col("affiliated_base_num") === col("base_num") &&
-          fact("locationid") === col("zone_locationid"))
+    fact.join(broadcast(bases), col("affiliated_base_num") === col("base_num"))
+      .join(broadcast(bronx), fact("locationid") === col("zone_locationid"))
       .select(col("pickup_date").as("Pickup Date"), col("base_name").as("Base Name"),
         col("borough").as("Borough"), col("zone").as("Zone"),
         monthOf(fact).as("month_num"))
@@ -134,18 +131,16 @@ object Incremental {
     * The fact is counted per (base number, date) BEFORE the base name is
     * joined: an inner join commutes with a group-by on its key, so the
     * rows are those of join-then-count, duplicate `base_num` and unknown
-    * or null bases included. The grain-sized counts and the dim then sit
-    * on one partition each, and the merge join between them plans no
-    * exchange. The `merge` hint is required: without it Spark broadcasts
-    * the dim, one more job per write.
+    * or null bases included. The grain-sized counts sit on one partition,
+    * which sets the partial's file count, and join the driver-held dim's
+    * broadcast, which runs no Spark job.
     */
   private def dailyCounts(s: SparkSession, fact: DataFrame): DataFrame =
     fact.groupBy(col("dispatching_base_num"),
         to_date(col("pickup_date")).as("pick_up_date"), monthOf(fact).as("month_num"))
       .agg(count(lit(1)).as("cnt"))
       .coalesce(1)
-      .join(base(s).coalesce(1).hint("merge"),
-        col("base_num") === col("dispatching_base_num"))
+      .join(base(s), col("base_num") === col("dispatching_base_num"))
       .select(col("dispatching_base_num"), col("base_name"), col("pick_up_date"),
         col("month_num"), col("cnt"))
 

@@ -1,7 +1,12 @@
 package graft.uber
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DriverBroadcastExchangeExec
 import org.apache.spark.sql.types.StructType
 
 /** EL layer: CSV → typed, provenance-stamped tables — the batch equivalent
@@ -11,9 +16,17 @@ import org.apache.spark.sql.types.StructType
   * Scale design:
   *  - The fact table is written partitioned by pickup month
   *    (`pickup_month=1..6` directories). The reference full-scans 217.8 MiB
-  *    for EVERY model including the May-only one (BASELINE.md); partition
-  *    pruning makes the May query read 1/6th. At 100 TB this is the
-  *    difference between a 17 TB scan and a 100 TB scan per query.
+  *    for EVERY model including the May-only one (BASELINE.md), and so does
+  *    the May model's SQL form here: `EXTRACT(MONTH FROM pickup_date) = 5`
+  *    cannot prune `pickup_month` (its scan shows `PartitionFilters: []`).
+  *    What the layout prunes is increments: a tick reads only the restated
+  *    `pickup_month` partitions, and the materialized May model is a fold
+  *    over the `month_num=5` partition of the shared daily partial
+  *    ([[Incremental]]). At 100 TB a daily tick then scans a day's
+  *    partitions, not the table.
+  *  - The dims (a few hundred rows each) are views over the rows their
+  *    landing write observed, held on the driver, so joining them costs no
+  *    Spark job and no parquet re-read.
   *  - Ingest is a narrow pipeline (read → project → write): parallelism =
   *    input splits, no shuffle (`repartition` only to control output file
   *    count, disabled at fixture scale).
@@ -100,6 +113,7 @@ object Ingest {
     val landed = withPickupMonth(withAirbyteMeta(readCsv(spark, csvPath, schema)))
     val restated = Observation()
     landed.observe(restated,
+        // driver-bound(enum-bounded): <= 12 calendar months
         collect_set(col("pickup_month")).as("months"),
         count_if(col("pickup_month").isNull).as("null_months"))
       .write.mode("overwrite")
@@ -171,7 +185,11 @@ object Ingest {
 
   /** Shared landing step for every transport: month-partitioned parquet for
     * the fact table, plain parquet for dims, temp-view registration through
-    * the source registry.
+    * the source registry. The fact's view reads its parquet. A dim's view
+    * is a local relation of exactly the rows its write landed, observed on
+    * that write's own pass (no extra job), so every model that joins it
+    * broadcasts it from the driver without a Spark job
+    * (graft.plans.BroadcastOnDriver) instead of re-reading parquet.
     */
   private def writeAndRegister(
       spark: SparkSession,
@@ -179,11 +197,41 @@ object Ingest {
       enriched: DataFrame,
       warehouseDir: String): DataFrame = {
     val path = s"$warehouseDir/$name"
-    val isFact = name == "raw_data_janjune_15"
-    val landed = if (isFact) withPickupMonth(enriched) else enriched
-    val writer = landed.write.mode("overwrite")
-    (if (isFact) writer.partitionBy("pickup_month") else writer).parquet(path)
-    register(spark, name, path, landed.schema)
+    if (name == "raw_data_janjune_15") {
+      val landed = withPickupMonth(enriched)
+      landed.write.mode("overwrite").partitionBy("pickup_month").parquet(path)
+      register(spark, name, path, landed.schema)
+    } else {
+      val landed = Observation()
+      enriched.observe(landed,
+          // driver-bound(threshold-gated): heldOnDriver refuses a dim above Spark's broadcast limits
+          collect_list(struct(enriched.columns.map(col): _*)).as("rows"))
+        .write.mode("overwrite").parquet(path)
+      val rows = landed.get("rows").asInstanceOf[scala.collection.Seq[Row]]
+      heldOnDriver(spark, name, rows.toSeq, spark.read.schema(enriched.schema).parquet(path).schema)
+    }
+  }
+
+  /** Register `rows` as `name`'s view, a local relation with the schema the
+    * parquet read-back has. Refuses, naming the table and its size, rows
+    * that Spark could not broadcast: at or above its keyed-row limit or
+    * `spark.sql.maxBroadcastTableSize` (the dims are catalog-sized).
+    */
+  private def heldOnDriver(
+      spark: SparkSession, name: String, rows: Seq[Row], schema: StructType): DataFrame = {
+    val toUnsafe = UnsafeProjection.create(schema)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val bytes = rows.iterator
+      .map(r => toUnsafe(toCatalyst(r).asInstanceOf[InternalRow]).getSizeInBytes.toLong).sum
+    val (maxRows, maxBytes) =
+      (DriverBroadcastExchangeExec.maxKeyedRows, DriverBroadcastExchangeExec.maxBytes(spark))
+    if (rows.size >= maxRows || bytes >= maxBytes)
+      throw new IllegalStateException(s"$name landed ${rows.size} rows ($bytes bytes), at or " +
+        s"above Spark's broadcast limits ($maxRows rows, $maxBytes bytes): a dim must be " +
+        "small enough to hold on the driver")
+    val table = spark.createDataFrame(rows.asJava, schema)
+    table.createOrReplaceTempView(SourceRegistry.resolve("airbyte_uber_data", name))
+    table
   }
 
   private def withPickupMonth(fact: DataFrame): DataFrame =

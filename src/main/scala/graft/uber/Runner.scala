@@ -59,7 +59,7 @@ object Runner {
     * overwrite) and absorb them into every model through the shared daily
     * partial — scan(delta) + fold(grain) instead of runAll's full rebuild.
     * The landing write reports the months it restated, so the CSV is
-    * parsed once; a single-month tick is 10 Spark jobs (the breakdown is
+    * parsed once; a single-month tick is 9 Spark jobs (the breakdown is
     * in [[Incremental]]). Requires a prior [[runAll]] or
     * Incremental.fullBuild of `outDir` (applyIncrement refuses otherwise).
     * Returns the restated months.

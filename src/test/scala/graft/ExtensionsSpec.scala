@@ -8,12 +8,14 @@ import org.apache.spark.sql.execution.adaptive.{
   AdaptiveSparkPlanHelper, LogicalQueryStage, ShuffleQueryStageExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DriverBroadcastExchangeExec
 import graft.plans.CoalesceSmallStages
 
 /** The session extensions: the SQL surface of the custom expressions — a
   * session built with the extension can call the sketch functions from
-  * plain SQL — the AQE rule [[CoalesceSmallStages]] and the optimizer rule
-  * [[graft.plans.CorrelatedCountToWindow]].
+  * plain SQL — the AQE rule [[CoalesceSmallStages]], the optimizer rule
+  * [[graft.plans.CorrelatedCountToWindow]] and the query-stage rule
+  * [[graft.plans.BroadcastOnDriver]].
   */
 class ExtensionsSpec extends SparkSpec {
 
@@ -149,6 +151,34 @@ class ExtensionsSpec extends SparkSpec {
     assert(got == withConf(countRuleExcluded)(nullKey()))
   }
 
+  test("the count rule fires over a driver-held dim, and not over one that lacks a row") {
+    trips
+    import spark.implicits._
+    // a dim wider than its join key: the subquery, optimized whole, gets it
+    // pruned to the key and folded, while the outer copy keeps every column
+    val dim = (0 until 5).map(k => (k.toLong, s"name$k", k * 10))
+    dim.toDF("dk", "name", "extra").createOrReplaceTempView("trip_dim")
+    dim.tail.toDF("dk", "name", "extra").createOrReplaceTempView("trip_dim_short")
+    def joined(d: String) = s"SELECT t.k, t.x, t.v FROM trips t JOIN $d d ON d.dk = t.k"
+    val sql = shareSql(cte = joined("trip_dim"))
+    val plan = nodes(spark.sql(sql))
+    assert(plan.count(_ == "Join") == 1 && plan.count(_ == "Window") == 1, plan)
+    val (rows, jobs, _) = run(spark.sql(sql))
+    val (rowsOff, jobsOff, _) = withConf(countRuleExcluded)(run(spark.sql(sql)))
+    assert(jobs < jobsOff && rows == rowsOff, s"$jobs jobs with the rule, $jobsOff without")
+    // the subquery's dim lacks one row, so its per-key counts differ
+    val short = shareSql(cte = joined("trip_dim"), sub =
+      s"SELECT COUNT(*) FROM (${joined("trip_dim_short")}) AS sub WHERE sub.k = counted.k")
+    val shortPlan = nodes(spark.sql(short))
+    assert(shortPlan.count(_ == "Join") == 3 &&
+      shortPlan == withConf(countRuleExcluded)(nodes(spark.sql(short))), shortPlan)
+    val shortRows = run(spark.sql(short))._1
+    assert(shortRows == withConf(countRuleExcluded)(run(spark.sql(short)))._1)
+    // key 0 is the missing row: its share has no count per key
+    assert(shortRows.filter(_.startsWith("0|")).forall(_.endsWith("|0|null")) &&
+      shortRows.exists(_.startsWith("0|")), shortRows)
+  }
+
   test("the count rule keeps the plan of every other subquery shape") {
     trips
     def keeps(sql: String): Unit = {
@@ -176,6 +206,34 @@ class ExtensionsSpec extends SparkSpec {
     keeps("""WITH m AS (SELECT k, x, COUNT(*) AS cnt FROM trips GROUP BY k, x)
             |SELECT k, x, cnt, cnt * 100.0 / (SELECT sum(cnt) FROM m sub WHERE sub.k = m.k) AS share
             |FROM m""".stripMargin)
+  }
+
+  test("a broadcast of a local relation is built on the driver, with Spark's rows, limits and metrics") {
+    import spark.implicits._
+    val dim = (0 until 50).map(i => (i.toLong, s"n$i")).toDF("k", "name")
+    def joined = spark.range(0, 2000, 1, 4).join(broadcast(dim), col("id") === col("k"))
+    val (rows, jobs, _) = run(joined)
+    val (rowsStock, jobsStock, _) = withConf("spark.sql.adaptive.enabled" -> "false")(run(joined))
+    // with AQE off Spark's own exchange collects the rows in a job of its own
+    assert(rows == rowsStock && rows.size == 50 && jobs == jobsStock - 1,
+      s"$jobs jobs from the driver, $jobsStock from Spark's exchange")
+    val done = joined
+    done.collect()
+    val driverSide = plans.collect(done.queryExecution.executedPlan) {
+      case b: DriverBroadcastExchangeExec => b
+    }
+    assert(driverSide.size == 1 && driverSide.head.metrics("numOutputRows").value == 50 &&
+      driverSide.head.metrics("dataSize").value > 0, driverSide)
+    // the size limit refuses it as it refuses Spark's own exchange
+    def refusal(aqe: String): String = {
+      val e = intercept[Exception](withConf("spark.sql.maxBroadcastTableSize" -> "100",
+        "spark.sql.adaptive.enabled" -> aqe)(joined.collect()))
+      val refused = "Cannot broadcast the table that is larger than"
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        .collectFirst { case m if m != null && m.contains(refused) => m.substring(m.indexOf(refused)) }
+        .getOrElse(fail(s"no size refusal with AQE $aqe", e))
+    }
+    assert(refusal("true") == refusal("false"))
   }
 
   test("sketch functions are callable from SQL") {

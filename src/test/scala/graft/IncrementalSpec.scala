@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeExec}
+import org.apache.spark.sql.graft.DriverBroadcastExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
@@ -226,7 +226,7 @@ class IncrementalSpec extends SparkSpec with TimeLimits {
     Ingest.ingestAll(spark, csv, wh)
   }
 
-  test("a single-month tick plans one broadcast and one shuffle, the partial's aggregate") {
+  test("a single-month tick broadcasts only driver-held dims and shuffles once") {
     val (csv, wh, _) = dirs
     Ingest.ingestAll(spark, csv, wh)
     val out = Files.createTempDirectory("inc_plan_shape").toString
@@ -236,13 +236,13 @@ class IncrementalSpec extends SparkSpec with TimeLimits {
       """dispatching_base_num,pickup_date,affiliated_base_num,locationid
         |B02765,2015-05-20 11:00:00,B02765,1
         |""".stripMargin)
-    val broadcasts = ArrayBuffer.empty[BroadcastExchangeExec]
+    val broadcasts = ArrayBuffer.empty[BroadcastExchangeLike]
     val shuffles = ArrayBuffer.empty[ShuffleExchangeExec]
     val plans = new AdaptiveSparkPlanHelper {}
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         plans.foreach(qe.executedPlan) {
-          case b: BroadcastExchangeExec => broadcasts += b
+          case b: BroadcastExchangeLike => broadcasts += b
           case e: ShuffleExchangeExec => shuffles += e
           case _ =>
         }
@@ -255,14 +255,15 @@ class IncrementalSpec extends SparkSpec with TimeLimits {
       spark.listenerManager.unregister(listener)
     }
     def named(p: SparkPlan): String = p.treeString(verbose = false).linesIterator.take(8).mkString("\n")
-    // unter_grun's crossed Unter/Grun × Bronx dims, broadcast once
-    assert(broadcasts.size == 1 &&
-      broadcasts.forall(_.collectFirst { case c: CartesianProductExec => c }.isDefined),
-      s"expected one broadcast, of the crossed dims; got ${broadcasts.size}:\n" +
+    // unter_grun's Unter/Grun bases and Bronx zones, and the partial's
+    // base names: each a driver-held dim, broadcast without a Spark job
+    assert(broadcasts.size == 3 &&
+      broadcasts.forall(_.isInstanceOf[DriverBroadcastExchangeExec]),
+      s"expected three broadcasts, each from the driver; got ${broadcasts.size}:\n" +
         broadcasts.map(named).mkString("\n---\n"))
     // the shared partial's aggregate: a partial count hashed on the base
     // number (the date key is pulled out under a generated name). The
-    // folds and the partial's dim join read single partitions and plan none
+    // folds read single partitions and plan none
     def partialAggregate(e: ShuffleExchangeExec): Boolean = (e.outputPartitioning match {
       case h: HashPartitioning =>
         h.expressions.exists(_.references.exists(_.name == "dispatching_base_num"))
@@ -347,11 +348,11 @@ class IncrementalSpec extends SparkSpec with TimeLimits {
     val (csv, wh, _) = dirs
     Ingest.ingestAll(spark, csv, wh)
     val out = Files.createTempDirectory("inc_jobs").toString
-    // 2 unter_grun (the crossed dims' broadcast, the write) + 2 shared
+    // 1 unter_grun (the write; its dims' broadcasts run no job) + 2 shared
     // partial (the aggregate's map stage, the write) + 1 per fold for the
     // five count-based models
     val build = jobsLaunched(Incremental.fullBuild(spark, out))
-    assert(build == 9, s"a full build launched $build jobs")
+    assert(build == 8, s"a full build launched $build jobs")
     val incCsv = Files.createTempDirectory("inc_jobs_csv").resolve("may.csv")
     Files.writeString(incCsv,
       """dispatching_base_num,pickup_date,affiliated_base_num,locationid
@@ -359,9 +360,9 @@ class IncrementalSpec extends SparkSpec with TimeLimits {
         |B02512,2015-05-21 12:00:00,B02512,2
         |""".stripMargin)
     // 1 fact landing (its Observation reports the months) + the build's
-    // 9 for one month
+    // 8 for one month
     val tick = jobsLaunched(Runner.runIncrement(spark, incCsv.toString, wh, out))
-    assert(tick == 10, s"one single-month tick launched $tick jobs")
+    assert(tick == 9, s"one single-month tick launched $tick jobs")
     assertAllModelsMatch(out, "after a single-month increment")
     Ingest.ingestAll(spark, csv, wh)
   }

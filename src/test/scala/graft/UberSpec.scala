@@ -5,7 +5,8 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -290,11 +291,11 @@ class UberSpec extends SparkSpec {
   test("runAll runs a fixed number of Spark jobs") {
     val (csv, wh) = dirs
     val out = Files.createTempDirectory("uber_jobs").toString
-    // 3 source writes + 2 checks + Incremental.fullBuild's 9; 3 checks
+    // 3 source writes + 2 checks + Incremental.fullBuild's 8; 3 checks
     // with the small-stage rule excluded
     val jobs = jobsLaunched(Runner.runAll(spark, csv, wh, out))
     val jobsOff = withConf(smallStageRuleExcluded)(jobsLaunched(Runner.runAll(spark, csv, wh, out)))
-    assert((jobs, jobsOff) == ((14, 15)), s"runAll launched $jobs jobs, $jobsOff with the rule excluded")
+    assert((jobs, jobsOff) == ((13, 14)), s"runAll launched $jobs jobs, $jobsOff with the rule excluded")
   }
 
   test("the six SQL models run a fixed number of Spark jobs") {
@@ -302,19 +303,58 @@ class UberSpec extends SparkSpec {
     val on = Files.createTempDirectory("uber_models").toString
     val off = Files.createTempDirectory("uber_models_off").toString
     val noCount = Files.createTempDirectory("uber_models_no_count").toString
-    val jobs = jobsLaunched(writeModels(on))
+    val noAqe = Files.createTempDirectory("uber_models_no_aqe").toString
+    var finalPlans = Seq.empty[SparkPlan]
+    val jobs = jobsLaunched { finalPlans = executedPlans(writeModels(on)) }
     val jobsOff = withConf(smallStageRuleExcluded)(jobsLaunched(writeModels(off)))
     val jobsNoCount = withConf(countRuleExcluded)(jobsLaunched(writeModels(noCount)))
-    // with the small-stage rule excluded each sort and window over a
-    // grain-sized aggregate plans its own exchange; with the count rule
-    // excluded the percentile model scans the fact twice and joins
-    assert((jobs, jobsOff, jobsNoCount) == ((18, 29, 21)),
+    // the dims are driver-held, so their broadcasts run no job; with the
+    // small-stage rule excluded each sort and window over a grain-sized
+    // aggregate plans its own exchange; with the count rule excluded the
+    // percentile model scans the fact twice and joins
+    assert((jobs, jobsOff, jobsNoCount) == ((11, 22, 13)),
       s"$jobs jobs, $jobsOff with the small-stage rule excluded, $jobsNoCount with the count rule excluded")
+    // no final plan is left with Spark's own broadcast of a local relation
+    val stock = finalPlans.flatMap(plans.collect(_) {
+      case b @ BroadcastExchangeExec(_, _: LocalTableScanExec) => b
+    })
+    assert(finalPlans.size == Models.all.size && stock.isEmpty,
+      s"${finalPlans.size} plans; a stock broadcast of a local relation:\n${stock.mkString("\n")}")
+    // with AQE off Spark's own exchange broadcasts the dims, to the same rows
+    withConf("spark.sql.adaptive.enabled" -> "false")(writeModels(noAqe))
     Models.all.foreach { m =>
       val rows = norm(spark.read.parquet(s"$on/${m.name}"))
-      assert(rows == norm(spark.read.parquet(s"$off/${m.name}")) &&
-        rows == norm(spark.read.parquet(s"$noCount/${m.name}")), s"${m.name}: row mismatch")
+      assert(Seq(off, noCount, noAqe).forall(d => rows == norm(spark.read.parquet(s"$d/${m.name}"))),
+        s"${m.name}: row mismatch")
     }
+  }
+
+  test("each dim's view is the rows its landing write wrote, replaced by the next ingest") {
+    val (csv, wh) = dirs
+    def viewAndFiles(name: String): (Seq[Seq[Any]], Seq[Seq[Any]]) =
+      (norm(spark.table(name)), norm(spark.read.parquet(s"$wh/$name")))
+    val dims = Seq("base_num_and_name", "taxi_zone_lookup")
+    val before = dims.map(viewAndFiles)
+    dims.zip(before).foreach { case (name, (view, files)) =>
+      assert(spark.table(name).queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        s"$name is not a driver-held view")
+      // _airbyte_raw_id (a fresh uuid per landed row) included
+      assert(view == files && view.nonEmpty, s"$name: the view differs from its files")
+    }
+    Ingest.ingestAll(spark, csv, wh)
+    dims.zip(before).foreach { case (name, (oldView, _)) =>
+      val (view, files) = viewAndFiles(name)
+      assert(view == files && view != oldView, s"$name: the view kept the previous ingest's rows")
+    }
+  }
+
+  test("a dim above Spark's broadcast size limit is refused, naming it and its size") {
+    val (csv, wh) = dirs
+    val e = try intercept[IllegalStateException](withConf(
+        "spark.sql.maxBroadcastTableSize" -> "200")(Ingest.ingestAll(spark, csv, wh)))
+      finally Ingest.ingestAll(spark, csv, wh)
+    assert(e.getMessage.contains("taxi_zone_lookup landed 6 rows (") &&
+      e.getMessage.contains("200 bytes"), e.getMessage)
   }
 
   test("the SQL models and a query per family do not depend on the small-stage rule or partitions") {

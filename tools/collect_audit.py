@@ -2,8 +2,10 @@
 """Driver-collect audit board (round-17 VERDICT item 2): extend the skew
 audit's discipline to the one scale-killer class the plan walks can't
 see — driver-side materialization. Every `collect()` / `collectAsList` /
-`toLocalIterator` / `collectAsMap` site in main sources must carry a
-machine-readable bound annotation
+`toLocalIterator` / `collectAsMap` site in main sources, and every
+row-collecting aggregate (`collect_list` / `collect_set`) inside an
+`observe(...)` call, whose result an `Observation` delivers to the
+driver, must carry a machine-readable bound annotation
 
     // driver-bound(<class>): <reason>
 
@@ -43,8 +45,34 @@ OUT = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "COLLECTAUDIT.jso
 CLASSES = {"stat-frame", "enum-bounded", "k-bounded", "sample-bounded",
            "threshold-gated", "manifest-bounded"}
 SITE_RE = re.compile(r"\.collect\(\)|\.collectAsList\(|toLocalIterator|collectAsMap")
+OBSERVE_RE = re.compile(r"\.observe\(")
+OBSERVED_SITE_RE = re.compile(r"\bcollect_(list|set)\(")
 ANN_RE = re.compile(r"driver-bound\(([a-z-]+)\):\s*(.*?)\s*$")
 WINDOW = 6  # annotation must sit on the site line or <= 6 lines above
+
+
+def is_comment(line):
+    stripped = line.strip()
+    return stripped.startswith("//") or stripped.startswith("*")
+
+
+def observed_lines(lines):
+    """Indices of the lines inside an `.observe(...)` call's parentheses."""
+    inside, depth = set(), 0
+    for i, line in enumerate(lines):
+        text = "" if is_comment(line) else line
+        m = OBSERVE_RE.search(text)
+        if depth == 0 and not m:
+            continue
+        start = m.end() - 1 if depth == 0 else 0
+        for ch in text[start:]:
+            depth += ch == "("
+            depth -= ch == ")"
+            if depth == 0:
+                break
+        inside.add(i)
+    return inside
+
 
 sites, problems = [], []
 for dirpath, _, files in os.walk(SRC):
@@ -60,11 +88,11 @@ for dirpath, _, files in os.walk(SRC):
             m = ANN_RE.search(line)
             if m:
                 anns.append([i, m.group(1), m.group(2), False])
+        observed = observed_lines(lines)
         for i, line in enumerate(lines):
             stripped = line.strip()
-            if stripped.startswith("//") or stripped.startswith("*"):
-                continue
-            if not SITE_RE.search(line):
+            if is_comment(line) or not (SITE_RE.search(line) or (
+                    i in observed and OBSERVED_SITE_RE.search(line))):
                 continue
             # bind the nearest unconsumed annotation within the window
             cand = [a for a in anns
